@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.LabelFunctions._
 import graft.model.{LabelMatcher, TsdbConf}
@@ -49,19 +50,19 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   private val metaPath = s"${conf.dataPath}/series_meta"
 
   /** Consolidated series-meta tier: one row per sid, produced by
-    * [[compactSeriesMeta]] (or by the very first durable batch, whose
-    * per-sid aggregation is already merged). `series_meta` itself is the
-    * fresh-append level (L0); the inline cadence fold ([[foldMetaDelta]])
-    * merges L0 — and ONLY L0, O(rows appended since the last fold) —
-    * into the append-only folded level (L1, `series_meta_folded`),
-    * never re-merging earlier folded generations or the base. Reads
-    * merge base ∪ L1 ∪ L0; [[compactSeriesMeta]] is the explicit full
-    * consolidation collapsing everything back into the base.
+    * [[compactSeriesMeta]], by an inline fold whose delta has caught up
+    * with it ([[foldMetaDelta]]), or by the very first durable batch
+    * (whose per-sid aggregation is already merged). `series_meta` itself
+    * is the fresh-append level (L0); the inline cadence fold merges L0
+    * into the append-only folded level (L1, `series_meta_folded`) while
+    * the delta stays under half the base, and otherwise merges
+    * base ∪ L1 ∪ L0 into a new base. Reads merge base ∪ L1 ∪ L0.
     */
   private val metaBasePath = s"${conf.dataPath}/series_meta_base"
 
-  /** Folded delta level (L1): one merged generation appended per inline
-    * fold. Bounded by churn volume since the last full compaction. */
+  /** Folded delta level (L1): one merged generation appended per
+    * delta-only inline fold; under half the base, since a fold that
+    * would take it past that rewrites the base instead. */
   private val metaFoldedPath = s"${conf.dataPath}/series_meta_folded"
 
   /** Label→value-set dimension tier (the reference's `labelValueSet`,
@@ -99,14 +100,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       math.max(conf.metaCompactEvery, 2)
     else 0
 
-  /** Cached [[seriesDimSmall]] verdict; invalidated by every meta write. */
-  private var seriesDimSmallCache: Option[Boolean] = None
-
-  /** Cached "delta level fits under the broadcast threshold" verdict for
-    * the [[seriesMeta]] merge-on-read split; invalidated like
-    * [[seriesDimSmallCache]].
-    */
-  private var metaDeltaSmallCache: Option[Boolean] = None
+  /** Cached [[metaBytes]]; invalidated by every meta write. */
+  private var metaBytesCache: Option[(Long, Long)] = None
 
   /** Rows currently buffered in the head (tracked incrementally — one count
     * per [[insertHeadRows]] batch, never a scan of the accumulated head).
@@ -218,10 +213,27 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     }
   }
 
-  /** Durable write of already-normalized rows: partitioned fact append +
-    * series-meta upsert. Caller persists `norm` for the two actions.
+  /** Data schema of the `samples` tier (the `seg` partition column is
+    * discovered from the directory names). Every tier the engine writes
+    * is read with its declared schema, so building a query launches no
+    * schema-inference job; [[writeNormalized]] casts `ts` and `value` to
+    * it.
     */
-  private def writeNormalized(norm: DataFrame): Unit = {
+  private val factSchema = StructType(
+    StructField("sid", LongType) +:
+      (if (conf.storeLabelsInFact)
+         Seq(StructField("metric", StringType),
+           StructField("labels", LabelsType))
+       else Nil) :+
+      StructField("ts", LongType) :+ StructField("value", DoubleType))
+
+  /** Durable write of already-normalized rows: partitioned fact append +
+    * series-meta upsert. Caller persists `norm0` for the two actions.
+    */
+  private def writeNormalized(norm0: DataFrame): Unit = {
+    val norm = norm0
+      .withColumn("ts", col("ts").cast(LongType))
+      .withColumn("value", col("value").cast(DoubleType))
     // shuffle by the partition column before the partitioned write: files
     // per time bucket stay bounded by `filesPerSegment` instead of
     // (tasks × buckets) — at fleet scale this is the difference between
@@ -262,6 +274,13 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     }
   }
 
+  /** Data schema of every series-meta level, as [[metaAggOf]] and
+    * [[mergedMeta]] write it. */
+  private val metaSchema = StructType(Seq(
+    StructField("sid", LongType), StructField("metric", StringType),
+    StructField("labels", LabelsType), StructField("minTs", LongType),
+    StructField("maxTs", LongType)))
+
   /** Per-sid meta aggregation of one normalized batch. */
   private def metaAggOf(norm: DataFrame): DataFrame =
     norm
@@ -276,7 +295,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * fresh store IS one-row-per-sid after its aggregation, so it becomes
     * the consolidated base level directly; every later batch appends a
     * delta generation (merged on read, folded on the
-    * `metaCompactEvery` cadence — delta-only, O(touched rows)).
+    * `metaCompactEvery` cadence, [[foldMetaDelta]]).
     */
   private def appendSeriesMeta(norm: DataFrame): Unit = {
     val freshStore = metaGenerations == 0 &&
@@ -289,11 +308,13 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       .mode("append")
       .option("compression", conf.compression)
       .parquet(target)
-    if (freshStore) {
-      seriesDimSmallCache = None
-      metaDeltaSmallCache = None
-    } else metaAppended()
+    if (freshStore) metaBytesCache = None else metaAppended()
   }
+
+  /** Data schema of the `label_values` tier (`seg` is its partition
+    * column, discovered like the fact table's). */
+  private val labelValuesSchema = StructType(Seq(
+    StructField("name", StringType), StructField("value", StringType)))
 
   /** Append one batch's distinct `(seg, name, value)` label pairs to the
     * label→value-set tier. Duplicate pairs across batches are harmless
@@ -320,18 +341,16 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   }
 
   /** Bookkeeping after every durable `series_meta` DELTA append: one more
-    * partial generation on disk, size caches stale; fold the delta
-    * partials back to one generation inline once the configured cadence
-    * is reached, so metadata read cost stays O(1) in ingest-batch count.
-    * The fold never touches the consolidated base — its cost is bounded
-    * by the rows touched since the last [[compactSeriesMeta]], not by
-    * total series count (the reference's insert-time `labelValueSet`
-    * update is likewise O(batch), memory_segment.go:93-96).
+    * partial generation on disk, size cache stale; fold inline once the
+    * configured cadence is reached ([[foldMetaDelta]]). A read then sees
+    * the base, a delta under half the base, and at most
+    * `metaCompactEvery` fresh generations. A fold costs O(rows appended
+    * since the last fold) while the delta is small, and at most 3× the
+    * rows touched since the base was last rewritten once it is not.
     */
   private def metaAppended(): Unit = {
     metaGenerations += 1
-    seriesDimSmallCache = None
-    metaDeltaSmallCache = None
+    metaBytesCache = None
     if (conf.metaCompactEvery > 0 && metaGenerations >= conf.metaCompactEvery)
       foldMetaDelta()
   }
@@ -403,7 +422,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * unaffected by the head.
     */
   def samples: DataFrame = {
-    if (conf.onlyMemoryMode) memHead.getOrElse(spark.read.parquet(samplesPath))
+    if (conf.onlyMemoryMode)
+      memHead.getOrElse(spark.read.schema(factSchema).parquet(samplesPath))
     else {
       val factCols =
         if (conf.storeLabelsInFact)
@@ -411,7 +431,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         else Seq("sid", "seg", "ts", "value")
       val disk =
         if (pathExists(samplesPath))
-          Some(spark.read.parquet(samplesPath).select(factCols.map(col): _*))
+          Some(spark.read.schema(factSchema).parquet(samplesPath)
+            .select(factCols.map(col): _*))
         else None
       val head = memHead.map(_.select(factCols.map(col): _*))
       (disk, head) match {
@@ -419,7 +440,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         case (Some(d), None) => d
         case (None, Some(h)) => h
         // neither: preserve the read-of-missing-path error surface
-        case (None, None) => spark.read.parquet(samplesPath)
+        case (None, None) =>
+          spark.read.schema(factSchema).parquet(samplesPath)
       }
     }
   }
@@ -436,28 +458,46 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       catch { case _: NumberFormatException => 10L * 1024 * 1024 }
   }
 
-  /** True when the series dimension provably fits under the session's
-    * broadcast threshold. A disk-backed dimension is measured (meta file
-    * bytes × a conservative 4× decompression factor — one FS listing,
-    * cached until the next meta write); a pure memory head is treated as
-    * small, since its series count is bounded by the flush cadence
-    * (`maxRowsPerSegment`), not by total data volume. High-cardinality
-    * stores — the TSDB cardinality bomb, series count ∝ data — therefore
-    * get NO hint, and the planner (or AQE at runtime) picks a shuffle
-    * join instead of an executor-OOM broadcast.
+  /** On-disk bytes of the series-meta levels: (base, delta = L1 + L0).
+    * One FS listing, cached until the next meta write.
     */
-  private def seriesDimSmall: Boolean = seriesDimSmallCache.getOrElse {
+  private def metaBytes: (Long, Long) = metaBytesCache.getOrElse {
+    def len(p: String): Long =
+      if (conf.onlyMemoryMode || !pathExists(p)) 0L
+      else fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
+    val b = (len(metaBasePath), len(metaFoldedPath) + len(metaPath))
+    metaBytesCache = Some(b)
+    b
+  }
+
+  /** The delta-to-base byte ratio at which the series-meta delta counts as
+    * caught up with the base: an inline fold then rewrites the base
+    * ([[foldMetaDelta]]) and a read merges all levels in one aggregation
+    * instead of the broadcast split ([[metaDeltaSmall]]). At one half, a
+    * base rewrite reads at most 3× the rows touched since the last one.
+    */
+  private val MetaCatchUpRatio = 0.5
+
+  /** True when `bytes` of series meta provably fit under the session's
+    * broadcast threshold (× a conservative 4× decompression factor).
+    */
+  private def underBroadcast(bytes: Long): Boolean = {
     val thr = broadcastThresholdBytes
-    val dirs = Seq(metaBasePath, metaFoldedPath, metaPath).filter(p =>
-      !conf.onlyMemoryMode && pathExists(p))
-    val small =
-      if (thr < 0) false
-      else if (dirs.nonEmpty)
-        dirs.map(p => fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(p)).getLength).sum * 4 < thr
-      else true
-    seriesDimSmallCache = Some(small)
-    small
+    thr >= 0 && (bytes == 0 || bytes * 4 < thr)
+  }
+
+  /** True when the series dimension provably fits under the session's
+    * broadcast threshold. A disk-backed dimension is measured
+    * ([[metaBytes]]); a pure memory head is treated as small, since its
+    * series count is bounded by the flush cadence (`maxRowsPerSegment`),
+    * not by total data volume. High-cardinality stores — the TSDB
+    * cardinality bomb, series count ∝ data — therefore get NO hint, and
+    * the planner (or AQE at runtime) picks a shuffle join instead of an
+    * executor-OOM broadcast.
+    */
+  private def seriesDimSmall: Boolean = {
+    val (base, delta) = metaBytes
+    underBroadcast(base + delta)
   }
 
   /** Broadcast-hint the series dimension only when it is provably small
@@ -487,10 +527,12 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * partial/final merge the reference does across segments — but the
     * merge is skipped when the store is provably one-row-per-sid already:
     * a head-only dimension (its aggregation IS the merge) or a disk
-    * dimension at a single write generation (one batch, or freshly
-    * [[compactSeriesMeta]]-folded). With the auto-compaction cadence
-    * (`TsdbConf.metaCompactEvery`), metadata reads therefore cost one
-    * aggregation at most every few appends instead of one per read.
+    * dimension at a single write generation (one batch, or a freshly
+    * rewritten base). Otherwise a read merges the base, a delta under half
+    * the base and at most `metaCompactEvery` fresh generations
+    * (`TsdbConf.metaCompactEvery`): through the broadcast anti/semi split
+    * when the delta is small ([[metaDeltaSmall]]), in one aggregation
+    * over all levels when it is not.
     */
   def seriesMeta: DataFrame = {
     val headAgg = memHead.map(
@@ -499,15 +541,15 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         min("ts").as("minTs"), max("ts").as("maxTs")))
     val base =
       if (!conf.onlyMemoryMode && pathExists(metaBasePath))
-        Some(spark.read.parquet(metaBasePath))
+        Some(spark.read.schema(metaSchema).parquet(metaBasePath))
       else None
     val diskL0 =
       if (!conf.onlyMemoryMode && pathExists(metaPath))
-        Some(spark.read.parquet(metaPath))
+        Some(spark.read.schema(metaSchema).parquet(metaPath))
       else None
     val diskL1 =
       if (!conf.onlyMemoryMode && pathExists(metaFoldedPath))
-        Some(spark.read.parquet(metaFoldedPath))
+        Some(spark.read.schema(metaSchema).parquet(metaFoldedPath))
       else None
     // the head aggregation is just another (already-merged) delta level
     val delta = Seq(diskL1, diskL0, headAgg).flatten
@@ -534,7 +576,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         else if (headAgg.isEmpty && diskL1.isEmpty && metaGenerations <= 1)
           d
         else mergedMeta(d)
-      case (None, None) => mergedMeta(spark.read.parquet(metaPath))
+      case (None, None) =>
+        mergedMeta(spark.read.schema(metaSchema).parquet(metaPath))
     }
   }
 
@@ -549,22 +592,16 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       min("minTs").as("minTs"),
       max("maxTs").as("maxTs"))
 
-  /** True when the accumulated series-meta delta level provably fits
-    * under the session broadcast threshold — the gate for the
-    * [[seriesMeta]] split read. Falls back to the full merge when the
-    * delta has grown past it (correct either way).
+  /** True when the on-disk series-meta delta (L1 + L0) provably fits
+    * under the session broadcast threshold AND is small beside the base
+    * (under [[MetaCatchUpRatio]] of its bytes) — the gate for the
+    * [[seriesMeta]] split read. A delta that covers most sids gains
+    * nothing from the split (its anti-join passes almost nothing), so it
+    * merges in one aggregation instead (correct either way).
     */
-  private def metaDeltaSmall: Boolean = metaDeltaSmallCache.getOrElse {
-    val thr = broadcastThresholdBytes
-    val dirs = Seq(metaFoldedPath, metaPath).filter(pathExists)
-    val small =
-      if (thr < 0) false
-      else if (dirs.nonEmpty)
-        dirs.map(p => fs.getContentSummary(
-          new org.apache.hadoop.fs.Path(p)).getLength).sum * 4 < thr
-      else true
-    metaDeltaSmallCache = Some(small)
-    small
+  private def metaDeltaSmall: Boolean = {
+    val (base, delta) = metaBytes
+    underBroadcast(delta) && delta < base * MetaCatchUpRatio
   }
 
   // ---------------------------------------------------------------- queries
@@ -2622,7 +2659,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       val diskVals =
         if (conf.onlyMemoryMode) None
         else if (pathExists(labelValuesPath))
-          Some(spark.read.parquet(labelValuesPath)
+          Some(spark.read.schema(labelValuesSchema).parquet(labelValuesPath)
             .where(segPredicate(start, end) && col("name") === label)
             .select("value"))
         else if (pathExists(samplesPath))
@@ -2639,7 +2676,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         case (Some(d), None) => d.distinct().orderBy("value")
         case (None, Some(h)) => h.distinct().orderBy("value")
         case (None, None) => // preserve the read-of-missing-path error
-          spark.read.parquet(labelValuesPath).select("value")
+          spark.read.schema(labelValuesSchema).parquet(labelValuesPath)
+            .select("value")
       }
     }
 
@@ -2658,7 +2696,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     val diskNames =
       if (conf.onlyMemoryMode) None
       else if (pathExists(labelValuesPath))
-        Some(spark.read.parquet(labelValuesPath)
+        Some(spark.read.schema(labelValuesSchema).parquet(labelValuesPath)
           .where(segPredicate(start, end))
           .select("name"))
       else if (pathExists(samplesPath))
@@ -2671,7 +2709,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       case (Some(d), None) => d.distinct().orderBy("name")
       case (None, Some(h)) => h.distinct().orderBy("name")
       case (None, None) =>
-        spark.read.parquet(labelValuesPath).select("name")
+        spark.read.schema(labelValuesSchema).parquet(labelValuesPath)
+          .select("name")
     }
   }
 
@@ -2689,48 +2728,68 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         min("ts").as("min_ts"),
         max("ts").as("max_ts"))
 
-  /** Fold the fresh series_meta generations (L0) into the append-only
-    * folded level (L1) — the inline `metaCompactEvery` cadence job. The
-    * fold reads and merges ONLY the rows appended since the last fold:
-    * O(cadence × batch), independent of total series count AND of how
-    * long the store has been appending (earlier folded generations are
-    * never re-merged — the 10M-series churn failure mode was exactly
-    * this job re-merging all 15M meta rows, 20-30 s spikes). Crash
-    * between the L1 append and the L0 clear leaves duplicated rows,
-    * which the read-side merge collapses idempotently.
+  /** Fold the fresh series_meta generations (L0) — the inline
+    * `metaCompactEvery` cadence job. The rule:
+    *  - while the delta (L1 + L0) holds under [[MetaCatchUpRatio]] of
+    *    the base's bytes, merge ONLY L0 and append it to the folded level
+    *    (L1): O(rows appended since the last fold), independent of total
+    *    series count, and earlier folded generations are never re-merged
+    *    (the 10M-series churn failure mode was a fold re-merging all 15M
+    *    meta rows, 20-30 s spikes). Crash between the L1 append and the
+    *    L0 clear leaves duplicated rows, which the read-side merge
+    *    collapses idempotently.
+    *  - once the delta has caught up, merge base ∪ L1 ∪ L0 into a new
+    *    base through the crash-safe swap of [[compactSeriesMeta]]. The
+    *    base is then at most twice the delta, so the rewrite reads at
+    *    most 3× the rows touched since the base was last written — and on
+    *    the scrape shape (every series in every batch), where each
+    *    delta-only fold would add a full generation, the levels stay
+    *    bounded instead of growing with the batch count.
     */
   def foldMetaDelta(): Unit = {
     if (conf.onlyMemoryMode || !pathExists(metaPath)) return
-    mergedMeta(spark.read.parquet(metaPath))
-      .coalesce(4)
-      .write.mode("append")
-      .option("compression", conf.compression)
-      .parquet(metaFoldedPath)
-    if (!fs.delete(new org.apache.hadoop.fs.Path(metaPath), true))
-      logWarning(s"meta fold: could not clear L0 $metaPath " +
-        "(reads stay correct; next fold retries)")
-    metaGenerations = 0
-    seriesDimSmallCache = None
-    metaDeltaSmallCache = None
+    val (base, delta) = metaBytes
+    if (delta >= base * MetaCatchUpRatio) rewriteMetaBase()
+    else {
+      mergedMeta(spark.read.schema(metaSchema).parquet(metaPath))
+        .coalesce(4)
+        .write.mode("append")
+        .option("compression", conf.compression)
+        .parquet(metaFoldedPath)
+      if (!fs.delete(new org.apache.hadoop.fs.Path(metaPath), true))
+        logWarning(s"meta fold: could not clear L0 $metaPath " +
+          "(reads stay correct; next fold retries)")
+      metaGenerations = 0
+      metaBytesCache = None
+    }
   }
 
   /** Full series-meta consolidation: merge base ∪ delta into a fresh
     * one-row-per-sid base level and clear the delta — the scheduled
     * maintenance job (like [[compactSegments]]) bounding metadata growth
     * that the reference explicitly lacks (no compaction, README.md:36-40).
-    * Cost is O(total series); the ingest path never runs this — inline
-    * cadence folds are delta-only ([[foldMetaDelta]]). Crash-safe: the
-    * delta is deleted only after the new base is live, and a leftover
-    * delta re-merges idempotently (min/max/first are stable under
-    * duplicated rows). Also consolidates (or, for stores created before
-    * the tier existed, backfills) the label→value-set tier.
+    * Cost is O(total series); the ingest path runs the meta part only
+    * once the delta has caught up with the base ([[foldMetaDelta]]).
+    * Also consolidates (or, for stores created before the tier existed,
+    * backfills) the label→value-set tier.
     */
   def compactSeriesMeta(): Unit = {
     if (conf.onlyMemoryMode) return
+    rewriteMetaBase()
+    compactLabelValues()
+  }
+
+  /** Merge every series-meta level into a fresh one-row-per-sid base and
+    * clear the delta. Crash-safe: the delta is deleted only after the new
+    * base is live, and a leftover delta re-merges idempotently
+    * (min/max/first are stable under duplicated rows).
+    */
+  private def rewriteMetaBase(): Unit = {
     val levels = Seq(metaBasePath, metaFoldedPath, metaPath)
       .filter(pathExists)
     if (levels.nonEmpty && levels != Seq(metaBasePath)) {
-      val all = levels.map(spark.read.parquet(_)).reduce(_ unionByName _)
+      val all = levels.map(spark.read.schema(metaSchema).parquet(_))
+        .reduce(_ unionByName _)
       val tmp = metaBasePath + ".compact"
       mergedMeta(all)
         .coalesce(4)
@@ -2745,10 +2804,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
             "(reads stay correct; next compaction retries)")
       }
       metaGenerations = 0
-      seriesDimSmallCache = None
-      metaDeltaSmallCache = None
+      metaBytesCache = None
     }
-    compactLabelValues()
   }
 
   /** Consolidate the label→value-set tier: distinct pairs, few files per
@@ -2761,7 +2818,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     if (conf.onlyMemoryMode) return
     if (pathExists(labelValuesPath)) {
       val tmp = labelValuesPath + ".compact"
-      spark.read.parquet(labelValuesPath)
+      spark.read.schema(labelValuesSchema).parquet(labelValuesPath)
         .distinct()
         .repartition(col("seg"))
         .sortWithinPartitions("name", "value")
@@ -2772,7 +2829,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       swapInPlace(new org.apache.hadoop.fs.Path(tmp),
         new org.apache.hadoop.fs.Path(labelValuesPath))
     } else if (pathExists(samplesPath)) {
-      val disk = spark.read.parquet(samplesPath)
+      val disk = spark.read.schema(factSchema).parquet(samplesPath)
       val labeled =
         if (disk.columns.contains("labels")) disk.select("seg", "labels")
         else disk.select("seg", "sid").distinct()
@@ -2876,7 +2933,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
           // non-`seg=<n>` directory mid-rewrite
           val tmp = new org.apache.hadoop.fs.Path(
             s"${conf.dataPath}/.compact_seg_$seg")
-          spark.read.parquet(p.toString)
+          spark.read.schema(factSchema).parquet(p.toString)
             .repartition(filesPerSeg)
             .sortWithinPartitions("sid", "ts")
             .write.mode("overwrite")
@@ -3106,6 +3163,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
 }
 
 object Tsdb {
+  /** The label-map type of the tiers that store label sets, as parquet
+    * reads it back. */
+  private val LabelsType = MapType(StringType, StringType)
   val MetricLabel: String = graft.functions.LabelFunctions.MetricLabel
 
   /** Prometheus `bucketQuantile` over an ALREADY-AGGREGATED cumulative

@@ -92,14 +92,17 @@ final case class TsdbConf(
       * batch, head flush, rollup-dim append) adds a fresh generation to
       * `series_meta` (L0), and reads pay a merge while deltas exist.
       * Once this many generations pile up, the store folds them inline
-      * ([[graft.Tsdb.foldMetaDelta]]) into the append-only folded level
-      * (L1) — the fold merges ONLY the rows appended since the last
-      * fold (O(cadence × batch), independent of total series count and
-      * of store age), so metadata read cost stays O(1) in ingest-batch
-      * count and the ingest-path latency spike is bounded by the
-      * cadence, not by the dimension. The fold runs inline on the
-      * append that crosses the cadence and counts toward the streaming
-      * path's `writeListenerTimeoutSec` budget; latency-strict
+      * ([[graft.Tsdb.foldMetaDelta]]). While the delta (folded level L1
+      * plus L0) holds under half the base's bytes, the fold merges ONLY
+      * L0 into the append-only L1 — O(rows appended since the last
+      * fold), independent of total series count and of store age. Once
+      * the delta has caught up, the fold merges base ∪ L1 ∪ L0 into a
+      * new base instead — at most 3× the rows touched since the base was
+      * last written. A metadata read therefore merges the base, a delta
+      * under half the base and at most this many fresh generations,
+      * however many batches the store has taken. The fold runs inline
+      * on the append that crosses the cadence and counts toward the
+      * streaming path's `writeListenerTimeoutSec` budget; latency-strict
       * streaming deployments can set `<= 0` (merge-on-read only) and
       * schedule [[graft.Tsdb.compactSeriesMeta]] — the full
       * base ∪ L1 ∪ L0 consolidation — as an external maintenance job.
@@ -108,8 +111,8 @@ final case class TsdbConf(
       * series, bench_history_r13), vs 2.5× at cadence 4 — the fold's
       * fixed job cost amortizes worse than its per-row cost, so smaller
       * more-frequent folds bound the worst-case ingest latency better
-      * at the same total write amplification (each L0 row is rewritten
-      * exactly once per cycle regardless of cadence).
+      * at the same delta-only write amplification (each L0 row is
+      * rewritten once into L1 regardless of cadence).
       */
     metaCompactEvery: Int = 2,
     /** Ingest write parallelism WITHIN one time bucket: each durable

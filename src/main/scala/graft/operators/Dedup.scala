@@ -446,8 +446,12 @@ object Dedup {
   private[graft] def connectedComponentsRounds(
       pairs: DataFrame): (DataFrame, Int) = {
     val spark = pairs.sparkSession
-    val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
-      .union(pairs.select(col("id2").as("a"), col("id1").as("b")))
+    // ids are read back with InternalRow.getLong below, whatever the
+    // input type: cast at entry
+    val ids = pairs.select(col("id1").cast("long").as("id1"),
+      col("id2").cast("long").as("id2"))
+    val edges = ids.select(col("id1").as("a"), col("id2").as("b"))
+      .union(ids.select(col("id2").as("a"), col("id1").as("b")))
       .transform(Materialize.once)
     // per-round materialize + convergence stat in ONE job: the round's
     // frame is persisted as its internal-row RDD and the statistic is an
@@ -537,7 +541,9 @@ object Dedup {
     }
     var (edges, edgesRdd, cur) = materializeWithStat(
       pairs
-        .select(col("id1").as("u"), col("id2").as("v"))
+        // cast at entry: the round statistic reads ids with getLong
+        .select(col("id1").cast("long").as("u"),
+          col("id2").cast("long").as("v"))
         .where(col("u") =!= col("v"))
         .distinct(), None)
     var prev = (-1L, -1L)

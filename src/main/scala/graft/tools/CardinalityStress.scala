@@ -25,8 +25,11 @@ import graft.model.{LabelMatcher, TsdbConf}
   *  - query latencies at real cardinality: queryRange (eq + regex
   *    matcher), querySeries, queryLabelValues (meta default vs exact);
   *  - series-meta churn: 10 appends cross the `metaCompactEvery`
-  *    cadence repeatedly, so fold-bearing appends pay the inline L0->L1
-  *    fold; meta read latency is recorded before and after compaction;
+  *    cadence repeatedly, so fold-bearing appends pay the inline fold
+  *    (L0->L1 while the delta is under half the base, a base rewrite
+  *    once it is not — recorded per append with the L1/base byte
+  *    share); meta read latency is recorded before and after
+  *    compaction;
   *  - an xxhash64 sid collision audit over the full labelset universe.
   *
   * Not part of the driver sweep — run ad hoc (SPARK_DRIVER_MEM=32g),
@@ -98,15 +101,29 @@ object CardinalityStress {
     // window [n/2, 3n/2) means half of each append re-touches existing
     // series (new minTs/maxTs per sid) and half extends the universe
     // (new sids; final dimension = 1.5n); appends crossing the
-    // metaCompactEvery cadence pay the inline L0->L1 fold
-    val churnSecs = (0 until 10).map { k =>
+    // metaCompactEvery cadence pay the inline fold
+    // per append: whether the inline fold rewrote the base, and the
+    // folded level's bytes as a share of the base's after the append
+    def metaDir(level: String) = new org.apache.hadoop.fs.Path(
+      s"$root/main/series_meta$level")
+    def metaLen(level: String): Long =
+      if (fs.exists(metaDir(level)))
+        fs.getContentSummary(metaDir(level)).getLength
+      else 0L
+    def baseFiles: Set[String] =
+      fs.listStatus(metaDir("_base")).map(_.getPath.getName).toSet
+    val churn = (0 until 10).map { k =>
       val from = nSeries / 2 + (nSeries / 10) * k
       val until = from + nSeries / 10
+      val before = baseFiles
       val (_, s) = timed(t.insertRows(
         wave(from, until, 1).withColumn("value", col("value") + 1000.0)))
-      f"$s%.1f".toDouble
+      val l1Share = metaLen("_folded").toDouble / metaLen("_base")
+      (f"$s%.1f".toDouble, baseFiles != before, f"$l1Share%.3f".toDouble)
     }
-    r += "churn_append_secs" -> churnSecs.mkString("[", ",", "]")
+    r += "churn_append_secs" -> churn.map(_._1).mkString("[", ",", "]")
+    r += "churn_base_rewritten" -> churn.map(_._2).mkString("[", ",", "]")
+    r += "churn_l1_per_base_bytes" -> churn.map(_._3).mkString("[", ",", "]")
 
     // post-churn metadata read: base + folded delta via the
     // merge-on-read split (broadcast anti/semi when the delta is small,

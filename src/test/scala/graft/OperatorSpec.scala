@@ -124,6 +124,19 @@ class OperatorSpec extends SparkSuite {
     assert(viaStar == viaMinLabel && viaStar.nonEmpty)
   }
 
+  test("connected components accept IntegerType ids") {
+    import spark.implicits._
+    // two components {1, 2, 3} and {7, 9}; ids typed int, not long
+    val pairs = Seq((2, 1), (3, 2), (9, 7)).toDF("id1", "id2")
+    assert(pairs.schema("id1").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L)
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got(Dedup.connectedComponents(pairs)) == want)
+    assert(got(Dedup.connectedComponentsStar(pairs)) == want)
+  }
+
   test("star components converge in O(log d) rounds on a 20-deep chain") {
     import spark.implicits._
     // planted path graph 0-1-2-…-20: diameter 20

@@ -312,6 +312,13 @@ class TsdbSpec extends SparkSuite {
     assert(got == "{a=\"1\", b=\"2\"}")
   }
 
+  /** `n` one-point series of metric `bulk`: a base large enough that
+    * parquet footers do not dominate the meta levels' byte ratio. */
+  private def bulk(n: Int): DataFrame =
+    spark.range(n).select(lit("bulk").as("metric"),
+      map(lit("id"), col("id").cast("string")).as("labels"),
+      lit(0L).as("ts"), lit(1.0).as("value"))
+
   test("series_meta compaction preserves content and bounds file count") {
     import spark.implicits._
     val t = new Tsdb(spark, TsdbConf(dataPath = tempDir("compact")))
@@ -319,10 +326,12 @@ class TsdbSpec extends SparkSuite {
       ("m1", Map("n" -> "a"), off, 1.0),
       ("m2", Map("n" -> "b"), off + 60, 2.0))
       .toDF("metric", "labels", "ts", "value")
-    (0 until 5).foreach(i => t.insertRows(batch(i * 86400L)))
+    t.insertRows(bulk(20000))
+    (1 until 6).foreach(i => t.insertRows(batch(i * 86400L)))
     val before = t.seriesMeta.orderBy("sid").collect().map(_.toString).toSeq
-    // batch 1 established the base level; batches 2-5 appended fresh
-    // generations, some already folded to L1 by the inline cadence
+    // batch 1 established the base level; batches 2-6 appended fresh
+    // generations, some already folded to L1 by the inline cadence (the
+    // delta stays far under half the base, so no fold rewrote it)
     val deltaDir = new java.io.File(t.conf.dataPath + "/series_meta")
     val foldedDir = new java.io.File(t.conf.dataPath + "/series_meta_folded")
     val baseDir = new java.io.File(t.conf.dataPath + "/series_meta_base")
@@ -330,6 +339,7 @@ class TsdbSpec extends SparkSuite {
       Option(d.listFiles).map(_.count(_.getName.endsWith(".parquet")))
         .getOrElse(0)
     val filesBefore = pq(deltaDir) + pq(foldedDir) + pq(baseDir)
+    assert(pq(deltaDir) > 0 && pq(foldedDir) > 0, "delta should survive")
     t.compactSeriesMeta()
     // full consolidation: delta levels cleared, everything in the base
     assert(!deltaDir.exists(), "fresh level should be cleared")
@@ -338,7 +348,7 @@ class TsdbSpec extends SparkSuite {
     val filesAfter = pq(deltaDir) + pq(foldedDir) + pq(baseDir)
     assert(after == before)
     assert(filesAfter < filesBefore)
-    assert(after.length == 2) // 2 series, merged across 5 appends
+    assert(after.length == 20002) // 2 series merged across 5 appends
     // the consolidated read is a plain scan — no merge aggregation
     val plan = t.seriesMeta.queryExecution.optimizedPlan.toString
     assert(!plan.contains("Aggregate"), plan.take(1500))
@@ -713,6 +723,8 @@ class TsdbSpec extends SparkSuite {
     assert(single(0) == Map("c" -> "z"))
   }
 
+  // a delta that stays small beside the base; the delta that catches up
+  // with it is the next case
   test("series_meta delta folds on the append cadence; base never rewrites") {
     import spark.implicits._
     val t = new Tsdb(spark, TsdbConf(
@@ -721,12 +733,13 @@ class TsdbSpec extends SparkSuite {
       ("m1", Map("n" -> "a"), off, 1.0),
       ("m2", Map("n" -> "b"), off + 60, 2.0))
       .toDF("metric", "labels", "ts", "value")
-    // append 1 establishes the base level; append 2 accumulates a fresh
-    // (L0) generation; append 3 reaches the cadence (2 generations) and
-    // folds L0 into the append-only folded level (L1) — base and
-    // earlier L1 generations are never rewritten
+    // append 1 establishes a 20,000-series base level; append 2
+    // accumulates a fresh (L0) generation; append 3 reaches the cadence
+    // (2 generations) and folds L0 into the append-only folded level
+    // (L1) — the delta stays far under half the base, so neither the
+    // base nor earlier L1 generations are ever rewritten
     val baseDir = new java.io.File(t.conf.dataPath + "/series_meta_base")
-    t.insertRows(batch(0L))
+    t.insertRows(bulk(20000))
     assert(baseDir.exists(), "first batch should establish the base level")
     val baseFiles0 = baseDir.listFiles.map(_.getName).toSet
     (1 until 3).foreach(i => t.insertRows(batch(i * 86400L)))
@@ -740,20 +753,128 @@ class TsdbSpec extends SparkSuite {
     // two more fold cycles APPEND to L1 without rewriting its files
     val l1Files0 = l1Dir.listFiles.map(_.getName).toSet
     (3 until 7).foreach(i => t.insertRows(batch(i * 86400L)))
-    assert(!l0Dir.exists(), "append 7 is the fourth-cycle fold")
+    assert(!l0Dir.exists(), "append 7 is the third-cycle fold")
     assert(l1Files0.subsetOf(l1Dir.listFiles.map(_.getName).toSet),
       "later folds must never rewrite earlier folded generations")
+    assert(baseDir.listFiles.map(_.getName).toSet == baseFiles0,
+      "a small delta never rewrites the base level")
     // the merge-on-read split keeps the base out of any shuffle: the
     // delta joins it via broadcast anti/semi probes
     val plan = t.seriesMeta.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(1500))
     assert(!plan.contains("SortMergeJoin"), plan.take(1500))
     // and the merged content spans all seven appends
-    val rows = t.seriesMeta.orderBy("metric").collect()
+    val rows = t.seriesMeta.where(col("metric") =!= "bulk")
+      .orderBy("metric").collect()
     assert(rows.length == 2)
     val m1 = rows.find(_.getAs[String]("metric") == "m1").get
-    assert(m1.getAs[Long]("minTs") == 0L)
+    assert(m1.getAs[Long]("minTs") == 86400L)
     assert(m1.getAs[Long]("maxTs") == 6 * 86400L)
+    assert(t.seriesMeta.count() == 20002L)
+  }
+
+  test("series_meta delta that covers the base folds into it: " +
+      "bounded rows on disk, one-aggregation read") {
+    val series = 300
+    val path = tempDir("scrape")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, metaCompactEvery = 2))
+    // the scrape shape: every series gets a point in every batch
+    def scrape(b: Int): DataFrame =
+      spark.range(series).select(lit("m").as("metric"),
+        map(lit("id"), col("id").cast("string")).as("labels"),
+        (lit(b * 60L) + col("id") % 7).as("ts"), lit(b.toDouble).as("value"))
+    def metaRowsOnDisk: Long =
+      Seq("series_meta_base", "series_meta_folded", "series_meta")
+        .map(l => s"$path/$l")
+        .filter(new java.io.File(_).exists)
+        .map(spark.read.parquet(_).count()).sum
+    // eight batches: the last one leaves a fresh L0 generation beside the
+    // base, so the read below has a delta to merge
+    (0 until 8).foreach { b =>
+      t.insertRows(scrape(b))
+      val onDisk = metaRowsOnDisk
+      assert(onDisk <= 2L * series, s"batch $b: $onDisk meta rows on disk")
+    }
+    // a delta as large as the base reads in ONE aggregation, no join
+    val plan = t.seriesMeta.queryExecution.optimizedPlan
+    val aggs = plan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }
+    val joins = plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    assert(aggs.size == 1 && joins.isEmpty, plan.toString.take(2000))
+    // contents equal a compactSeriesMeta'd copy of the same store
+    val copyPath = tempDir("scrape_copy") + "/store"
+    val hfs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(hfs,
+      new org.apache.hadoop.fs.Path(path), hfs,
+      new org.apache.hadoop.fs.Path(copyPath), false,
+      spark.sparkContext.hadoopConfiguration)
+    val copy = new Tsdb(spark, TsdbConf(dataPath = copyPath))
+    copy.compactSeriesMeta()
+    def rows(x: Tsdb) = x.seriesMeta.orderBy("sid").collect().toSeq
+    val got = rows(t)
+    assert(got.length == series)
+    assert(got == rows(copy))
+    assert(got.forall(_.getAs[Long]("maxTs") >= 7 * 60L))
+  }
+
+  test("building reads on a three-level store launches no Spark job") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t = new Tsdb(spark, TsdbConf(dataPath = tempDir("nojobs"),
+      metaCompactEvery = 2))
+    val t0 = 1700000000L
+    t.insertRows(spark.range(5000).select(lit("m").as("metric"),
+      map(lit("n"), (col("id") % 10).cast("string"),
+        lit("id"), col("id").cast("string")).as("labels"),
+      (lit(t0) + col("id") % 600).as("ts"),
+      col("id").cast("double").as("value")))
+    (1 to 3).foreach(i => t.insertRows(
+      Seq(("m", Map("n" -> "1", "id" -> "x"), t0 + i * 60L, i.toDouble))
+        .toDF("metric", "labels", "ts", "value")))
+    Seq("series_meta_base", "series_meta_folded", "series_meta",
+      "label_values").foreach(l => assert(
+      new java.io.File(s"${t.conf.dataPath}/$l").exists, s"$l missing"))
+    val group = s"build-${System.nanoTime}"
+    val sentinel = s"sentinel-${System.nanoTime}"
+    val built = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => built.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val (s, e) = (t0, t0 + 900L)
+      sc.setJobGroup(group, "build")
+      val frames = Seq(
+        graft.promql.PromQL.query(t, "sum by (n) (rate(m[300]))", s, e),
+        t.querySeries(Seq(LabelMatcher.eq("n", "1")), s, e),
+        t.queryLabelValues("n", s, e),
+        t.queryRange("m", Seq(LabelMatcher.eq("n", "1")), s, e))
+      // jobs reach listeners in order: once the sentinel job is seen,
+      // every job the build launched has been counted
+      sc.setJobGroup(sentinel, "sentinel")
+      spark.range(1).collect()
+      sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(built.get == 0, s"${built.get} jobs while building")
+      // and the frames are the real ones
+      assert(frames(2).as[String].collect().toSeq ==
+        (0 until 10).map(_.toString).sorted)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("close drains streaming ingest and head; reopen loses nothing") {
