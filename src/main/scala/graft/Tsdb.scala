@@ -101,7 +101,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     else 0
 
   /** Cached [[metaBytes]]; invalidated by every meta write. */
-  private var metaBytesCache: Option[(Long, Long)] = None
+  private var metaBytesCache: Option[(Long, Long, Long)] = None
 
   /** Rows currently buffered in the head (tracked incrementally — one count
     * per [[insertHeadRows]] batch, never a scan of the accumulated head).
@@ -216,8 +216,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   /** Data schema of the `samples` tier (the `seg` partition column is
     * discovered from the directory names). Every tier the engine writes
     * is read with its declared schema, so building a query launches no
-    * schema-inference job; [[writeNormalized]] casts `ts` and `value` to
-    * it.
+    * schema-inference job.
     */
   private val factSchema = StructType(
     StructField("sid", LongType) +:
@@ -228,12 +227,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       StructField("ts", LongType) :+ StructField("value", DoubleType))
 
   /** Durable write of already-normalized rows: partitioned fact append +
-    * series-meta upsert. Caller persists `norm0` for the two actions.
+    * series-meta upsert. Caller persists `norm` for the two actions.
     */
-  private def writeNormalized(norm0: DataFrame): Unit = {
-    val norm = norm0
-      .withColumn("ts", col("ts").cast(LongType))
-      .withColumn("value", col("value").cast(DoubleType))
+  private def writeNormalized(norm: DataFrame): Unit = {
     // shuffle by the partition column before the partitioned write: files
     // per time bucket stay bounded by `filesPerSegment` instead of
     // (tasks × buckets) — at fleet scale this is the difference between
@@ -343,10 +339,11 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   /** Bookkeeping after every durable `series_meta` DELTA append: one more
     * partial generation on disk, size cache stale; fold inline once the
     * configured cadence is reached ([[foldMetaDelta]]). A read then sees
-    * the base, a delta under half the base, and at most
-    * `metaCompactEvery` fresh generations. A fold costs O(rows appended
-    * since the last fold) while the delta is small, and at most 3× the
-    * rows touched since the base was last rewritten once it is not.
+    * the base, a folded level under half the base plus at most one fold's
+    * generations, and at most `metaCompactEvery` fresh generations. A
+    * fold costs O(rows appended since the last fold) while both delta
+    * levels are small, and at most 3× the rows touched since the base
+    * was last rewritten once one of them is not.
     */
   private def metaAppended(): Unit = {
     metaGenerations += 1
@@ -458,23 +455,25 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       catch { case _: NumberFormatException => 10L * 1024 * 1024 }
   }
 
-  /** On-disk bytes of the series-meta levels: (base, delta = L1 + L0).
-    * One FS listing, cached until the next meta write.
+  /** On-disk bytes of the series-meta levels: (base, folded L1, fresh
+    * L0). One FS listing, cached until the next meta write.
     */
-  private def metaBytes: (Long, Long) = metaBytesCache.getOrElse {
+  private def metaBytes: (Long, Long, Long) = metaBytesCache.getOrElse {
     def len(p: String): Long =
       if (conf.onlyMemoryMode || !pathExists(p)) 0L
       else fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
-    val b = (len(metaBasePath), len(metaFoldedPath) + len(metaPath))
+    val b = (len(metaBasePath), len(metaFoldedPath), len(metaPath))
     metaBytesCache = Some(b)
     b
   }
 
   /** The delta-to-base byte ratio at which the series-meta delta counts as
-    * caught up with the base: an inline fold then rewrites the base
-    * ([[foldMetaDelta]]) and a read merges all levels in one aggregation
-    * instead of the broadcast split ([[metaDeltaSmall]]). At one half, a
-    * base rewrite reads at most 3× the rows touched since the last one.
+    * caught up with the base: an inline fold rewrites the base once its
+    * folded level or the fresh generations it folds reach it
+    * ([[foldMetaDelta]]), and a read merges all levels in one aggregation
+    * instead of the broadcast split once both delta levels together do
+    * ([[metaDeltaSmall]]). At one half, a base rewrite reads at most 3×
+    * the rows touched since the last one.
     */
   private val MetaCatchUpRatio = 0.5
 
@@ -496,8 +495,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * executor-OOM broadcast.
     */
   private def seriesDimSmall: Boolean = {
-    val (base, delta) = metaBytes
-    underBroadcast(base + delta)
+    val (base, l1, l0) = metaBytes
+    underBroadcast(base + l1 + l0)
   }
 
   /** Broadcast-hint the series dimension only when it is provably small
@@ -528,11 +527,12 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * merge is skipped when the store is provably one-row-per-sid already:
     * a head-only dimension (its aggregation IS the merge) or a disk
     * dimension at a single write generation (one batch, or a freshly
-    * rewritten base). Otherwise a read merges the base, a delta under half
-    * the base and at most `metaCompactEvery` fresh generations
-    * (`TsdbConf.metaCompactEvery`): through the broadcast anti/semi split
-    * when the delta is small ([[metaDeltaSmall]]), in one aggregation
-    * over all levels when it is not.
+    * rewritten base). Otherwise a read merges the base, a folded level
+    * under half the base plus at most one fold's generations, and at most
+    * `metaCompactEvery` fresh generations (`TsdbConf.metaCompactEvery`,
+    * [[foldMetaDelta]]): through the broadcast anti/semi split when the
+    * delta is small ([[metaDeltaSmall]]), in one aggregation over all
+    * levels when it is not.
     */
   def seriesMeta: DataFrame = {
     val headAgg = memHead.map(
@@ -592,16 +592,16 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       min("minTs").as("minTs"),
       max("maxTs").as("maxTs"))
 
-  /** True when the on-disk series-meta delta (L1 + L0) provably fits
-    * under the session broadcast threshold AND is small beside the base
-    * (under [[MetaCatchUpRatio]] of its bytes) — the gate for the
+  /** True when the on-disk series-meta delta (L1 + L0 together) provably
+    * fits under the session broadcast threshold AND is small beside the
+    * base (under [[MetaCatchUpRatio]] of its bytes) — the gate for the
     * [[seriesMeta]] split read. A delta that covers most sids gains
     * nothing from the split (its anti-join passes almost nothing), so it
     * merges in one aggregation instead (correct either way).
     */
   private def metaDeltaSmall: Boolean = {
-    val (base, delta) = metaBytes
-    underBroadcast(delta) && delta < base * MetaCatchUpRatio
+    val (base, l1, l0) = metaBytes
+    underBroadcast(l1 + l0) && l1 + l0 < base * MetaCatchUpRatio
   }
 
   // ---------------------------------------------------------------- queries
@@ -2729,27 +2729,33 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         max("ts").as("max_ts"))
 
   /** Fold the fresh series_meta generations (L0) — the inline
-    * `metaCompactEvery` cadence job. The rule:
-    *  - while the delta (L1 + L0) holds under [[MetaCatchUpRatio]] of
-    *    the base's bytes, merge ONLY L0 and append it to the folded level
-    *    (L1): O(rows appended since the last fold), independent of total
-    *    series count, and earlier folded generations are never re-merged
-    *    (the 10M-series churn failure mode was a fold re-merging all 15M
-    *    meta rows, 20-30 s spikes). Crash between the L1 append and the
-    *    L0 clear leaves duplicated rows, which the read-side merge
-    *    collapses idempotently.
-    *  - once the delta has caught up, merge base ∪ L1 ∪ L0 into a new
-    *    base through the crash-safe swap of [[compactSeriesMeta]]. The
-    *    base is then at most twice the delta, so the rewrite reads at
-    *    most 3× the rows touched since the base was last written — and on
-    *    the scrape shape (every series in every batch), where each
-    *    delta-only fold would add a full generation, the levels stay
-    *    bounded instead of growing with the batch count.
+    * `metaCompactEvery` cadence job. The rule, on the levels' bytes
+    * before the fold:
+    *  - while the folded level (L1) and L0 each hold under
+    *    [[MetaCatchUpRatio]] of the base's bytes, merge ONLY L0 and
+    *    append it to L1: O(rows appended since the last fold),
+    *    independent of total series count, and earlier folded
+    *    generations are never re-merged (the 10M-series churn failure
+    *    mode was a fold re-merging all 15M meta rows, 20-30 s spikes).
+    *    L1 then stays under half the base plus this one fold. A crash
+    *    between the L1 append and the L0 clear leaves duplicated rows,
+    *    which the read-side merge collapses idempotently.
+    *  - once L1 has caught up with the base (accumulated churn), or L0
+    *    alone has (the scrape shape, every series in every batch, where
+    *    a delta-only fold would add a full generation to L1), merge
+    *    base ∪ L1 ∪ L0 into a new base through the crash-safe swap of
+    *    [[compactSeriesMeta]]. The base is then at most twice the delta,
+    *    so the rewrite reads at most 3× the rows touched since the base
+    *    was last written, and the levels stay bounded instead of growing
+    *    with the batch count.
+    * Either branch deletes or renames meta files while the store stays
+    * open: a DataFrame built before a fold has listed the old files and
+    * must be rebuilt before it runs, as after [[compactSeriesMeta]].
     */
   def foldMetaDelta(): Unit = {
     if (conf.onlyMemoryMode || !pathExists(metaPath)) return
-    val (base, delta) = metaBytes
-    if (delta >= base * MetaCatchUpRatio) rewriteMetaBase()
+    val (base, l1, l0) = metaBytes
+    if (math.max(l1, l0) >= base * MetaCatchUpRatio) rewriteMetaBase()
     else {
       mergedMeta(spark.read.schema(metaSchema).parquet(metaPath))
         .coalesce(4)

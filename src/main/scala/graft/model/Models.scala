@@ -92,15 +92,18 @@ final case class TsdbConf(
       * batch, head flush, rollup-dim append) adds a fresh generation to
       * `series_meta` (L0), and reads pay a merge while deltas exist.
       * Once this many generations pile up, the store folds them inline
-      * ([[graft.Tsdb.foldMetaDelta]]). While the delta (folded level L1
-      * plus L0) holds under half the base's bytes, the fold merges ONLY
-      * L0 into the append-only L1 — O(rows appended since the last
-      * fold), independent of total series count and of store age. Once
-      * the delta has caught up, the fold merges base ∪ L1 ∪ L0 into a
-      * new base instead — at most 3× the rows touched since the base was
-      * last written. A metadata read therefore merges the base, a delta
-      * under half the base and at most this many fresh generations,
-      * however many batches the store has taken. The fold runs inline
+      * ([[graft.Tsdb.foldMetaDelta]]). While the folded level (L1) and
+      * L0 each hold under half the base's bytes, the fold merges ONLY L0
+      * into the append-only L1 — O(rows appended since the last fold),
+      * independent of total series count and of store age. Once either
+      * has caught up, the fold merges base ∪ L1 ∪ L0 into a new base
+      * instead — at most 3× the rows touched since the base was last
+      * written. A metadata read therefore merges the base, a folded
+      * level under half the base plus at most one fold's generations,
+      * and at most this many fresh generations, however many batches the
+      * store has taken. A fold deletes or swaps meta files, so a
+      * DataFrame built before it must be rebuilt before it runs (as after
+      * `compactSeriesMeta`). The fold runs inline
       * on the append that crosses the cadence and counts toward the
       * streaming path's `writeListenerTimeoutSec` budget; latency-strict
       * streaming deployments can set `<= 0` (merge-on-read only) and

@@ -26,10 +26,10 @@ import graft.model.{LabelMatcher, TsdbConf}
   *    matcher), querySeries, queryLabelValues (meta default vs exact);
   *  - series-meta churn: 10 appends cross the `metaCompactEvery`
   *    cadence repeatedly, so fold-bearing appends pay the inline fold
-  *    (L0->L1 while the delta is under half the base, a base rewrite
-  *    once it is not — recorded per append with the L1/base byte
-  *    share); meta read latency is recorded before and after
-  *    compaction;
+  *    (L0->L1 while L1 and L0 each stay under half the base, a base
+  *    rewrite once either does not — recorded per append with the
+  *    L1/base byte share); meta read latency is recorded before and
+  *    after compaction;
   *  - an xxhash64 sid collision audit over the full labelset universe.
   *
   * Not part of the driver sweep — run ad hoc (SPARK_DRIVER_MEM=32g),

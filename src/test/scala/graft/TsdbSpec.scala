@@ -326,12 +326,13 @@ class TsdbSpec extends SparkSuite {
       ("m1", Map("n" -> "a"), off, 1.0),
       ("m2", Map("n" -> "b"), off + 60, 2.0))
       .toDF("metric", "labels", "ts", "value")
-    t.insertRows(bulk(20000))
-    (1 until 6).foreach(i => t.insertRows(batch(i * 86400L)))
+    t.insertRows(bulk(20000).unionByName(batch(0L)))
+    (1 until 5).foreach(i => t.insertRows(batch(i * 86400L)))
     val before = t.seriesMeta.orderBy("sid").collect().map(_.toString).toSeq
-    // batch 1 established the base level; batches 2-6 appended fresh
-    // generations, some already folded to L1 by the inline cadence (the
-    // delta stays far under half the base, so no fold rewrote it)
+    // batch 1 established the base level (m1 and m2 among 20,000 bulk
+    // series); batches 2-5 appended fresh generations, folded to L1 by
+    // the inline cadence (the delta stays far under half the base, so no
+    // fold rewrote it)
     val deltaDir = new java.io.File(t.conf.dataPath + "/series_meta")
     val foldedDir = new java.io.File(t.conf.dataPath + "/series_meta_folded")
     val baseDir = new java.io.File(t.conf.dataPath + "/series_meta_base")
@@ -339,7 +340,7 @@ class TsdbSpec extends SparkSuite {
       Option(d.listFiles).map(_.count(_.getName.endsWith(".parquet")))
         .getOrElse(0)
     val filesBefore = pq(deltaDir) + pq(foldedDir) + pq(baseDir)
-    assert(pq(deltaDir) > 0 && pq(foldedDir) > 0, "delta should survive")
+    assert(pq(foldedDir) > 0, "the folded delta should survive")
     t.compactSeriesMeta()
     // full consolidation: delta levels cleared, everything in the base
     assert(!deltaDir.exists(), "fresh level should be cleared")
@@ -348,7 +349,10 @@ class TsdbSpec extends SparkSuite {
     val filesAfter = pq(deltaDir) + pq(foldedDir) + pq(baseDir)
     assert(after == before)
     assert(filesAfter < filesBefore)
-    assert(after.length == 20002) // 2 series merged across 5 appends
+    assert(after.length == 20002) // m1, m2 merged across 5 appends
+    val m1 = t.seriesMeta.where(col("metric") === "m1").collect()
+    assert(m1.map(r => (r.getAs[Long]("minTs"), r.getAs[Long]("maxTs")))
+      .toSeq == Seq((0L, 4 * 86400L)))
     // the consolidated read is a plain scan — no merge aggregation
     val plan = t.seriesMeta.queryExecution.optimizedPlan.toString
     assert(!plan.contains("Aggregate"), plan.take(1500))
@@ -733,13 +737,14 @@ class TsdbSpec extends SparkSuite {
       ("m1", Map("n" -> "a"), off, 1.0),
       ("m2", Map("n" -> "b"), off + 60, 2.0))
       .toDF("metric", "labels", "ts", "value")
-    // append 1 establishes a 20,000-series base level; append 2
-    // accumulates a fresh (L0) generation; append 3 reaches the cadence
-    // (2 generations) and folds L0 into the append-only folded level
-    // (L1) — the delta stays far under half the base, so neither the
-    // base nor earlier L1 generations are ever rewritten
+    // append 1 establishes the base level (m1 and m2 among 20,000 bulk
+    // series); append 2 accumulates a fresh (L0) generation; append 3
+    // reaches the cadence (2 generations) and folds L0 into the
+    // append-only folded level (L1) — the delta stays far under half
+    // the base, so neither the base nor earlier L1 generations are ever
+    // rewritten
     val baseDir = new java.io.File(t.conf.dataPath + "/series_meta_base")
-    t.insertRows(bulk(20000))
+    t.insertRows(bulk(20000).unionByName(batch(0L)))
     assert(baseDir.exists(), "first batch should establish the base level")
     val baseFiles0 = baseDir.listFiles.map(_.getName).toSet
     (1 until 3).foreach(i => t.insertRows(batch(i * 86400L)))
@@ -768,9 +773,42 @@ class TsdbSpec extends SparkSuite {
       .orderBy("metric").collect()
     assert(rows.length == 2)
     val m1 = rows.find(_.getAs[String]("metric") == "m1").get
-    assert(m1.getAs[Long]("minTs") == 86400L)
+    // minTs comes from the base row, maxTs from the delta's
+    assert(m1.getAs[Long]("minTs") == 0L)
     assert(m1.getAs[Long]("maxTs") == 6 * 86400L)
     assert(t.seriesMeta.count() == 20002L)
+  }
+
+  test("series_meta churn: a fold rewrites the base only once L1 " +
+      "reaches half of it") {
+    val path = tempDir("churn")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, metaCompactEvery = 2))
+    val hfs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    def len(level: String): Long = {
+      val d = new org.apache.hadoop.fs.Path(s"$path/$level")
+      if (hfs.exists(d)) hfs.getContentSummary(d).getLength else 0L
+    }
+    def baseFiles = new java.io.File(s"$path/series_meta_base")
+      .listFiles.map(_.getName).toSet
+    t.insertRows(bulk(20000))
+    // 10% churn: each append brings 2,000 new series, so every fold
+    // takes a fresh level of about a fifth of the base
+    val rewrites = (0 until 10).map { k =>
+      val (base0, l1Before, files0) =
+        (len("series_meta_base"), len("series_meta_folded"), baseFiles)
+      t.insertRows(spark.range(2000).select(lit("churn").as("metric"),
+        map(lit("id"), (col("id") + k * 2000).cast("string")).as("labels"),
+        lit(k * 60L).as("ts"), lit(1.0).as("value")))
+      val rewritten = baseFiles != files0
+      assert(!rewritten || 2 * l1Before >= base0,
+        s"append $k rewrote the base with L1 at $l1Before of $base0 bytes")
+      assert(len("series_meta_folded") < len("series_meta_base"),
+        s"append $k: the folded level outgrew the base")
+      rewritten
+    }
+    assert(rewrites.count(identity) >= 1, "L1 never caught up")
+    assert(t.seriesMeta.count() == 40000L)
   }
 
   test("series_meta delta that covers the base folds into it: " +
