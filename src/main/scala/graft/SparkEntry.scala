@@ -3181,22 +3181,28 @@ object SparkEntry {
   private def qPipelineKeepBest(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // comp is the components loop's output — already materialized (its
-    // final round persists the label RDD), and TINY (pair-graph nodes
-    // only), so its two consumers below are free re-reads
-    val comp = Dedup.connectedComponents(
+    // final round persists the label RDD), so its two consumers below are
+    // free re-reads
+    val cc = Dedup.minLabelComponents(
       Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8,
         hashTokens = true, maxDocFreq = Some(5L)))
+    val comp = cc.frame
+    // comp rides an RDD (statically unknown size → Catalyst estimates it
+    // huge and would BROADCAST THE TEXT CORPUS instead), but the loop's
+    // last round counted its rows: pin comp and losers (a subset of
+    // comp) to broadcast when their two longs a row fit under the
+    // session's threshold, and leave the join to the planner otherwise
+    val thr = Tsdb.broadcastThresholdBytes(s)
+    def pin(df: DataFrame): DataFrame =
+      if (thr >= 0 && cc.rows * 16 <= thr) broadcast(df) else df
     // representative pick: score ONLY the component members — the r15
     // shape materialized the whole scored corpus for this join, and the
     // x10 receipts showed that corpus-wide write costing more than the
     // reuse saved (0.89x). Scoring the members is a pair-graph-sized
     // pass; the full-corpus scoring below is then single-consumer and
     // stays LAZY (exactly one corpus scan+score at any scale).
-    // comp rides a LogicalRDD (statically unknown size → Catalyst
-    // estimates it huge and BROADCASTS THE TEXT CORPUS instead); the
-    // pair-graph side is the provably-small one at any scale — pin it
     val reps = TextAnalysis.qualityScore(
-        docs.join(broadcast(comp), "doc_id"), "doc_id", "text",
+        docs.join(pin(comp), "doc_id"), "doc_id", "text",
         keep = Seq("component"))
       .groupBy("component")
       .agg(max_by(col("doc_id"),
@@ -3206,7 +3212,7 @@ object SparkEntry {
       .join(reps, Seq("doc_id"), "left_anti")
     TextAnalysis.qualityScore(docs, "doc_id", "text")
       .select("doc_id", "n_words", "quality")
-      .join(broadcast(losers), Seq("doc_id"), "left_anti")
+      .join(pin(losers), Seq("doc_id"), "left_anti")
       .orderBy("doc_id")
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.LabelFunctions._
 import graft.model.{LabelMatcher, TsdbConf}
+import graft.operators.Spread
 
 /** Spark-native TSDB with the reference's query surface (SURVEY §2):
   * `insertRows` / `queryRange` / `querySeries` / `queryLabelValues` plus
@@ -175,18 +176,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * reference's outdated-list machinery, memory_segment.go:104-111, exists
     * only because its Gorilla blocks are append-only).
     */
-  /** Spread a badly-partitioned ingest batch across the cluster before
-    * the per-row work: a single-partition feed (one kafka partition, one
-    * un-split file — exactly how the sf0.1 events parquet reads) would
-    * otherwise serialize normalize + checkpoint + write onto one core.
-    * Only engages when the input has less than half the default
-    * parallelism — well-partitioned callers pay nothing.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val want = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 < want) df.repartition(want) else df
-  }
-
   def insertRows(df: DataFrame): Unit = {
     // spread only on the durable path: it materializes (persist + write),
     // so parallelizing the per-row work pays. The memory-mode head is a
@@ -194,7 +183,10 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     // downstream query plan (attach() feeds this path; round-7 measured
     // a uniform 1.3-2.2x slowdown across the tsdb family before this
     // guard), and the source's natural partitioning is what queries want.
-    val norm0 = normalize(if (conf.onlyMemoryMode) df else spread(df))
+    // Spread engages only on a batch whose physical plan has no exchange
+    // (a single-split scan or local feed): reading an exchange-bearing
+    // batch's partition count would run its query stages once more.
+    val norm0 = normalize(if (conf.onlyMemoryMode) df else Spread(df))
     if (conf.onlyMemoryMode) {
       val u = memHead.map(_.unionByName(norm0)).getOrElse(norm0)
       memBatches += 1
@@ -363,7 +355,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     *         `enableOutdated=true`)
     */
   def insertHeadRows(df: DataFrame): Long = {
-    val norm0 = normalize(spread(df))
+    val norm0 = normalize(Spread(df))
     // localCheckpoint materializes the batch once: the count below and the
     // head union both read the materialized partitions, and the incoming
     // lineage (often a fresh source read) is truncated
@@ -443,18 +435,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     }
   }
 
-  /** Session broadcast threshold in bytes (negative = user disabled
-    * broadcast joins entirely; honored).
-    */
-  private def broadcastThresholdBytes: Long = {
-    val s = spark.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-    if (s.startsWith("-")) -1L
-    else
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
-      catch { case _: NumberFormatException => 10L * 1024 * 1024 }
-  }
-
   /** On-disk bytes of the series-meta levels: (base, folded L1, fresh
     * L0). One FS listing, cached until the next meta write.
     */
@@ -481,7 +461,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * broadcast threshold (× a conservative 4× decompression factor).
     */
   private def underBroadcast(bytes: Long): Boolean = {
-    val thr = broadcastThresholdBytes
+    val thr = Tsdb.broadcastThresholdBytes(spark)
     thr >= 0 && (bytes == 0 || bytes * 4 < thr)
   }
 
@@ -3173,6 +3153,19 @@ object Tsdb {
     * reads it back. */
   private val LabelsType = MapType(StringType, StringType)
   val MetricLabel: String = graft.functions.LabelFunctions.MetricLabel
+
+  /** Session broadcast threshold in bytes,
+    * `spark.sql.autoBroadcastJoinThreshold` (negative = user disabled
+    * broadcast joins entirely; honored).
+    */
+  private[graft] def broadcastThresholdBytes(spark: SparkSession): Long = {
+    val s = spark.conf
+      .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
+    if (s.startsWith("-")) -1L
+    else
+      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
+      catch { case _: NumberFormatException => 10L * 1024 * 1024 }
+  }
 
   /** Prometheus `bucketQuantile` over an ALREADY-AGGREGATED cumulative
     * bucket frame `(keyCols…, leCol (string bounds, "+Inf" overflow),

@@ -1,8 +1,11 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -430,71 +433,111 @@ object Dedup {
     * cluster gets one canonical representative (the complete form of
     * "keep one per near-dup group" — pairwise id2-dropping misses chains).
     *
-    * Iterative min-label propagation to a fixpoint: each round is one
-    * join + min-aggregation, converging in O(diameter) rounds (near-dup
-    * graphs are shallow). Plans are localCheckpointed per round so the
-    * lineage does not grow unboundedly — the standard pattern for
-    * iterative DataFrame algorithms.
-    * Output: (doc_id, component) for every doc appearing in a pair.
+    * Iterative min-label propagation to a fixpoint, O(diameter) rounds
+    * (near-dup graphs are shallow), on pair RDDs hash-partitioned by node
+    * with one partitioner of `spark.sql.shuffle.partitions` partitions
+    * ([[nodePartitioner]]): the edges `(a, b)`, both directions, are
+    * partitioned once and persisted; the labels `(id, comp)` share their
+    * partitioning. A round is one `zipPartitions` lookup — each edge
+    * `(a, b)` proposes `comp(a)` to `b`, from a map of the partition's
+    * labels, so memory per partition is bounded by its distinct nodes,
+    * never by one node's degree — plus one `reduceByKey(min)` back onto
+    * the partitioner. Its Σcomp statistic ([[persistRound]]) is the
+    * round's only Spark job; no Catalyst planning runs inside the loop.
+    * Output: (doc_id, component) for every doc appearing in a pair, over
+    * the persisted last round (consumers re-read it for free).
     */
   def connectedComponents(pairs: DataFrame): DataFrame =
-    connectedComponentsRounds(pairs)._1
+    minLabelComponents(pairs).frame
 
   /** [[connectedComponents]] plus its round count — exposed for the
     * round-complexity spec comparing the two algorithms.
     */
   private[graft] def connectedComponentsRounds(
       pairs: DataFrame): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    // ids are read back with InternalRow.getLong below, whatever the
-    // input type: cast at entry
-    val ids = pairs.select(col("id1").cast("long").as("id1"),
-      col("id2").cast("long").as("id2"))
-    val edges = ids.select(col("id1").as("a"), col("id2").as("b"))
-      .union(ids.select(col("id2").as("a"), col("id1").as("b")))
-      .transform(Materialize.once)
-    // per-round materialize + convergence stat in ONE job: the round's
-    // frame is persisted as its internal-row RDD and the statistic is an
-    // aggregate over that RDD (computing it also materializes the
-    // persist) — the former localCheckpoint-then-agg shape paid two jobs
-    // of scheduler floor per round, which at local KB-scale WAS the
-    // components queries' residual cost (~2 s over 6-9 rounds)
-    def materializeWithSum(df: DataFrame, prev: Option[
-        org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]])
-        : (DataFrame,
-           org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-           Long) = {
-      val rdd = df.queryExecution.toRdd.map(_.copy())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // sum(comp): the monotone invariant — per-node labels only ever
-      // decrease, so the sum strictly decreases until the fixpoint; an
-      // EMPTY graph folds to 0 and converges immediately
-      val s = rdd.aggregate(0L)((acc, r) => acc + r.getLong(1), _ + _)
-      prev.foreach(_.unpersist(blocking = false))
-      (org.apache.spark.sql.GraftBridge.internalDf(spark, rdd, df.schema),
-        rdd, s)
-    }
-    var (labels, labelsRdd, prevSum) = materializeWithSum(
-      edges.select(col("a").as("id")).distinct()
-        .withColumn("comp", col("id")), None)
+    val c = minLabelComponents(pairs)
+    (c.frame, c.rounds)
+  }
+
+  /** A components result: the (doc_id, component) frame, the loop's round
+    * count and the frame's row count, read off the last round statistic.
+    */
+  private[graft] final case class Components(
+      frame: DataFrame, rounds: Int, rows: Long)
+
+  /** The min-label loop of [[connectedComponents]]. */
+  private[graft] def minLabelComponents(pairs: DataFrame): Components = {
+    val part = nodePartitioner(pairs)
+    val edges = idPairs(pairs)
+      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .partitionBy(part)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // every node starts as its own label; the edges are already
+    // partitioned by node, so this reduceByKey adds no shuffle
+    var labels = edges
+      .mapPartitions(_.map { case (a, _) => (a, a) },
+        preservesPartitioning = true)
+      .reduceByKey(part, (x, _) => x)
+    // (rows, Σcomp): labels only ever decrease, so the sum strictly
+    // decreases until the fixpoint; an EMPTY graph folds to (0, 0) and
+    // converges immediately
+    var prev = persistRound(labels, None)(_._2)
     var converged = false
     var rounds = 0
     while (!converged) {
-      val (prop, propRdd, s) = materializeWithSum(
-        labels.join(edges, labels("id") === edges("a"))
-          .select(col("b").as("id"), col("comp"))
-          .unionByName(labels)
-          .groupBy("id")
-          .agg(min("comp").as("comp")),
-        Some(labelsRdd))
-      labels = prop
-      labelsRdd = propRdd
+      val next = labels
+        .zipPartitions(edges) { (ls, es) =>
+          val comp = scala.collection.mutable.LongMap.from(ls)
+          comp.iterator ++ es.map { case (a, b) => (b, comp(a)) }
+        }
+        .reduceByKey(part, math.min(_, _))
+      val st = persistRound(next, Some(labels))(_._2)
+      labels = next
       rounds += 1
-      converged = s == prevSum
-      prevSum = s
+      converged = st == prev
+      prev = st
     }
-    (labels.select(col("id").as("doc_id"), col("comp").as("component")), rounds)
+    edges.unpersist(blocking = false)
+    Components(componentFrame(pairs, labels), rounds, prev._1)
   }
+
+  /** The node partitioner both components loops share: hash on the node
+    * id over `spark.sql.shuffle.partitions` partitions.
+    */
+  private def nodePartitioner(pairs: DataFrame): HashPartitioner =
+    new HashPartitioner(
+      pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+
+  /** The (id1, id2) columns as a pair RDD, cast to long at entry (any
+    * integral id type is accepted); pairs with a null id are dropped.
+    */
+  private def idPairs(pairs: DataFrame): RDD[(Long, Long)] =
+    pairs
+      .select(col("id1").cast("long"), col("id2").cast("long"))
+      .na.drop()
+      .queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+
+  /** Persist a components round and compute its convergence statistic,
+    * (rows, Σ weight), as ONE Spark job (computing it also materializes
+    * the persist); the previous round is released once the new one is
+    * cached.
+    */
+  private def persistRound(
+      round: RDD[(Long, Long)],
+      prev: Option[RDD[(Long, Long)]])(
+      weight: ((Long, Long)) => Long): (Long, Long) = {
+    round.persist(StorageLevel.MEMORY_AND_DISK)
+    val st = round.aggregate((0L, 0L))(
+      (acc, e) => (acc._1 + 1L, acc._2 + weight(e)),
+      (x, y) => (x._1 + y._1, x._2 + y._2))
+    prev.foreach(_.unpersist(blocking = false))
+    st
+  }
+
+  private def componentFrame(
+      pairs: DataFrame, rdd: RDD[(Long, Long)]): DataFrame =
+    pairs.sparkSession.createDataFrame(rdd).toDF("doc_id", "component")
 
   /** Connected components via alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -513,77 +556,69 @@ object Dedup {
     *    and its smaller neighbors off their minimum — collapses the
     *    two-level trees large-star leaves behind.
     * Fixpoint = a star per component (every node points at its minimum).
+    *
+    * The edges are an `RDD[(Long, Long)]`; each half-round partitions
+    * them by node with the partitioner the min-label loop uses
+    * (`spark.sql.shuffle.partitions` partitions, [[nodePartitioner]]) and
+    * hangs them off their node's minimum ([[hangOffMin]]: memory per
+    * partition bounded by its distinct nodes). A round ends with one
+    * `distinct` and a persist, and its (edge count, Σ(u+v)) statistic is
+    * its only Spark job; no Catalyst planning runs inside the loop.
     */
   def connectedComponentsStar(pairs: DataFrame): DataFrame =
     connectedComponentsStarRounds(pairs)._1
 
   private[graft] def connectedComponentsStarRounds(
       pairs: DataFrame): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    // per-round materialize + convergence stat in ONE job (see
-    // connectedComponentsRounds): the (edge count, Σ(u+v)) Kiveris
-    // potential is non-increasing and strictly decreases until the star
-    // fixpoint, so a stable pair means a stable edge set; folding it
-    // into the materialization job halves the per-round job count
-    def materializeWithStat(df: DataFrame, prev: Option[
-        org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]])
-        : (DataFrame,
-           org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-           (Long, Long)) = {
-      val rdd = df.queryExecution.toRdd.map(_.copy())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val st = rdd.aggregate((0L, 0L))(
-        (acc, r) => (acc._1 + 1L, acc._2 + r.getLong(0) + r.getLong(1)),
-        (a, b) => (a._1 + b._1, a._2 + b._2))
-      prev.foreach(_.unpersist(blocking = false))
-      (org.apache.spark.sql.GraftBridge.internalDf(spark, rdd, df.schema),
-        rdd, st)
-    }
-    var (edges, edgesRdd, cur) = materializeWithStat(
-      pairs
-        // cast at entry: the round statistic reads ids with getLong
-        .select(col("id1").cast("long").as("u"),
-          col("id2").cast("long").as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct(), None)
+    val part = nodePartitioner(pairs)
+    var edges = idPairs(pairs).filter { case (u, v) => u != v }
+      .distinct(part.numPartitions)
+    // the (edge count, Σ(u+v)) Kiveris potential is non-increasing and
+    // strictly decreases until the star fixpoint, so a stable pair means
+    // a stable edge set
+    var cur = persistRound(edges, None) { case (u, v) => u + v }
     var prev = (-1L, -1L)
     var rounds = 0
     while (cur != prev && rounds < 64) {
-      // large-star: m = min(Γ(u) ∪ u); emit (v, m) for neighbors v > u
-      val nbr = edges.unionByName(
-        edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = nbr.groupBy("u")
-        .agg(least(min(col("v")), col("u")).as("m"))
-      val large = nbr.where(col("v") > col("u"))
-        .join(mins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-      // small-star: orient toward the smaller endpoint; hang u and its
-      // smaller neighbors off their minimum
-      val dir = large
-        .select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-      val mins2 = dir.groupBy("u").agg(min(col("v")).as("m"))
-      val small = dir.join(mins2, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-        .unionByName(mins2.select(col("u"), col("m").as("v")))
-      val (e2, r2, st2) = materializeWithStat(
-        small.distinct(), Some(edgesRdd))
-      edges = e2
-      edgesRdd = r2
-      rounds += 1
+      val large = hangOffMin(
+        edges.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
+          .partitionBy(part),
+        large = true)
+      // small-star over edges oriented toward the smaller endpoint: the
+      // large star emits (v, m) with v > u ≥ m, already oriented
+      val small = hangOffMin(large.partitionBy(part), large = false)
+      val next = small.distinct()
       prev = cur
-      cur = st2
+      cur = persistRound(next, Some(edges)) { case (u, v) => u + v }
+      edges = next
+      rounds += 1
     }
     // fixpoint edge set is {(node, root) : node ≠ root}; roots appear only
     // on the v side — attach their self-labels for the full node cover
-    val out = edges
-      .select(col("u").as("doc_id"), col("v").as("component"))
-      .unionByName(
-        edges.select(col("v").as("doc_id"), col("v").as("component")))
+    val out = edges.flatMap { case (u, v) => Iterator((u, v), (v, v)) }
       .distinct()
-    (out, rounds)
+    (componentFrame(pairs, out), rounds)
+  }
+
+  /** One star half-round over edges `(u, v)` partitioned by u: with
+    * m = min(Γ(u) ∪ u) per node (a `reduceByKey` on the edges' own
+    * partitioner, so no shuffle), the large star hangs every larger
+    * neighbor v > u off m, emitting `(v, m)`; the small star, over edges
+    * oriented so that v < u, hangs every v ≠ m and u itself off m. The
+    * minima are looked up by `zipPartitions` from a map of the
+    * partition's nodes: memory is bounded by the distinct nodes of a
+    * partition, never by one node's degree (a hub's edges stream
+    * through).
+    */
+  private def hangOffMin(
+      byNode: RDD[(Long, Long)], large: Boolean): RDD[(Long, Long)] = {
+    val mins = byNode.reduceByKey(byNode.partitioner.get, math.min(_, _))
+    byNode.zipPartitions(mins) { (es, ms) =>
+      val m = scala.collection.mutable.LongMap.empty[Long]
+      ms.foreach { case (u, x) => m(u) = math.min(u, x) }
+      if (large) es.collect { case (u, v) if v > u => (v, m(u)) }
+      else es.collect { case (u, v) if v != m(u) => (v, m(u)) } ++ m.iterator
+    }
   }
 
   /** Embedding-cosine near-dup pairs (exact all-pairs baseline). The scale

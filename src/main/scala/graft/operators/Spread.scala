@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Spread a badly-partitioned input across the cluster before expensive
   * per-row work (guide §2.5 "input skew": one un-split file serializes
@@ -11,10 +13,8 @@ import org.apache.spark.sql.DataFrame
   * well-partitioned inputs — at production scale (many files / row
   * groups) this is a no-op.
   *
-  * Same idiom as `Tsdb.spread` (ingest) and the former private
-  * `TextAnalysis.spreadDocs` (DSIR, r13: 10.98 → 2.15 s), promoted here
-  * because the single-partition-scan cost class turned out to cover the
-  * whole dedup/similarity/text operator surface, not just DSIR.
+  * The one input-spreading idiom of the engine: the dedup/similarity/text
+  * operators (DSIR first: 10.98 → 2.15 s) and `Tsdb` ingest batches.
   */
 private[graft] object Spread {
   def apply(df: DataFrame): DataFrame = {
@@ -25,16 +25,16 @@ private[graft] object Spread {
     // exchange-bearing frames pass through untouched: their output
     // partitioning is the shuffle's (AQE-sized) concern, AND — the real
     // hazard — under AQE `toRdd` on such a plan MATERIALIZES the upstream
-    // shuffle stages as real jobs whose results the subsequent repartition
-    // would then discard (double execution). The single-split-input
-    // problem this guard exists for is a property of scan-rooted frames
-    // only, so skipping shuffle-rooted ones loses nothing.
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val exchanges = df.queryExecution.optimizedPlan.collectFirst {
-      case p @ (_: Join | _: Aggregate | _: Window | _: Sort |
-          _: RepartitionOperation) => p
-    }
-    if (exchanges.isDefined) return df
+    // query stages (shuffles, broadcasts) as real jobs whose results the
+    // subsequent repartition would then discard (double execution). The
+    // guard reads the physical plan: any exchange, or an adaptive root
+    // (AQE wraps exactly the plans with exchanges or subqueries). The
+    // single-split-input problem this exists for is a property of
+    // exchange-free frames only, so skipping the others loses nothing.
+    val plan = df.queryExecution.executedPlan
+    val exchanges = plan.isInstanceOf[AdaptiveSparkPlanExec] ||
+      plan.exists(_.isInstanceOf[Exchange])
+    if (exchanges) return df
     val want = df.sparkSession.sparkContext.defaultParallelism
     // partition count from the internal-row RDD of the already-planned
     // QueryExecution — `df.rdd` would append a row-deserializing

@@ -19,16 +19,4 @@ object GraftBridge {
   def analyzed(df: DataFrame):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
-
-  /** DataFrame over an already-computed InternalRow RDD (no row
-    * re-encoding) — the handle iterative algorithms need to fold their
-    * convergence statistic into the SAME job that materializes the
-    * round's result (one aggregate over the persisted RDD) instead of
-    * paying a separate checkpoint job plus a stat job per round.
-    */
-  def internalDf(
-      spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 }

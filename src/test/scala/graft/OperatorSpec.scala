@@ -153,6 +153,142 @@ class OperatorSpec extends SparkSuite {
     assert(starRounds <= 7, s"star rounds = $starRounds")
   }
 
+  /** Spark jobs `body` launches, counted by a listener on a private job
+    * group (a sentinel job drains the listener bus before reading).
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"count-${System.nanoTime}"
+    val sentinel = s"sentinel-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = body
+      sc.setJobGroup(sentinel, "sentinel")
+      spark.range(1).collect()
+      sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Driver-side union-find reference: node -> min reachable node. */
+  private def unionFindComponents(es: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    es.flatMap(p => Seq(p._1, p._2)).distinct.map(n => n -> find(n)).toMap
+  }
+
+  test("each round of both components loops is one Spark job") {
+    import spark.implicits._
+    val chain = (0L until 20L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val ((_, starRounds), starJobs) =
+      jobsOf(Dedup.connectedComponentsStarRounds(chain))
+    val ((_, mlRounds), mlJobs) =
+      jobsOf(Dedup.connectedComponentsRounds(chain))
+    // one set-up job (the distinct input edges, or the initial labels,
+    // persisted with their statistic), then exactly one job per round
+    assert(starJobs == starRounds + 1,
+      s"star: $starJobs jobs over $starRounds rounds")
+    assert(mlJobs == mlRounds + 1,
+      s"min-label: $mlJobs jobs over $mlRounds rounds")
+  }
+
+  test("both components loops equal union-find on a 50,000-spoke hub, " +
+      "a 20-deep chain and a disjoint triangle") {
+    import spark.implicits._
+    // the hub is not its component's minimum (spoke 1,000,000 is), so
+    // every spoke must be rehung through the hub's 50,000-edge node
+    val hub = 1025000L
+    val spokes = (1000000L to 1050000L).filter(_ != hub).zipWithIndex
+      .map { case (s, i) => if (i % 2 == 0) (s, hub) else (hub, s) }
+    val chain = (0L until 20L).map(i => (i + 1, i))
+    val triangle = Seq((500L, 501L), (502L, 501L), (500L, 502L))
+    val es = spokes ++ chain ++ triangle
+    assert(spokes.size == 50000)
+    val want = unionFindComponents(es)
+    val pairs = es.toDF("id1", "id2")
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got(Dedup.connectedComponentsStar(pairs)) == want)
+    assert(got(Dedup.connectedComponents(pairs)) == want)
+  }
+
+  test("pipeline_keep_best broadcasts the components only under the " +
+      "broadcast threshold, with the same rows either way") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    // AQE's runtime conversion would broadcast the tiny representative
+    // stage in both runs; with it off, the plan's broadcasts are the pins
+    val aqeKey = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    val saved = Seq(key, aqeKey).map(k => k -> spark.conf.getOption(k))
+    val rows = Dedup.minLabelComponents(
+      Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8,
+        hashTokens = true, maxDocFreq = Some(5L))).rows
+    assert(rows > 0)
+    def run(thr: Long): (Seq[org.apache.spark.sql.Row], String) = {
+      spark.conf.set(key, thr.toString)
+      val df = SparkEntry.queries("pipeline_keep_best")(spark, sf0001)
+      val out = df.collect().toSeq
+      (out, df.queryExecution.executedPlan.toString)
+    }
+    try {
+      spark.conf.set(aqeKey, "-1")
+      val (below, belowPlan) = run(rows * 16 - 1)
+      val (above, abovePlan) = run(rows * 16)
+      assert(below.nonEmpty && below == above)
+      assert(!belowPlan.contains("Broadcast"), belowPlan)
+      assert(abovePlan.contains("BroadcastHashJoin"), abovePlan)
+    } finally {
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("Spread spreads an exchange-free single-split frame and passes " +
+      "exchange-bearing ones through without a Spark job") {
+    val scan = spark.range(0, 1000, 1, 1).toDF("id")
+    // one split is under half the default parallelism from 3 cores up
+    // (the suites share one session, whose core count may be 2)
+    val spreadScan = graft.operators.Spread(scan)
+    assert(spreadScan.queryExecution.executedPlan.toString.toLowerCase
+      .contains("roundrobin") ==
+      (spark.sparkContext.defaultParallelism > 2))
+    // a limit under a filter plans an exchange to one partition; a
+    // crossJoin against a small side plans a broadcast exchange
+    val limited = scan.limit(5).where(col("id") % 2 === 0)
+    val crossed = scan.crossJoin(spark.range(3).toDF("k"))
+    Seq(limited, crossed).foreach { df =>
+      val (out, jobs) = jobsOf(graft.operators.Spread(df))
+      assert(out eq df)
+      assert(jobs == 0, s"$jobs jobs deciding to spread\n" +
+        df.queryExecution.executedPlan)
+    }
+  }
+
   test("simhash near-dups are a subset-consistent view of true near-dups") {
     val sim = Dedup.simHashPairs(docs, "doc_id", "text", maxHamming = 3)
       .select("id1", "id2").collect()
