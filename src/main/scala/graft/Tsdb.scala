@@ -170,14 +170,17 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
 
   /** Batch insert (reference InsertRows, tsdb.go:205-216). Expects columns
     * `metric: string, labels: map<string,string>, ts: long (s), value:
-    * double`. Appends time-partitioned parquet + upserts series metadata.
+    * double`. Appends time-partitioned parquet + upserts series metadata
+    * + appends the label-value pairs; the three tiers are written
+    * concurrently ([[writeNormalized]]), and the call returns only once
+    * all three have ended, so `Tsdb` stays single-writer for its callers.
     * Out-of-order and late points are a non-issue in batch storage — Parquet
     * partitions are unordered collections and reads sort as needed (the
     * reference's outdated-list machinery, memory_segment.go:104-111, exists
     * only because its Gorilla blocks are append-only).
     */
   def insertRows(df: DataFrame): Unit = {
-    // spread only on the durable path: it materializes (persist + write),
+    // spread only on the durable path: it materializes (checkpoint + write),
     // so parallelizing the per-row work pays. The memory-mode head is a
     // LAZY union serving reads — an exchange here would sit in every
     // downstream query plan (attach() feeds this path; round-7 measured
@@ -193,16 +196,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       memHead = Some(
         if (memBatches % memCheckpointEvery == 0) u.localCheckpoint()
         else u)
-    } else {
-      // one normalize pass feeds both the fact write and the series-meta
-      // upsert; persisted (spillable) for the duration of the two actions —
-      // batch size bounds the footprint (micro-batches in the streaming
-      // path, caller-chosen batches otherwise)
-      val norm = norm0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try writeNormalized(norm)
-      finally norm.unpersist()
-    }
+    } else writeNormalized(norm0)
   }
 
   /** Data schema of the `samples` tier (the `seg` partition column is
@@ -218,10 +212,46 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
        else Nil) :+
       StructField("ts", LongType) :+ StructField("value", DoubleType))
 
-  /** Durable write of already-normalized rows: partitioned fact append +
-    * series-meta upsert. Caller persists `norm` for the two actions.
+  /** Durable write of already-normalized rows: the partitioned fact
+    * append, the series-meta upsert (with its inline fold when due) and
+    * the label-value append, run concurrently ([[concurrently]]). The
+    * three only read `rows` — materialized once (an eager local
+    * checkpoint, spillable) and released after all of them have ended,
+    * so one normalize pass feeds all three; batch size bounds the
+    * footprint (micro-batches in the streaming path, caller-chosen
+    * batches otherwise) — and write disjoint directories. Returns, or
+    * throws the first failure, only after every write has ended.
     */
-  private def writeNormalized(norm: DataFrame): Unit = {
+  private def writeNormalized(rows: DataFrame): Unit = {
+    // materialized before the writes share it: each write then reads
+    // the stored blocks, where a lazily filled cache would make every
+    // write plan its own cache stage and hold cores waiting on another's
+    val norm = rows.localCheckpoint()
+    try concurrently(3)(Seq(
+      // the series-meta write first: its chain (the append, then the
+      // fold when due) is the longest, and FIFO scheduling serves the
+      // first-submitted job's tasks first
+      () => appendSeriesMeta(norm),
+      () => appendLabelValues(norm),
+      () => appendFact(norm)))
+    finally org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(norm)
+    // advance the outdated-rejection boundary here — this serves BOTH
+    // durable paths (insertRows and flushHead), so segments frozen via
+    // direct insertRows are visible to insertHeadRows' gate. The max
+    // frozen segment is read off the store's partition directories
+    // (driver-side listing, O(segments) names) instead of a Spark job
+    // over the batch: the boundary is a monotone max, so the global
+    // listing equals max(old, thisBatch) exactly — and it shaves one
+    // job launch per streaming commit (~0.2-0.4 s at micro-batch
+    // cadence, measured in IngestBench's file-stream path).
+    listSegDirs().map(_._1).maxOption.foreach { s =>
+      frozenInit = true // this listing IS the lazy init's listing
+      frozenMaxSeg = math.max(frozenMaxSeg, s)
+    }
+  }
+
+  /** Partitioned fact append of one normalized batch. */
+  private def appendFact(norm: DataFrame): Unit = {
     // shuffle by the partition column before the partitioned write: files
     // per time bucket stay bounded by `filesPerSegment` instead of
     // (tasks × buckets) — at fleet scale this is the difference between
@@ -245,21 +275,43 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       .option("compression", conf.compression)
       .partitionBy("seg")
       .parquet(samplesPath)
-    appendSeriesMeta(norm)
-    appendLabelValues(norm)
-    // advance the outdated-rejection boundary here — this serves BOTH
-    // durable paths (insertRows and flushHead), so segments frozen via
-    // direct insertRows are visible to insertHeadRows' gate. The max
-    // frozen segment is read off the store's partition directories
-    // (driver-side listing, O(segments) names) instead of a Spark job
-    // over the batch: the boundary is a monotone max, so the global
-    // listing equals max(old, thisBatch) exactly — and it shaves one
-    // job launch per streaming commit (~0.2-0.4 s at micro-batch
-    // cadence, measured in IngestBench's file-stream path).
-    listSegDirs().map(_._1).maxOption.foreach { s =>
-      frozenInit = true // this listing IS the lazy init's listing
-      frozenMaxSeg = math.max(frozenMaxSeg, s)
-    }
+  }
+
+  /** Run `bodies` concurrently on a pool of at most `parallelism` threads
+    * made for this call; their results in body order. Every body runs
+    * through `SQLExecution.withThreadLocalCaptured`, so its Spark jobs
+    * carry the caller's local properties (job group, description,
+    * scheduler pool) and active session, as if the caller had run it —
+    * cancelling the caller's job group cancels them too. Waits for EVERY
+    * body before it returns or throws, so no job of the call outlives it;
+    * the first failure (in body order) is rethrown with the others added
+    * as suppressed. Every fan-out of Spark actions inside one engine
+    * call goes through here.
+    */
+  private def concurrently[A](parallelism: Int)(
+      bodies: Seq[() => A]): Seq[A] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(parallelism, bodies.size))
+    try {
+      val session =
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val running = bodies.map(body =>
+        org.apache.spark.sql.execution.SQLExecution
+          .withThreadLocalCaptured(session, pool)(body()))
+      val outcomes = running.map { f =>
+        try Right(f.join())
+        catch {
+          case e: java.util.concurrent.CompletionException =>
+            Left(Option(e.getCause).getOrElse(e))
+        }
+      }
+      outcomes.collectFirst { case Left(first) => first }.foreach { first =>
+        outcomes.collect { case Left(e) if e ne first => e }
+          .foreach(first.addSuppressed)
+        throw first
+      }
+      outcomes.collect { case Right(a) => a }
+    } finally pool.shutdown()
   }
 
   /** Data schema of every series-meta level, as [[metaAggOf]] and
@@ -387,12 +439,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   def flushHead(): Unit = {
     if (conf.onlyMemoryMode) return
     memHead.foreach { h =>
-      if (headRows > 0) {
-        val norm = h.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try writeNormalized(norm) // advances frozenMaxSeg
-        finally norm.unpersist()
-      }
+      if (headRows > 0) writeNormalized(h) // advances frozenMaxSeg
     }
     memHead = None
     headRows = 0L
@@ -512,25 +559,40 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * `metaCompactEvery` fresh generations (`TsdbConf.metaCompactEvery`,
     * [[foldMetaDelta]]): through the broadcast anti/semi split when the
     * delta is small ([[metaDeltaSmall]]), in one aggregation over all
-    * levels when it is not.
+    * levels when it is not. Reads that select series by label matchers
+    * use the matcher form below, which filters each level before the
+    * merge.
     */
-  def seriesMeta: DataFrame = {
-    val headAgg = memHead.map(
-      _.groupBy("sid").agg(
+  def seriesMeta: DataFrame = metaLevels(identity)
+
+  /** [[seriesMeta]] restricted to the series that match `matchers`: the
+    * predicate filters every level, and the head rows, BEFORE the merge,
+    * so a read merges only the matching series' rows instead of the
+    * whole dimension. Exact, because a sid's labels and metric are the
+    * same on every level: a level filter keeps or drops all of a sid's
+    * rows together. `__name__` resolves against the plain `metric`
+    * column ([[metricColumnPredicate]]), which pushes into the meta
+    * parquet scan.
+    */
+  private[graft] def seriesMeta(matchers: Seq[LabelMatcher]): DataFrame = {
+    val keep = metricColumnPredicate(matchers)
+    metaLevels(_.where(keep))
+  }
+
+  /** The [[seriesMeta]] merge, with `keep` applied to each level (and to
+    * the head rows) before it. */
+  private def metaLevels(keep: DataFrame => DataFrame): DataFrame = {
+    def level(path: String): Option[DataFrame] =
+      if (!conf.onlyMemoryMode && pathExists(path))
+        Some(keep(spark.read.schema(metaSchema).parquet(path)))
+      else None
+    val headAgg = memHead.map(h =>
+      keep(h).groupBy("sid").agg(
         first("metric").as("metric"), first("labels").as("labels"),
         min("ts").as("minTs"), max("ts").as("maxTs")))
-    val base =
-      if (!conf.onlyMemoryMode && pathExists(metaBasePath))
-        Some(spark.read.schema(metaSchema).parquet(metaBasePath))
-      else None
-    val diskL0 =
-      if (!conf.onlyMemoryMode && pathExists(metaPath))
-        Some(spark.read.schema(metaSchema).parquet(metaPath))
-      else None
-    val diskL1 =
-      if (!conf.onlyMemoryMode && pathExists(metaFoldedPath))
-        Some(spark.read.schema(metaSchema).parquet(metaFoldedPath))
-      else None
+    val base = level(metaBasePath)
+    val diskL0 = level(metaPath)
+    val diskL1 = level(metaFoldedPath)
     // the head aggregation is just another (already-merged) delta level
     val delta = Seq(diskL1, diskL0, headAgg).flatten
       .reduceOption(_ unionByName _)
@@ -557,7 +619,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
           d
         else mergedMeta(d)
       case (None, None) =>
-        mergedMeta(spark.read.schema(metaSchema).parquet(metaPath))
+        mergedMeta(keep(spark.read.schema(metaSchema).parquet(metaPath)))
     }
   }
 
@@ -629,9 +691,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       // matchers run on the series dimension; matching sids (with their
       // label sets) broadcast-join the pruned fact scan — this also
       // reconstructs labels for the normalized fact layout
-      val matching = seriesMeta
-        .where(matcherPredicate(col("labels"), all))
-        .select("sid", "labels")
+      val matching = seriesMeta(all).select("sid", "labels")
       pruned
         .select("sid", "ts", "value")
         .join(dimHint(matching), "sid")
@@ -663,9 +723,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       .where(segPredicate(start, end))
       .where(col("ts").between(start, end))
     if (!samples.columns.contains("labels")) {
-      val matching = seriesMeta
-        .where(matcherPredicate(col("labels"), matchers))
-        .select("sid", "labels")
+      val matching = seriesMeta(matchers).select("sid", "labels")
       pruned
         .select("sid", "ts", "value")
         .join(dimHint(matching), "sid")
@@ -1541,10 +1599,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     val roll = spark.read.parquet(s"${conf.dataPath}/rollup_$stepSec")
       .where(segPredicate(start0, end0))
       .where(col("bucket_start").between(start0, end0))
-    val matching = seriesMeta
-      .where(matcherPredicate(col("labels"),
-        LabelMatcher.eq(MetricLabel, metric) +: matchers))
-      .select("sid", "labels")
+    val matching =
+      seriesMeta(LabelMatcher.eq(MetricLabel, metric) +: matchers)
+        .select("sid", "labels")
     val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
       (col("bucket_start") + offsetSec).as("bucket_start")
     roll
@@ -2582,9 +2639,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       matchers: Seq[LabelMatcher],
       start: Long,
       end: Long): DataFrame =
-    seriesMeta
+    seriesMeta(matchers)
       .where(col("minTs") <= end && col("maxTs") >= start)
-      .where(matcherPredicate(col("labels"), matchers))
       .select("sid", "metric", "labels")
 
   /** QueryLabelValues (reference tsdb.go:352-370): sorted distinct values of
@@ -2889,11 +2945,13 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * Writer safety: compaction and ingest must not interleave on the same
     * segment — an append landing between the compaction read and the swap
     * would be dropped with the old directory. A `Tsdb` instance is
-    * single-writer (calls on one driver thread), which rules the race out
-    * in-process; multi-writer deployments must quiesce ingest for the
-    * segments being compacted (e.g. compact only segments older than the
-    * active ingest window), exactly as any rewrite-based table maintenance
-    * (OPTIMIZE/vacuum) requires.
+    * single-writer (calls on one driver thread; a call that writes
+    * concurrently inside, like this one or [[insertRows]], returns or
+    * throws only after all of its writes have ended), which rules the
+    * race out in-process; multi-writer deployments must quiesce ingest
+    * for the segments being compacted (e.g. compact only segments older
+    * than the active ingest window), exactly as any rewrite-based table
+    * maintenance (OPTIMIZE/vacuum) requires.
     */
   def compactSegments(filesPerSeg: Int = 1, parallelism: Int = 8): Seq[Long] = {
     if (conf.onlyMemoryMode) return Seq.empty
@@ -2905,34 +2963,24 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     }
     if (candidates.isEmpty) return Seq.empty
     // segment rewrites are independent single-partition-dir jobs; run them
-    // concurrently on a bounded driver pool so a many-segment pass is
-    // limited by executor throughput, not by job-scheduling latency
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, candidates.size))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val done = candidates.map { case (seg, p) =>
-        scala.concurrent.Future {
-          // tmp lives OUTSIDE the partition tree (dot-prefixed sibling of
-          // samples/): concurrent partition discovery never sees a
-          // non-`seg=<n>` directory mid-rewrite
-          val tmp = new org.apache.hadoop.fs.Path(
-            s"${conf.dataPath}/.compact_seg_$seg")
-          spark.read.schema(factSchema).parquet(p.toString)
-            .repartition(filesPerSeg)
-            .sortWithinPartitions("sid", "ts")
-            .write.mode("overwrite")
-            .option("compression", conf.compression)
-            .parquet(tmp.toString)
-          swapInPlace(tmp, p)
-          seg
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(done),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+    // concurrently, at most `parallelism` at a time, so a many-segment pass
+    // is limited by executor throughput, not by job-scheduling latency —
+    // and a failed rewrite surfaces only once every other one has ended
+    concurrently(parallelism)(candidates.map { case (seg, p) => () =>
+      // tmp lives OUTSIDE the partition tree (dot-prefixed sibling of
+      // samples/): concurrent partition discovery never sees a
+      // non-`seg=<n>` directory mid-rewrite
+      val tmp = new org.apache.hadoop.fs.Path(
+        s"${conf.dataPath}/.compact_seg_$seg")
+      spark.read.schema(factSchema).parquet(p.toString)
+        .repartition(filesPerSeg)
+        .sortWithinPartitions("sid", "ts")
+        .write.mode("overwrite")
+        .option("compression", conf.compression)
+        .parquet(tmp.toString)
+      swapInPlace(tmp, p)
+      seg
+    })
   }
 
   /** Materialize a Gorilla chunk tier: every (sid, seg) group's points
@@ -2985,9 +3033,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     val pts = graft.operators.GorillaPack
       .unpackToPoints(chunks, "sid", "block")
       .where(col("ts").between(start, end))
-    val matching = seriesMeta
-      .where(matcherPredicate(col("labels"), all))
-      .select("sid", "labels")
+    val matching = seriesMeta(all).select("sid", "labels")
     pts
       .join(dimHint(matching), "sid")
       .select("sid", "labels", "ts", "value")
@@ -3140,12 +3186,18 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     */
   private def factMatcherPredicate(
       df: DataFrame, matchers: Seq[LabelMatcher]): Column =
-    if (df.columns.contains("metric"))
-      Tsdb.matcherPredicateWith(
-        n => if (n == Tsdb.MetricLabel) col("metric")
-             else col("labels").getItem(n),
-        matchers)
+    if (df.columns.contains("metric")) metricColumnPredicate(matchers)
     else Tsdb.matcherPredicate(col("labels"), matchers)
+
+  /** Matcher predicate over a frame that carries the plain `metric`
+    * column beside `labels` (normalized samples, every series-meta
+    * level): `__name__` resolves to `metric` (see [[factMatcherPredicate]]
+    * for why that is value-identical and faster). */
+  private def metricColumnPredicate(matchers: Seq[LabelMatcher]): Column =
+    Tsdb.matcherPredicateWith(
+      n => if (n == Tsdb.MetricLabel) col("metric")
+           else col("labels").getItem(n),
+      matchers)
 }
 
 object Tsdb {

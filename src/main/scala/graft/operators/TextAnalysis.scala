@@ -643,21 +643,29 @@ object TextAnalysis {
     * tested census (sf0.1 ≈ 60k, x10 ≈ 637k), so the bound never binds
     * on declared scales — the trained merges are unchanged — while a
     * 100 TB corpus can no longer OOM the driver; singleton tail words
-    * cannot win a merge round against the head anyway.
+    * cannot win a merge round against the head anyway. When the bound
+    * binds (the census has more words than it), one warning names it.
     */
   private[graft] def bpeCensusForProfile(
       docs: DataFrame, textCol: String): Seq[(String, Long)] = {
     val maxWords = docs.sparkSession.conf
       .get("spark.graft.bpe.censusMaxWords", "4000000").toInt
-    spreadDocs(docs)
+    val rows = spreadDocs(docs)
       .select(explode(wsTokens(lower(col(textCol)))).as("w"))
       .where(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w"))
-      .limit(maxWords)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+      .limit(if (maxWords < Int.MaxValue) maxWords + 1 else maxWords)
+      .collect()
+    if (rows.length > maxWords)
+      logger.warn(s"BPE word census truncated to the $maxWords most " +
+        "frequent words (spark.graft.bpe.censusMaxWords); rarer words are " +
+        "left out of merge training")
+    rows.take(maxWords).map(r => (r.getString(0), r.getLong(1)))
       .sortBy(_._1).toSeq
   }
+
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Segment every document with a FIXED BPE merge table
     * ([[graft.plans.BpeEncode]] — the shipped-tokenizer inference shape)

@@ -1264,8 +1264,7 @@ object PromQL {
     * grouping column order. */
   private def labelKeys(t: Tsdb, metric: String): Seq[String] = {
     import org.apache.spark.sql.functions.{col, explode, map_keys}
-    t.seriesMeta
-      .where(col("labels").getItem(Tsdb.MetricLabel) === metric)
+    t.seriesMeta(Seq(LabelMatcher.eq(Tsdb.MetricLabel, metric)))
       .select(explode(map_keys(col("labels"))).as("k"))
       .where(col("k") =!= Tsdb.MetricLabel)
       .distinct().collect().map(_.getString(0)).toSeq.sorted
@@ -1627,8 +1626,7 @@ object PromQL {
     * cardinality; `+Inf` is implicit (the engine's catch-all bucket). */
   private def leBounds(t: Tsdb, metric: String): Seq[Double] = {
     import org.apache.spark.sql.functions.col
-    val vals = t.seriesMeta
-      .where(col("labels").getItem(Tsdb.MetricLabel) === metric)
+    val vals = t.seriesMeta(Seq(LabelMatcher.eq(Tsdb.MetricLabel, metric)))
       .select(col("labels").getItem("le").as("le"))
       .where(col("le").isNotNull && col("le") =!= "+Inf")
       .distinct().collect().map(_.getString(0)).toSeq

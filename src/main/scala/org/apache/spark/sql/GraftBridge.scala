@@ -19,4 +19,14 @@ object GraftBridge {
   def analyzed(df: DataFrame):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** Drop the stored blocks of a locally checkpointed `df` that nothing
+    * reads any more: `RDD.unpersist` without its per-call warning that a
+    * truncated lineage cannot be recomputed, which the caller knows. */
+  def releaseLocalCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: execution.LogicalRDD =>
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+      case _ =>
+    }
 }

@@ -1050,6 +1050,25 @@ class OperatorSpec extends SparkSuite {
     assert(Bpe.train(census.reverse, 3) == merges)
   }
 
+  test("bpe: the word census keeps the censusMaxWords most frequent " +
+      "words; the default bound keeps the whole census") {
+    import spark.implicits._
+    val texts = Seq("low lower low newest", "widest newest low",
+      "newest widest lowest low", "lower newest")
+    val docs = texts.toDF("text")
+    val full = texts.flatMap(_.split(" ")).groupBy(identity)
+      .map { case (w, ws) => (w, ws.size.toLong) }.toSeq
+    val top3 = full.sortBy { case (w, c) => (-c, w) }.take(3).sortBy(_._1)
+    val capped = withSQLConf("spark.graft.bpe.censusMaxWords" -> "3") {
+      operators.TextAnalysis.bpeCensusForProfile(docs, "text")
+    }
+    assert(capped == top3, capped)
+    assert(operators.TextAnalysis.bpeCensusForProfile(docs, "text") ==
+      full.sortBy(_._1))
+    assert(operators.TextAnalysis.bpeTrain(docs, "text", 5) ==
+      graft.functions.Bpe.train(full, 5))
+  }
+
   test("semantic decontam: near-eval vectors flagged with best match, " +
       "orthogonal vectors pass; similarity ties take the larger eval id") {
     import spark.implicits._

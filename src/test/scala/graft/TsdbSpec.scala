@@ -985,4 +985,225 @@ class TsdbSpec extends SparkSuite {
       .agg(max("nf")).head().getLong(0)
     assert(maxFilesPerSid == 1L)
   }
+
+  /** One Spark job seen by [[tracingJobs]]: start and end (listener
+    * event ms), the physical plan of its SQL execution, its job group. */
+  private case class JobSpan(
+      start: Long, end: Option[Long], plan: String, group: Option[String])
+
+  /** Runs `body` under a fresh job group; returns the group, what `body`
+    * returned or threw, the wall clock (ms) right after it returned, and
+    * every Spark job whose SQL execution touches `path`. Events are
+    * drained through a sentinel job: listeners see them in order, so once
+    * the sentinel's start is seen every earlier job's start and end is. */
+  private def tracingJobs[A](path: String)(body: => A)
+      : (String, Either[Throwable, A], Long, Seq[JobSpan]) = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    val plans = new ConcurrentHashMap[Long, String]
+    val starts =
+      new ConcurrentHashMap[Int, (Long, Option[Long], Option[String])]
+    val ends = new ConcurrentHashMap[Int, Long]
+    val group = s"trace-${System.nanoTime}"
+    val sentinel = s"sentinel-${System.nanoTime}"
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          plans.put(x.executionId, x.physicalPlanDescription)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.jobGroup.id").contains(sentinel)) drained.countDown()
+        else starts.put(e.jobId, (e.time,
+          prop("spark.sql.execution.id").map(_.toLong),
+          prop("spark.jobGroup.id")))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ends.put(e.jobId, e.time)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "traced")
+      val out =
+        try Right(body)
+        catch { case e: Throwable => Left(e) }
+        finally sc.clearJobGroup()
+      val returnedAt = System.currentTimeMillis()
+      sc.setJobGroup(sentinel, "sentinel")
+      spark.range(1).collect()
+      sc.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      val spans = starts.asScala.toSeq.sortBy(_._1).flatMap {
+        case (id, (t, exec, g)) =>
+          exec.flatMap(x => Option(plans.get(x)))
+            .filter(_.contains(path))
+            .map(plan => JobSpan(t, Option(ends.get(id)).map(_.longValue),
+              plan, g))
+      }
+      (group, out, returnedAt, spans)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** `series` series of one metric, each with `points` scrapes 600 s
+    * apart from `t0` (so a batch spans several 2 h segments). */
+  private def scrapes(series: Int, points: Int, t0: Long): DataFrame =
+    spark.range(series.toLong * points).select(
+      lit("m").as("metric"),
+      map(lit("id"), (col("id") % series).cast("string"),
+        lit("n"), (col("id") % series % 5).cast("string")).as("labels"),
+      (lit(t0) + (col("id") / series).cast("long") * 600L).as("ts"),
+      col("id").cast("double").as("value"))
+
+  test("insertRows writes the tiers concurrently, every job in the " +
+      "caller's job group") {
+    val path = tempDir("overlap")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+    t.insertRows(scrapes(2000, 4, Start))
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (group, out, _, spans) =
+      tracingJobs(path)(t.insertRows(scrapes(2000, 24, Start + 2400L)))
+    assert(out.isRight, out)
+    // the materialized batch is released once the writes have ended
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    val fact = spans.filter(_.plan.contains(s"$path/samples"))
+    val other = spans.filter(s => s.plan.contains(s"$path/series_meta") ||
+      s.plan.contains(s"$path/label_values"))
+    assert(fact.nonEmpty && other.nonEmpty, spans.map(_.plan.take(300)))
+    assert(spans.forall(_.group.contains(group)),
+      spans.map(s => (s.group, s.plan.take(200))))
+    val factEnd = fact.flatMap(_.end).max
+    assert(other.map(_.start).min < factEnd,
+      s"tier writes ran one after another: fact " +
+        s"${fact.map(s => (s.start, s.end))}, meta/label values " +
+        s"${other.map(s => (s.start, s.end))}")
+    // and the store reads back whole
+    assert(t.samples.count() == 2000L * 28)
+    assert(t.seriesMeta.count() == 2000L)
+    assert(t.queryLabelValues("n", Start, Start + 28 * 600L)
+      .collect().map(_.getString(0)).toSeq == (0 until 5).map(_.toString))
+  }
+
+  test("a failed tier write fails insertRows only after the other " +
+      "writes have ended") {
+    val path = tempDir("tierfail")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+    // a regular file where the label-values directory belongs
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "label_values"),
+      "not a directory".getBytes)
+    val (_, out, returnedAt, spans) =
+      tracingJobs(path)(t.insertRows(scrapes(2000, 24, Start)))
+    val err = out.swap.getOrElse(fail("insertRows should have thrown"))
+    val chain = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => String.valueOf(e.getMessage)
+      .contains(s"$path/label_values")), chain.mkString("\n"))
+    assert(spans.nonEmpty)
+    assert(spans.forall(_.end.exists(_ <= returnedAt)),
+      s"returned at $returnedAt, jobs ${spans.map(s => (s.start, s.end))}")
+    // the fact and series-meta writes completed
+    assert(t.samples.count() == 2000L * 24)
+    assert(t.seriesMeta.count() == 2000L)
+  }
+
+  test("compactSegments throws a failed segment rewrite only after the " +
+      "others are rewritten") {
+    val path = tempDir("compactfail")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+    // three appends over the same four segments: three files per segment
+    (0 until 3).foreach(_ => t.insertRows(scrapes(200, 48, Start)))
+    def dataFiles(d: java.io.File) = d.listFiles().count(f =>
+      f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    val segs = new java.io.File(s"$path/samples").listFiles()
+      .filter(_.getName.startsWith("seg=")).sortBy(_.getName).toSeq
+    assert(segs.size >= 3 && segs.forall(dataFiles(_) >= 3))
+    val bad = segs.head
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(bad.getPath, "junk.parquet"),
+      "not parquet".getBytes)
+    val filesBefore = dataFiles(bad)
+    intercept[Exception](t.compactSegments())
+    assert(segs.tail.forall(dataFiles(_) == 1),
+      segs.map(d => d.getName -> dataFiles(d)))
+    assert(dataFiles(bad) == filesBefore, "the failed segment was swapped")
+  }
+
+  test("matcher reads filter every series-meta level before the merge: " +
+      "equal to seriesMeta.where on the split and the one-aggregation read") {
+    import spark.implicits._
+    val t = new Tsdb(spark, TsdbConf(dataPath = tempDir("metafilter"),
+      segmentDuration = 7200L, metaCompactEvery = 2))
+    def few(ids: Seq[Int], ts: Long) = ids.flatMap(i => Seq(
+      ("m", Map("id" -> i.toString, "n" -> (i % 5).toString), ts, 1.0),
+      ("other", Map("id" -> i.toString, "n" -> (i % 5).toString), ts, 2.0)))
+      .toDF("metric", "labels", "ts", "value")
+    // base (5,000 series), then a delta-only fold into L1, a fresh L0
+    // generation and a head, each touching some base series and new ones
+    t.insertRows(scrapes(5000, 1, Start))
+    t.insertRows(few(Seq(1, 2, 3000), Start + 600L))
+    t.insertRows(few(Seq(2, 3, 3001), Start + 1200L))
+    t.insertRows(few(Seq(3, 4, 3002), Start + 1800L))
+    t.insertHeadRows(few(Seq(4, 7, 3003), Start + 2400L))
+    Seq("series_meta_base", "series_meta_folded", "series_meta")
+      .foreach(l => assert(
+        new java.io.File(s"${t.conf.dataPath}/$l").exists, s"$l missing"))
+    val matcherSets = Seq(
+      Seq(LabelMatcher.eq("__name__", "m"), LabelMatcher.re("n", "1|3")),
+      Seq(LabelMatcher.re("__name__", "oth.*")),
+      Seq(LabelMatcher.neq("__name__", "other"), LabelMatcher.nre("n", "1")),
+      Seq(LabelMatcher.eq("id", "3")))
+    def rows(df: DataFrame) = df.orderBy("sid").collect().toSeq
+    def check(split: Boolean): Unit = {
+      val joins = t.seriesMeta.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }
+      assert(joins.nonEmpty == split, s"split read expected: $split")
+      matcherSets.foreach { ms =>
+        val got = t.seriesMeta(ms)
+        val want = rows(t.seriesMeta.where(Tsdb.matcherPredicate(
+          col("labels"), ms)))
+        assert(want.nonEmpty, ms)
+        assert(rows(got) == want, ms)
+        import org.apache.spark.sql.catalyst.plans.logical.{
+          Aggregate, Filter, LogicalPlan}
+        def matcherFilter(p: LogicalPlan) = p match {
+          case f: Filter => f.condition.references
+            .exists(a => a.name == "labels" || a.name == "metric")
+          case _ => false
+        }
+        val plan = got.queryExecution.optimizedPlan
+        val filters = plan.collect { case f if matcherFilter(f) => f }
+        val aggs = plan.collect { case a: Aggregate => a }
+        assert(filters.nonEmpty && aggs.nonEmpty, plan)
+        assert(filters.forall(_.collectFirst { case a: Aggregate => a }
+          .isEmpty), s"a matcher Filter above an Aggregate:\n$plan")
+        assert(aggs.forall(_.find(matcherFilter).isDefined),
+          s"an Aggregate without the matcher Filter below it:\n$plan")
+        // the public reads built on it
+        val (s0, e0) = (Start, Start + 3000L)
+        assert(rows(t.querySeries(ms, s0, e0)) == rows(
+          t.seriesMeta.where(col("minTs") <= e0 && col("maxTs") >= s0)
+            .where(Tsdb.matcherPredicate(col("labels"), ms))
+            .select("sid", "metric", "labels")))
+        def points(df: DataFrame) =
+          df.collect().map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
+        assert(points(t.queryRangeSelector(ms, s0, e0)) ==
+          points(t.samplesWithLabels
+            .where(col("ts").between(s0, e0))
+            .where(Tsdb.matcherPredicate(col("labels"), ms))
+            .select("sid", "labels", "ts", "value")), ms)
+      }
+    }
+    check(split = true)
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      check(split = false)
+    }
+  }
 }
