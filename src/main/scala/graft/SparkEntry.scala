@@ -651,8 +651,7 @@ object SparkEntry {
       // round() (Spark HALF_UP vs DuckDB half-away) diverges on exact-.5
       // products — one real row at sf0.01 hits it at this window width
       .select(col("cohort"), col("eval_ts"),
-        (floor(col("increase") / 21600d * 1e6 + 0.5) / 1e6)
-          .as("rate_per_sec"))
+        Tsdb.r6(col("increase") / 21600d).as("rate_per_sec"))
       .orderBy("cohort", "eval_ts")
 
   /** Sliding trend — `deriv(click[6h:1h])`: an exact least-squares slope

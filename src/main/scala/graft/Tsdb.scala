@@ -748,7 +748,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       thresholdSec: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l))
+    val keys = labelCols(byLabels)
     queryRange(metric, matchers, start, end)
       .withColumn("prev_ts", lag("ts", 1).over(w))
       .where(col("prev_ts").isNotNull)
@@ -828,9 +828,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L,
       relabel: Column => Column = c => c): DataFrame = {
     require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
+    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
     // `relabel` rewrites the label map BEFORE grouping (PromQL's
     // label_replace / label_join feeding an aggregation) — selector
     // matchers still apply to the ORIGINAL labels, like Prometheus,
@@ -864,9 +862,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L): DataFrame = {
     require(q >= 0 && q <= 1, s"quantile must be in [0,1]: $q")
     require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
+    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
     queryRange(metric, matchers, start - offsetSec, end - offsetSec)
       .groupBy(keys: _*)
       .agg(
@@ -897,10 +893,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L): DataFrame = {
     require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val base = queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .withColumn("bucket_start",
-        (col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-      .select(byLabels.map(l => col("labels").getItem(l).as(l)) ++
-        Seq(col("bucket_start"), col("value")): _*)
+      .select(labelCols(byLabels) :+ bucketKey(stepSec, offsetSec) :+
+        col("value"): _*)
     val keys = (byLabels :+ "bucket_start").map(col)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keys: _*)
     base
@@ -908,8 +902,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       .groupBy(keys: _*)
       .agg(
         count(lit(1)).as("n"),
-        (floor(percentile(abs(col("value") - col("med")), lit(0.5)) * 1e6 +
-          lit(0.5)) / 1e6).as("mad_v"))
+        r6(percentile(abs(col("value") - col("med")), lit(0.5))).as("mad_v"))
   }
 
   /** `sum by (labels) (increase(metric[step]))` — the composed PromQL
@@ -932,18 +925,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       byLabels: Seq[String],
       stepSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .withColumn("delta",
-        when(col("prev").isNull, lit(null))
-          .when(col("v") >= col("prev"), col("v") - col("prev"))
-          .otherwise(col("v")))
+    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
+    counterLag(queryRange(metric, matchers, start - offsetSec,
+        end - offsetSec))
       .where(col("delta").isNotNull)
       .groupBy(keys: _*)
       .agg(
@@ -955,10 +939,11 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   /** Sliding-window counter increase/rate on the subquery eval grid:
     * `rate(metric[rangeSec])` evaluated every `stepSec` — the inner leg
     * of a nested subquery `max_over_time(rate(x[5m])[1h:1m])`.
-    * Per-sample reset-robust deltas are computed ONCE per series (the
-    * [[aggregateIncreaseBy]] decimal lag), then each delta row explodes
-    * to the eval points whose lookback window `[T-rangeSec+1, T]` covers
-    * it, and ONE hash aggregation sums per (label group, eval point).
+    * Per-sample reset-robust deltas are computed ONCE per series
+    * ([[Tsdb.counterLag]]), then each delta row explodes to the eval
+    * points whose lookback window `[T-rangeSec+1, T]` covers it
+    * ([[Tsdb.explodeEvalGrid]]), and ONE hash aggregation sums per
+    * (label group, eval point).
     * The scan (and the lag's visibility) covers
     * `[start - rangeSec + 1, end]`, so an oracle computing the lag over
     * the same scanned set mirrors it exactly.
@@ -972,45 +957,17 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val start0 = start - offsetSec
-    val end0 = end - offsetSec
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val firstEval =
-      floor((col("ts") + (stepSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val lastEval =
-      floor((col("ts") + (rangeSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val gridStart = Math.floorDiv(start0 + stepSec - 1, stepSec) * stepSec
-    val gridEnd = Math.floorDiv(end0, stepSec) * stepSec
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      col("eval_ts")
-    queryRange(metric, matchers, start0 - rangeSec + 1, end0)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .withColumn("delta",
-        when(col("prev").isNull, lit(null))
-          .when(col("v") >= col("prev"), col("v") - col("prev"))
-          .otherwise(col("v")))
-      .where(col("delta").isNotNull)
-      .withColumn("e0", greatest(firstEval, lit(gridStart)))
-      .withColumn("e1", least(lastEval, lit(gridEnd)))
-      .where(col("e0") <= col("e1"))
-      .withColumn("eval_ts",
-        explode(sequence(col("e0"), col("e1"), lit(stepSec))))
-      .withColumn("eval_ts", col("eval_ts") + offsetSec)
+    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
+      byLabels, stepSec, rangeSec, offsetSec,
+      s => counterLag(s).where(col("delta").isNotNull))
+    windowed
       .groupBy(keys: _*)
       .agg(
         count(lit(1)).as("n"),
         sum(col("delta")).cast("double").as("increase"),
-        // tie-free 6-decimal quantization (floor(x*1e6+0.5)/1e6): the
-        // same IEEE op sequence in Spark, DuckDB, and the streaming
-        // twin — Spark round() is BigDecimal HALF_UP while DuckDB
-        // round() is float half-away, and they diverge on exact-.5
-        // products (one real sf0.01 row at the 6h window width)
-        (floor(sum(col("delta")).cast("double") / rangeSec * 1e6 + 0.5)
-          / 1e6).as("rate_per_sec"))
+        // r6, not round(): one real sf0.01 row at the 6h window width
+        // lands on an exact .5 product
+        r6(sum(col("delta")).cast("double") / rangeSec).as("rate_per_sec"))
   }
 
   /** Sliding cross-series MOMENTS of the per-series counter rate on the
@@ -1039,40 +996,15 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L,
       rate: Boolean = true,
       quantile: Option[Double] = None): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val start0 = start - offsetSec
-    val end0 = end - offsetSec
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val firstEval =
-      floor((col("ts") + (stepSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val lastEval =
-      floor((col("ts") + (rangeSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val gridStart = Math.floorDiv(start0 + stepSec - 1, stepSec) * stepSec
-    val gridEnd = Math.floorDiv(end0, stepSec) * stepSec
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      col("eval_ts")
+    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
+      byLabels, stepSec, rangeSec, offsetSec,
+      s => counterLag(s).where(col("delta").isNotNull))
     val perSeriesVal =
-      // the slidingIncreaseBy tie-free floor quantization — one
-      // cross-engine rounding contract for the whole sliding family
-      if (rate)
-        floor(sum(col("delta")).cast("double") / rangeSec * 1e6 + 0.5) / 1e6
+      // the slidingIncreaseBy quantization — one cross-engine rounding
+      // contract for the whole sliding family
+      if (rate) r6(sum(col("delta")).cast("double") / rangeSec)
       else sum(col("delta")).cast("double")
-    val perSeries = queryRange(metric, matchers, start0 - rangeSec + 1, end0)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .withColumn("delta",
-        when(col("prev").isNull, lit(null))
-          .when(col("v") >= col("prev"), col("v") - col("prev"))
-          .otherwise(col("v")))
-      .where(col("delta").isNotNull)
-      .withColumn("e0", greatest(firstEval, lit(gridStart)))
-      .withColumn("e1", least(lastEval, lit(gridEnd)))
-      .where(col("e0") <= col("e1"))
-      .withColumn("eval_ts",
-        explode(sequence(col("e0"), col("e1"), lit(stepSec))))
-      .withColumn("eval_ts", col("eval_ts") + offsetSec)
+    val perSeries = windowed
       .groupBy((col("sid") +: keys): _*)
       .agg(perSeriesVal.as("v_s"))
       // cross-series spread via the integer-micro exactness scheme: the
@@ -1088,8 +1020,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       // mean of per-series rates re-enters the integer-micro family, so
       // spread/counter outers over `avg by (l)(rate(...))` inners stay
       // lossless; min/max/quantile of the round(…,6) rates already are
-      (floor(sum(col("v_s").cast("decimal(28,10)")).cast("double") /
-        count(lit(1)) * 1e6 + 0.5) / 1e6).as("avg_v"),
+      r6(sum(col("v_s").cast("decimal(28,10)")).cast("double") /
+        count(lit(1))).as("avg_v"),
       min(col("v_s")).as("min_v"),
       max(col("v_s")).as("max_v"),
       sum(col("__m")).as("__sum_m"),
@@ -1104,7 +1036,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     val meanM = col("__sum_m").cast("double") / nD
     val stdvar =
       (col("__sum2_m").cast("double") / nD - meanM * meanM) / 1e12
-    def r6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + 0.5) / 1e6
     perSeries
       .groupBy((byLabels.map(col) :+ col("eval_ts")): _*)
       .agg(aggs.head, aggs.tail: _*)
@@ -1118,7 +1049,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * `predict_linear(metric[rangeSec:stepSec], horizonSec)`: at each
     * eval point E (every `stepSec`) the raw samples in the lookback
     * window `(E−rangeSec, E]` get one exact simple linear regression.
-    * The [[predictLinear]] integer-cents scheme made sliding: x is
+    * The [[predictLinear]] integer-cents fit ([[Tsdb.trendFit]]) made
+    * sliding: x is
     * re-origined to the WINDOW start (`ts − (E − rangeSec)` ∈ [1,
     * rangeSec], so the decimal sums stay small), y is integer cents,
     * and every Σ accumulates in decimal(20,0)/decimal(38,0) — the
@@ -1140,13 +1072,10 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       rangeSec: Long,
       horizonSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val dec = "decimal(20,0)"
     val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
       byLabels, stepSec, rangeSec, offsetSec)
-    val xp = lit(rangeSec + horizonSec).cast(dec)
-    windowed
+    val xy = windowed
       // eval_ts already carries +offset; the window's pre-offset start
       // is (eval_ts − offset) − rangeSec, so x ∈ [1, rangeSec]
       .withColumn("x",
@@ -1154,22 +1083,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
           .cast(dec))
       .withColumn("yc",
         (col("value").cast("decimal(18,2)") * 100).cast(dec))
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).cast(dec).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("yc")).as("syc"),
-        sum(col("x") * col("yc")).as("sxyc"),
-        sum(col("x") * col("x")).as("sxx"))
-      .withColumn("numc", col("n") * col("sxyc") - col("sx") * col("syc"))
-      .withColumn("den", col("n") * col("sxx") - col("sx") * col("sx"))
-      .where(col("n") >= 2 && col("den") =!= 0)
-      .withColumn("slope_per_sec",
-        col("numc").cast("double") / col("den").cast("double") / 100.0)
-      .withColumn("predicted",
-        (col("syc") * col("den") +
-          col("numc") * (col("n") * xp - col("sx"))).cast("double") /
-          (col("n") * col("den")).cast("double") / 100.0)
+    trendFit(xy, keys, "yc", 100.0, rangeSec + horizonSec)
       .select(byLabels.map(col) ++ Seq(col("eval_ts"),
         col("n").cast("long").as("n"),
         col("slope_per_sec"), col("predicted")): _*)
@@ -1180,11 +1094,12 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * (and `changes` any consecutive-sample value change), summed across
     * series per (label group, eval point), a value every `stepSec` over
     * the trailing `rangeSec`. Per-sample lag pairs are computed ONCE per
-    * series (the [[aggregateIncreaseBy]] decimal lag), then each pair
-    * explodes to the eval points whose lookback window covers its ts —
-    * the [[slidingIncreaseBy]] delta-attribution rule, so the whole
-    * sliding counter family shares one windowing convention and one
-    * oracle scheme. Returns both counts; callers project.
+    * series ([[Tsdb.counterLag]]), then each pair explodes to the eval
+    * points whose lookback window covers its newer sample
+    * ([[Tsdb.explodeEvalGrid]]) — the [[slidingIncreaseBy]]
+    * delta-attribution rule, so the whole sliding counter family shares
+    * one windowing convention and one oracle scheme. Returns both
+    * counts ([[Tsdb.countResetsChanges]]); callers project.
     */
   def slidingResetsChangesBy(
       metric: String,
@@ -1195,35 +1110,10 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val start0 = start - offsetSec
-    val end0 = end - offsetSec
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val firstEval =
-      floor((col("ts") + (stepSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val lastEval =
-      floor((col("ts") + (rangeSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val gridStart = Math.floorDiv(start0 + stepSec - 1, stepSec) * stepSec
-    val gridEnd = Math.floorDiv(end0, stepSec) * stepSec
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      col("eval_ts")
-    queryRange(metric, matchers, start0 - rangeSec + 1, end0)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .where(col("prev").isNotNull)
-      .withColumn("e0", greatest(firstEval, lit(gridStart)))
-      .withColumn("e1", least(lastEval, lit(gridEnd)))
-      .where(col("e0") <= col("e1"))
-      .withColumn("eval_ts",
-        explode(sequence(col("e0"), col("e1"), lit(stepSec))))
-      .withColumn("eval_ts", col("eval_ts") + offsetSec)
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n_deltas"),
-        sum(when(col("v") < col("prev"), 1L).otherwise(0L)).as("resets"),
-        sum(when(col("v") =!= col("prev"), 1L).otherwise(0L)).as("changes"))
+    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
+      byLabels, stepSec, rangeSec, offsetSec,
+      s => counterLag(s).where(col("prev").isNotNull))
+    countResetsChanges(windowed, keys)
   }
 
   /** Sliding gauge `delta` on the subquery eval grid —
@@ -1241,8 +1131,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
       byLabels, stepSec, rangeSec, offsetSec)
     windowed
@@ -1260,7 +1148,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * trailing `rangeSec` window every `stepSec`: per series per eval
     * point, the difference between the two newest samples in the window
     * (idelta), and the reset-aware rate over their timestamp gap
-    * (irate). Rank window at (sid, eval point) grain over the
+    * (irate). [[Tsdb.lastTwoPair]] at (sid, eval point) grain over the
     * [[overTimeWindowed]] explode — state bounded by one window's
     * sample count; windows holding < 2 samples emit nothing.
     */
@@ -1273,27 +1161,11 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val (windowed, _) = overTimeWindowed(metric, matchers, start, end,
       byLabels, stepSec, rangeSec, offsetSec)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("sid"), col("eval_ts"))
-      .orderBy(col("ts").desc, col("v").desc)
-    windowed
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("rk", row_number().over(w))
-      .withColumn("prev_ts", lead("ts", 1).over(w))
-      .withColumn("prev_v", lead("v", 1).over(w))
-      .where(col("rk") === 1 && col("prev_ts").isNotNull)
-      .withColumn("dt", col("ts") - col("prev_ts"))
-      .withColumn("idelta", (col("v") - col("prev_v")).cast("double"))
-      .withColumn("irate",
-        when(col("dt") > 0, round(
-          when(col("v") >= col("prev_v"), col("v") - col("prev_v"))
-            .otherwise(col("v")).cast("double") /
-            col("dt").cast("double"), 6)))
-      .select((byLabels.map(l => col("labels").getItem(l).as(l)) ++
+    lastTwoPair(windowed.withColumn("v", col("value").cast("decimal(18,2)")),
+        Seq(col("sid"), col("eval_ts")))
+      .select((labelCols(byLabels) ++
         Seq(col("sid"), col("eval_ts"), col("dt"), col("idelta"),
           col("irate"))): _*)
   }
@@ -1320,19 +1192,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       byLabels: Seq[String],
       stepSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
-    val perSeries = queryRange(metric, matchers, start - offsetSec,
-        end - offsetSec)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .withColumn("delta",
-        when(col("prev").isNull, lit(null))
-          .when(col("v") >= col("prev"), col("v") - col("prev"))
-          .otherwise(col("v")))
+    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
+    val perSeries = counterLag(queryRange(metric, matchers,
+        start - offsetSec, end - offsetSec))
       .where(col("delta").isNotNull)
       .groupBy((col("sid") +: keys): _*)
       .agg(sum(col("delta")).as("inc_dec"))
@@ -1370,18 +1232,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L): DataFrame = {
     require(q >= 0 && q <= 1, s"quantile must be in [0,1]: $q")
     require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .withColumn("delta",
-        when(col("prev").isNull, lit(null))
-          .when(col("v") >= col("prev"), col("v") - col("prev"))
-          .otherwise(col("v")))
+    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
+    counterLag(queryRange(metric, matchers, start - offsetSec,
+        end - offsetSec))
       .where(col("delta").isNotNull)
       .groupBy((col("sid") +: keys): _*)
       .agg(sum(col("delta")).cast("double").as("inc"))
@@ -1407,7 +1260,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       s"stepSec must divide segmentDuration: $stepSec vs ${conf.segmentDuration}")
     val path = s"${conf.dataPath}/rollup_$stepSec"
     samples
-      .withColumn("bucket_start", col("ts") - pmod(col("ts"), lit(stepSec)))
+      .withColumn("bucket_start", bucketStart(stepSec))
       .groupBy("sid", "bucket_start")
       .agg(
         count(lit(1)).as("n"),
@@ -1475,7 +1328,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val partials = norm
-        .withColumn("bucket_start", col("ts") - pmod(col("ts"), lit(stepSec)))
+        .withColumn("bucket_start", bucketStart(stepSec))
         .groupBy("sid", "bucket_start")
         .agg(
           count(lit(1)).as("n"),
@@ -1602,7 +1455,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     val matching =
       seriesMeta(LabelMatcher.eq(MetricLabel, metric) +: matchers)
         .select("sid", "labels")
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
+    val keys = labelCols(byLabels) :+
       (col("bucket_start") + offsetSec).as("bucket_start")
     roll
       .join(dimHint(matching), "sid")
@@ -1894,9 +1747,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       byLabels: Seq[String],
       stepSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
+    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
     queryRange(metric, matchers, start - offsetSec, end - offsetSec)
       .withColumn("v", col("value").cast("decimal(18,2)"))
       .groupBy(keys: _*)
@@ -1921,21 +1772,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       end: Long,
       byLabels: Seq[String],
       stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .where(col("prev").isNotNull)
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n_deltas"),
-        sum(when(col("v") < col("prev"), 1L).otherwise(0L)).as("resets"))
-  }
+      offsetSec: Long = 0L): DataFrame =
+    resetsChangesBy(metric, matchers, start, end, byLabels, stepSec,
+      offsetSec).drop("changes")
 
   /** PromQL `sum by (labels) (changes(metric[step]))`: per-series count of
     * consecutive-sample VALUE CHANGES (any direction — [[resetsBy]] counts
@@ -1951,21 +1790,24 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       end: Long,
       byLabels: Seq[String],
       stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("sid").orderBy(col("ts"), col("value"))
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .where(col("prev").isNotNull)
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n_deltas"),
-        sum(when(col("v") =!= col("prev"), 1L).otherwise(0L)).as("changes"))
-  }
+      offsetSec: Long = 0L): DataFrame =
+    resetsChangesBy(metric, matchers, start, end, byLabels, stepSec,
+      offsetSec).drop("resets")
+
+  /** Both [[resetsBy]] and [[changesBy]] counts in one aggregation; each
+    * projects its own column (the unused sum is pruned from the plan). */
+  private def resetsChangesBy(
+      metric: String,
+      matchers: Seq[LabelMatcher],
+      start: Long,
+      end: Long,
+      byLabels: Seq[String],
+      stepSec: Long,
+      offsetSec: Long): DataFrame =
+    countResetsChanges(
+      counterLag(queryRange(metric, matchers, start - offsetSec,
+        end - offsetSec)).where(col("prev").isNotNull),
+      labelCols(byLabels) :+ bucketKey(stepSec, offsetSec))
 
   /** PromQL `idelta(metric[step])` / `irate(metric[step])` per series per
     * step bucket: the difference between the LAST TWO samples inside each
@@ -1974,9 +1816,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * holding fewer than two samples emit nothing; a zero timestamp gap
     * (duplicate scrape) yields a null irate rather than a division blowup.
     *
-    * Scale shape: one rank window partitioned by (series, bucket) — state
-    * per task bounded by a single bucket's sample count — then a
-    * two-row-per-group self-pairing via lead(); the [[topKBy]] idiom.
+    * Scale shape: [[Tsdb.lastTwoPair]], one rank window partitioned by
+    * (series, bucket) — state per task bounded by a single bucket's
+    * sample count — then a two-row-per-group self-pairing via lead().
     * The (ts, value) DESC order is deterministic: rows tying on both are
     * interchangeable duplicates, so the selected pair is well-defined,
     * and the identical ORDER BY mirrors 1:1 in the DuckDB oracle.
@@ -1989,26 +1831,12 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       byLabels: Seq[String],
       stepSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    val byCols = byLabels.map(l => col("labels").getItem(l).as(l))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("sid"), col("bucket_start"))
-      .orderBy(col("ts").desc, col("v").desc)
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .select((byCols ++ Seq(col("sid"), col("ts"),
-        ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start"),
+    val samples = queryRange(metric, matchers, start - offsetSec,
+        end - offsetSec)
+      .select((labelCols(byLabels) ++ Seq(col("sid"), col("ts"),
+        bucketKey(stepSec, offsetSec),
         col("value").cast("decimal(18,2)").as("v"))): _*)
-      .withColumn("rk", row_number().over(w))
-      .withColumn("prev_ts", lead("ts", 1).over(w))
-      .withColumn("prev_v", lead("v", 1).over(w))
-      .where(col("rk") === 1 && col("prev_ts").isNotNull)
-      .withColumn("dt", col("ts") - col("prev_ts"))
-      .withColumn("idelta", (col("v") - col("prev_v")).cast("double"))
-      .withColumn("irate",
-        when(col("dt") > 0, round(
-          when(col("v") >= col("prev_v"), col("v") - col("prev_v"))
-            .otherwise(col("v")).cast("double") /
-            col("dt").cast("double"), 6)))
+    lastTwoPair(samples, Seq(col("sid"), col("bucket_start")))
       .select((byLabels.map(col) ++ Seq(col("sid"), col("bucket_start"),
         col("dt"), col("idelta"), col("irate"))): _*)
   }
@@ -2028,12 +1856,11 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       k: Int,
       offsetSec: Long = 0L): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("bucket_start")
-      .orderBy(col("sum_v").desc +: byLabels.map(col): _*)
-    aggregateBy(metric, matchers, start, end, byLabels, stepSec, offsetSec)
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+    firstK(
+        aggregateBy(metric, matchers, start, end, byLabels, stepSec,
+          offsetSec),
+        Seq(col("bucket_start")), col("sum_v").desc +: byLabels.map(col),
+        lit(k))
       .select(byLabels.map(col) ++ Seq(col("bucket_start"), col("rk"),
         col("n"), col("sum_v")): _*)
   }
@@ -2068,13 +1895,11 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L,
       salt: String = "lk"): DataFrame = {
     require(k > 0, s"limitk k must be > 0: $k")
-    val u = groupU32(byLabels, salt)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("bucket_start")
-      .orderBy(u.asc +: byLabels.map(col): _*)
-    aggregateBy(metric, matchers, start, end, byLabels, stepSec, offsetSec)
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+    firstK(
+        aggregateBy(metric, matchers, start, end, byLabels, stepSec,
+          offsetSec),
+        Seq(col("bucket_start")),
+        groupU32(byLabels, salt).asc +: byLabels.map(col), lit(k))
       .select(byLabels.map(col) ++ Seq(col("bucket_start"), col("rk"),
         col("n"), col("sum_v")): _*)
   }
@@ -2129,13 +1954,10 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L,
       asc: Boolean = false): DataFrame = {
     val rank = if (asc) col("increase").asc else col("increase").desc
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("bucket_start")
-      .orderBy(rank +: byLabels.map(col): _*)
-    aggregateIncreaseBy(metric, matchers, start, end, byLabels, stepSec,
-        offsetSec)
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+    firstK(
+        aggregateIncreaseBy(metric, matchers, start, end, byLabels, stepSec,
+          offsetSec),
+        Seq(col("bucket_start")), rank +: byLabels.map(col), lit(k))
       .select(byLabels.map(col) ++ Seq(col("bucket_start"), col("rk"),
         col("increase"), col("rate_per_sec")): _*)
   }
@@ -2153,12 +1975,11 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       k: Int,
       offsetSec: Long = 0L): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("bucket_start")
-      .orderBy(col("sum_v").asc +: byLabels.map(col): _*)
-    aggregateBy(metric, matchers, start, end, byLabels, stepSec, offsetSec)
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+    firstK(
+        aggregateBy(metric, matchers, start, end, byLabels, stepSec,
+          offsetSec),
+        Seq(col("bucket_start")), col("sum_v").asc +: byLabels.map(col),
+        lit(k))
       .select(byLabels.map(col) ++ Seq(col("bucket_start"), col("rk"),
         col("n"), col("sum_v")): _*)
   }
@@ -2179,9 +2000,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       byLabels: Seq[String],
       stepSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start")
+    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
     val n = col("n").cast("double")
     val meanC = col("sum_c").cast("double") / n
     val stdvar = (col("sum2_c").cast("double") / n - meanC * meanC) / 1e4
@@ -2214,46 +2033,22 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       byLabels: Seq[String],
       stepSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) ++ Seq(
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start"),
-      col("value"))
+    val keys =
+      labelCols(byLabels) :+ bucketKey(stepSec, offsetSec) :+ col("value")
     queryRange(metric, matchers, start - offsetSec, end - offsetSec)
       .groupBy(keys: _*)
       .agg(count(lit(1)).as("n"))
   }
 
-  /** The PromQL `*_over_time(metric[rangeSec])` family evaluated on a
-    * step grid: for every eval timestamp `e` (multiples of `stepSec`
-    * within `[start, end]`), the avg/min/max/sum/count/last of each
-    * series' raw samples in the PromQL lookback window `(e - rangeSec,
-    * e]`. Returns all six moments in one pass — callers project the one
-    * they asked for. `spread = true` adds `stdvar_v`/`stddev_v`
-    * (population, like Prometheus's `stddev_over_time`) to the SAME
-    * hash aggregation via the [[stddevBy]] integer-cents scheme.
-    *
-    * Scale shape: each sample map-side `explode`s into the at most
-    * `rangeSec/stepSec + 1` eval points whose windows contain it
-    * (`sequence` of the aligned grid — no per-eval-point self-join, no
-    * driver loop), then ONE hash aggregation keyed by (sid, eval_ts)
-    * computes every moment; `last_v` rides the same aggregation as
-    * `max_by` over (ts, value). Overlapping windows cost the fixed
-    * explode factor, never a shuffle per window — the same trade
-    * Structured Streaming's sliding `window()` makes.
-    */
-  /** Shared eval-grid explode of the `*_over_time` family.
-    * Eval grid: e = k·stepSec with start ≤ e ≤ end; a sample at ts
-    * contributes to e iff ts ≤ e < ts + rangeSec (PromQL's
-    * `(e − range, e]` lookback). All integer arithmetic; a sample whose
-    * window set falls outside the grid is dropped BEFORE the explode
-    * (sequence() rejects inverted bounds). An offset evaluates on the
-    * shifted window [start−o, end−o] and reports eval points shifted
-    * back (+o), the aggregateBy convention. The scan reaches back a full
-    * lookback window before `start` so the first eval points still see
-    * their whole window. Returns (exploded frame, grouping keys);
-    * consumed by [[overTimeBy]] and [[holtWintersBy]]
-    * ([[absentOverTime]] mirrors the grid with a spark.range
-    * complement). */
+  /** A selector's samples on the sliding eval grid of every raw-sample
+    * range function ([[Tsdb.explodeEvalGrid]], `eval_ts`). An offset
+    * evaluates the shifted window [start−o, end−o] and reports eval
+    * points shifted forward (+o), the aggregateBy convention. The scan
+    * reaches a full lookback window before `start − o`, so the first
+    * eval points see their whole window; `prep` runs on the scanned
+    * samples before the explode (the counter family's
+    * [[Tsdb.counterLag]], whose pairs must not be cut at a window edge).
+    * Returns (exploded frame, grouping keys = labels + eval_ts). */
   private def overTimeWindowed(
       metric: String,
       matchers: Seq[LabelMatcher],
@@ -2262,26 +2057,18 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       byLabels: Seq[String],
       stepSec: Long,
       rangeSec: Long,
-      offsetSec: Long): (DataFrame, Seq[org.apache.spark.sql.Column]) = {
+      offsetSec: Long,
+      prep: DataFrame => DataFrame = identity): (DataFrame, Seq[Column]) = {
+    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val start0 = start - offsetSec
     val end0 = end - offsetSec
-    val firstEval =
-      floor((col("ts") + (stepSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val lastEval =
-      floor((col("ts") + (rangeSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val gridStart = // first grid point >= start0
-      Math.floorDiv(start0 + stepSec - 1, stepSec) * stepSec
-    val gridEnd = Math.floorDiv(end0, stepSec) * stepSec
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) :+
-      col("eval_ts")
-    val windowed = queryRange(metric, matchers, start0 - rangeSec + 1, end0)
-      .withColumn("e0", greatest(firstEval, lit(gridStart)))
-      .withColumn("e1", least(lastEval, lit(gridEnd)))
-      .where(col("e0") <= col("e1"))
-      .withColumn("eval_ts", explode(sequence(col("e0"), col("e1"),
-        lit(stepSec))))
-      .withColumn("eval_ts", col("eval_ts") + offsetSec)
-    (windowed, keys)
+    val scanned = prep(queryRange(metric, matchers, start0 - rangeSec + 1,
+      end0))
+    val windowed =
+      explodeEvalGrid(scanned, "ts", start0, end0, stepSec, rangeSec,
+          "eval_ts")
+        .withColumn("eval_ts", col("eval_ts") + offsetSec)
+    (windowed, labelCols(byLabels) :+ col("eval_ts"))
   }
 
   /** Sliding gauge moments on the subquery eval grid — the gauge twin of
@@ -2301,8 +2088,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
       byLabels, stepSec, rangeSec, offsetSec)
     windowed.groupBy(keys: _*).agg(
@@ -2313,13 +2098,28 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       // over an avg_over_time inner are lossless at micro grain, like
       // the round(…,6) counter rate. The other moments are already
       // micro-exact (2-decimal sample values / their decimal sums).
-      (floor(sum(col("value").cast("decimal(18,2)")).cast("double") /
-        count(lit(1)) * 1e6 + 0.5) / 1e6).as("avg_v"),
+      r6(sum(col("value").cast("decimal(18,2)")).cast("double") /
+        count(lit(1))).as("avg_v"),
       min("value").as("min_v"),
       max("value").as("max_v"),
       max(struct(col("ts"), col("value"))).getField("value").as("last_v"))
   }
 
+  /** The PromQL `*_over_time(metric[rangeSec])` family evaluated on a
+    * step grid: for every eval timestamp `e` (multiples of `stepSec`
+    * within `[start, end]`), the avg/min/max/sum/count/last of each
+    * series' raw samples in the PromQL lookback window `(e - rangeSec,
+    * e]`. Returns all six moments in one pass — callers project the one
+    * they asked for. `spread = true` adds `stdvar_v`/`stddev_v`
+    * (population, like Prometheus's `stddev_over_time`) to the SAME
+    * hash aggregation via the [[stddevBy]] integer-cents scheme.
+    *
+    * Scale shape: the samples explode map-side onto the eval grid
+    * ([[Tsdb.explodeEvalGrid]] — no per-eval-point self-join, no driver
+    * loop), then ONE hash aggregation keyed by (sid, eval_ts) computes
+    * every moment; `last_v` rides the same aggregation as `max_by` over
+    * (ts, value).
+    */
   def overTimeBy(
       metric: String,
       matchers: Seq[LabelMatcher],
@@ -2331,8 +2131,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L,
       spread: Boolean = false,
       tsOf: Boolean = false): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
       byLabels, stepSec, rangeSec, offsetSec)
     val baseAggs = Seq(
@@ -2413,8 +2211,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       sf: Double,
       tf: Double,
       offsetSec: Long = 0L): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     require(sf > 0 && sf < 1 && tf > 0 && tf < 1,
       s"holt_winters smoothing factors must be in (0, 1): sf=$sf tf=$tf")
     val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
@@ -2453,7 +2249,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     *
     * Scale shape: the eval grid is `spark.range` (length bounded by the
     * query window, never the data), present eval points come from the
-    * SAME bounded map-side explode [[overTimeBy]] uses followed by one
+    * SAME bounded map-side explode ([[Tsdb.explodeEvalGrid]]) on the
+    * same [[Tsdb.evalGrid]], followed by one
     * distinct aggregation, and absence is a single anti-join on an
     * 8-byte key. No per-eval-point scan, no driver loop.
     */
@@ -2465,27 +2262,18 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
     require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val start0 = start - offsetSec
     val end0 = end - offsetSec
-    val firstEval =
-      floor((col("ts") + (stepSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val lastEval =
-      floor((col("ts") + (rangeSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val gridStart = Math.floorDiv(start0 + stepSec - 1, stepSec) * stepSec
-    val gridEnd = Math.floorDiv(end0, stepSec) * stepSec
-    val grid = spark.range(gridStart, gridEnd + 1, stepSec)
-      .select(col("id").as("eval_ts"))
     // full-lookback scan, mirroring overTimeBy — absence stays the exact
     // complement of the present eval grid
-    val present = queryRange(metric, matchers, start0 - rangeSec + 1, end0)
-      .withColumn("e0", greatest(firstEval, lit(gridStart)))
-      .withColumn("e1", least(lastEval, lit(gridEnd)))
-      .where(col("e0") <= col("e1"))
-      .withColumn("eval_ts", explode(sequence(col("e0"), col("e1"),
-        lit(stepSec))))
+    val present = explodeEvalGrid(
+        queryRange(metric, matchers, start0 - rangeSec + 1, end0), "ts",
+        start0, end0, stepSec, rangeSec, "eval_ts")
       .select("eval_ts").distinct()
+    val (gridStart, gridEnd) = evalGrid(start0, end0, stepSec)
+    val grid = spark.range(gridStart, gridEnd + 1, stepSec)
+      .select(col("id").as("eval_ts"))
     grid.join(present, Seq("eval_ts"), "left_anti")
       .select((col("eval_ts") + offsetSec).as("eval_ts"),
         lit(1.0).as("value"))
@@ -2542,9 +2330,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     }
     // offset shifts the scanned window back and reports buckets at the
     // REQUESTED grid, same convention as [[aggregateBy]]
-    val keys = byLabels.map(l => col("labels").getItem(l).as(l)) ++ Seq(
-      ((col("ts") - pmod(col("ts"), lit(stepSec))) + offsetSec)
-        .as("bucket_start"))
+    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
     val grouped = queryRange(metric, matchers, start - offsetSec,
         end - offsetSec)
       .withColumn("le", le)
@@ -2598,35 +2384,17 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L): DataFrame = {
     require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val dec = "decimal(20,0)"
-    val byCols = byLabels.map(l => col("labels").getItem(l).as(l))
     // offset shifts the fitted window back by `offsetSec` and
     // extrapolates the same horizon from the shifted origin — `x` is
     // re-origined to the SHIFTED start, so `xp = atSec - start` holds
     // unchanged (the day-over-day "what would yesterday have predicted")
     val start0 = start - offsetSec
     val end0 = end - offsetSec
-    val xp = lit(atSec - start).cast(dec)
-    queryRange(metric, matchers, start0, end0)
-      .select(byCols ++ Seq(
+    val xy = queryRange(metric, matchers, start0, end0)
+      .select(labelCols(byLabels) ++ Seq(
         (col("ts") - lit(start0)).cast(dec).as("x"),
         (col("value").cast("decimal(18,2)") * 100).cast(dec).as("yc")): _*)
-      .groupBy(byLabels.map(col): _*)
-      .agg(
-        count(lit(1)).cast(dec).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("yc")).as("syc"),
-        sum(col("x") * col("yc")).as("sxyc"),
-        sum(col("x") * col("x")).as("sxx"))
-      .withColumn("numc", col("n") * col("sxyc") - col("sx") * col("syc"))
-      .withColumn("den", col("n") * col("sxx") - col("sx") * col("sx"))
-      // a fit needs >= 2 distinct timestamps (den = 0 otherwise)
-      .where(col("n") >= 2 && col("den") =!= 0)
-      .withColumn("slope_per_sec",
-        col("numc").cast("double") / col("den").cast("double") / 100.0)
-      .withColumn("predicted",
-        (col("syc") * col("den") +
-          col("numc") * (col("n") * xp - col("sx"))).cast("double") /
-          (col("n") * col("den")).cast("double") / 100.0)
+    trendFit(xy, byLabels.map(col), "yc", 100.0, atSec - start)
       .select(byLabels.map(col) ++ Seq(col("n").cast("long").as("n"),
         col("slope_per_sec"), col("predicted")): _*)
   }
@@ -3219,6 +2987,195 @@ object Tsdb {
       catch { case _: NumberFormatException => 10L * 1024 * 1024 }
   }
 
+  // ---- range-function kernels: each window convention the oracles pin
+  // ---- is written once here; the range functions compose them
+
+  /** The engine's cross-engine rounding contract, tie-free
+    * `floor(x·1e6 + 0.5)/1e6`: the same IEEE op sequence in Spark,
+    * DuckDB and the streaming twin (CounterState.floorR6). Spark round()
+    * is BigDecimal HALF_UP and DuckDB round() float half-away; they
+    * diverge on products that land exactly on .5. It also clamps the
+    * −epsilon variance artifact to exactly 0. Users: the sliding rates,
+    * the quantized avg/spread/MAD moments, the subquery `result6` inner
+    * (PromQL) and the rate-outer entry query (SparkEntry). */
+  private[graft] def r6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
+
+  /** `labels[l] AS l` for each grouping label. */
+  private def labelCols(byLabels: Seq[String]): Seq[Column] =
+    byLabels.map(l => col("labels").getItem(l).as(l))
+
+  /** The tumbling bucket of `ts`: `ts − pmod(ts, stepSec)`. The rollup
+    * writers (materializeRollup, appendRollupPartials) key on it. */
+  private def bucketStart(stepSec: Long): Column =
+    col("ts") - pmod(col("ts"), lit(stepSec))
+
+  /** The `bucket_start` key of the tumbling range functions: an offset
+    * query scans the window `offsetSec` back and reports its buckets
+    * `offsetSec` forward, at the REQUESTED grid. */
+  private def bucketKey(stepSec: Long, offsetSec: Long): Column =
+    (bucketStart(stepSec) + offsetSec).as("bucket_start")
+
+  /** First and last point of the eval grid `k·stepSec` within
+    * `[start, end]`. */
+  private def evalGrid(start: Long, end: Long, stepSec: Long): (Long, Long) =
+    (Math.floorDiv(start + stepSec - 1, stepSec) * stepSec,
+      Math.floorDiv(end, stepSec) * stepSec)
+
+  /** THE sliding-window membership rule: a row at `tsCol` = ts belongs
+    * to eval point E iff `ts ≤ E < ts + rangeSec` (PromQL's
+    * `(E − range, E]` lookback), E on the [[evalGrid]] of
+    * `[start, end]`. Each row explodes map-side into the at most
+    * `rangeSec/stepSec + 1` eval points whose windows hold it (`outCol`,
+    * via `e0`/`e1`); a row whose window set misses the grid is dropped
+    * BEFORE the explode (sequence() rejects inverted bounds). Integer
+    * arithmetic throughout. Overlapping windows cost this fixed explode
+    * factor, never a shuffle or a self-join per window — the trade
+    * Structured Streaming's sliding `window()` makes. Users: the class's
+    * overTimeWindowed (the sliding counter, `*_over_time`, delta,
+    * idelta/irate and trend functions), absentOverTime, and the subquery
+    * outers overTimeOnFrame and counterOverFrame. */
+  private[graft] def explodeEvalGrid(
+      frame: DataFrame,
+      tsCol: String,
+      start: Long,
+      end: Long,
+      stepSec: Long,
+      rangeSec: Long,
+      outCol: String): DataFrame = {
+    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
+    val (gridStart, gridEnd) = evalGrid(start, end, stepSec)
+    val firstEval =
+      floor((col(tsCol) + (stepSec - 1)) / lit(stepSec)).cast("long") * stepSec
+    val lastEval =
+      floor((col(tsCol) + (rangeSec - 1)) / lit(stepSec)).cast("long") * stepSec
+    frame
+      .withColumn("e0", greatest(firstEval, lit(gridStart)))
+      .withColumn("e1", least(lastEval, lit(gridEnd)))
+      .where(col("e0") <= col("e1"))
+      .withColumn(outCol, explode(sequence(col("e0"), col("e1"), lit(stepSec))))
+  }
+
+  /** The reset-robust counter lag over raw samples: `v` is the value as
+    * decimal(18,2), `prev` the series' previous sample (lag over `key`
+    * in `order`; the default (ts, value) order is deterministic — rows
+    * tying on both carry equal values, so any interleaving gives the
+    * same pairs), and `delta` is `v − prev`, or `v` after a drop (a
+    * restarted counter counts its new value); both null on a series'
+    * first sample. Callers filter: the increase family on `delta`,
+    * resets/changes on `prev`. Users: aggregateIncreaseBy,
+    * momentIncreaseBy, quantileIncreaseBy, resetsChangesBy, the sliding
+    * slidingIncreaseBy, slidingMomentIncreaseBy and
+    * slidingResetsChangesBy, and EventOps.counterIncrease. */
+  private[graft] def counterLag(
+      samples: DataFrame,
+      key: String = "sid",
+      order: Seq[Column] = Seq(col("ts"), col("value")),
+      valueCol: String = "value"): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(key).orderBy(order: _*)
+    samples
+      .withColumn("v", col(valueCol).cast("decimal(18,2)"))
+      .withColumn("prev", lag("v", 1).over(w))
+      .withColumn("delta",
+        when(col("prev").isNull, lit(null))
+          .when(col("v") >= col("prev"), col("v") - col("prev"))
+          .otherwise(col("v")))
+  }
+
+  /** Per `keys` over [[counterLag]] pairs: the pair count `n_deltas`,
+    * `resets` (drops) and `changes` (any value change, the DECIMAL
+    * compare). Users: resetsBy/changesBy and slidingResetsChangesBy. */
+  private def countResetsChanges(pairs: DataFrame, keys: Seq[Column])
+      : DataFrame =
+    pairs.groupBy(keys: _*).agg(
+      count(lit(1)).as("n_deltas"),
+      sum(when(col("v") < col("prev"), 1L).otherwise(0L)).as("resets"),
+      sum(when(col("v") =!= col("prev"), 1L).otherwise(0L)).as("changes"))
+
+  /** The exact least-squares tail of deriv / predict_linear. `frame`
+    * carries decimal(20,0) integers `x` (seconds from the fit origin) and
+    * `yCol` (the value in 1/`yScale` units); one hash aggregation by
+    * `groupCols` sums n, Σx, Σy, Σxy and Σx², and
+    * {{{
+    *   numc = n·Σxy − Σx·Σy        den = n·Σx² − (Σx)²
+    *   slope_per_sec = numc / den / yScale
+    *   predicted     = (Σy·den + numc·(n·xp − Σx)) / (n·den) / yScale
+    * }}}
+    * stay exact decimals up to those two final double divisions — the
+    * same IEEE ops in every engine. A fit needs ≥ 2 distinct x: groups
+    * with n < 2 or den = 0 emit nothing. Users: predictLinear and
+    * slidingPredictLinear (cents), counterOverFrame (micros). */
+  private def trendFit(
+      frame: DataFrame,
+      groupCols: Seq[Column],
+      yCol: String,
+      yScale: Double,
+      xp: Long): DataFrame = {
+    val (sy, sxy) = (s"s$yCol", s"sx$yCol")
+    frame
+      .groupBy(groupCols: _*)
+      .agg(
+        count(lit(1)).cast("decimal(20,0)").as("n"),
+        sum(col("x")).as("sx"),
+        sum(col(yCol)).as(sy),
+        sum(col("x") * col(yCol)).as(sxy),
+        sum(col("x") * col("x")).as("sxx"))
+      .withColumn("numc", col("n") * col(sxy) - col("sx") * col(sy))
+      .withColumn("den", col("n") * col("sxx") - col("sx") * col("sx"))
+      .where(col("n") >= 2 && col("den") =!= 0)
+      .withColumn("slope_per_sec",
+        col("numc").cast("double") / col("den").cast("double") / yScale)
+      .withColumn("predicted",
+        (col(sy) * col("den") + col("numc") *
+          (col("n") * lit(xp).cast("decimal(20,0)") - col("sx")))
+          .cast("double") /
+          (col("n") * col("den")).cast("double") / yScale)
+  }
+
+  /** The first `k` rows of each `partition` in `order`, numbered
+    * 1.. in `rkCol` (row_number: callers end `order` with the group
+    * labels so ties break deterministically). It rides an
+    * already-aggregated frame, so its state is one partition's groups,
+    * never sample grain. `k` is a Column so each caller keeps its own
+    * literal type (Int in Tsdb, Long from the PromQL AST). Users:
+    * topKBy, bottomKBy, limitKBy, topKIncreaseBy and the topk/bottomk
+    * subquery inner (PromQL). */
+  private[graft] def firstK(
+      frame: DataFrame,
+      partition: Seq[Column],
+      order: Seq[Column],
+      k: Column,
+      rkCol: String = "rk"): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(partition: _*).orderBy(order: _*)
+    frame.withColumn(rkCol, row_number().over(w)).where(col(rkCol) <= k)
+  }
+
+  /** The newest two samples of each `partition` (a series' bucket or
+    * eval window) in (ts, value) DESC order: `dt` is their timestamp
+    * gap, `idelta` their difference, and `irate` the reset-aware
+    * difference (a drop counts the new value) over `dt`, null for a zero
+    * gap. Partitions holding fewer than two samples emit nothing.
+    * Users: instantDeltaBy and slidingInstantDeltaBy. */
+  private def lastTwoPair(frame: DataFrame, partition: Seq[Column])
+      : DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(partition: _*)
+      .orderBy(col("ts").desc, col("v").desc)
+    frame
+      .withColumn("rk", row_number().over(w))
+      .withColumn("prev_ts", lead("ts", 1).over(w))
+      .withColumn("prev_v", lead("v", 1).over(w))
+      .where(col("rk") === 1 && col("prev_ts").isNotNull)
+      .withColumn("dt", col("ts") - col("prev_ts"))
+      .withColumn("idelta", (col("v") - col("prev_v")).cast("double"))
+      .withColumn("irate",
+        when(col("dt") > 0, round(
+          when(col("v") >= col("prev_v"), col("v") - col("prev_v"))
+            .otherwise(col("v")).cast("double") /
+            col("dt").cast("double"), 6)))
+  }
+
   /** Prometheus `bucketQuantile` over an ALREADY-AGGREGATED cumulative
     * bucket frame `(keyCols…, leCol (string bounds, "+Inf" overflow),
     * tsCol, valCol)` — the interpolation half of the CANONICAL
@@ -3270,8 +3227,8 @@ object Tsdb {
 
   /** Sliding-window moment aggregation over an ALREADY-COMPUTED grid
     * frame `(keyCols…, tsCol, valCol)` — the OUTER leg of a nested
-    * subquery: the same eval-grid explode [[graft.Tsdb.overTimeBy]]
-    * performs over raw samples, applied to an inner expression's points.
+    * subquery: the eval-grid explode ([[explodeEvalGrid]]) the raw-sample
+    * `*_over_time` family uses, applied to an inner expression's points.
     * The sum/avg moments accumulate in DECIMAL so they are
     * order-insensitive (oracle-mirrorable); min/max/count/last are
     * order-free by nature.
@@ -3288,13 +3245,6 @@ object Tsdb {
       quantile: Option[Double] = None,
       spread: Boolean = false,
       mad: Boolean = false): org.apache.spark.sql.DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    val firstEval =
-      floor((col(tsCol) + (stepSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val lastEval =
-      floor((col(tsCol) + (rangeSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val gridStart = Math.floorDiv(start + stepSec - 1, stepSec) * stepSec
-    val gridEnd = Math.floorDiv(end, stepSec) * stepSec
     val dec = sum(col(valCol).cast("decimal(28,10)")).cast("double")
     val moments = Seq(
       count(lit(1)).as("n"),
@@ -3330,14 +3280,10 @@ object Tsdb {
       // reused, the madBy scheme), the deviation median is one more
       // exact percentile, tie-free floor-rounded
       (if (!mad) Seq.empty
-      else Seq((floor(percentile(abs(col(valCol) - col("__med")),
-        lit(0.5)) * 1e6 + lit(0.5)) / 1e6).as("mad_v")))
-    val exploded0 = frame
-      .withColumn("e0", greatest(firstEval, lit(gridStart)))
-      .withColumn("e1", least(lastEval, lit(gridEnd)))
-      .where(col("e0") <= col("e1"))
-      .withColumn("__out_ts",
-        explode(sequence(col("e0"), col("e1"), lit(stepSec))))
+      else Seq(r6(percentile(abs(col(valCol) - col("__med")), lit(0.5)))
+        .as("mad_v")))
+    val exploded0 = explodeEvalGrid(frame, tsCol, start, end, stepSec,
+      rangeSec, "__out_ts")
     val exploded = if (!mad) exploded0 else {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keyCols.map(col) :+ col("__out_ts"): _*)
@@ -3354,15 +3300,6 @@ object Tsdb {
       val meanM = col("__sum_m").cast("double") / n
       val stdvar =
         (col("__sum2_m").cast("double") / n - meanM * meanM) / 1e12
-      // tie-free 6-decimal rounding: floor(x*1e6 + 0.5)/1e6 in pure
-      // double ops — Spark's round() (BigDecimal HALF_UP on the shortest
-      // decimal repr) and DuckDB's round() (float multiply + half-away)
-      // disagree on values whose *1e6 product lands exactly on .5; this
-      // formulation is the same IEEE op sequence on both engines, so it
-      // cannot diverge (and it clamps the -epsilon variance fp artifact
-      // to exactly 0 on both sides)
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * 1e6 + 0.5) / 1e6
       out
         .withColumn("stdvar_v", r6(stdvar))
         .withColumn("stddev_v", r6(sqrt(stdvar)))
@@ -3387,10 +3324,10 @@ object Tsdb {
     * (every frame column this accepts — the spread gate's set), so the
     * decimal(28,10) cast is lossless, deltas/sums are exact decimals,
     * the regression runs on exact integer micros (the
-    * [[slidingPredictLinear]] scheme at micro grain), and every final
-    * rate-like value rounds through the tie-free floor(x·1e6+0.5)/1e6.
-    * Plan: one lag window at label grain over the inner frame, one
-    * explode to covering outer evals, ONE hash aggregation — label-
+    * [[trendFit]] at micro grain), and every final rate-like value
+    * rounds through [[r6]]. Plan: one lag window at label grain over the
+    * inner frame, one explode to covering outer evals
+    * ([[explodeEvalGrid]]), ONE hash aggregation — label-
     * grain everywhere, never sample-cardinality.
     */
   private[graft] def counterOverFrame(
@@ -3404,26 +3341,15 @@ object Tsdb {
       rangeSec: Long,
       fn: String,
       horizonSec: Long = 0L): org.apache.spark.sql.DataFrame = {
-    require(rangeSec > 0 && stepSec > 0, "rangeSec and stepSec must be > 0")
-    val firstEval =
-      floor((col(tsCol) + (stepSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val lastEval =
-      floor((col(tsCol) + (rangeSec - 1)) / lit(stepSec)).cast("long") * stepSec
-    val gridStart = Math.floorDiv(start + stepSec - 1, stepSec) * stepSec
-    val gridEnd = Math.floorDiv(end, stepSec) * stepSec
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
       .orderBy(col(tsCol))
-    def r6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + 0.5) / 1e6
-    val lagged = frame
-      .withColumn("__v", col(valCol).cast("decimal(28,10)"))
-      .withColumn("__pv", lag("__v", 1).over(w))
-      .withColumn("__pt", lag(tsCol, 1).over(w))
-      .withColumn("e0", greatest(firstEval, lit(gridStart)))
-      .withColumn("e1", least(lastEval, lit(gridEnd)))
-      .where(col("e0") <= col("e1"))
-      .withColumn("__T",
-        explode(sequence(col("e0"), col("e1"), lit(stepSec))))
+    val lagged = explodeEvalGrid(
+      frame
+        .withColumn("__v", col(valCol).cast("decimal(28,10)"))
+        .withColumn("__pv", lag("__v", 1).over(w))
+        .withColumn("__pt", lag(tsCol, 1).over(w)),
+      tsCol, start, end, stepSec, rangeSec, "__T")
     // a pair is live in window T only when its OLDER end is inside too
     val pin = col("__pt").isNotNull && col("__pt") > col("__T") - rangeSec
     val groupCols = keyCols.map(col) :+ col("__T")
@@ -3484,31 +3410,13 @@ object Tsdb {
         // exact integer regression at micro grain: the inner values are
         // 6-decimal quantized, so v·1e6 is an exact integer
         val dec = "decimal(20,0)"
-        val xp = lit(rangeSec + horizonSec).cast(dec)
-        lagged
+        val xy = lagged
           .withColumn("x",
             (col(tsCol) - (col("__T") - lit(rangeSec))).cast(dec))
           // decimal × integral literal stays exact decimal arithmetic —
           // a double 1e6 literal would silently promote __v to double
           .withColumn("ym", (col("__v") * lit(1000000L)).cast(dec))
-          .groupBy(groupCols: _*)
-          .agg(
-            count(lit(1)).cast(dec).as("n"),
-            sum(col("x")).as("sx"),
-            sum(col("ym")).as("sym"),
-            sum(col("x") * col("ym")).as("sxym"),
-            sum(col("x") * col("x")).as("sxx"))
-          .withColumn("numc",
-            col("n") * col("sxym") - col("sx") * col("sym"))
-          .withColumn("den",
-            col("n") * col("sxx") - col("sx") * col("sx"))
-          .where(col("n") >= 2 && col("den") =!= 0)
-          .withColumn("slope_per_sec",
-            col("numc").cast("double") / col("den").cast("double") / 1e6)
-          .withColumn("predicted",
-            (col("sym") * col("den") +
-              col("numc") * (col("n") * xp - col("sx"))).cast("double") /
-              (col("n") * col("den")).cast("double") / 1e6)
+        trendFit(xy, groupCols, "ym", 1e6, rangeSec + horizonSec)
           .select((keyCols.map(col) :+ col("__T") :+
             col("n").cast("long").as("n") :+ col("slope_per_sec") :+
             col("predicted")): _*)

@@ -217,14 +217,8 @@ object EventOps {
       idCol: String,
       valueCol: String,
       windowSec: Long): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(col(tsSecCol), col(idCol))
-    df
-      .withColumn("v", col(valueCol).cast("decimal(18,2)"))
-      .withColumn("prev", lag("v", 1).over(w))
-      .withColumn("delta",
-        when(col("prev").isNull, lit(null))
-          .when(col("v") >= col("prev"), col("v") - col("prev"))
-          .otherwise(col("v")))
+    graft.Tsdb
+      .counterLag(df, keyCol, Seq(col(tsSecCol), col(idCol)), valueCol)
       .where(col("delta").isNotNull)
       .groupBy(col(keyCol),
         (col(tsSecCol) - pmod(col(tsSecCol), lit(windowSec)))

@@ -845,16 +845,18 @@ object PromQL {
       // `offset` and `@` may appear in either order (Prometheus allows
       // both `x offset 5m @ end()` and `x @ end() offset 5m`), each at
       // most once
-      var offsetSec = 0L
+      var offsetSec: Option[Long] = None
       var atSpec: Option[AtSpec] = None
       var more = true
       while (more) peek match {
-        case Some(Ident("offset")) if offsetSec == 0L =>
+        case Some(Ident("offset")) =>
+          if (offsetSec.isDefined)
+            fail("offset may not be set multiple times")
           next()
-          offsetSec = next() match {
+          offsetSec = Some(next() match {
             case Num(s) => durationSec(s)
             case t => fail("offset must be a duration")
-          }
+          })
         case Some(Sym("@")) if atSpec.isEmpty =>
           next()
           atSpec = Some(next() match {
@@ -867,7 +869,8 @@ object PromQL {
           })
         case _ => more = false
       }
-      Selector(metric, matchers.toSeq, rangeSec, offsetSec, stepSec, atSpec)
+      Selector(metric, matchers.toSeq, rangeSec, offsetSec.getOrElse(0L),
+        stepSec, atSpec)
     }
   }
 
@@ -2024,14 +2027,9 @@ object PromQL {
               sel.offsetSec)
             val ord =
               if (op2 == "topk") col(vc).desc else col(vc).asc
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy((byTop :+ "eval_ts").map(col): _*)
-              .orderBy(ord +: by.map(l => col(l).asc_nulls_first): _*)
-            (frame
-              .withColumn("__rk",
-                org.apache.spark.sql.functions.row_number().over(w))
-              .where(col("__rk") <= k).drop("__rk"),
-              by, vc)
+            (Tsdb.firstK(frame, (byTop :+ "eval_ts").map(col),
+                ord +: by.map(l => col(l).asc_nulls_first), lit(k), "__rk")
+              .drop("__rk"), by, vc)
           // binary-op inner: `(sum by (l)(rate(a[d])) <op> sum by (l)
           // (rate(b[d])))[R:s]` — the peak-error-ratio idiom
           // `max_over_time((sum(rate(err[5m]))/sum(rate(req[5m])))
@@ -2060,7 +2058,7 @@ object PromQL {
             // results are round(…,6) by the engine's ratio contract
             // (`ratio6`); + - * results are single IEEE ops over the
             // floor-r6-quantized legs, quantized HERE through the same
-            // tie-free floor(x·1e6+0.5)/1e6 (`result6`) — both are
+            // tie-free Tsdb.r6 (`result6`) — both are
             // 6-decimal QUANTIZED, so they join the integer-micro
             // exactness family (spread/counter outers allowed). The
             // %,^,atan2 results quantize through engine round() (which
@@ -2073,7 +2071,7 @@ object PromQL {
             }
             val vExpr = op match {
               case "+" | "-" | "*" =>
-                cFloor(arith(op)(col("__va"), col("__vb")) * 1e6 + 0.5) / 1e6
+                Tsdb.r6(arith(op)(col("__va"), col("__vb")))
               case _ => arith(op)(col("__va"), col("__vb"))
             }
             val joined = Tsdb.nullSafeEquiJoin(

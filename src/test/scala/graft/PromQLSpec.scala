@@ -2487,4 +2487,124 @@ class PromQLSpec extends SparkSuite {
         T0, T1))
     assert(ex.getMessage.contains("inner value"), ex.getMessage)
   }
+
+  test("window conventions: sliding resets/changes/rate, the counter " +
+      "outer over a computed inner and absent_over_time equal a " +
+      "driver-side replay of the documented rules") {
+    import spark.implicits._
+    // three series, 22 samples: a counter reset in each, samples exactly
+    // on eval points and on E − range, a duplicate timestamp (distinct
+    // values, ordered by value) and a 240 s gap in series 1
+    val B = 1704412800L // a multiple of every step below
+    val raw = Seq(
+      ("1", "a", 0L, "1.00"), ("1", "a", 60L, "3.50"),
+      ("1", "a", 90L, "3.50"), ("1", "a", 150L, "0.50"),
+      ("1", "a", 180L, "2.25"), ("1", "a", 180L, "2.50"),
+      ("1", "a", 240L, "4.00"), ("1", "a", 480L, "5.00"),
+      ("1", "a", 540L, "6.00"), ("1", "a", 600L, "6.00"),
+      ("2", "a", 30L, "10.00"), ("2", "a", 120L, "12.00"),
+      ("2", "a", 240L, "11.00"), ("2", "a", 300L, "11.00"),
+      ("2", "a", 360L, "15.00"), ("2", "a", 420L, "15.50"),
+      ("3", "b", 0L, "100.00"), ("3", "b", 60L, "100.00"),
+      ("3", "b", 120L, "101.00"), ("3", "b", 240L, "99.00"),
+      ("3", "b", 300L, "100.00"), ("3", "b", 540L, "103.00"))
+      .map { case (id, l, dt, v) => (id, l, B + dt, BigDecimal(v)) }
+    val store = Tsdb.attach(spark, raw.map { case (id, l, ts, v) =>
+        ("x", Map("id" -> id, "l" -> l), ts, v.toDouble) }
+      .toDF("metric", "labels", "ts", "value"))
+    val (start, end, step, range) = (B, B + 600L, 60L, 180L)
+    def evalPoints(lo: Long, hi: Long, st: Long): Seq[Long] =
+      (Math.floorDiv(lo + st - 1, st) * st)
+        .to(Math.floorDiv(hi, st) * st, st)
+    def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
+    // consecutive (older, newer) sample pairs per series over the scan
+    // [lo, hi], ordered by (ts, value)
+    def pairs(lo: Long, hi: Long) =
+      raw.filter(s => s._3 >= lo && s._3 <= hi).groupBy(_._1).values
+        .flatMap(_.sortBy(s => (s._3, s._4)).sliding(2).collect {
+          case Seq(p, c) => (c._1, c._2, p, c)
+        }).toSeq
+    // sliding raw-window rule: the pair at newer sample ts counts at
+    // every eval point E with E − range < ts ≤ E; offset o evaluates the
+    // shifted grid and reports E + o
+    def sliding(from: Long, o: Long,
+        key: ((String, String)) => Seq[String]) = {
+      val ps = pairs(from - o - range + 1, end - o)
+      for {
+        e <- evalPoints(from - o, end - o, step)
+        (k, in) <- ps.filter(p => p._4._3 > e - range && p._4._3 <= e)
+          .groupBy(p => key((p._1, p._2)))
+      } yield (k, e + o, in.map(p => (p._3._4, p._4._4)))
+    }
+    def delta(p: BigDecimal, c: BigDecimal) = if (c >= p) c - p else c
+    def rows(df: DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+
+    Seq(0L, 120L).foreach { o =>
+      val off = if (o == 0L) "" else s" offset $o"
+      val perSeries = sliding(start, o, k => Seq(k._1, k._2))
+      // resets(x[R:s]): per series, a drop between consecutive samples
+      assert(rows(PromQL.query(store, s"resets(x[$range:$step]$off)",
+          start, end), "id", "l", "eval_ts", "n_deltas", "resets") ==
+        perSeries.map { case (k, e, ps) =>
+          k ++ Seq[Any](e, ps.size.toLong, ps.count(p => p._2 < p._1).toLong)
+        }.toSet, s"resets offset $o")
+      // sum by (l) (changes(x[R:s])): any value change, summed over l
+      assert(rows(PromQL.query(store,
+          s"sum by (l) (changes(x[$range:$step]$off))", start, end),
+          "l", "eval_ts", "n_deltas", "changes") ==
+        sliding(start, o, k => Seq(k._2)).map { case (k, e, ps) =>
+          k ++ Seq[Any](e, ps.size.toLong, ps.count(p => p._2 != p._1).toLong)
+        }.toSet, s"changes offset $o")
+      // rate(x[R:s]): reset-robust decimal increase, floor-r6 over range
+      assert(rows(PromQL.query(store, s"rate(x[$range:$step]$off)",
+          start, end), "id", "l", "eval_ts", "n", "increase",
+          "rate_per_sec") ==
+        perSeries.map { case (k, e, ps) =>
+          val inc = ps.map(p => delta(p._1, p._2)).sum.toDouble
+          k ++ Seq[Any](e, ps.size.toLong, inc, r6(inc / range))
+        }.toSet, s"rate offset $o")
+      // absent_over_time(x{id="1"}[R] offset o): grid step = range; an
+      // eval point is absent when (E − range, E] holds no sample
+      val ar = 120L
+      val ts1 = raw.filter(_._1 == "1").map(_._3)
+      assert(rows(PromQL.query(store,
+          s"""absent_over_time(x{id="1"}[$ar]$off)""", start, end),
+          "eval_ts", "value") ==
+        evalPoints(start - o, end - o, ar)
+          .filterNot(e => ts1.exists(t => t > e - ar && t <= e))
+          .map(e => Seq[Any](e + o, 1.0)).toSet, s"absent offset $o")
+    }
+
+    // resets(rate(x[R])[R2:s]): the inner rate per series on the
+    // subquery grid, then consecutive inner points count in outer
+    // window T only when BOTH ends lie in (T − R2, T]
+    val r2 = 240L
+    // the inner evaluates over [start − R2, end]
+    val inner = sliding(start - r2, 0L, k => Seq(k._1, k._2)).map {
+      case (k, e, ps) =>
+        (k, e, r6(ps.map(p => delta(p._1, p._2)).sum.toDouble / range))
+    }
+    val innerPts = inner.groupBy(_._1).values.toSeq
+      .flatMap(_.sortBy(_._2).sliding(2).collect { case Seq(p, c) => (p, c) })
+    val exp = for {
+      tp <- evalPoints(start, end, step)
+      (k, in) <- innerPts.filter { case (p, c) =>
+          p._2 > tp - r2 && c._2 <= tp }.groupBy(_._1._1)
+    } yield k ++ Seq[Any](tp, in.size.toLong,
+      in.count { case (p, c) => c._3 < p._3 }.toLong)
+    assert(rows(PromQL.query(store,
+        s"resets(rate(x[$range])[$r2:$step])", start, end),
+        "id", "l", "eval_ts", "n_deltas", "resets") == exp.toSet)
+    assert(exp.exists(_(4) != 0L), "the fixture must reset the inner rate")
+  }
+
+  test("a selector takes at most one offset; offset 0s parses") {
+    val e = intercept[IllegalArgumentException](
+      PromQL.parse("sum by (cohort) (click[1h] offset 0s offset 1h)"))
+    assert(e.getMessage.contains("offset may not be set multiple times"),
+      e.getMessage)
+    assert(PromQL.parse("sum by (cohort) (click[1h] offset 0s)") ==
+      PromQL.parse("sum by (cohort) (click[1h])"))
+  }
 }
