@@ -2340,7 +2340,7 @@ object OracleSql {
   private val tsdbPromqlSubqueryPredict = slidingRegression(true)
 
   /** Sliding resets/changes mirrors — the tsdbResets lag chain with the
-    * slidingIncreaseBy delta-attribution rule (a pair belongs to every
+    * sliding counter delta-attribution rule (a pair belongs to every
     * window containing its newer sample's ts). */
   private def slidingResetsChanges(changes: Boolean): String = {
     val r = 21600L; val st = 3600L

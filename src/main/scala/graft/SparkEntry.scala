@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -67,8 +67,9 @@ object SparkEntry {
     * increase composed with the cross-series label aggregation.
     */
   private def qTsdbAggIncrease(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .aggregateIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+      "sum by (cohort) (increase(click[1h]))", T0, T1)
       .orderBy("cohort", "bucket_start")
 
   /** PromQL `topk(3, sum by (cohort) (click[1h]))`: top label groups per
@@ -639,8 +640,8 @@ object SparkEntry {
 
   /** Non-`*_over_time` outer on a subquery — `rate(click[6h:1h])`, the
     * Prometheus rate-over-subquery shape: a 6h-window reset-robust rate
-    * evaluated every hour (Tsdb.slidingIncreaseBy — the [range:step]
-    * selector pins the sliding eval grid directly).
+    * evaluated every hour (the counter family's sliding grid — the
+    * [range:step] selector pins it directly).
     */
   private def qTsdbPromqlSubqueryRateOuter(
       s: SparkSession, dir: String): DataFrame =
@@ -678,7 +679,7 @@ object SparkEntry {
 
   /** Sliding resets — `sum by (cohort)(resets(click[6h:1h]))`: counter
     * drops per trailing 6h window, every hour, summed across series
-    * (Tsdb.slidingResetsChangesBy; the slidingIncreaseBy delta-
+    * (Tsdb.slidingResetsChangesBy; the sliding counter delta-
     * attribution rule, so the counter family shares one convention).
     */
   private def qTsdbPromqlSubqueryResets(
@@ -813,8 +814,8 @@ object SparkEntry {
   /** Moment-aggregated subquery inner — `max_over_time(avg by (cohort)
     * (rate(click[1h]))[6h:1h])`: the peak of the cross-series MEAN rate
     * (avg of per-series rates is NOT a delta sum — the per-(series,
-    * eval point) leg materializes before the moment,
-    * Tsdb.slidingMomentIncreaseBy), outer max over the 6h lookback.
+    * eval point) increase of Tsdb.counterSeries feeds the moment of
+    * Tsdb.counterAggregate), outer max over the 6h lookback.
     */
   private def qTsdbPromqlSubqueryMoment(
       s: SparkSession, dir: String): DataFrame =
@@ -1027,8 +1028,9 @@ object SparkEntry {
   /** The most common PromQL shape a user types — BARE `rate(click[1h])`
     * — through the string front-end: per-series (full label set)
     * reset-robust counter rate on the step grid, no enclosing sum-by
-    * required. Compiles onto [[graft.Tsdb.aggregateIncreaseBy]] grouped
-    * by the metric's label-key universe.
+    * required. Compiles onto the counter family's `sum`
+    * ([[graft.Tsdb.counterSeries]], [[graft.Tsdb.counterAggregate]])
+    * grouped by the metric's label-key universe.
     */
   private def qTsdbPromqlRate(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(
@@ -1267,7 +1269,7 @@ object SparkEntry {
 
   /** The SLO alert — `quantile by (cohort) (0.9, rate(click[1h])) >
     * 0.005` under Prometheus `for` escalation: the batch compile goes
-    * through quantileIncreaseBy's q_rate column (valueColOf) and the
+    * through the counter quantile's q_rate column (valueColOf) and the
     * quantile groupingOf case, both round-11 additions; its streaming
     * twin is parity-gated in StreamingSpec.
     */
@@ -1305,8 +1307,8 @@ object SparkEntry {
   }
 
   /** Quantile recording rule — the SLO series precomputed: materialize
-    * `quantile by (cohort) (0.9, rate(click[3600]))` (quantileIncreaseBy
-    * through the rules engine) under `cohort:click:rate_p90`, re-attach,
+    * `quantile by (cohort) (0.9, rate(click[3600]))` (the counter
+    * quantile through the rules engine) under `cohort:click:rate_p90`, re-attach,
     * and read it back through queryRange — the full materialization
     * loop for the counter-quantile family.
     */
@@ -1432,8 +1434,8 @@ object SparkEntry {
   /** PromQL `avg by (cohort) (increase(click[1h]))` through the string
     * front-end: cross-series moments (count/sum/avg/min/max) of the
     * per-series reset-robust increase — the `avg(rate(...))` dashboard
-    * family; sum_increase must equal tsdb_agg_increase's increase
-    * (spec cross-check).
+    * family; sum_increase equals tsdb_agg_increase's increase (the
+    * PromQLSpec identity).
     */
   private def qTsdbPromqlAvgRate(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(
@@ -1533,8 +1535,8 @@ object SparkEntry {
   /** The canonical dashboard ranking through the string front-end —
     * `topk(3, sum by (cohort) (rate(click[1h])))`: per-bucket top label
     * groups by reset-robust counter rate. The rank window rides the
-    * aggregated [[graft.Tsdb.aggregateIncreaseBy]] output (group-level
-    * cardinality, never sample-level).
+    * counter family's aggregated `sum` ([[graft.Tsdb.counterAggregate]];
+    * group-level cardinality, never sample-level).
     */
   private def qTsdbPromqlTopkRate(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(
@@ -1667,7 +1669,7 @@ object SparkEntry {
     * must equal the single-batch ingest oracle exactly.
     */
   private def qTsdbCompactStats(s: SparkSession, dir: String): DataFrame = {
-    val path = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val path = GraftBridge.tempDir("graft_compact")
     val t = new Tsdb(s, TsdbConf(dataPath = path, compression = "zstd",
       segmentDuration = 86400L))
     // the query-window week (the full-month single-batch path is
@@ -2082,7 +2084,7 @@ object SparkEntry {
     * ingest + stats throughput.
     */
   private def qTsdbIngestStats(s: SparkSession, dir: String): DataFrame = {
-    val path = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val path = GraftBridge.tempDir("graft_ingest")
     // daily buckets: partition sizing follows data density — the events
     // table spans a month at ~3k rows/day, where 2h buckets would create
     // 360 tiny partitions (the small-files anti-pattern at any scale)
@@ -2262,7 +2264,7 @@ object SparkEntry {
     * text-format writer/parser paths).
     */
   private def qCsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = GraftBridge.tempDir("graft_csv")
     val e = Tables.events(s, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
     e.write.mode("overwrite").option("header", "true").csv(tmp)
@@ -2282,7 +2284,7 @@ object SparkEntry {
     * parquet original (exercises the ORC vectorized reader/writer path).
     */
   private def qOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val tmp = GraftBridge.tempDir("graft_orc")
     val e = Tables.events(s, dir)
       .select("event_id", "user_id", "event_type", "value")
     e.write.mode("overwrite").option("compression", "zstd").orc(tmp)
@@ -2302,7 +2304,7 @@ object SparkEntry {
     * aggregation over the parquet original.
     */
   private def qJsonRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val tmp = GraftBridge.tempDir("graft_json")
     val e = Tables.events(s, dir)
       .select("event_id", "user_id", "event_type", "value")
     e.write.mode("overwrite").json(tmp)

@@ -905,143 +905,44 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         r6(percentile(abs(col("value") - col("med")), lit(0.5))).as("mad_v"))
   }
 
-  /** `sum by (labels) (increase(metric[step]))` — the composed PromQL
-    * counter form: per-SERIES reset-robust increase (positive deltas; a
-    * drop contributes the new value, as a restarted counter does), then
-    * summed across series per (label subset, step bucket).
-    *
-    * Two stages by nature — a per-series window (shuffle on sid) feeding
-    * the cross-series hash aggregation — mirroring exactly how a
-    * distributed PromQL engine evaluates this. Delta arithmetic stays in
-    * DECIMAL until the final cast; the lag order (ts, value) is fully
-    * deterministic: rows tying on both carry equal values, so any
-    * interleaving yields the same per-bucket delta sums.
-    */
-  def aggregateIncreaseBy(
+  /** Stage (a) of the counter family (`rate` / `increase`): the
+    * per-series reset-robust increase. One selector scan, the
+    * [[Tsdb.counterLag]] over it, then one aggregation per (sid,
+    * `byLabels`, t) summing the decimal deltas (`__inc`) and counting
+    * them (`__n`; the prefix keeps them apart from any label name); a
+    * series contributes to t only when it has ≥ 1 delta there.
+    * `gridStep` picks t:
+    *  - None: tumbling buckets `rangeSec` wide, t = `bucket_start`
+    *    ([[Tsdb.bucketKey]]);
+    *  - Some(s): the sliding eval grid every s over `rangeSec`
+    *    lookbacks, t = `eval_ts` ([[overTimeWindowed]]; the scan reaches
+    *    one lookback before the grid, so the lag's pairs are not cut).
+    * An offset scans `offsetSec` back and reports t `offsetSec` forward.
+    * The group keys lead with sid, the lag window's partitioning, so
+    * this stage adds no exchange. Stage (b) is
+    * [[Tsdb.counterAggregate]]. */
+  private[graft] def counterSeries(
       metric: String,
       matchers: Seq[LabelMatcher],
       start: Long,
       end: Long,
       byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
-    counterLag(queryRange(metric, matchers, start - offsetSec,
-        end - offsetSec))
-      .where(col("delta").isNotNull)
-      .groupBy(keys: _*)
-      .agg(
-        sum(col("delta")).cast("double").as("increase"),
-        round(sum(col("delta")).cast("double") / stepSec, 6)
-          .as("rate_per_sec"))
-  }
-
-  /** Sliding-window counter increase/rate on the subquery eval grid:
-    * `rate(metric[rangeSec])` evaluated every `stepSec` — the inner leg
-    * of a nested subquery `max_over_time(rate(x[5m])[1h:1m])`.
-    * Per-sample reset-robust deltas are computed ONCE per series
-    * ([[Tsdb.counterLag]]), then each delta row explodes to the eval
-    * points whose lookback window `[T-rangeSec+1, T]` covers it
-    * ([[Tsdb.explodeEvalGrid]]), and ONE hash aggregation sums per
-    * (label group, eval point).
-    * The scan (and the lag's visibility) covers
-    * `[start - rangeSec + 1, end]`, so an oracle computing the lag over
-    * the same scanned set mirrors it exactly.
-    */
-  def slidingIncreaseBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
       rangeSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec,
-      s => counterLag(s).where(col("delta").isNotNull))
-    windowed
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("delta")).cast("double").as("increase"),
-        // r6, not round(): one real sf0.01 row at the 6h window width
-        // lands on an exact .5 product
-        r6(sum(col("delta")).cast("double") / rangeSec).as("rate_per_sec"))
-  }
-
-  /** Sliding cross-series MOMENTS of the per-series counter rate on the
-    * subquery eval grid — `avg/min/max/count by (l)(rate(x[rangeSec]))`
-    * evaluated every `stepSec`, the moment-aggregated inner of a nested
-    * subquery ([[slidingIncreaseBy]] is the `sum` member; avg/min/max of
-    * per-series rates are NOT delta sums, so they need the per-series
-    * leg materialized). Three stages by nature: the per-sample decimal
-    * lag (shuffle on sid), the per-(sid, eval point) increase sum after
-    * the grid explode, then the cross-series moment aggregation at the
-    * `byLabels` grain. The per-series value is the [[slidingIncreaseBy]]
-    * quantity exactly — `round(sum(delta)/rangeSec, 6)` for rate, the
-    * raw delta sum for increase — and the avg divides the exact
-    * decimal(28,10) sum by the exact series count, the engine's shared
-    * op order, so DuckDB mirrors are hash-exact. A series contributes to
-    * an eval point only when it has ≥ 1 delta in the lookback window,
-    * the same membership rule as the sum form. */
-  def slidingMomentIncreaseBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      rangeSec: Long,
-      offsetSec: Long = 0L,
-      rate: Boolean = true,
-      quantile: Option[Double] = None): DataFrame = {
-    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec,
-      s => counterLag(s).where(col("delta").isNotNull))
-    val perSeriesVal =
-      // the slidingIncreaseBy quantization — one cross-engine rounding
-      // contract for the whole sliding family
-      if (rate) r6(sum(col("delta")).cast("double") / rangeSec)
-      else sum(col("delta")).cast("double")
-    val perSeries = windowed
+      gridStep: Option[Long],
+      offsetSec: Long): DataFrame = {
+    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
+    val deltas = (s: DataFrame) => counterLag(s).where(col("delta").isNotNull)
+    val (perDelta, keys) = gridStep match {
+      case Some(step) => overTimeWindowed(metric, matchers, start, end,
+        byLabels, step, rangeSec, offsetSec, deltas)
+      case None =>
+        (deltas(queryRange(metric, matchers, start - offsetSec,
+            end - offsetSec)),
+          labelCols(byLabels) :+ bucketKey(rangeSec, offsetSec))
+    }
+    perDelta
       .groupBy((col("sid") +: keys): _*)
-      .agg(perSeriesVal.as("v_s"))
-      // cross-series spread via the integer-micro exactness scheme: the
-      // per-series value is quantized (round(…,6) rate / 2-decimal
-      // increase), so micro sums are lossless; the tie-free
-      // floor(x*1e6+0.5)/1e6 rounding below is the same IEEE op
-      // sequence the DuckDB mirror runs (see overTimeOnFrame's spread)
-      .withColumn("__m", round(col("v_s") * 1e6).cast("long"))
-    val aggs = Seq(
-      count(lit(1)).as("n_series"),
-      sum(col("v_s").cast("decimal(28,10)")).cast("double").as("sum_v"),
-      // 6-decimal quantized (tie-free floor) like the gauge twin — the
-      // mean of per-series rates re-enters the integer-micro family, so
-      // spread/counter outers over `avg by (l)(rate(...))` inners stay
-      // lossless; min/max/quantile of the round(…,6) rates already are
-      r6(sum(col("v_s").cast("decimal(28,10)")).cast("double") /
-        count(lit(1))).as("avg_v"),
-      min(col("v_s")).as("min_v"),
-      max(col("v_s")).as("max_v"),
-      sum(col("__m")).as("__sum_m"),
-      sum((col("__m").cast("decimal(19,0)") *
-        col("__m").cast("decimal(19,0)"))).as("__sum2_m")) ++
-      // cross-series quantile of the per-series rate — the SLO family
-      // as a subquery inner (exact linear-interpolation Percentile,
-      // the quantileIncreaseBy scheme)
-      quantile.map(qv =>
-        round(percentile(col("v_s"), lit(qv)), 6).as("q_v"))
-    val nD = col("n_series").cast("double")
-    val meanM = col("__sum_m").cast("double") / nD
-    val stdvar =
-      (col("__sum2_m").cast("double") / nD - meanM * meanM) / 1e12
-    perSeries
-      .groupBy((byLabels.map(col) :+ col("eval_ts")): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("stdvar_v", r6(stdvar))
-      .withColumn("stddev_v", r6(sqrt(stdvar)))
-      .drop("__sum_m", "__sum2_m")
+      .agg(sum(col("delta")).as("__inc"), count(lit(1)).as("__n"))
   }
 
   /** Sliding least-squares trend on the subquery eval grid —
@@ -1058,7 +959,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * exactly-computed integers, the same IEEE op on both engines.
     * `predicted` extrapolates `horizonSec` past each eval point
     * (xp = rangeSec + horizonSec, constant). One sample explode + ONE
-    * hash aggregation — the [[slidingIncreaseBy]] plan shape; windows
+    * hash aggregation, the sliding [[counterSeries]] window; windows
     * with < 2 distinct timestamps (den = 0) emit nothing, the
     * [[predictLinear]] guard.
     */
@@ -1096,7 +997,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * the trailing `rangeSec`. Per-sample lag pairs are computed ONCE per
     * series ([[Tsdb.counterLag]]), then each pair explodes to the eval
     * points whose lookback window covers its newer sample
-    * ([[Tsdb.explodeEvalGrid]]) — the [[slidingIncreaseBy]]
+    * ([[Tsdb.explodeEvalGrid]]) — the sliding [[counterSeries]]
     * delta-attribution rule, so the whole sliding counter family shares
     * one windowing convention and one oracle scheme. Returns both
     * counts ([[Tsdb.countResetsChanges]]); callers project.
@@ -1168,81 +1069,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       .select((labelCols(byLabels) ++
         Seq(col("sid"), col("eval_ts"), col("dt"), col("idelta"),
           col("irate"))): _*)
-  }
-
-  /** `avg/min/max/count by (labels) (increase(metric[step]))` — the
-    * cross-series MOMENTS of the per-series reset-robust increase
-    * ([[aggregateIncreaseBy]] is the `sum by` member of this family;
-    * its `increase` equals this output's `sum_increase`, cross-checked
-    * in tests). Prometheus's `avg(rate(...))` dashboard family.
-    *
-    * Three stages by nature: the per-series lag window (shuffle on
-    * sid), a per-(series, bucket) increase aggregation, then the
-    * cross-series moment aggregation — each increase stays DECIMAL
-    * until the final cast, and the avg divides the exact double sum by
-    * the exact series count in the engines' shared op order. Series
-    * contribute to a bucket only when they have ≥ 1 delta in it, same
-    * membership rule as the sum form.
-    */
-  def momentIncreaseBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
-    val perSeries = counterLag(queryRange(metric, matchers,
-        start - offsetSec, end - offsetSec))
-      .where(col("delta").isNotNull)
-      .groupBy((col("sid") +: keys): _*)
-      .agg(sum(col("delta")).as("inc_dec"))
-    perSeries
-      .groupBy((byLabels.map(col) :+ col("bucket_start")): _*)
-      .agg(
-        count(lit(1)).as("n_series"),
-        sum(col("inc_dec")).cast("double").as("sum_increase"),
-        (sum(col("inc_dec")).cast("double") / count(lit(1)))
-          .as("avg_increase"),
-        min(col("inc_dec")).cast("double").as("min_increase"),
-        max(col("inc_dec")).cast("double").as("max_increase"))
-  }
-
-  /** `quantile by (labels) (q, rate(metric[step]))` — the SLO family:
-    * the cross-series q-QUANTILE of the per-series reset-robust
-    * increase/rate ([[momentIncreaseBy]]'s percentile sibling). Same
-    * two-stage shape: per-series lag window + per-(series, bucket)
-    * increase, then ONE percentile aggregation across series —
-    * `percentile` is a partial-merge aggregate like any sum, so
-    * map-side combine applies and no per-bucket sort job runs. The
-    * quantile is continuous-interpolation on the double-cast increase,
-    * rounded to 6 decimals (the engines' shared `q_v` contract); the
-    * rate column divides the SAME percentile by the step — quantile is
-    * monotone, so quantile(rate) == quantile(increase)/step exactly.
-    */
-  def quantileIncreaseBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      q: Double,
-      offsetSec: Long = 0L): DataFrame = {
-    require(q >= 0 && q <= 1, s"quantile must be in [0,1]: $q")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
-    counterLag(queryRange(metric, matchers, start - offsetSec,
-        end - offsetSec))
-      .where(col("delta").isNotNull)
-      .groupBy((col("sid") +: keys): _*)
-      .agg(sum(col("delta")).cast("double").as("inc"))
-      .groupBy((byLabels.map(col) :+ col("bucket_start")): _*)
-      .agg(
-        count(lit(1)).as("n_series"),
-        round(percentile(col("inc"), lit(q)), 6).as("q_increase"),
-        round(percentile(col("inc"), lit(q)) / stepSec, 6).as("q_rate"))
   }
 
   /** Materialize a per-(sid, step-bucket) rollup store — the continuous
@@ -1760,10 +1586,10 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
 
   /** PromQL `sum by (labels) (resets(metric[step]))`: per-series counter
     * resets (a value drop between consecutive samples), summed across
-    * series per (label subset, step bucket). Same two-stage shape as
-    * [[aggregateIncreaseBy]]: the per-series lag window (shuffle on sid)
-    * feeding one cross-series hash aggregation; the deterministic
-    * (ts, value) lag order makes the reset count well-defined under ties.
+    * series per (label subset, step bucket). The [[counterSeries]]
+    * lag window (shuffle on sid) feeds one cross-series hash
+    * aggregation; the deterministic (ts, value) lag order makes the
+    * reset count well-defined under ties.
     */
   def resetsBy(
       metric: String,
@@ -1935,33 +1761,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         col("n"), col("sum_v")): _*)
   }
 
-  /** PromQL `topk(k, sum by (labels) (rate(metric[step])))` — the
-    * canonical dashboard ranking ("top k by request rate"): the k label
-    * groups with the LARGEST per-bucket reset-robust increase. The rank
-    * window rides the already-aggregated [[aggregateIncreaseBy]] output,
-    * so its state is bounded by one bucket's label-group cardinality
-    * (never sample-level); ties break deterministically on the labels.
-    * `asc = true` is the `bottomk` mirror.
-    */
-  def topKIncreaseBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      k: Int,
-      offsetSec: Long = 0L,
-      asc: Boolean = false): DataFrame = {
-    val rank = if (asc) col("increase").asc else col("increase").desc
-    firstK(
-        aggregateIncreaseBy(metric, matchers, start, end, byLabels, stepSec,
-          offsetSec),
-        Seq(col("bucket_start")), rank +: byLabels.map(col), lit(k))
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"), col("rk"),
-        col("increase"), col("rate_per_sec")): _*)
-  }
-
   /** PromQL `bottomk(k, sum by (labels) (metric[step]))` — [[topKBy]]
     * with the rank order inverted: the k label groups with the SMALLEST
     * per-bucket sums. Same bounded-state bucket-partitioned rank window.
@@ -2072,7 +1871,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   }
 
   /** Sliding gauge moments on the subquery eval grid — the gauge twin of
-    * [[slidingIncreaseBy]]: `avg/min/max/sum/count/last_over_time(
+    * the sliding [[counterSeries]]: `avg/min/max/sum/count/last_over_time(
     * metric[rangeSec])` evaluated every `stepSec`, aggregated straight to
     * the `byLabels` grain (the full label-key universe for the per-series
     * form). One sample explode + ONE hash aggregation, the exact
@@ -3062,10 +2861,9 @@ object Tsdb {
     * same pairs), and `delta` is `v − prev`, or `v` after a drop (a
     * restarted counter counts its new value); both null on a series'
     * first sample. Callers filter: the increase family on `delta`,
-    * resets/changes on `prev`. Users: aggregateIncreaseBy,
-    * momentIncreaseBy, quantileIncreaseBy, resetsChangesBy, the sliding
-    * slidingIncreaseBy, slidingMomentIncreaseBy and
-    * slidingResetsChangesBy, and EventOps.counterIncrease. */
+    * resets/changes on `prev`. Users: counterSeries (both grids),
+    * resetsChangesBy, slidingResetsChangesBy and
+    * EventOps.counterIncrease. */
   private[graft] def counterLag(
       samples: DataFrame,
       key: String = "sid",
@@ -3091,6 +2889,90 @@ object Tsdb {
       count(lit(1)).as("n_deltas"),
       sum(when(col("v") < col("prev"), 1L).otherwise(0L)).as("resets"),
       sum(when(col("v") =!= col("prev"), 1L).otherwise(0L)).as("changes"))
+
+  /** Stage (b) of the counter family: [[Tsdb.counterSeries]]'s
+    * per-series increases aggregated across series to (`byLabels`, t),
+    * t being the `bucket_start` (tumbling) or `eval_ts` (sliding) that
+    * stage (a) emitted. `op` picks the shape and its columns:
+    *  - `sum`: `increase` and `rate_per_sec` (the increase over
+    *    `rangeSec`); the sliding form leads with its delta-row count `n`;
+    *  - tumbling `avg`/`min`/`max`/`count`: `n_series` and the
+    *    `{sum,avg,min,max}_increase` moments, plus `*_rate` when `rate`;
+    *  - tumbling `quantile`: `n_series`, `q_increase` and `q_rate`
+    *    (quantile is monotone, so the rate is the increase's over the
+    *    range);
+    *  - sliding `avg`/`min`/`max`/`count`/`stddev`/`stdvar`/`quantile`:
+    *    the moments of each series' value (its rate when `rate`, else
+    *    its increase) — `n_series`, `sum_v`, `avg_v`, `min_v`, `max_v`,
+    *    `q_v` for a quantile, `stdvar_v`, `stddev_v`.
+    * Rounding: round(…, 6) on the tumbling grid, [[r6]] on the sliding
+    * one. Increases stay decimal until the final cast (a sum of
+    * per-series decimal sums is exact). topk/bottomk are [[firstK]]
+    * over `sum`. */
+  private[graft] def counterAggregate(
+      perSeries: DataFrame,
+      byLabels: Seq[String],
+      rangeSec: Long,
+      op: String,
+      rate: Boolean,
+      q: Option[Double] = None): DataFrame = {
+    q.foreach(v => require(v >= 0 && v <= 1, s"quantile must be in [0,1]: $v"))
+    val sliding = perSeries.columns.contains("eval_ts")
+    val keys =
+      byLabels.map(col) :+ col(if (sliding) "eval_ts" else "bucket_start")
+    def agg(from: DataFrame, aggs: Seq[Column]) =
+      from.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+    def perSec(c: Column) =
+      if (sliding) r6(c / rangeSec) else round(c / rangeSec, 6)
+    val total = sum(col("__inc")).cast("double")
+    val inc = col("__inc").cast("double")
+    (op, sliding) match {
+      case ("sum", _) =>
+        agg(perSeries, (if (sliding) Seq(sum(col("__n")).as("n")) else Nil) ++
+          Seq(total.as("increase"), perSec(total).as("rate_per_sec")))
+      case ("quantile", false) =>
+        val p = percentile(inc, lit(q.get))
+        agg(perSeries, Seq(count(lit(1)).as("n_series"),
+          round(p, 6).as("q_increase"), perSec(p).as("q_rate")))
+      case (_, false) =>
+        val moments = agg(perSeries, Seq(
+          count(lit(1)).as("n_series"),
+          total.as("sum_increase"),
+          (total / count(lit(1))).as("avg_increase"),
+          min(col("__inc")).cast("double").as("min_increase"),
+          max(col("__inc")).cast("double").as("max_increase")))
+        if (!rate) moments
+        else Seq("sum", "avg", "min", "max").foldLeft(moments)((df, m) =>
+          df.withColumn(s"${m}_rate", perSec(col(s"${m}_increase"))))
+      case (_, true) =>
+        // the per-series value is quantized (r6 rate / 2-decimal
+        // increase), so its integer micros sum losslessly: the spread
+        // runs on them in the DuckDB mirror's IEEE op order
+        val valued = perSeries
+          .withColumn("v_s", if (rate) perSec(inc) else inc)
+          .withColumn("__m", round(col("v_s") * 1e6).cast("long"))
+        val vSum = sum(col("v_s").cast("decimal(28,10)")).cast("double")
+        val n = col("n_series").cast("double")
+        val meanM = col("__sum_m").cast("double") / n
+        val stdvar =
+          (col("__sum2_m").cast("double") / n - meanM * meanM) / 1e12
+        agg(valued, Seq(
+            count(lit(1)).as("n_series"),
+            vSum.as("sum_v"),
+            // floor-r6 quantized, so the mean re-enters the micro family
+            // (spread/counter outers over an avg inner stay lossless)
+            r6(vSum / count(lit(1))).as("avg_v"),
+            min(col("v_s")).as("min_v"),
+            max(col("v_s")).as("max_v"),
+            sum(col("__m")).as("__sum_m"),
+            sum(col("__m").cast("decimal(19,0)") *
+              col("__m").cast("decimal(19,0)")).as("__sum2_m")) ++
+            q.map(p => round(percentile(col("v_s"), lit(p)), 6).as("q_v")))
+          .withColumn("stdvar_v", r6(stdvar))
+          .withColumn("stddev_v", r6(sqrt(stdvar)))
+          .drop("__sum_m", "__sum2_m")
+    }
+  }
 
   /** The exact least-squares tail of deriv / predict_linear. `frame`
     * carries decimal(20,0) integers `x` (seconds from the fit origin) and
@@ -3138,8 +3020,8 @@ object Tsdb {
     * already-aggregated frame, so its state is one partition's groups,
     * never sample grain. `k` is a Column so each caller keeps its own
     * literal type (Int in Tsdb, Long from the PromQL AST). Users:
-    * topKBy, bottomKBy, limitKBy, topKIncreaseBy and the topk/bottomk
-    * subquery inner (PromQL). */
+    * topKBy, bottomKBy, limitKBy and PromQL's topk/bottomk over the
+    * counter family's `sum` (tumbling and the subquery inner). */
   private[graft] def firstK(
       frame: DataFrame,
       partition: Seq[Column],
@@ -3311,8 +3193,8 @@ object Tsdb {
     * half of `rate/increase/delta/idelta/irate/resets/changes/deriv/
     * predict_linear( <computed-vector>[range:step] )`, consuming the
     * same (keys, eval_ts, value) frames the `*_over_time` outers do
-    * (slidingIncreaseBy / slidingMomentIncreaseBy / slidingOverTimeBy
-    * output). Semantics: the inner eval points in each outer window
+    * (sliding [[counterAggregate]] / slidingOverTimeBy output).
+    * Semantics: the inner eval points in each outer window
     * `(T − rangeSec, T]` form the range vector; pairwise functions
     * (rate/increase/resets/changes/idelta/irate) use consecutive inner
     * points whose BOTH ends lie in the window (the range-vector rule —

@@ -1196,7 +1196,8 @@ object PromQL {
     * per-shape guard to forget. */
   /** Range functions that accept a [range:step] selector directly —
     * `rate(x[1h:1m])` is a sliding 1h-window rate every minute (the
-    * slidingIncreaseBy plan); likewise the whole counter/trend family.
+    * counter family's sliding grid); likewise the whole counter/trend
+    * family.
     * Prometheus expresses these as range functions over subqueries;
     * the engine serves them from the same sliding machinery the
     * nested `*_over_time(...[R:s])` family rides. */
@@ -1248,6 +1249,45 @@ object PromQL {
   private def stepOf(sel: Selector, shape: String): Long =
     sel.rangeSec.getOrElse(throw new IllegalArgumentException(
       s"$shape needs a step range on the selector: ${sel.metric}[d]"))
+
+  /** The counter family — `rate` / `increase` of `sel` under `op`
+    * (`sum`, a moment or `quantile` `q`) — through its two stages:
+    * [[Tsdb.counterSeries]] on the tumbling grid (`grid` None) or the
+    * sliding one every `grid`, then [[Tsdb.counterAggregate]]. */
+  private def counterFamily(
+      t: Tsdb,
+      fn: String,
+      sel: Selector,
+      by: Seq[String],
+      op: String,
+      start: Long,
+      end: Long,
+      grid: Option[Long],
+      q: Option[Double] = None): DataFrame = {
+    val range = stepOf(sel, s"$op($fn)")
+    Tsdb.counterAggregate(
+      t.counterSeries(sel.metric, sel.matchers, start, end, by, range, grid,
+        sel.offsetSec),
+      by, range, op, rate = fn == "rate", q)
+  }
+
+  /** The value column of the counter family's `sum` for `fn`. */
+  private def counterCol(fn: String): String =
+    if (fn == "rate") "rate_per_sec" else "increase"
+
+  /** The value column of an aggregated counter subquery inner under
+    * each op but `sum`, whose column is [[counterCol]]. */
+  private val SlidingCounterCol = Map(
+    "avg" -> "avg_v", "min" -> "min_v", "max" -> "max_v",
+    "count" -> "n_series", "stddev" -> "stddev_v", "stdvar" -> "stdvar_v",
+    "quantile" -> "q_v")
+
+  /** Counter shapes with only a tumbling form reject a selector
+    * [range:step] rather than ignore it. */
+  private def tumblingOnly(sel: Selector, shape: String): Unit =
+    require(sel.stepSec.isEmpty,
+      s"$shape over ${sel.metric}[R:s] is not supported — use the " +
+      s"subquery form (…)[R:s] instead")
 
   private def metricOf(e: Expr): Option[String] = e match {
     case s: Selector => Some(s.metric)
@@ -1515,9 +1555,8 @@ object PromQL {
     // agg-of-rangefn shapes first (the canonical alert rule is
     // `sum by (c)(rate(x[1h])) > 0.5`): the compiled output carries the
     // counter family's column names, not the moment aggregation's —
-    // sum compiles to aggregateIncreaseBy (increase / rate_per_sec),
-    // the other moments to momentIncreaseBy (*_increase, plus *_rate
-    // columns added by the compiler when fn == rate)
+    // Tsdb.counterAggregate's sum is increase / rate_per_sec, the other
+    // moments *_increase, plus *_rate columns when fn == rate
     case Agg(op, _, _, _, RangeFn(fn, _, _, _, _), _)
         if MomentAggs(op) && (fn == "rate" || fn == "increase") =>
       (op, fn) match {
@@ -1527,8 +1566,8 @@ object PromQL {
         case (m, "increase") => s"${m}_increase"
         case (m, _) => s"${m}_rate"
       }
-    // quantile-of-counter (the SLO family) compiles to
-    // quantileIncreaseBy, whose columns are q_increase / q_rate — NOT
+    // quantile-of-counter (the SLO family) compiles to the counter
+    // family's quantile, whose columns are q_increase / q_rate — NOT
     // the generic quantile aggregation's q_v
     case Agg("quantile", _, _, _, RangeFn(fn, _, _, _, _), _)
         if fn == "rate" || fn == "increase" =>
@@ -1886,8 +1925,8 @@ object PromQL {
       // nested subquery: `fn_over_time( rate(x[5m])[1h:1m] )` — the
       // "peak rate over the window" idiom. The inner counter function
       // evaluates SLIDING on the subquery-step grid over an extended
-      // span (one decimal lag + one grid-explode aggregation,
-      // Tsdb.slidingIncreaseBy); the outer *_over_time is the same
+      // span (the counter family's sliding stages: Tsdb.counterSeries,
+      // Tsdb.counterAggregate); the outer *_over_time is the same
       // grid-explode aggregation over the inner points
       // (Tsdb.overTimeOnFrame). Two shuffles total, both at label-group
       // grain — never sample-cardinality beyond the first aggregation.
@@ -1946,55 +1985,29 @@ object PromQL {
           "sum_over_time" -> "sum_v", "avg_over_time" -> "avg_v",
           "min_over_time" -> "min_v", "max_over_time" -> "max_v",
           "count_over_time" -> "n", "last_over_time" -> "last_v")
+        def counterInner(n: String, sel: Selector, by: Seq[String],
+            op: String, q: Option[Double] = None) =
+          counterFamily(t, n, sel, by, op, s0 - rangeSec, e0,
+            Some(stepSec), q)
         val (inner, keys, valCol) = body match {
           case RangeFn(n, _, sel, by, _) if n == "rate" || n == "increase" =>
             // bare rate/increase is per-series: an empty trailing-by
             // means the metric's full label-key universe
             val ks = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-            (t.slidingIncreaseBy(sel.metric, sel.matchers, s0 - rangeSec,
-              e0, ks, stepSec, stepOf(sel, n), sel.offsetSec),
-              ks, if (n == "rate") "rate_per_sec" else "increase")
-          // canonical Prometheus spelling: `sum by (l) (rate(x[5m]))` —
-          // summing per-series reset-robust increases equals the
-          // by-grained delta sum slidingIncreaseBy computes directly, so
-          // the Agg normalizes onto the same plan (a `sum without (…)`
-          // arrives here already by-resolved via resolveWithout; an
-          // empty by is the GLOBAL sum — one series, no keys)
-          case Agg("sum", None, None, by,
-              RangeFn(n, _, sel, Nil, _), Nil)
-              if n == "rate" || n == "increase" =>
-            (t.slidingIncreaseBy(sel.metric, sel.matchers, s0 - rangeSec,
-              e0, by, stepSec, stepOf(sel, n), sel.offsetSec),
-              by, if (n == "rate") "rate_per_sec" else "increase")
-          // moment-aggregated inner: `avg/min/max/count by (l)
-          // (rate(x[d]))` — avg/min/max of per-series rates are NOT
-          // delta sums, so the per-(series, eval point) leg materializes
-          // before the cross-series moment (Tsdb.slidingMomentIncreaseBy,
-          // the sliding twin of momentIncreaseBy); `without` arrives here
-          // already by-resolved via resolveWithout, empty by is global
-          case Agg(op, None, None, by,
-              RangeFn(n, _, sel, Nil, _), Nil)
-              if Set("avg", "min", "max", "count",
-                "stddev", "stdvar")(op) &&
+            (counterInner(n, sel, ks, "sum"), ks, counterCol(n))
+          // aggregated inner: the canonical `sum by (l) (rate(x[5m]))`,
+          // the moments `avg/min/max/count/stddev/stdvar by (l) (...)`
+          // and the SLO family's `quantile by (l) (0.9, rate(x[d]))`
+          // (exact linear-interpolation Percentile) — the counter
+          // family's sliding stages (a) + (b). `without` arrives here
+          // already by-resolved via resolveWithout; an empty by is the
+          // GLOBAL aggregation — one series, no keys
+          case Agg(op, None, q, by, RangeFn(n, _, sel, Nil, _), Nil)
+              if (op == "sum" || SlidingCounterCol.contains(op)) &&
+                (op == "quantile") == q.isDefined &&
                 (n == "rate" || n == "increase") =>
-            (t.slidingMomentIncreaseBy(sel.metric, sel.matchers,
-              s0 - rangeSec, e0, by, stepSec, stepOf(sel, n),
-              sel.offsetSec, rate = n == "rate"),
-              by, op match {
-                case "avg" => "avg_v"; case "min" => "min_v"
-                case "max" => "max_v"; case "stddev" => "stddev_v"
-                case "stdvar" => "stdvar_v"; case _ => "n_series"
-              })
-          // cross-series quantile inner — the SLO family as a subquery:
-          // `quantile by (l)(0.9, rate(x[d]))[R:s]` (exact
-          // linear-interpolation Percentile over per-series rates)
-          case Agg("quantile", _, Some(qv), by,
-              RangeFn(n, _, sel, Nil, _), Nil)
-              if n == "rate" || n == "increase" =>
-            (t.slidingMomentIncreaseBy(sel.metric, sel.matchers,
-              s0 - rangeSec, e0, by, stepSec, stepOf(sel, n),
-              sel.offsetSec, rate = n == "rate", quantile = Some(qv)),
-              by, "q_v")
+            (counterInner(n, sel, by, op, q), by,
+              SlidingCounterCol.getOrElse(op, counterCol(n)))
           // gauge smoothing inner: `max_over_time(avg_over_time(x[5m])
           // [1h:5m])` — the inner moments evaluate sliding on the
           // subquery grid (Tsdb.slidingOverTimeBy, the exact overTimeBy
@@ -2021,10 +2034,8 @@ object PromQL {
             require(byTop.forall(by.contains),
               s"topk/bottomk by-labels must be a subset of the inner " +
               s"grouping: $byTop vs $by")
-            val vc = if (n == "rate") "rate_per_sec" else "increase"
-            val frame = t.slidingIncreaseBy(sel.metric, sel.matchers,
-              s0 - rangeSec, e0, by, stepSec, stepOf(sel, n),
-              sel.offsetSec)
+            val vc = counterCol(n)
+            val frame = counterInner(n, sel, by, "sum")
             val ord =
               if (op2 == "topk") col(vc).desc else col(vc).asc
             (Tsdb.firstK(frame, (byTop :+ "eval_ts").map(col),
@@ -2034,7 +2045,7 @@ object PromQL {
           // (rate(b[d])))[R:s]` — the peak-error-ratio idiom
           // `max_over_time((sum(rate(err[5m]))/sum(rate(req[5m])))
           // [1h:5m])`. Both legs evaluate sliding on the shared
-          // subquery grid (one slidingIncreaseBy each), then a
+          // subquery grid (one counter-family sum each), then a
           // null-safe vector match per (labels, eval point); inner
           // join semantics = Prometheus vector matching (a point
           // exists only where both sides do)
@@ -2048,12 +2059,10 @@ object PromQL {
             require(byA.toSet == byB.toSet,
               s"subquery vector-match sides must aggregate by the same " +
               s"labels: $byA vs $byB")
-            val vc = if (nA == "rate") "rate_per_sec" else "increase"
             def leg(sel: Selector, n2: String, out: String) =
-              t.slidingIncreaseBy(sel.metric, sel.matchers, s0 - rangeSec,
-                  e0, byA, stepSec, stepOf(sel, n2), sel.offsetSec)
+              counterInner(n2, sel, byA, "sum")
                 .select((byA.map(col) :+ col("eval_ts") :+
-                  col(vc).as(out)): _*)
+                  col(counterCol(n2)).as(out)): _*)
             // the subquery-frame quantization contract (r14/r15): "/"
             // results are round(…,6) by the engine's ratio contract
             // (`ratio6`); + - * results are single IEEE ops over the
@@ -2114,7 +2123,7 @@ object PromQL {
         // QUANTIZED inner values: the counter family's round(…,6) rate,
         // the 2-decimal delta-sum increase/sum, integer counts, the
         // floor-r6 moment/quantile columns, and — since the gauge
-        // avg_v legs (slidingOverTimeBy, slidingMomentIncreaseBy)
+        // avg_v legs (slidingOverTimeBy, the sliding counter moments)
         // adopted the tie-free floor-r6 quantization — every gauge
         // moment too (min/max/last are raw 2-decimal sample values,
         // sum_v their exact decimal sum). The one remaining unquantized
@@ -2661,17 +2670,6 @@ object PromQL {
         t.limitRatioBy(sel.metric, sel.matchers, start, end, by,
           stepOf(sel, "limit_ratio(sum by)"), r, sel.offsetSec)
 
-      // cross-series quantile of per-series rates — `quantile by (l)
-      // (0.9, rate(x[step]))`, the SLO family; quantile is monotone so
-      // the rate column is the increase quantile over the step
-      case Agg("quantile", _, Some(q), by,
-          RangeFn(fn, _, sel, _, _), _) if fn == "rate" || fn == "increase" =>
-        require(sel.stepSec.isEmpty,
-          s"quantile($fn(x[R:s])) is not supported — use the subquery " +
-          s"form quantile by (l)(q, $fn(x[R]))[R:s] instead")
-        t.quantileIncreaseBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, s"quantile($fn)"), q, sel.offsetSec)
-
       // ranked counter form — `topk(k, sum by (l)(rate(x[1h])))`, the
       // canonical "top k by request rate" dashboard query (bottomk is
       // the ascending mirror); rate and increase rank identically
@@ -2679,46 +2677,27 @@ object PromQL {
       case Agg(rank @ ("topk" | "bottomk"), Some(k), _, _,
           Agg("sum", _, _, by, RangeFn(fn, _, sel, _, _), _), _)
           if fn == "rate" || fn == "increase" =>
-        t.topKIncreaseBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, s"$rank(sum by ($fn))"), k.toInt, sel.offsetSec,
-          asc = rank == "bottomk")
+        tumblingOnly(sel, s"$rank(sum by ($fn))")
+        val inc = col("increase")
+        Tsdb.firstK(
+            counterFamily(t, fn, sel, by, "sum", start, end, None),
+            Seq(col("bucket_start")),
+            (if (rank == "topk") inc.desc else inc.asc) +: by.map(col),
+            lit(k.toInt))
+          .select(by.map(col) ++ Seq(col("bucket_start"), col("rk"),
+            col("increase"), col("rate_per_sec")): _*)
 
-      // counter family composed with the label aggregation; a selector
-      // [range:step] pins the SLIDING eval grid (`sum by (l)(rate(
-      // x[1h:1m]))` — a 1h-window rate every minute), the same plan the
-      // nested-subquery family rides
-      case Agg("sum", _, _, by,
-          RangeFn(fn, _, sel, _, _), _) if fn == "rate" || fn == "increase" =>
-        sel.stepSec match {
-          case Some(s) =>
-            t.slidingIncreaseBy(sel.metric, sel.matchers, start, end, by,
-              s, stepOf(sel, s"sum by ($fn)"), sel.offsetSec)
-          case None =>
-            t.aggregateIncreaseBy(sel.metric, sel.matchers, start, end, by,
-              stepOf(sel, s"sum by ($fn)"), sel.offsetSec)
-        }
-      // cross-series moments of the per-series increase: avg(rate(...))
-      // and friends — sum stays on the one-shot aggregateIncreaseBy path
-      case Agg(op, _, _, by,
-          RangeFn(fn, _, sel, _, _), _)
-          if Set("avg", "min", "max", "count")(op) &&
+      // the counter family under a label aggregation: `sum`, the
+      // cross-series moments (avg(rate(...)) and friends) and the SLO
+      // family's `quantile by (l) (0.9, rate(x[step]))`. Only `sum`
+      // takes a selector [range:step], which pins the SLIDING eval grid
+      // (`sum by (l)(rate(x[1h:1m]))` — a 1h-window rate every minute,
+      // the plan the nested-subquery family rides)
+      case Agg(op, _, q, by, RangeFn(fn, _, sel, _, _), _)
+          if (MomentAggs(op) || (op == "quantile" && q.isDefined)) &&
             (fn == "rate" || fn == "increase") =>
-        require(sel.stepSec.isEmpty,
-          s"$op($fn(x[R:s])) is not supported — use the subquery form " +
-          s"$op by (l)($fn(x[R]))[R:s] instead")
-        val step = stepOf(sel, s"$op by ($fn)")
-        val df = t.momentIncreaseBy(sel.metric, sel.matchers, start, end,
-          by, step, sel.offsetSec)
-        // a rate-moment query gets per-second columns alongside the
-        // increase moments (aggregateIncreaseBy's dual-column
-        // convention) — without them `avg by (l)(rate(x[1h]))` would
-        // silently return increase moments, 3600x off for [1h]
-        if (fn == "rate")
-          df.withColumn("sum_rate", round(col("sum_increase") / step, 6))
-            .withColumn("avg_rate", round(col("avg_increase") / step, 6))
-            .withColumn("min_rate", round(col("min_increase") / step, 6))
-            .withColumn("max_rate", round(col("max_increase") / step, 6))
-        else df
+        if (op != "sum") tumblingOnly(sel, s"$op($fn)")
+        counterFamily(t, fn, sel, by, op, start, end, sel.stepSec, q)
 
       case Agg("sum", _, _, by, RangeFn("resets", _, sel, _, _), _) =>
         sel.stepSec match {
@@ -2754,22 +2733,13 @@ object PromQL {
 
       // BARE rate/increase/delta — the most common PromQL shape. With no
       // trailing `by`, the grouping is the metric's full label-key
-      // universe, i.e. exactly per-series; [[Tsdb.aggregateIncreaseBy]]
+      // universe, i.e. exactly per-series: the counter family's `sum`
       // returns both `increase` and `rate_per_sec`, callers project.
+      // `rate(x[1h:1m])` is the sliding form (grid = the pinned step,
+      // window = the selector range)
       case RangeFn(fn, _, sel, by, _) if fn == "rate" || fn == "increase" =>
         val keys = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-        sel.stepSec match {
-          // `rate(x[1h:1m])` — the sliding form: a 1h-window rate
-          // every minute, served by the same slidingIncreaseBy plan
-          // the nested-subquery family uses (grid = the pinned step,
-          // window = the selector range)
-          case Some(s) =>
-            t.slidingIncreaseBy(sel.metric, sel.matchers, start, end,
-              keys, s, stepOf(sel, fn), sel.offsetSec)
-          case None =>
-            t.aggregateIncreaseBy(sel.metric, sel.matchers, start, end,
-              keys, stepOf(sel, fn), sel.offsetSec)
-        }
+        counterFamily(t, fn, sel, keys, "sum", start, end, sel.stepSec)
 
       case RangeFn("delta", _, sel, by, _) =>
         val keys = if (by.nonEmpty) by else labelKeys(t, sel.metric)
@@ -2908,11 +2878,10 @@ object PromQL {
           "histogram_quantile over an aggregation needs `le` in the " +
           s"by-list (the bucket-bound label), got: by " +
           s"(${by.mkString(", ")})")
-        val frame = t.aggregateIncreaseBy(sel.metric, sel.matchers,
-          start, end, by, stepOf(sel, fn), sel.offsetSec)
-        val vc = if (fn == "rate") "rate_per_sec" else "increase"
-        Tsdb.histQuantileOnFrame(frame, by.filterNot(_ == "le"), "le",
-          "bucket_start", vc, phi)
+        tumblingOnly(sel, "histogram_quantile")
+        Tsdb.histQuantileOnFrame(
+          counterFamily(t, fn, sel, by, "sum", start, end, None),
+          by.filterNot(_ == "le"), "le", "bucket_start", counterCol(fn), phi)
       case hq: HistQuantileAgg => throw new IllegalArgumentException(
         "histogram_quantile over an aggregation supports `sum by " +
         "(le, l…)(rate|increase(bucket[d]))`, got: " + render(hq))

@@ -829,8 +829,8 @@ object AlertStream {
       : Option[Double] =
     CounterState.value(s.sides, s.aop, s.step, sides)
 
-  /** The counter-rule streaming twin of
-    * [[graft.Tsdb.aggregateIncreaseBy]]/[[graft.Tsdb.momentIncreaseBy]]
+  /** The counter-rule streaming twin of the batch counter family
+    * ([[graft.Tsdb.counterSeries]] + [[graft.Tsdb.counterAggregate]])
     * under `Rules.alerts` — per-labelset state carries each live
     * series' last sample across bucket closes so reset-adjusted deltas
     * replay the batch lag exactly ([[CounterState]]'s contract;

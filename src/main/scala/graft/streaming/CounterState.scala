@@ -13,8 +13,8 @@ import graft.functions.LabelFunctions
   * `sum by (l) (rate(errors[5m])) > thr` in [[AlertStream]] and the
   * counter recording forms in [[RecordStream]].
   *
-  * The batch twin ([[graft.Tsdb.aggregateIncreaseBy]] /
-  * [[graft.Tsdb.momentIncreaseBy]]) computes, per series (sid), a lag
+  * The batch twin ([[graft.Tsdb.counterSeries]] then
+  * [[graft.Tsdb.counterAggregate]]) computes, per series (sid), a lag
   * window ordered by (ts, value) over the WHOLE query range, keeps
   * reset-adjusted positive deltas (`v >= prev ? v - prev : v` — a drop
   * contributes the restarted counter's new value), assigns each delta to
@@ -158,8 +158,8 @@ object CounterState {
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** The SLIDING family's tie-free 6-decimal quantization —
-    * `floor(x*1e6 + 0.5)/1e6` in the exact IEEE op order
-    * [[graft.Tsdb.slidingIncreaseBy]] and the DuckDB mirrors share
+    * `floor(x*1e6 + 0.5)/1e6` in the exact IEEE op order the sliding
+    * [[graft.Tsdb.counterAggregate]] and the DuckDB mirrors share
     * (Spark round() is BigDecimal HALF_UP, DuckDB round() is float
     * half-away; they diverge on exact-.5 products). Specials pass
     * through like [[round6]]. */
@@ -183,8 +183,8 @@ object CounterState {
     * `<op> by (l) (<fn>(m[step]))` — [[graft.promql.PromQL]]'s
     * valueColOf contract: sum→increase/rate_per_sec, count→n_series,
     * avg/min/max→*_increase or round6(*_increase/step),
-    * quantile→q_increase/q_rate (both rounded, quantileIncreaseBy's
-    * convention). Double conversions happen at exactly the batch
+    * quantile→q_increase/q_rate (both rounded, the tumbling
+    * [[graft.Tsdb.counterAggregate]] quantile's convention). Double conversions happen at exactly the batch
     * plan's points (decimal sum cast double BEFORE the avg division;
     * per-series increases cast double BEFORE the percentile). */
   def moment(side: Side, step: Long, a: SideAgg): Double = {

@@ -20,6 +20,12 @@ object GraftBridge {
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** A fresh directory `<prefix>-<uuid>` under the JVM temp directory,
+    * deleted by Spark's shutdown hook when the JVM exits: for a store
+    * that the DataFrame a call returns still reads. */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getPath
+
   /** Drop the stored blocks of a locally checkpointed `df` that nothing
     * reads any more: `RDD.unpersist` without its per-call warning that a
     * truncated lineage cannot be recomputed, which the caller knows. */

@@ -182,6 +182,25 @@ class PlanSpec extends SparkSuite {
       plan.contains("HashAggregate"), plan.take(3000))
   }
 
+  test("counter family: each shape keeps its hash-exchange count") {
+    // the per-series counter stage groups on the lag window's sid
+    // partitioning, so it adds no exchange: one for the window, one for
+    // the cross-series aggregation, plus each shape's own consumers
+    val pinned = Seq(
+      "tsdb_agg_increase" -> 2,
+      "tsdb_promql_rate" -> 2,
+      "tsdb_promql_topk_rate" -> 3,
+      "tsdb_promql_quantile_rate" -> 2,
+      "tsdb_promql_avg_rate" -> 2,
+      "tsdb_promql_histq_rate" -> 3,
+      "tsdb_promql_subquery_rate" -> 3)
+    val got = pinned.map { case (name, _) =>
+      name -> "Exchange hashpartitioning".r
+        .findAllIn(planOf(SparkEntry.queries(name)(spark, sf0001))).length
+    }
+    assert(got == pinned, got.mkString("\n"))
+  }
+
   test("vector compares: group-sized equi-joins, bounded exchanges, " +
       "no cartesian") {
     // counter-family compare (generic path): two lag+agg sides joined

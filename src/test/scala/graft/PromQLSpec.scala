@@ -39,6 +39,28 @@ class PromQLSpec extends SparkSuite {
     assert(a == b, s"rows differ: ${a.take(3)} vs ${b.take(3)}")
   }
 
+  /** The exact decimal per-series increases of the bare
+    * `increase(click[1h])`, regrouped on the driver to (cohort,
+    * bucket_start): every series with a delta in the bucket. */
+  private lazy val incByCohort: Map[(String, Long), Seq[BigDecimal]] =
+    PromQL.query(t, "increase(click[1h])", T0, T1)
+      .select("cohort", "bucket_start", "increase").collect().toSeq
+      .groupBy(r => (r.getString(0), r.getLong(1)))
+      .map { case (k, rs) => k -> rs.map(r => BigDecimal(r.getDouble(2))) }
+
+  /** Spark's `percentile`: linear interpolation between the order
+    * statistics around position p·(n − 1), in its op order. */
+  private def percentileOf(vs: Seq[Double], p: Double): Double = {
+    val s = vs.sorted
+    val pos = p * (s.length - 1)
+    val (lo, hi) = (math.floor(pos).toInt, math.ceil(pos).toInt)
+    if (lo == hi || s(lo) == s(hi)) s(lo)
+    else (hi - pos) * s(lo) + (pos - lo) * s(hi)
+  }
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   test("sum by (cohort) (click[1h]) == aggregateBy") {
     assertSame(
       PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1),
@@ -88,14 +110,19 @@ class PromQLSpec extends SparkSuite {
   }
 
   test("counter family: rate / increase / resets under sum by") {
-    assertSame(
-      PromQL.query(t, "sum by (cohort) (increase(click[1h]))", T0, T1),
-      t.aggregateIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"),
-        3600L))
+    // sum by (cohort) of the increase is the exact sum of the per-series
+    // increases; the rate divides it by the range
+    val sumBy = PromQL.query(t, "sum by (cohort) (increase(click[1h]))",
+        T0, T1)
+    assert(sumBy.columns.toSeq ==
+      Seq("cohort", "bucket_start", "increase", "rate_per_sec"))
+    assert(sumBy.collect().map(r =>
+        (r.getString(0), r.getLong(1)) -> (r.getDouble(2), r.getDouble(3)))
+      .toMap == incByCohort.map { case (k, vs) =>
+        k -> (vs.sum.toDouble, round6(vs.sum.toDouble / 3600)) })
     assertSame(
       PromQL.query(t, "sum by (cohort) (rate(click[1h]))", T0, T1),
-      t.aggregateIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"),
-        3600L))
+      sumBy)
     assertSame(
       PromQL.query(t, "sum by (cohort) (resets(click[1h]))", T0, T1),
       t.resetsBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
@@ -488,12 +515,11 @@ class PromQLSpec extends SparkSuite {
   test("bare rate/increase/delta compile per-series (full label set)") {
     assertSame(
       PromQL.query(t, "increase(click[1h])", T0, T1),
-      t.aggregateIncreaseBy("click", Seq.empty, T0, T1,
-        Seq("cohort", "user_id"), 3600L))
+      PromQL.query(t, "increase(click[1h]) by (cohort, user_id)", T0, T1))
     assertSame(
       PromQL.query(t, "rate(click[1h])", T0, T1),
-      t.aggregateIncreaseBy("click", Seq.empty, T0, T1,
-        Seq("cohort", "user_id"), 3600L))
+      PromQL.query(t, "sum by (cohort, user_id) (rate(click[1h]))",
+        T0, T1))
     assertSame(
       PromQL.query(t, "delta(click[1h])", T0, T1),
       t.deltaBy("click", Seq.empty, T0, T1, Seq("cohort", "user_id"),
@@ -649,8 +675,8 @@ class PromQLSpec extends SparkSuite {
       t.topKBy("click", Seq.empty, S, T1, Seq("cohort"), 3600L, 3, o))
     assertSame(
       PromQL.query(t, "rate(click[1h] offset 1d)", S, T1),
-      t.aggregateIncreaseBy("click", Seq.empty, S, T1,
-        Seq("cohort", "user_id"), 3600L, o))
+      PromQL.query(t, "rate(click[1h])", T0, T1 - o)
+        .withColumn("bucket_start", col("bucket_start") + o))
     assertSame(
       PromQL.query(t, "avg_over_time(click[30m] offset 1d) by (cohort)",
         S, T1),
@@ -755,23 +781,30 @@ class PromQLSpec extends SparkSuite {
   }
 
   test("avg/min/max/count over increase: cross-series counter moments") {
-    assertSame(
-      PromQL.query(t, "avg by (cohort) (increase(click[1h]))", T0, T1),
-      t.momentIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
-    // the family's sum member equals the one-shot sum-by path exactly
-    val moments = t.momentIncreaseBy("click", Seq.empty, T0, T1,
-        Seq("cohort"), 3600L)
+    // the moments of the per-series increases, recomputed on the driver
+    val avgBy = PromQL.query(t, "avg by (cohort) (increase(click[1h]))",
+      T0, T1)
+    assert(avgBy.columns.toSeq == Seq("cohort", "bucket_start", "n_series",
+      "sum_increase", "avg_increase", "min_increase", "max_increase"))
+    assert(avgBy.collect().map(r => (r.getString(0), r.getLong(1)) ->
+        (2 to 6).map(r.get)).toMap ==
+      incByCohort.map { case (k, vs) =>
+        val sum = vs.sum.toDouble
+        k -> Seq(vs.size.toLong, sum, sum / vs.size, vs.min.toDouble,
+          vs.max.toDouble)
+      })
+    // the family's sum member equals the sum-by shape exactly
+    val moments = avgBy
       .select(col("cohort"), col("bucket_start"), col("sum_increase"))
-    val sumBy = t.aggregateIncreaseBy("click", Seq.empty, T0, T1,
-        Seq("cohort"), 3600L)
+    val sumBy = PromQL.query(t, "sum by (cohort) (increase(click[1h]))",
+        T0, T1)
       .select(col("cohort"), col("bucket_start"), col("increase"))
     val joined = moments.join(sumBy, Seq("cohort", "bucket_start"))
     assert(joined.count() > 0)
     assert(joined.where(col("sum_increase") =!= col("increase")).count()
       == 0L)
     // min <= avg <= max on every group
-    val m = t.momentIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"),
-      3600L)
+    val m = PromQL.query(t, "min by (cohort) (increase(click[1h]))", T0, T1)
     assert(m.where(col("min_increase") > col("avg_increase") ||
       col("avg_increase") > col("max_increase")).count() == 0L)
   }
@@ -887,19 +920,23 @@ class PromQLSpec extends SparkSuite {
         T0, T1, 3600L, 1800L))
     // r14: the sliding counter/trend family accepts [range:step] too —
     // `rate(x[R:s])` is the Prometheus rate-over-subquery shape, served
-    // by the same slidingIncreaseBy plan the nested subqueries ride
+    // by the same sliding counter grid the nested subqueries ride
     assertSame(
-      PromQL.query(t, "rate(click[2h:1h]) by (cohort)", T0, T1)
-        .select("cohort", "eval_ts", "rate_per_sec"),
-      t.slidingIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"),
-          stepSec = 3600L, rangeSec = 7200L)
-        .select("cohort", "eval_ts", "rate_per_sec"))
-    assertSame(
-      PromQL.query(t, "sum by (cohort) (rate(click[2h:1h]))", T0, T1)
-        .select("cohort", "eval_ts", "rate_per_sec"),
-      t.slidingIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"),
-          stepSec = 3600L, rangeSec = 7200L)
-        .select("cohort", "eval_ts", "rate_per_sec"))
+      PromQL.query(t, "rate(click[2h:1h]) by (cohort)", T0, T1),
+      PromQL.query(t, "sum by (cohort) (rate(click[2h:1h]))", T0, T1))
+    // the sliding sum by (cohort) is the exact sum of the per-series
+    // increases and delta counts at each eval point
+    val perSeries = PromQL.query(t, "increase(click[2h:1h])", T0, T1)
+      .select("cohort", "eval_ts", "n", "increase").collect().toSeq
+      .groupBy(r => (r.getString(0), r.getLong(1)))
+      .map { case (k, rs) =>
+        val inc = rs.map(r => BigDecimal(r.getDouble(3))).sum.toDouble
+        k -> Seq[Any](rs.map(_.getLong(2)).sum, inc,
+          math.floor(inc / 7200 * 1e6 + 0.5) / 1e6)
+      }
+    assert(PromQL.query(t, "sum by (cohort) (rate(click[2h:1h]))", T0, T1)
+      .collect().map(r => (r.getString(0), r.getLong(1)) ->
+        (2 to 4).map(r.get)).toMap == perSeries)
     assertSame(
       PromQL.query(t, "deriv(click[2h:1h]) by (cohort)", T0, T1),
       t.slidingPredictLinear("click", Seq.empty, T0, T1, Seq("cohort"),
@@ -1081,16 +1118,27 @@ class PromQLSpec extends SparkSuite {
       PromQL.query(t, s"($base * 100) - 5", T0, T1))
   }
 
-  test("topk/bottomk over rate: ranked counter form == topKIncreaseBy") {
-    assertSame(
-      PromQL.query(t, "topk(3, sum by (cohort) (rate(click[1h])))", T0, T1),
-      t.topKIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L,
-        k = 3))
-    assertSame(
-      PromQL.query(t,
-        "bottomk(2, sum by (cohort) (increase(click[1h])))", T0, T1),
-      t.topKIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L,
-        k = 2, asc = true))
+  test("topk/bottomk over rate: the first k rows of the ranked sum by") {
+    // rank the sum-by rows per bucket on the driver: increase, then the
+    // cohort label breaks ties
+    val sumBy = PromQL.query(t, "sum by (cohort) (rate(click[1h]))", T0, T1)
+      .collect().toSeq
+    def ranked(k: Int, desc: Boolean) = sumBy.groupBy(_.getLong(1)).values
+      .flatMap(_.sortBy(r => (if (desc) -r.getDouble(2) else r.getDouble(2),
+          r.getString(0))).take(k).zipWithIndex
+        .map { case (r, i) => Seq[Any](r.get(0), r.get(1), i + 1, r.get(2),
+          r.get(3)) })
+      .toSet
+    def rows(q: String) = {
+      val df = PromQL.query(t, q, T0, T1)
+      assert(df.columns.toSeq == Seq("cohort", "bucket_start", "rk",
+        "increase", "rate_per_sec"))
+      df.collect().map(_.toSeq).toSet
+    }
+    assert(rows("topk(3, sum by (cohort) (rate(click[1h])))") ==
+      ranked(3, desc = true))
+    assert(rows("bottomk(2, sum by (cohort) (increase(click[1h])))") ==
+      ranked(2, desc = false))
     // top-1 and bottom-1 of the same grid never coincide when a bucket
     // has >1 distinct group increase
     val top = PromQL.query(t,
@@ -1175,16 +1223,18 @@ class PromQLSpec extends SparkSuite {
 
   test("quantile over rate: cross-series percentile of per-series " +
       "increase") {
-    // string == direct call
-    assertSame(
-      PromQL.query(t, "quantile by (cohort) (0.9, rate(click[1h]))",
-        T0, T1),
-      t.quantileIncreaseBy("click", Seq.empty, T0, T1, Seq("cohort"),
-        3600L, q = 0.9))
+    // the percentile of the per-series increases, on the driver
+    assert(PromQL.query(t, "quantile by (cohort) (0.9, rate(click[1h]))",
+        T0, T1).collect().map(r => (r.getString(0), r.getLong(1)) ->
+        (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap ==
+      incByCohort.map { case (k, vs) =>
+        val p = percentileOf(vs.map(_.toDouble), 0.9)
+        k -> (vs.size.toLong, round6(p), round6(p / 3600))
+      })
     // continuous quantile at the endpoints is exactly the max/min
     // moment of the same per-series increases
-    val moments = t.momentIncreaseBy("click", Seq.empty, T0, T1,
-      Seq("cohort"), 3600L)
+    val moments = PromQL.query(t, "max by (cohort) (increase(click[1h]))",
+      T0, T1)
       .select(col("cohort"), col("bucket_start"),
         round(col("max_increase"), 6).as("mx"),
         round(col("min_increase"), 6).as("mn"))
@@ -1931,8 +1981,8 @@ class PromQLSpec extends SparkSuite {
     assert(got.nonEmpty)
     // independent recomputation: collect the inner sliding-rate grid and
     // slide the 6h max window over it in plain Scala
-    val inner = t.slidingIncreaseBy("click", Seq.empty, T0 - 21600, T1,
-        Seq("cohort"), 3600L, 3600L)
+    val inner = PromQL.query(t, "rate(click[3600:3600]) by (cohort)",
+        T0 - 21600, T1)
       .select("cohort", "eval_ts", "rate_per_sec")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     val gridStart = (T0 + 3599) / 3600 * 3600
@@ -2001,8 +2051,8 @@ class PromQLSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .toSet
     assert(q3.nonEmpty)
-    val inner3 = t.slidingIncreaseBy("click", Seq.empty,
-        T0 - 21600 - 7200, T1, Seq("cohort"), 3600L, 3600L)
+    val inner3 = PromQL.query(t, "rate(click[3600:3600]) by (cohort)",
+        T0 - 21600 - 7200, T1)
       .select(col("cohort"), col("eval_ts"), col("rate_per_sec"))
     val union3 = Tsdb.overTimeOnFrame(inner3, Seq("cohort"), "eval_ts",
         "rate_per_sec", T0, T1, 7200L, 21600L)
@@ -2030,8 +2080,8 @@ class PromQLSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
     assert(got.nonEmpty)
-    val inner = t.slidingIncreaseBy("click", Seq.empty, T0 - 21600, T1,
-        Seq("cohort"), 3600L, 3600L)
+    val inner = PromQL.query(t, "rate(click[3600:3600]) by (cohort)",
+        T0 - 21600, T1)
       .select("cohort", "eval_ts", "rate_per_sec")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     def pctl(vs: Seq[Double], p: Double): Double = {
@@ -2136,8 +2186,8 @@ class PromQLSpec extends SparkSuite {
       .select("eval_ts", "max_v")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(g.nonEmpty)
-    val innerGlobal = t.slidingIncreaseBy("click", Seq.empty, T0 - 21600,
-        T1, Seq.empty, 3600L, 3600L)
+    val innerGlobal = PromQL.query(t, "sum(rate(click[3600:3600]))",
+        T0 - 21600, T1)
       .select("eval_ts", "rate_per_sec")
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val expect = g.keys.map(tp =>
@@ -2161,18 +2211,23 @@ class PromQLSpec extends SparkSuite {
       "(l)(rate(x[d])) equals the independent per-series recomputation") {
     // per-series rates at the full (cohort, user_id) grain — the
     // independent ground truth the moment frame must reproduce
-    val perSeries = t.slidingIncreaseBy("click", Seq.empty, T0 - 21600,
-        T1, Seq("cohort", "user_id"), 3600L, 3600L)
+    val perSeries = PromQL.query(t, "rate(click[3600:3600])",
+        T0 - 21600, T1)
       .select("cohort", "user_id", "eval_ts", "rate_per_sec")
       .collect().map(r =>
         (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     val byGroup = perSeries.groupBy(p => (p._1, p._3))
-    val inner = t.slidingMomentIncreaseBy("click", Seq.empty, T0 - 21600,
-        T1, Seq("cohort"), 3600L, 3600L)
-      .select("cohort", "eval_ts", "n_series", "avg_v", "min_v", "max_v")
+    // an inner frame read through last_over_time over ONE inner step:
+    // the outer window at E holds exactly the inner point at E
+    def innerOf(agg: String) = PromQL.query(t,
+        s"last_over_time($agg[3600:3600])", T0 - 21600, T1)
+      .select("cohort", "eval_ts", "last_v")
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        (r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))
-      .toMap
+        r.getAs[Number](2).doubleValue).toMap
+    val Seq(cnt, avgs, mins, maxs) = Seq("count", "avg", "min", "max")
+      .map(op => innerOf(s"$op by (cohort) (rate(click[3600]))"))
+    val inner = avgs.map { case (k, a) =>
+      k -> (cnt(k).toLong, a, mins(k), maxs(k)) }
     assert(inner.nonEmpty && inner.keySet == byGroup.keySet)
     inner.foreach { case (k, (n, avg, mn, mx)) =>
       val vs = byGroup(k).map(_._4)
@@ -2207,12 +2262,11 @@ class PromQLSpec extends SparkSuite {
     // spread + quantile inners over the same per-series rates: the
     // engine's micro-scheme stddev/stdvar and exact Percentile q_v
     // against plain-Scala recomputation over byGroup
-    val innerS = t.slidingMomentIncreaseBy("click", Seq.empty,
-        T0 - 21600, T1, Seq("cohort"), 3600L, 3600L,
-        quantile = Some(0.9))
-      .select("cohort", "eval_ts", "stddev_v", "stdvar_v", "q_v")
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
+    val Seq(sds, svs, qvs) = Seq(
+      "stddev by (cohort) (rate(click[3600]))",
+      "stdvar by (cohort) (rate(click[3600]))",
+      "quantile by (cohort) (0.9, rate(click[3600]))").map(innerOf)
+    val innerS = sds.map { case (k, sd) => k -> (sd, svs(k), qvs(k)) }
     def r6f(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     def pctl(vs: Seq[Double], p: Double): Double = {
       val s = vs.sorted
@@ -2266,8 +2320,8 @@ class PromQLSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
     assert(got.nonEmpty)
-    def leg(metric: String) = t.slidingIncreaseBy(metric, Seq.empty,
-        T0 - 21600, T1, Seq("cohort"), 3600L, 3600L)
+    def leg(metric: String) = PromQL.query(t,
+        s"rate($metric[3600:3600]) by (cohort)", T0 - 21600, T1)
       .select("cohort", "eval_ts", "rate_per_sec")
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
@@ -2310,8 +2364,8 @@ class PromQLSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     assert(got.nonEmpty)
-    val inner = t.slidingIncreaseBy("click", Seq.empty, T0 - 21600, T1,
-        Seq("cohort"), 3600L, 3600L)
+    val inner = PromQL.query(t, "rate(click[3600:3600]) by (cohort)",
+        T0 - 21600, T1)
       .select("cohort", "eval_ts", "rate_per_sec")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     // rank per eval point: value DESC then cohort ASC (the pinned tie
@@ -2403,8 +2457,8 @@ class PromQLSpec extends SparkSuite {
 
   test("nested subquery spread/present outers: stddev/stdvar_over_time " +
       "use the integer-micro scheme; present_over_time is the 1.0 grid") {
-    val inner = t.slidingIncreaseBy("click", Seq.empty, T0 - 21600, T1,
-        Seq("cohort"), 3600L, 3600L)
+    val inner = PromQL.query(t, "rate(click[3600:3600]) by (cohort)",
+        T0 - 21600, T1)
       .select("cohort", "eval_ts", "rate_per_sec")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     val gridStart = (T0 + 3599) / 3600 * 3600
@@ -2564,6 +2618,26 @@ class PromQLSpec extends SparkSuite {
           val inc = ps.map(p => delta(p._1, p._2)).sum.toDouble
           k ++ Seq[Any](e, ps.size.toLong, inc, r6(inc / range))
         }.toSet, s"rate offset $o")
+      // rate(x[R]) and avg by (l) (increase(x[R])) on the tumbling
+      // grid: a pair counts in its newer sample's bucket ts − ts mod R
+      // of the scan [start − o, end − o], reported at bucket + o
+      val tumbling = pairs(start - o, end - o)
+        .groupBy(p => (p._1, p._2, p._4._3 - Math.floorMod(p._4._3, range) + o))
+        .map { case (k, ps) => k -> ps.map(p => delta(p._3._4, p._4._4)).sum }
+      assert(rows(PromQL.query(store, s"rate(x[$range]$off)", start, end),
+          "id", "l", "bucket_start", "increase", "rate_per_sec") ==
+        tumbling.map { case ((id, l, b), inc) =>
+          Seq[Any](id, l, b, inc.toDouble, round6(inc.toDouble / range))
+        }.toSet, s"tumbling rate offset $o")
+      assert(rows(PromQL.query(store,
+          s"avg by (l) (increase(x[$range]$off))", start, end), "l",
+          "bucket_start", "n_series", "sum_increase", "avg_increase",
+          "min_increase", "max_increase") ==
+        tumbling.groupBy(e => (e._1._2, e._1._3)).map { case ((l, b), es) =>
+          val vs = es.values.toSeq
+          Seq[Any](l, b, vs.size.toLong, vs.sum.toDouble,
+            vs.sum.toDouble / vs.size, vs.min.toDouble, vs.max.toDouble)
+        }.toSet, s"tumbling moments offset $o")
       // absent_over_time(x{id="1"}[R] offset o): grid step = range; an
       // eval point is absent when (E − range, E] holds no sample
       val ar = 120L

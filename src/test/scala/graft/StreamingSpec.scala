@@ -1063,8 +1063,8 @@ class StreamingSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getMap[String, String](1).toMap,
         new java.sql.Timestamp(r.getLong(2) * 1000), r.getDouble(3)))
       .toIndexedSeq
-    // one rule per compiled family: aggregateIncreaseBy (sum+rate),
-    // momentIncreaseBy (avg+increase), and the ratio-of-rates BinOp
+    // one rule per compiled counter shape: sum (sum+rate), the moments
+    // (avg+increase), and the ratio-of-rates BinOp
     val rules = Seq(
       ("cr_sum", Rules.AlertRule("cr_sum",
         "sum by (cohort) (rate(click[3600])) > 0", forSec = 7200L)),
