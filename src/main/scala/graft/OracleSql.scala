@@ -3314,7 +3314,7 @@ object OracleSql {
   }
 
   /** The two set-op oracles share this pair of aggregates: purchase
-    * cohort-hours (all moments, the engine's aggregateBy schema) and the
+    * cohort-hours (all moments, the gauge `moments` schema) and the
     * thresholded click cohort-hours.
     */
   private def setOpCtes: String =
@@ -3736,7 +3736,8 @@ object OracleSql {
 
   /** mad_over_time mirror — median of absolute deviations from the
     * per-(cohort, bucket) median, both exact quantile_cont; the tie-free
-    * floor-round matches Tsdb.madBy's final quantization byte-for-byte.
+    * floor-round matches the gauge `mad`'s final quantization
+    * (Tsdb.gaugeAggregate) byte-for-byte.
     */
   private val tsdbPromqlMad =
     s"""WITH t AS (
@@ -4310,7 +4311,7 @@ object OracleSql {
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** The parser-reachable label_replace/label_join twins: the same
-    * relabeling, day-bucketed through the aggregateBy grid. */
+    * relabeling, day-bucketed through the gauge moments' grid. */
   private val tsdbPromqlLabelReplace =
     s"""SELECT regexp_replace(CAST(user_id AS VARCHAR),
        |         '^(?:(\\d)\\d*)$$', '\\1') AS band,
@@ -4628,8 +4629,9 @@ object OracleSql {
     "tsdb_promql_unless" -> tsdbPromqlUnless,
     "tsdb_promql_maxavg" -> tsdbPromqlMaxAvg,
     "tsdb_promql_ratio_matched" -> tsdbPromqlRatioMatched,
-    // the [2h:1h] subquery compiles onto the same overTimeBy(1h, 2h) as
-    // the direct query — identical rows, shared oracle
+    // the [2h:1h] subquery compiles onto the same per-series moments
+    // (step 1h, range 2h) as tsdb_over_time — identical rows, shared
+    // oracle
     "tsdb_promql_subquery" -> tsdbOverTime,
     "tsdb_promql_dod" -> tsdbPromqlDod,
     "tsdb_promql_avg_rate" -> tsdbPromqlAvgRate,

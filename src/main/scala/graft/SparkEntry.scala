@@ -59,8 +59,9 @@ object SparkEntry {
     * aggregation — one shuffle (PlanSpec-gated).
     */
   private def qTsdbAggBy(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+      "sum by (cohort) (click[1h])", T0, T1)
       .orderBy("cohort", "bucket_start")
 
   /** PromQL `sum by (cohort) (increase(click[1h]))`: per-series counter
@@ -77,8 +78,9 @@ object SparkEntry {
     * label aggregation.
     */
   private def qTsdbTopk(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .topKBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, k = 3)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+      "topk(3, sum by (cohort) (click[1h]))", T0, T1)
       .orderBy("bucket_start", "rk")
 
   /** Prometheus 3.x `limitk(3, sum by (cohort) (click[1h]))`: a
@@ -153,7 +155,7 @@ object SparkEntry {
 
   /** The recording-rule shape end-to-end through the STRING front-end:
     * `sum by (band)(label_replace(click[1d], …))` — relabeling is now
-    * parser-reachable and fuses into [[graft.Tsdb.aggregateBy]]'s single
+    * parser-reachable and fuses into the gauge `moments`' single
     * hash aggregation (the rewrite runs map-side before the grouping).
     */
   private def qTsdbPromqlLabelReplace(s: SparkSession, dir: String): DataFrame =
@@ -364,7 +366,7 @@ object SparkEntry {
 
   /** Continuous-downsampling tier, probe only: serve `sum by (cohort)`
     * FROM the prebuilt 1h rollup — must merge to exactly the raw-data
-    * aggregateBy answer (the tsdb_agg_by oracle).
+    * `sum by` answer (the tsdb_agg_by oracle).
     */
   private def qTsdbRollupAgg(s: SparkSession, dir: String): DataFrame =
     tieredTsdb(s, dir)
@@ -785,8 +787,8 @@ object SparkEntry {
 
   /** Gauge-smoothing subquery — `max_over_time(avg_over_time(click[1h])
     * [6h:1h])`: the inner hourly means evaluate sliding on the subquery
-    * grid (Tsdb.slidingOverTimeBy), the outer max picks the peak
-    * smoothed value per 6h lookback.
+    * grid (the gauge `moments` at the `by` grain), the outer max picks
+    * the peak smoothed value per 6h lookback.
     */
   private def qTsdbPromqlSubqueryGauge(
       s: SparkSession, dir: String): DataFrame =
@@ -1041,9 +1043,9 @@ object SparkEntry {
       .orderBy("cohort", "user_id", "bucket_start")
 
   /** Bare `delta(click[1h])` through the string front-end: per-series
-    * gauge delta (last minus first sample per step bucket) via
-    * [[graft.Tsdb.deltaBy]] — one hash aggregation, struct-ordered
-    * endpoint picks, no window.
+    * gauge delta (last minus first sample per step bucket) via the
+    * gauge `delta` ([[graft.Tsdb.gaugeAggregate]]) — one hash
+    * aggregation, struct-ordered endpoint picks, no window.
     */
   private def qTsdbPromqlDelta(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(
@@ -1405,8 +1407,8 @@ object SparkEntry {
   /** PromQL SUBQUERY resolution through the string front-end:
     * `avg_over_time(click[2h:1h])` — the [range:step] form pins the
     * eval-grid step independently of the lookback window, compiling to
-    * the same overTimeBy(step=1h, range=2h) as tsdb_over_time (shared
-    * oracle byte-for-byte).
+    * the same per-series moments (step=1h, range=2h) as tsdb_over_time
+    * (shared oracle byte-for-byte).
     */
   private def qTsdbPromqlSubquery(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(
@@ -1499,14 +1501,15 @@ object SparkEntry {
     * per-bucket p95, one partial-merge aggregation.
     */
   private def qTsdbQuantileOverTime(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .quantileBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, q = 0.95)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+      "quantile_over_time(0.95, click[1h]) by (cohort)", T0, T1)
       .orderBy("cohort", "bucket_start")
 
   /** PromQL 3.x `mad_over_time(click[1h]) by (cohort)` — exact median
     * absolute deviation per (cohort, hour), the robust spread statistic
     * for outlier-tolerant alerting; compiled through the PromQL
-    * front-end onto [[Tsdb.madBy]]'s one-shuffle two-pass plan.
+    * front-end onto the gauge `mad`'s one-shuffle two-pass plan.
     */
   private def qTsdbPromqlMad(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(
@@ -1519,17 +1522,18 @@ object SparkEntry {
     * week-over-week comparison every dashboard draws).
     */
   private def qTsdbOffset(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .aggregateBy("click", Seq.empty, T0 + 86400L, T1, Seq("cohort"), 3600L,
-        offsetSec = 86400L)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+      "sum by (cohort) (click[1h] offset 1d)", T0 + 86400L, T1)
       .orderBy("cohort", "bucket_start")
 
   /** PromQL `bottomk(3, sum by (cohort) (click[1h]))` — the inverse rank
     * of tsdb_topk: the 3 smallest label groups per step bucket.
     */
   private def qTsdbBottomk(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .bottomKBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, k = 3)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+      "bottomk(3, sum by (cohort) (click[1h]))", T0, T1)
       .orderBy("bucket_start", "rk")
 
   /** The canonical dashboard ranking through the string front-end —
@@ -1549,9 +1553,10 @@ object SparkEntry {
     * for low-cardinality value domains, per Prometheus' own docs).
     */
   private def qTsdbCountValues(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir)
-        .withColumn("value", floor(col("value") / 10).cast("double")))
-      .countValuesBy("click", Seq.empty, T0, T1, Seq("cohort"), 86400L)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)
+        .withColumn("value", floor(col("value") / 10).cast("double"))),
+      """count_values("value", click[1d]) by (cohort)""", T0, T1)
       .orderBy("cohort", "bucket_start", "value")
 
   /** The PromQL `*_over_time(click[2h])` family on a 1h eval grid:
@@ -1559,9 +1564,9 @@ object SparkEntry {
     * window — all six moments from one explode + one hash aggregation.
     */
   private def qTsdbOverTime(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .overTimeBy("click", Seq.empty, T0, T1, Seq("cohort", "user_id"),
-        stepSec = 3600L, rangeSec = 7200L)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+      "avg_over_time(click[7200:3600]) by (cohort, user_id)", T0, T1)
       .select(col("cohort"), col("user_id").cast("long").as("user_id"),
         col("eval_ts"), col("n"), col("sum_v"), col("avg_v"),
         col("min_v"), col("max_v"), col("last_v"))
@@ -1572,14 +1577,16 @@ object SparkEntry {
     * of each window's max / min / last sample, value ties to the LATEST
     * sample (Prometheus's chronological >=/<= scan ≡ max over a
     * value-first struct; the min variant negates the value). All three
-    * from the same single hash aggregation as the moment family
-    * ([[graft.Tsdb.overTimeBy]] `tsOf`); the string front-end serves
-    * each variant individually (PromQLSpec).
+    * from the gauge family's per-series sliding `moments` — the two
+    * stages called directly; the string front-end serves each variant
+    * individually (PromQLSpec).
     */
   private def qTsdbTsOf(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .overTimeBy("click", Seq.empty, T0, T1, Seq("cohort", "user_id"),
-        stepSec = 3600L, rangeSec = 7200L, tsOf = true)
+    Tsdb.gaugeAggregate(
+        Tsdb.attach(s, eventsAsSamplesCohort(s, dir)).windowedSamples(
+          "click", Seq.empty, T0, T1, Seq("cohort", "user_id"), 7200L,
+          Some(3600L), 0L),
+        perSeries = true, "moments")
       .select(col("cohort"), col("user_id").cast("long").as("user_id"),
         col("eval_ts"), col("n"), col("ts_of_max_v"), col("ts_of_min_v"),
         col("ts_of_last_v"))
@@ -1589,14 +1596,15 @@ object SparkEntry {
     * from exact integer-cents moments, one hash aggregation.
     */
   private def qTsdbStddev(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .stddevBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    graft.promql.PromQL.query(
+      Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+      "stddev by (cohort) (click[1h])", T0, T1)
       .orderBy("cohort", "bucket_start")
 
   /** `stdvar_over_time(click[2h:1h])` through the string front-end:
     * population spread on the sliding eval grid — the integer-cents
-    * moment sums ride [[graft.Tsdb.overTimeBy]]'s single hash
-    * aggregation (`spread = true`), no second pass over the window.
+    * moment sums ride the gauge `spread`'s single hash aggregation,
+    * no second pass over the window.
     */
   private def qTsdbPromqlStdvarOverTime(
       s: SparkSession, dir: String): DataFrame =
@@ -1624,7 +1632,7 @@ object SparkEntry {
   /** `round(clamp(sum by (cohort)(click[1d]), 1000, 100000), 10)`: the
     * pointwise math family composed over an aggregation — clamp to a
     * band, then round to the nearest 10 (Prometheus ties-up rounding,
-    * `floor(v/to + 0.5)*to`) — all map-side over aggregateBy's single
+    * `floor(v/to + 0.5)*to`) — all map-side over the `sum by`'s single
     * hash aggregation.
     */
   private def qTsdbPromqlMathChain(s: SparkSession, dir: String): DataFrame =

@@ -800,126 +800,57 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         sort_array(collect_list(struct(col("ts"), col("value")))).as("points"))
   }
 
-  /** PromQL-style label-dimension aggregation — `sum by (labels)
-    * (metric[step])`: aggregate [[queryRange]] output ACROSS series,
-    * grouped by a label subset and a tumbling step bucket. The operator the
-    * reference lacks entirely (no aggregations, README.md:36-40) but every
-    * Prometheus user's first query needs.
-    *
-    * Plan: one hash aggregation keyed by (labels…, bucket) over the pruned
-    * range scan — label extraction and bucketing are map-side, sums
-    * accumulate in DECIMAL for oracle-exact reassociation, so the whole
-    * query is scan → project → ONE shuffle at any scale.
-    *
-    * @param offsetSec PromQL `offset` modifier: evaluate over data
-    *   `offsetSec` earlier — the selection window shifts back by the
-    *   offset (segment pruning follows it) and result buckets are
-    *   reported at the REQUESTED timestamps, exactly like
-    *   `sum by (l) (metric[step] offset o)` aligns last week's data to
-    *   this week's eval grid.
-    */
-  def aggregateBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L,
-      relabel: Column => Column = c => c): DataFrame = {
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
-    // `relabel` rewrites the label map BEFORE grouping (PromQL's
-    // label_replace / label_join feeding an aggregation) — selector
-    // matchers still apply to the ORIGINAL labels, like Prometheus,
-    // and the default identity keeps the plan unchanged
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .withColumn("labels", relabel(col("labels")))
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_v"),
-        (sum(col("value").cast("decimal(18,2)")).cast("double") /
-          count(lit(1))).as("avg_v"),
-        min("value").as("min_v"),
-        max("value").as("max_v"))
-  }
-
-  /** PromQL `quantile_over_time(q, metric[step]) by (labels)`: exact
-    * continuous quantile of the raw samples per (label subset, step
-    * bucket). One hash aggregation — `percentile` is a partial-merge
-    * aggregate, so map-side combine applies like any sum; no window, no
-    * per-series sort job.
-    */
-  def quantileBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      q: Double,
-      offsetSec: Long = 0L): DataFrame = {
-    require(q >= 0 && q <= 1, s"quantile must be in [0,1]: $q")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n"),
-        round(percentile(col("value"), lit(q)), 6).as("q_v"))
-  }
-
-  /** PromQL 3.x `mad_over_time(metric[step]) by (labels)`: exact median
-    * absolute deviation — `median(|v − median(v)|)` — of the raw samples
-    * per (label subset, step bucket), the robust spread statistic
-    * Prometheus 3 added for outlier-tolerant alerting. Two passes over
-    * the SAME hash partitioning: a window `percentile(0.5)` attaches the
-    * per-group median, then one hash aggregation takes the median of the
-    * absolute deviations — the groupBy reuses the window's exchange, so
-    * the whole thing is one shuffle at sample grain (group keys, never a
-    * global sort). NULL group labels survive (window/groupBy both treat
-    * NULL as a value). The final value rounds through the tie-free
-    * `floor(x·1e6 + 0.5)/1e6` (the engine's cross-engine rounding form),
-    * so the DuckDB `quantile_cont` mirror is byte-exact.
-    */
-  def madBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val base = queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .select(labelCols(byLabels) :+ bucketKey(stepSec, offsetSec) :+
-        col("value"): _*)
-    val keys = (byLabels :+ "bucket_start").map(col)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys: _*)
-    base
-      .withColumn("med", percentile(col("value"), lit(0.5)).over(w))
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n"),
-        r6(percentile(abs(col("value") - col("med")), lit(0.5))).as("mad_v"))
-  }
-
-  /** Stage (a) of the counter family (`rate` / `increase`): the
-    * per-series reset-robust increase. One selector scan, the
-    * [[Tsdb.counterLag]] over it, then one aggregation per (sid,
-    * `byLabels`, t) summing the decimal deltas (`__inc`) and counting
-    * them (`__n`; the prefix keeps them apart from any label name); a
-    * series contributes to t only when it has ≥ 1 delta there.
+  /** Stage (a) of the gauge and counter families: one selector's
+    * samples keyed on the eval grid. The one selector scan and the one
+    * offset check; `relabel` rewrites the label map before any grouping
+    * (label_replace / label_join feeding an aggregation — matchers still
+    * see the original labels, like Prometheus), then `prep` runs on the
+    * scanned samples (the counter family's [[Tsdb.counterLag]]).
     * `gridStep` picks t:
     *  - None: tumbling buckets `rangeSec` wide, t = `bucket_start`
-    *    ([[Tsdb.bucketKey]]);
+    *    ([[Tsdb.bucketKey]]), over the scan [start − o, end − o];
     *  - Some(s): the sliding eval grid every s over `rangeSec`
-    *    lookbacks, t = `eval_ts` ([[overTimeWindowed]]; the scan reaches
-    *    one lookback before the grid, so the lag's pairs are not cut).
-    * An offset scans `offsetSec` back and reports t `offsetSec` forward.
-    * The group keys lead with sid, the lag window's partitioning, so
-    * this stage adds no exchange. Stage (b) is
+    *    lookbacks, t = `eval_ts` ([[Tsdb.explodeEvalGrid]]); the scan
+    *    reaches one lookback before the grid, so the first eval points
+    *    see their whole window and the lag's pairs are not cut.
+    * An offset o scans o back and reports t o forward, at the REQUESTED
+    * grid. Returns (keyed samples, group keys = `byLabels` then t);
+    * stage (b) groups on the keys: [[Tsdb.gaugeAggregate]] for the
+    * gauge family, [[counterSeries]] then [[Tsdb.counterAggregate]] for
+    * the counter family. */
+  private[graft] def windowedSamples(
+      metric: String,
+      matchers: Seq[LabelMatcher],
+      start: Long,
+      end: Long,
+      byLabels: Seq[String],
+      rangeSec: Long,
+      gridStep: Option[Long],
+      offsetSec: Long,
+      prep: DataFrame => DataFrame = identity,
+      relabel: Column => Column = identity): (DataFrame, Seq[Column]) = {
+    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
+    val (start0, end0) = (start - offsetSec, end - offsetSec)
+    def scan(from: Long) = prep(queryRange(metric, matchers, from, end0)
+      .withColumn("labels", relabel(col("labels"))))
+    gridStep match {
+      case None =>
+        (scan(start0), labelCols(byLabels) :+ bucketKey(rangeSec, offsetSec))
+      case Some(step) =>
+        (explodeEvalGrid(scan(start0 - rangeSec + 1), "ts", start0, end0,
+            step, rangeSec, "eval_ts")
+          .withColumn("eval_ts", col("eval_ts") + offsetSec),
+          labelCols(byLabels) :+ col("eval_ts"))
+    }
+  }
+
+  /** The counter family's per-series step (`rate` / `increase`) between
+    * its stages: over [[windowedSamples]] with the [[Tsdb.counterLag]]
+    * as `prep`, one aggregation per (sid, `byLabels`, t) sums the
+    * decimal deltas (`__inc`) and counts them (`__n`; the prefix keeps
+    * them apart from any label name); a series contributes to t only
+    * when it has ≥ 1 delta there. The group keys lead with sid, the lag
+    * window's partitioning, so this step adds no exchange. Stage (b) is
     * [[Tsdb.counterAggregate]]. */
   private[graft] def counterSeries(
       metric: String,
@@ -930,16 +861,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       rangeSec: Long,
       gridStep: Option[Long],
       offsetSec: Long): DataFrame = {
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val deltas = (s: DataFrame) => counterLag(s).where(col("delta").isNotNull)
-    val (perDelta, keys) = gridStep match {
-      case Some(step) => overTimeWindowed(metric, matchers, start, end,
-        byLabels, step, rangeSec, offsetSec, deltas)
-      case None =>
-        (deltas(queryRange(metric, matchers, start - offsetSec,
-            end - offsetSec)),
-          labelCols(byLabels) :+ bucketKey(rangeSec, offsetSec))
-    }
+    val (perDelta, keys) = windowedSamples(metric, matchers, start, end,
+      byLabels, rangeSec, gridStep, offsetSec,
+      prep = s => counterLag(s).where(col("delta").isNotNull))
     perDelta
       .groupBy((col("sid") +: keys): _*)
       .agg(sum(col("delta")).as("__inc"), count(lit(1)).as("__n"))
@@ -974,8 +898,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       horizonSec: Long,
       offsetSec: Long = 0L): DataFrame = {
     val dec = "decimal(20,0)"
-    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec)
+    val (windowed, keys) = windowedSamples(metric, matchers, start, end,
+      byLabels, rangeSec, Some(stepSec), offsetSec)
     val xy = windowed
       // eval_ts already carries +offset; the window's pre-offset start
       // is (eval_ts − offset) − rangeSec, so x ∈ [1, rangeSec]
@@ -1011,37 +935,10 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec,
+    val (windowed, keys) = windowedSamples(metric, matchers, start, end,
+      byLabels, rangeSec, Some(stepSec), offsetSec,
       s => counterLag(s).where(col("prev").isNotNull))
     countResetsChanges(windowed, keys)
-  }
-
-  /** Sliding gauge `delta` on the subquery eval grid —
-    * `delta(metric[rangeSec:stepSec])`: last − first sample value in
-    * each trailing window, per label group every `stepSec` (the
-    * [[deltaBy]] struct-ordered endpoints over the [[overTimeWindowed]]
-    * explode; decimal until the final cast).
-    */
-  def slidingDeltaBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      rangeSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec)
-    windowed
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n"),
-        (max(struct(col("ts"), col("v"))).getField("v") -
-          min(struct(col("ts"), col("v"))).getField("v"))
-          .cast("double").as("delta"))
   }
 
   /** Sliding `idelta` / `irate` on the subquery eval grid — the
@@ -1050,7 +947,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * point, the difference between the two newest samples in the window
     * (idelta), and the reset-aware rate over their timestamp gap
     * (irate). [[Tsdb.lastTwoPair]] at (sid, eval point) grain over the
-    * [[overTimeWindowed]] explode — state bounded by one window's
+    * [[windowedSamples]] explode — state bounded by one window's
     * sample count; windows holding < 2 samples emit nothing.
     */
   def slidingInstantDeltaBy(
@@ -1062,8 +959,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    val (windowed, _) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec)
+    val (windowed, _) = windowedSamples(metric, matchers, start, end,
+      byLabels, rangeSec, Some(stepSec), offsetSec)
     lastTwoPair(windowed.withColumn("v", col("value").cast("decimal(18,2)")),
         Seq(col("sid"), col("eval_ts")))
       .select((labelCols(byLabels) ++
@@ -1248,11 +1145,12 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     finally out.close()
   }
 
-  /** [[aggregateBy]] served from a materialized rollup instead of raw
+  /** The gauge `moments` ([[Tsdb.gaugeAggregate]] on the tumbling
+    * grid) served from a materialized rollup instead of raw
     * samples: merge the per-series partials per (label subset, bucket).
     * Requires a bucket-aligned window (`start` on a bucket boundary,
     * `end` the last second of a bucket) — then the result is
-    * value-identical to [[aggregateBy]] on raw data, because DECIMAL sums
+    * value-identical to the raw-data moments, because DECIMAL sums
     * and count/min/max merge associatively. The rollup scan is pruned by
     * `seg` and `bucket_start`; labels come from the broadcast series
     * dimension exactly like the raw path.
@@ -1326,12 +1224,12 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetA: Long = 0L,
       offsetB: Long = 0L)(
       op: (Column, Column) => Column): DataFrame = {
-    val a = aggregateBy(metricA, matchersA, start, end, byLabels, stepSec,
-        offsetA)
+    val a = gaugeAggregate(windowedSamples(metricA, matchersA, start, end,
+        byLabels, stepSec, None, offsetA), perSeries = false, "moments")
       .select(byLabels.map(col) ++ Seq(col("bucket_start"),
         col("n").as("n_a"), col(momentA).as("sum_a")): _*)
-    val b = aggregateBy(metricB, matchersB, start, end, byLabels, stepSec,
-        offsetB)
+    val b = gaugeAggregate(windowedSamples(metricB, matchersB, start, end,
+        byLabels, stepSec, None, offsetB), perSeries = false, "moments")
       .select(byLabels.map(col) ++ Seq(col("bucket_start"),
         col("n").as("n_b"), col(momentB).as("sum_b")): _*)
     Tsdb.nullSafeEquiJoin(a, b, byLabels :+ "bucket_start")
@@ -1417,12 +1315,12 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       s"group_left carried labels (${carry.filter(byA.contains)}) " +
       "already appear in the left side's grouping — drop them from one " +
       "side (the join would produce ambiguous columns)")
-    val a = aggregateBy(metricA, matchersA, start, end, byA, stepSec,
-        offsetA)
+    val a = gaugeAggregate(windowedSamples(metricA, matchersA, start, end,
+        byA, stepSec, None, offsetA), perSeries = false, "moments")
       .select(byA.map(col) ++ Seq(col("bucket_start"),
         col("n").as("n_a"), col(momentA).as("sum_a")): _*)
-    val b0 = aggregateBy(metricB, matchersB, start, end, byB, stepSec,
-        offsetB)
+    val b0 = gaugeAggregate(windowedSamples(metricB, matchersB, start, end,
+        byB, stepSec, None, offsetB), perSeries = false, "moments")
       .select(byB.map(col) ++ Seq(col("bucket_start"),
         col("n").as("n_b"), col(momentB).as("sum_b")): _*)
     val b =
@@ -1484,8 +1382,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       s"group_right carried labels (${carry.filter(byB.contains)}) " +
       "already appear in the right side's grouping — drop them from one " +
       "side (the join would produce ambiguous columns)")
-    val a0 = aggregateBy(metricA, matchersA, start, end, byA, stepSec,
-        offsetA)
+    val a0 = gaugeAggregate(windowedSamples(metricA, matchersA, start, end,
+        byA, stepSec, None, offsetA), perSeries = false, "moments")
       .select(byA.map(col) ++ Seq(col("bucket_start"),
         col("n").as("n_a"), col(momentA).as("sum_a")): _*)
     val a =
@@ -1501,8 +1399,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
               concat_ws(",", on.map(col): _*), lit(")"))))
             .otherwise(col("sum_a")))
       }
-    val b = aggregateBy(metricB, matchersB, start, end, byB, stepSec,
-        offsetB)
+    val b = gaugeAggregate(windowedSamples(metricB, matchersB, start, end,
+        byB, stepSec, None, offsetB), perSeries = false, "moments")
       .select(byB.map(col) ++ Seq(col("bucket_start"),
         col("n").as("n_b"), col(momentB).as("sum_b")): _*)
     Tsdb.nullSafeEquiJoin(b, a, on :+ "bucket_start")
@@ -1539,10 +1437,10 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetA: Long = 0L,
       offsetB: Long = 0L): DataFrame = {
     val keys = byLabels :+ "bucket_start"
-    val a = aggregateBy(metricA, matchersA, start, end, byLabels, stepSec,
-      offsetA)
-    val b = aggregateBy(metricB, matchersB, start, end, byLabels, stepSec,
-      offsetB)
+    val a = gaugeAggregate(windowedSamples(metricA, matchersA, start, end,
+      byLabels, stepSec, None, offsetA), perSeries = false, "moments")
+    val b = gaugeAggregate(windowedSamples(metricB, matchersB, start, end,
+      byLabels, stepSec, None, offsetB), perSeries = false, "moments")
     setOp match {
       case "and" => Tsdb.nullSafeEquiJoin(
         a, b.select(keys.map(col): _*), keys, "left_semi")
@@ -1554,34 +1452,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       case other => throw new IllegalArgumentException(
         s"unknown vector set op: $other (expected and | or | unless)")
     }
-  }
-
-  /** PromQL `delta(gauge[step])` on the engine's bucket grid: LAST minus
-    * FIRST sample value per (label subset, step bucket) — with the full
-    * label-key set this is exactly per-series. First/last are selected
-    * by struct-ordered min/max over (ts, value): one hash aggregation,
-    * no window, no per-series sort job; the (ts, value) ordering makes
-    * ties exact duplicates, so the endpoints are well-defined. Delta
-    * arithmetic stays DECIMAL until the final cast. Buckets with a
-    * single sample report delta 0 (the Prometheus one-point window).
-    */
-  def deltaBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .withColumn("v", col("value").cast("decimal(18,2)"))
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n"),
-        (max(struct(col("ts"), col("v"))).getField("v") -
-          min(struct(col("ts"), col("v"))).getField("v"))
-          .cast("double").as("delta"))
   }
 
   /** PromQL `sum by (labels) (resets(metric[step]))`: per-series counter
@@ -1667,320 +1537,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         col("dt"), col("idelta"), col("irate"))): _*)
   }
 
-  /** PromQL `topk(k, sum by (labels) (metric[step]))`: the k label groups
-    * with the largest per-bucket sums, per step bucket. Composes
-    * [[aggregateBy]] with a rank window PARTITIONED by bucket — state per
-    * task is bounded by the label-group cardinality of one bucket, and ties
-    * break deterministically on the label values.
-    */
-  def topKBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      k: Int,
-      offsetSec: Long = 0L): DataFrame = {
-    firstK(
-        aggregateBy(metric, matchers, start, end, byLabels, stepSec,
-          offsetSec),
-        Seq(col("bucket_start")), col("sum_v").desc +: byLabels.map(col),
-        lit(k))
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"), col("rk"),
-        col("n"), col("sum_v")): _*)
-  }
-
-  /** The deterministic group hash both 3.x sampling aggregators key on:
-    * md5-u32 of the salted, `|`-joined group label values (absent labels
-    * hash as the empty string). Bit-identical in every engine — the
-    * DuckDB oracles reproduce the exact sample. */
-  private def groupU32(byLabels: Seq[String], salt: String): Column =
-    conv(substring(md5(concat(lit(salt), concat_ws("|",
-      byLabels.map(l => coalesce(col(l), lit(""))): _*))), 1, 8), 16, 10)
-      .cast("long")
-
-  /** Prometheus 3.x experimental `limitk(k, sum by (labels)
-    * (metric[step]))`: a k-SAMPLE of label groups per step bucket —
-    * topk's value-blind sibling for "show me any k example series"
-    * dashboards. Prometheus deliberately leaves WHICH k unspecified
-    * (hash-based); this engine pins the sample to the md5-u32 of the
-    * group's label values, so membership is stable across runs,
-    * partitionings, and engines. Same bounded-state shape as
-    * [[topKBy]]: the rank window rides the already-aggregated output,
-    * never sample-grain rows.
-    */
-  def limitKBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      k: Int,
-      offsetSec: Long = 0L,
-      salt: String = "lk"): DataFrame = {
-    require(k > 0, s"limitk k must be > 0: $k")
-    firstK(
-        aggregateBy(metric, matchers, start, end, byLabels, stepSec,
-          offsetSec),
-        Seq(col("bucket_start")),
-        groupU32(byLabels, salt).asc +: byLabels.map(col), lit(k))
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"), col("rk"),
-        col("n"), col("sum_v")): _*)
-  }
-
-  /** Prometheus 3.x experimental `limit_ratio(r, sum by (labels)
-    * (metric[step]))`: keep a deterministic ~r fraction of label groups.
-    * A NEGATIVE r keeps exactly the complement of `limit_ratio(1+r)` —
-    * Prometheus's split-traffic idiom (`limit_ratio(0.1, …)` to one
-    * pipeline, `limit_ratio(-0.9, …)` to the other, no group in both).
-    * Pure map-side hash filter over the aggregated groups — zero extra
-    * shuffle, zero rank state, the 100 TB form of group sampling.
-    */
-  def limitRatioBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      ratio: Double,
-      offsetSec: Long = 0L,
-      salt: String = "lk"): DataFrame = {
-    require(ratio >= -1.0 && ratio <= 1.0,
-      s"limit_ratio r must be in [-1, 1]: $ratio")
-    val u = groupU32(byLabels, salt)
-    val space = 4294967296L // 2^32
-    val keep =
-      if (ratio >= 0) u < lit(math.floor(ratio * space).toLong)
-      else u >= lit(math.floor((1.0 + ratio) * space).toLong)
-    aggregateBy(metric, matchers, start, end, byLabels, stepSec, offsetSec)
-      .where(keep)
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"),
-        col("n"), col("sum_v")): _*)
-  }
-
-  /** PromQL `bottomk(k, sum by (labels) (metric[step]))` — [[topKBy]]
-    * with the rank order inverted: the k label groups with the SMALLEST
-    * per-bucket sums. Same bounded-state bucket-partitioned rank window.
-    */
-  def bottomKBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      k: Int,
-      offsetSec: Long = 0L): DataFrame = {
-    firstK(
-        aggregateBy(metric, matchers, start, end, byLabels, stepSec,
-          offsetSec),
-        Seq(col("bucket_start")), col("sum_v").asc +: byLabels.map(col),
-        lit(k))
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"), col("rk"),
-        col("n"), col("sum_v")): _*)
-  }
-
-  /** PromQL `stddev by (labels)` / `stdvar by (labels)` per step bucket
-    * (population variance, like Prometheus). Exactness scheme: values
-    * carry 2 decimals, so they lift losslessly to integer cents
-    * (`round(v*100)` — identical IEEE op in the oracle), the two moment
-    * sums are exact BIGINTs, and the variance assembles from them in a
-    * fixed double op order mirrored 1:1 in SQL (round(…,6) absorbing
-    * final-op ULP, the `q_percentiles` contract). One hash aggregation.
-    */
-  def stddevBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
-    val n = col("n").cast("double")
-    val meanC = col("sum_c").cast("double") / n
-    val stdvar = (col("sum2_c").cast("double") / n - meanC * meanC) / 1e4
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .withColumn("cents", round(col("value") * 100).cast("long"))
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("cents")).as("sum_c"),
-        sum(col("cents") * col("cents")).as("sum2_c"))
-      .select(byLabels.map(col) ++ Seq(
-        col("bucket_start"),
-        col("n"),
-        round(meanC / 100.0, 6).as("avg_v"),
-        round(stdvar, 6).as("stdvar"),
-        round(sqrt(stdvar), 6).as("stddev")): _*)
-  }
-
-  /** PromQL `count_values("value_label", metric)` per step bucket: the
-    * number of samples carrying each distinct value, grouped by a label
-    * subset — the value itself becomes a grouping dimension. One hash
-    * aggregation keyed by (labels…, bucket, value); cardinality is
-    * data-bounded exactly like Prometheus' own warning for this function.
-    */
-  def countValuesBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val keys =
-      labelCols(byLabels) :+ bucketKey(stepSec, offsetSec) :+ col("value")
-    queryRange(metric, matchers, start - offsetSec, end - offsetSec)
-      .groupBy(keys: _*)
-      .agg(count(lit(1)).as("n"))
-  }
-
-  /** A selector's samples on the sliding eval grid of every raw-sample
-    * range function ([[Tsdb.explodeEvalGrid]], `eval_ts`). An offset
-    * evaluates the shifted window [start−o, end−o] and reports eval
-    * points shifted forward (+o), the aggregateBy convention. The scan
-    * reaches a full lookback window before `start − o`, so the first
-    * eval points see their whole window; `prep` runs on the scanned
-    * samples before the explode (the counter family's
-    * [[Tsdb.counterLag]], whose pairs must not be cut at a window edge).
-    * Returns (exploded frame, grouping keys = labels + eval_ts). */
-  private def overTimeWindowed(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      rangeSec: Long,
-      offsetSec: Long,
-      prep: DataFrame => DataFrame = identity): (DataFrame, Seq[Column]) = {
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val start0 = start - offsetSec
-    val end0 = end - offsetSec
-    val scanned = prep(queryRange(metric, matchers, start0 - rangeSec + 1,
-      end0))
-    val windowed =
-      explodeEvalGrid(scanned, "ts", start0, end0, stepSec, rangeSec,
-          "eval_ts")
-        .withColumn("eval_ts", col("eval_ts") + offsetSec)
-    (windowed, labelCols(byLabels) :+ col("eval_ts"))
-  }
-
-  /** Sliding gauge moments on the subquery eval grid — the gauge twin of
-    * the sliding [[counterSeries]]: `avg/min/max/sum/count/last_over_time(
-    * metric[rangeSec])` evaluated every `stepSec`, aggregated straight to
-    * the `byLabels` grain (the full label-key universe for the per-series
-    * form). One sample explode + ONE hash aggregation, the exact
-    * [[overTimeBy]] moment set (decimal sums, struct-ordered last), so
-    * oracles mirror 1:1.
-    */
-  def slidingOverTimeBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      rangeSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec)
-    windowed.groupBy(keys: _*).agg(
-      count(lit(1)).as("n"),
-      sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_v"),
-      // 6-decimal quantized (tie-free floor form) so the subquery value
-      // joins the integer-micro exactness family: spread/counter OUTERS
-      // over an avg_over_time inner are lossless at micro grain, like
-      // the round(…,6) counter rate. The other moments are already
-      // micro-exact (2-decimal sample values / their decimal sums).
-      r6(sum(col("value").cast("decimal(18,2)")).cast("double") /
-        count(lit(1))).as("avg_v"),
-      min("value").as("min_v"),
-      max("value").as("max_v"),
-      max(struct(col("ts"), col("value"))).getField("value").as("last_v"))
-  }
-
-  /** The PromQL `*_over_time(metric[rangeSec])` family evaluated on a
-    * step grid: for every eval timestamp `e` (multiples of `stepSec`
-    * within `[start, end]`), the avg/min/max/sum/count/last of each
-    * series' raw samples in the PromQL lookback window `(e - rangeSec,
-    * e]`. Returns all six moments in one pass — callers project the one
-    * they asked for. `spread = true` adds `stdvar_v`/`stddev_v`
-    * (population, like Prometheus's `stddev_over_time`) to the SAME
-    * hash aggregation via the [[stddevBy]] integer-cents scheme.
-    *
-    * Scale shape: the samples explode map-side onto the eval grid
-    * ([[Tsdb.explodeEvalGrid]] — no per-eval-point self-join, no driver
-    * loop), then ONE hash aggregation keyed by (sid, eval_ts) computes
-    * every moment; `last_v` rides the same aggregation as `max_by` over
-    * (ts, value).
-    */
-  def overTimeBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      rangeSec: Long,
-      offsetSec: Long = 0L,
-      spread: Boolean = false,
-      tsOf: Boolean = false): DataFrame = {
-    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec)
-    val baseAggs = Seq(
-      count(lit(1)).as("n"),
-      sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_v"),
-      (sum(col("value").cast("decimal(18,2)")).cast("double") /
-        count(lit(1))).as("avg_v"),
-      min("value").as("min_v"),
-      max("value").as("max_v"),
-      // last sample in the window; ties on ts break to the larger value.
-      // max over an orderable struct — the same lexicographic compare
-      // DuckDB's max(struct_pack(...)) performs, so oracles mirror 1:1
-      max(struct(col("ts"), col("value"))).getField("value").as("last_v")) ++
-      // Prometheus 3.x experimental ts_of_* family: the epoch-seconds
-      // timestamp (double, like Prometheus) of the window's max / min /
-      // last sample. Value ties break to the LATEST sample (Prometheus
-      // scans chronologically keeping >= / <=) — exactly max over a
-      // value-first struct; min-with-latest-tie is max over the NEGATED
-      // value (exact for doubles). Opt-in so the moment-only plans keep
-      // their aggregation buffers unchanged.
-      (if (!tsOf) Seq.empty else Seq(
-        max(struct(col("value").as("v"), col("ts").as("t")))
-          .getField("t").cast("double").as("ts_of_max_v"),
-        max(struct((-col("value")).as("v"), col("ts").as("t")))
-          .getField("t").cast("double").as("ts_of_min_v"),
-        max(col("ts")).cast("double").as("ts_of_last_v")))
-    if (!spread)
-      windowed.groupBy((col("sid") +: keys): _*)
-        .agg(baseAggs.head, baseAggs.tail: _*)
-        .drop("sid")
-    else {
-      // stddev/stdvar over the window, the stddevBy exactness scheme:
-      // lossless integer-cents moment sums, fixed double op order
-      // mirrored 1:1 in the oracle SQL, round(…,6) absorbing ULP
-      val spreadAggs = Seq(
-        sum(col("cents")).as("sum_c"),
-        sum(col("cents") * col("cents")).as("sum2_c"))
-      val aggs = baseAggs ++ spreadAggs
-      val n = col("n").cast("double")
-      val meanC = col("sum_c").cast("double") / n
-      val stdvar = (col("sum2_c").cast("double") / n - meanC * meanC) / 1e4
-      windowed
-        .withColumn("cents", round(col("value") * 100).cast("long"))
-        .groupBy((col("sid") +: keys): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .withColumn("stdvar_v", round(stdvar, 6))
-        .withColumn("stddev_v", round(sqrt(stdvar), 6))
-        .drop("sid", "sum_c", "sum2_c")
-    }
-  }
-
   /** PromQL `holt_winters(v[range], sf, tf)` (double exponential
     * smoothing) on the sliding eval grid: per (series-group, eval point)
     * the windowed samples fold IN TIMESTAMP ORDER through Prometheus's
@@ -1992,7 +1548,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     *     b  = tf·(s' − s) + (1−tf)·b;  s = s'
     *   result = s        (windows with < 2 samples emit nothing)
     * }}}
-    * Implemented as ONE hash aggregation (the [[overTimeBy]] grid
+    * Implemented as ONE hash aggregation (the [[windowedSamples]] grid
     * explode) collecting the bounded window into a sorted array, then a
     * codegen'd `aggregate` fold — no window function, no shuffle beyond
     * the grouping, per-group state bounded by the lookback window. The
@@ -2012,8 +1568,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       offsetSec: Long = 0L): DataFrame = {
     require(sf > 0 && sf < 1 && tf > 0 && tf < 1,
       s"holt_winters smoothing factors must be in (0, 1): sf=$sf tf=$tf")
-    val (windowed, keys) = overTimeWindowed(metric, matchers, start, end,
-      byLabels, stepSec, rangeSec, offsetSec)
+    val (windowed, keys) = windowedSamples(metric, matchers, start, end,
+      byLabels, rangeSec, Some(stepSec), offsetSec)
     // ts-sorted window values (ties break on value, mirrored in the
     // oracle's ORDER BY ts, value)
     val pts = sort_array(collect_list(struct(col("ts"),
@@ -2064,7 +1620,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val start0 = start - offsetSec
     val end0 = end - offsetSec
-    // full-lookback scan, mirroring overTimeBy — absence stays the exact
+    // full-lookback scan, mirroring windowedSamples — absence stays the exact
     // complement of the present eval grid
     val present = explodeEvalGrid(
         queryRange(metric, matchers, start0 - rangeSec + 1, end0), "ts",
@@ -2128,7 +1684,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       (b, rest) => when(col("value") <= b, lit(b)).otherwise(rest)
     }
     // offset shifts the scanned window back and reports buckets at the
-    // REQUESTED grid, same convention as [[aggregateBy]]
+    // REQUESTED grid, same convention as [[windowedSamples]]
     val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
     val grouped = queryRange(metric, matchers, start - offsetSec,
         end - offsetSec)
@@ -2830,7 +2386,7 @@ object Tsdb {
     * arithmetic throughout. Overlapping windows cost this fixed explode
     * factor, never a shuffle or a self-join per window — the trade
     * Structured Streaming's sliding `window()` makes. Users: the class's
-    * overTimeWindowed (the sliding counter, `*_over_time`, delta,
+    * windowedSamples (the sliding counter, `*_over_time`, delta,
     * idelta/irate and trend functions), absentOverTime, and the subquery
     * outers overTimeOnFrame and counterOverFrame. */
   private[graft] def explodeEvalGrid(
@@ -2921,12 +2477,12 @@ object Tsdb {
     val keys =
       byLabels.map(col) :+ col(if (sliding) "eval_ts" else "bucket_start")
     def agg(from: DataFrame, aggs: Seq[Column]) =
-      from.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+      distinctColumns(from.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*))
     def perSec(c: Column) =
       if (sliding) r6(c / rangeSec) else round(c / rangeSec, 6)
     val total = sum(col("__inc")).cast("double")
     val inc = col("__inc").cast("double")
-    (op, sliding) match {
+    distinctColumns((op, sliding) match {
       case ("sum", _) =>
         agg(perSeries, (if (sliding) Seq(sum(col("__n")).as("n")) else Nil) ++
           Seq(total.as("increase"), perSec(total).as("rate_per_sec")))
@@ -2942,8 +2498,8 @@ object Tsdb {
           min(col("__inc")).cast("double").as("min_increase"),
           max(col("__inc")).cast("double").as("max_increase")))
         if (!rate) moments
-        else Seq("sum", "avg", "min", "max").foldLeft(moments)((df, m) =>
-          df.withColumn(s"${m}_rate", perSec(col(s"${m}_increase"))))
+        else moments.select(col("*") +: Seq("sum", "avg", "min", "max")
+          .map(m => perSec(col(s"${m}_increase")).as(s"${m}_rate")): _*)
       case (_, true) =>
         // the per-series value is quantized (r6 rate / 2-decimal
         // increase), so its integer micros sum losslessly: the spread
@@ -2968,11 +2524,127 @@ object Tsdb {
             sum(col("__m").cast("decimal(19,0)") *
               col("__m").cast("decimal(19,0)")).as("__sum2_m")) ++
             q.map(p => round(percentile(col("v_s"), lit(p)), 6).as("q_v")))
-          .withColumn("stdvar_v", r6(stdvar))
-          .withColumn("stddev_v", r6(sqrt(stdvar)))
+          .select(col("*"), r6(stdvar).as("stdvar_v"),
+            r6(sqrt(stdvar)).as("stddev_v"))
           .drop("__sum_m", "__sum2_m")
-    }
+    })
   }
+
+  /** Stage (b) of the gauge family: [[Tsdb.windowedSamples]]' keyed raw
+    * samples aggregated per group key — per series when `perSeries`
+    * (sid, then the keys; sid leaves the output), the grain of the
+    * top-level `*_over_time` functions, else at the keys' own grain
+    * (`byLabels`, t), the grain of the aggregations and of the subquery
+    * inners. `op` picks the shape and its columns:
+    *  - `moments`: `n`, `sum_v`, `avg_v`, `min_v`, `max_v`, and on the
+    *    sliding grid `last_v` plus the `ts_of_{max,min,last}_v`
+    *    timestamps (callers project; an unread aggregate is pruned);
+    *  - `spread`: `n`, `avg_v`, `stdvar`, `stddev` (`stdvar_v`,
+    *    `stddev_v` on the sliding grid), population moments;
+    *  - `quantile`: `n`, `q_v`, the exact percentile `q`;
+    *  - `mad`: `n`, `mad_v`, the exact median absolute deviation;
+    *  - `delta`: `n`, `delta`, the last minus the first sample;
+    *  - `count_values`: the sample `value` joins the keys, `n` counts.
+    * Sums stay decimal until the final cast; the spread's moment sums
+    * are exact integer cents in a fixed double op order mirrored 1:1 in
+    * the oracles; round(…, 6), the MAD [[r6]]. topk/bottomk/limitk are
+    * [[firstK]] over `moments`, limit_ratio a [[groupU32]] filter. */
+  private[graft] def gaugeAggregate(
+      framed: (DataFrame, Seq[Column]),
+      perSeries: Boolean,
+      op: String,
+      q: Option[Double] = None): DataFrame = {
+    q.foreach(v => require(v >= 0 && v <= 1, s"quantile must be in [0,1]: $v"))
+    val (frame, byKeys) = framed
+    val sliding = frame.columns.contains("eval_ts")
+    val keys = if (perSeries) col("sid") +: byKeys else byKeys
+    def agg(from: DataFrame, aggs: Column*) =
+      distinctColumns(from.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*))
+    val n = count(lit(1)).as("n")
+    val total = sum(col("value").cast("decimal(18,2)")).cast("double")
+    val out = op match {
+      case "moments" =>
+        agg(frame, Seq(n, total.as("sum_v"),
+          (total / count(lit(1))).as("avg_v"),
+          min("value").as("min_v"), max("value").as("max_v")) ++
+          (if (!sliding) Nil else Seq(
+            // the newest sample; a ts tie breaks to the larger value
+            // (max over an orderable struct, like DuckDB's struct max)
+            max(struct(col("ts"), col("value"))).getField("value")
+              .as("last_v"),
+            // Prometheus 3.x ts_of_*: a value tie breaks to the LATEST
+            // sample, so max over a value-first struct, and the min's
+            // over the negated value (exact for doubles)
+            max(struct(col("value").as("v"), col("ts").as("t")))
+              .getField("t").cast("double").as("ts_of_max_v"),
+            max(struct((-col("value")).as("v"), col("ts").as("t")))
+              .getField("t").cast("double").as("ts_of_min_v"),
+            max(col("ts")).cast("double").as("ts_of_last_v"))): _*)
+      case "spread" =>
+        // values carry 2 decimals, so they lift losslessly to integer
+        // cents and both moment sums are exact longs
+        val nD = col("n").cast("double")
+        val meanC = col("__sc").cast("double") / nD
+        val stdvar = (col("__sc2").cast("double") / nD - meanC * meanC) / 1e4
+        val sfx = if (sliding) "_v" else ""
+        agg(frame.withColumn("__c", round(col("value") * 100).cast("long")),
+            n, sum(col("__c")).as("__sc"),
+            sum(col("__c") * col("__c")).as("__sc2"))
+          .select(col("*"), round(meanC / 100.0, 6).as("avg_v"),
+            round(stdvar, 6).as(s"stdvar$sfx"),
+            round(sqrt(stdvar), 6).as(s"stddev$sfx"))
+          .drop("__sc", "__sc2")
+      case "quantile" =>
+        agg(frame, n, round(percentile(col("value"), lit(q.get)), 6).as("q_v"))
+      case "mad" =>
+        // a window median per group, then the median of the absolute
+        // deviations: the groupBy reuses the window's hash partitioning
+        val named = distinctColumns(
+          frame.select((keys :+ col("value").as("__v")): _*))
+        val groups = named.columns.toSeq.dropRight(1).map(col)
+        named
+          .withColumn("__med", percentile(col("__v"), lit(0.5)).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(groups: _*)))
+          .groupBy(groups: _*)
+          .agg(n, r6(percentile(abs(col("__v") - col("__med")), lit(0.5)))
+            .as("mad_v"))
+      case "delta" =>
+        // endpoints by (ts, value) order, so ties are exact duplicates
+        val v = struct(col("ts"), col("v"))
+        agg(frame.withColumn("v", col("value").cast("decimal(18,2)")), n,
+          (max(v).getField("v") - min(v).getField("v")).cast("double")
+            .as("delta"))
+      case "count_values" =>
+        frame.groupBy((keys :+ col("value")): _*).agg(n)
+      case other => throw new IllegalArgumentException(
+        s"unknown gauge aggregation: $other")
+    }
+    val checked = distinctColumns(out)
+    if (perSeries) checked.drop("sid") else checked
+  }
+
+  /** Stage (b)'s label guard: a `by` label may not share its name with
+    * an output column (Spark matches names case-insensitively), or the
+    * result carries two such columns and every read of one fails as
+    * ambiguous. Group keys lead each frame, so the label comes first. */
+  private def distinctColumns(df: DataFrame): DataFrame = {
+    df.columns.groupBy(_.toLowerCase).values.find(_.length > 1).foreach {
+      same => throw new IllegalArgumentException(
+        s"by label '${same(0)}' collides with the output column " +
+        s"'${same(1)}'; rename the label (label_replace) or drop it from " +
+        "the grouping")
+    }
+    df
+  }
+
+  /** The deterministic group hash both 3.x sampling aggregators key on:
+    * md5-u32 of the salted, `|`-joined group label values (absent labels
+    * hash as the empty string). Bit-identical in every engine — the
+    * DuckDB oracles reproduce the exact sample. */
+  private[graft] def groupU32(byLabels: Seq[String], salt: String): Column =
+    conv(substring(md5(concat(lit(salt), concat_ws("|",
+      byLabels.map(l => coalesce(col(l), lit(""))): _*))), 1, 8), 16, 10)
+      .cast("long")
 
   /** The exact least-squares tail of deriv / predict_linear. `frame`
     * carries decimal(20,0) integers `x` (seconds from the fit origin) and
@@ -3020,7 +2692,7 @@ object Tsdb {
     * already-aggregated frame, so its state is one partition's groups,
     * never sample grain. `k` is a Column so each caller keeps its own
     * literal type (Int in Tsdb, Long from the PromQL AST). Users:
-    * topKBy, bottomKBy, limitKBy and PromQL's topk/bottomk over the
+    * PromQL's topk/bottomk/limitk over the gauge `moments` and the
     * counter family's `sum` (tumbling and the subquery inner). */
   private[graft] def firstK(
       frame: DataFrame,
@@ -3144,7 +2816,7 @@ object Tsdb {
       // moment-only plans stay sort-free
       quantile.map(qv =>
         round(percentile(col(valCol), lit(qv)), 6).as("q_v")) ++
-      // stddev/stdvar over the window: the overTimeBy integer-spread
+      // stddev/stdvar over the window: the gauge `spread` integer
       // exactness scheme, at MICRO grain because the inner value is
       // 6-decimal quantized (the counter family's round(…,6)) — lossless
       // integer micro sums, fixed double op order mirrored 1:1 in the
@@ -3159,7 +2831,7 @@ object Tsdb {
       // mad_over_time: exact median absolute deviation of the window's
       // inner values — the per-(group, eval) median rides a window
       // percentile on the SAME partitioning as the groupBy (exchange
-      // reused, the madBy scheme), the deviation median is one more
+      // reused, the gauge `mad` scheme), the deviation median is one more
       // exact percentile, tie-free floor-rounded
       (if (!mad) Seq.empty
       else Seq(r6(percentile(abs(col(valCol) - col("__med")), lit(0.5)))
@@ -3193,7 +2865,7 @@ object Tsdb {
     * half of `rate/increase/delta/idelta/irate/resets/changes/deriv/
     * predict_linear( <computed-vector>[range:step] )`, consuming the
     * same (keys, eval_ts, value) frames the `*_over_time` outers do
-    * (sliding [[counterAggregate]] / slidingOverTimeBy output).
+    * (sliding [[counterAggregate]] / [[gaugeAggregate]] output).
     * Semantics: the inner eval points in each outer window
     * `(T − rangeSec, T]` form the range vector; pairwise functions
     * (rate/increase/resets/changes/idelta/irate) use consecutive inner

@@ -11,12 +11,13 @@ import org.apache.spark.sql.functions.{abs => cAbs, ceil => cCeil, coalesce, col
   *
   *   topk(3, sum by (cohort) (click[1h]))
   *
-  * parses to a small AST and compiles, by shape, onto the SAME operator
-  * methods the direct Scala API exposes ([[graft.Tsdb.aggregateBy]],
-  * [[graft.Tsdb.topKBy]], …) — so every compiled query inherits the
-  * operators' oracle-exact semantics and their plan-gated scale shapes
-  * (one-shuffle aggregations, pruned scans), and the string front-end adds
-  * ZERO new execution paths to audit.
+  * parses to a small AST and compiles, by family, onto the engine's
+  * composable stages ([[graft.Tsdb.windowedSamples]], then
+  * [[graft.Tsdb.gaugeAggregate]] or [[graft.Tsdb.counterAggregate]], …)
+  * and the remaining direct Scala operators — so every compiled query
+  * inherits their oracle-exact semantics and plan-gated scale shapes
+  * (one-shuffle aggregations, pruned scans), and the string front-end
+  * adds ZERO new execution paths to audit.
   *
   * Dialect notes (documented divergences, all toward the engine's
   * range-bucket model):
@@ -24,7 +25,7 @@ import org.apache.spark.sql.functions.{abs => cAbs, ceil => cCeil, coalesce, col
   *  - `metric[d]` inside an aggregation means "tumbling d-second buckets"
   *    (the engine's step grid), not PromQL's instant-vector lookback; the
   *    result carries `bucket_start` like the underlying operators.
-  *  - Results keep the operator's full column set (e.g. `aggregateBy`
+  *  - Results keep the operator's full column set (e.g. `sum by`
   *    returns every moment; `sum` is the `sum_v` column) rather than
   *    collapsing to a single `value` — callers are DataFrame users.
   *  - `*_over_time`, `quantile_over_time`, `predict_linear` and
@@ -324,6 +325,14 @@ object PromQL {
     "sort_by_label", "sort_by_label_desc")
 
   private val MomentAggs = Set("sum", "avg", "min", "max", "count")
+  /** Each label aggregation over a plain selector → its
+    * [[Tsdb.gaugeAggregate]] op. */
+  private val GaugeAggOps = MomentAggs.map(_ -> "moments").toMap ++ Map(
+    "stddev" -> "spread", "stdvar" -> "spread", "quantile" -> "quantile",
+    "count_values" -> "count_values")
+  /** The columns of a top-level `*_over_time` moment function. */
+  private val OverTimeCols =
+    Seq("n", "sum_v", "avg_v", "min_v", "max_v", "last_v")
   private val ArithOps = Set("/", "*", "+", "-", "%", "^", "atan2")
   private val CmpOps = Set(">", "<", ">=", "<=")
   private val SetOps = Set("and", "or", "unless")
@@ -603,7 +612,7 @@ object PromQL {
             expectSym(",")
           case "count_values" =>
             next() match {
-              // the engine's countValuesBy groups by the value column
+              // the engine's count_values groups by the value column
               // itself; a non-default label becomes a ValueLabel rename
               // wrapper around the aggregation at the end of this case
               case Str(s) if s.matches("[a-zA-Z_][a-zA-Z0-9_]*") =>
@@ -1271,6 +1280,28 @@ object PromQL {
       by, range, op, rate = fn == "rate", q)
   }
 
+  /** The gauge family — raw-sample `op` of `sel` (a
+    * [[Tsdb.gaugeAggregate]] shape; `shape` names it in errors) —
+    * through its two stages: [[Tsdb.windowedSamples]] on the tumbling
+    * grid (`grid` None) or the sliding one every `grid`, then
+    * [[Tsdb.gaugeAggregate]] per series or at the `by` grain. */
+  private def gaugeFamily(
+      t: Tsdb,
+      sel: Selector,
+      by: Seq[String],
+      op: String,
+      shape: String,
+      start: Long,
+      end: Long,
+      grid: Option[Long] = None,
+      perSeries: Boolean = false,
+      q: Option[Double] = None,
+      relabel: Column => Column = identity): DataFrame =
+    Tsdb.gaugeAggregate(
+      t.windowedSamples(sel.metric, sel.matchers, start, end, by,
+        stepOf(sel, shape), grid, sel.offsetSec, relabel = relabel),
+      perSeries, op, q)
+
   /** The value column of the counter family's `sum` for `fn`. */
   private def counterCol(fn: String): String =
     if (fn == "rate") "rate_per_sec" else "increase"
@@ -1653,8 +1684,8 @@ object PromQL {
       s"scalar operand needs a single-valued vector side, got: $other")
   }
 
-  /** The moment column a vector-match side contributes ([[Tsdb
-    * .aggregateBy]]'s output names) — enables non-sum matches like
+  /** The moment column a vector-match side contributes (the gauge
+    * `moments` output names) — enables non-sum matches like
     * `max by (c)(a[1h]) / avg by (c)(b[1h])`. */
   private def momentCol(aggOp: String): String = aggOp match {
     case "sum" => "sum_v"; case "avg" => "avg_v"; case "min" => "min_v"
@@ -2009,14 +2040,20 @@ object PromQL {
             (counterInner(n, sel, by, op, q), by,
               SlidingCounterCol.getOrElse(op, counterCol(n)))
           // gauge smoothing inner: `max_over_time(avg_over_time(x[5m])
-          // [1h:5m])` — the inner moments evaluate sliding on the
-          // subquery grid (Tsdb.slidingOverTimeBy, the exact overTimeBy
-          // moment set), the outer aggregates those points
+          // [1h:5m])` — the gauge moments evaluate sliding on the
+          // subquery grid at the `by` grain, the outer aggregates those
+          // points. The mean is floor-r6 quantized, so spread/counter
+          // outers over it stay in the integer-micro exactness family
+          // (the other moments are 2-decimal values or their sums)
           case RangeFn(n, _, sel, by, _) if gaugeVal.contains(n) =>
             val ks = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-            (t.slidingOverTimeBy(sel.metric, sel.matchers, s0 - rangeSec,
-              e0, ks, stepSec, stepOf(sel, n), sel.offsetSec),
-              ks, gaugeVal(n))
+            val v = gaugeVal(n)
+            (gaugeFamily(t, sel, ks, "moments", n, s0 - rangeSec, e0,
+                Some(stepSec))
+              .select((ks.map(col) :+ col("eval_ts")) :+ (
+                if (v == "avg_v") Tsdb.r6(col("sum_v") / col("n"))
+                else col(v)).as(v): _*),
+              ks, v)
           // selection-aggregated inner: `topk(k, sum by (l)(rate(x[d])))
           // [R:s]` — "time spent in the top k": at each subquery eval
           // point the k highest(/lowest)-valued groups survive, so
@@ -2123,7 +2160,7 @@ object PromQL {
         // QUANTIZED inner values: the counter family's round(…,6) rate,
         // the 2-decimal delta-sum increase/sum, integer counts, the
         // floor-r6 moment/quantile columns, and — since the gauge
-        // avg_v legs (slidingOverTimeBy, the sliding counter moments)
+        // avg_v legs (the gauge inner, the sliding counter moments)
         // adopted the tie-free floor-r6 quantization — every gauge
         // moment too (min/max/last are raw 2-decimal sample values,
         // sum_v their exact decimal sum). The one remaining unquantized
@@ -2593,19 +2630,20 @@ object PromQL {
       case Selector(m, ms, _, off, _, _) =>
         t.queryRange(m, ms, start - off, end - off)
 
-      // moment aggregations over a plain selector → ONE hash aggregation
       // `group by (l)` — Prometheus's presence aggregator: 1 for every
-      // populated (group, bucket) cell; rides the one-shuffle
-      // aggregateBy and projects the constant
+      // populated (group, bucket) cell, a projection of the moments
       case Agg("group", _, _, by, sel: Selector, _) =>
-        t.aggregateBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "group by"), sel.offsetSec)
+        gaugeFamily(t, sel, by, "moments", "group by", start, end)
           .select(by.map(col) ++
             Seq(col("bucket_start"), lit(1.0).as("group_v")): _*)
 
-      case Agg(op, _, _, by, sel: Selector, _) if MomentAggs(op) =>
-        t.aggregateBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, s"$op by"), sel.offsetSec)
+      // label aggregations over a plain selector → ONE hash aggregation
+      // per (group, bucket): the moments, stddev/stdvar, quantile and
+      // count_values shapes of the gauge family
+      case Agg(op, _, q, by, sel: Selector, _)
+          if GaugeAggOps.contains(op) && (op == "quantile") == q.isDefined =>
+        gaugeFamily(t, sel, by, GaugeAggOps(op), s"$op by", start, end,
+          q = q)
 
       // moment aggregations over a RELABELED selector — the recording-rule
       // shape `sum by (dst)(label_replace(x[step], …))`. The rewrite runs
@@ -2614,8 +2652,7 @@ object PromQL {
       // aggregation at zero extra shuffles.
       case Agg(op, _, _, by, LabelFn(name, sel: Selector, args), _)
           if MomentAggs(op) =>
-        t.aggregateBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, s"$op by ($name)"), sel.offsetSec,
+        gaugeFamily(t, sel, by, "moments", s"$op by ($name)", start, end,
           relabel = relabelOf(name, args))
 
       // bare label_replace/label_join over a selector: the raw range scan
@@ -2624,19 +2661,6 @@ object PromQL {
         t.queryRange(sel.metric, sel.matchers,
             start - sel.offsetSec, end - sel.offsetSec)
           .withColumn("labels", relabelOf(name, args)(col("labels")))
-
-      case Agg(op, _, _, by, sel: Selector, _)
-          if op == "stddev" || op == "stdvar" =>
-        t.stddevBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, s"$op by"), sel.offsetSec)
-
-      case Agg("quantile", _, Some(q), by, sel: Selector, _) =>
-        t.quantileBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "quantile by"), q, sel.offsetSec)
-
-      case Agg("count_values", _, _, by, sel: Selector, _) =>
-        t.countValuesBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "count_values"), sel.offsetSec)
 
       // custom output label: the same aggregation with the value column
       // surfaced under the requested name (a zero-cost projection). The
@@ -2650,25 +2674,41 @@ object PromQL {
           s"column (${df.columns.mkString(", ")})")
         df.withColumnRenamed("value", lbl)
 
-      // rank compositions: topk/bottomk over an inner sum-by
-      case Agg("topk", Some(k), _, _, Agg("sum", _, _, by, sel: Selector, _), _) =>
-        t.topKBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "topk(sum by)"), k.toInt, sel.offsetSec)
-      case Agg("bottomk", Some(k), _, _,
+      // rank and sample compositions over an inner sum-by, riding the
+      // moments' group-sized output: topk/bottomk rank the sums per
+      // bucket (ties break on the labels); the 3.x limitk keeps a
+      // value-blind k-sample of groups, pinned to the md5-u32 of the
+      // group labels (Tsdb.groupU32) so membership is stable across
+      // runs, partitionings and engines, and limit_ratio keeps a ~r
+      // fraction by the same hash — a negative r exactly the complement
+      // of limit_ratio(1 + r), Prometheus's split-traffic idiom
+      case Agg(rank @ ("topk" | "bottomk" | "limitk"), Some(k), _, _,
           Agg("sum", _, _, by, sel: Selector, _), _) =>
-        t.bottomKBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "bottomk(sum by)"), k.toInt, sel.offsetSec)
-
-      // 3.x sampling aggregators: value-blind deterministic group
-      // samples over the inner sum-by (hash-pinned — see Tsdb.limitKBy)
-      case Agg("limitk", Some(k), _, _,
-          Agg("sum", _, _, by, sel: Selector, _), _) =>
-        t.limitKBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "limitk(sum by)"), k.toInt, sel.offsetSec)
+        require(rank != "limitk" || k > 0, s"limitk k must be > 0: $k")
+        val ord = rank match {
+          case "topk" => col("sum_v").desc
+          case "bottomk" => col("sum_v").asc
+          case _ => Tsdb.groupU32(by, "lk").asc
+        }
+        Tsdb.firstK(
+            gaugeFamily(t, sel, by, "moments", s"$rank(sum by)", start, end),
+            Seq(col("bucket_start")), ord +: by.map(col), lit(k.toInt))
+          .select(by.map(col) ++ Seq(col("bucket_start"), col("rk"),
+            col("n"), col("sum_v")): _*)
       case Agg("limit_ratio", _, Some(r), _,
           Agg("sum", _, _, by, sel: Selector, _), _) =>
-        t.limitRatioBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "limit_ratio(sum by)"), r, sel.offsetSec)
+        require(r >= -1.0 && r <= 1.0,
+          s"limit_ratio r must be in [-1, 1]: $r")
+        val u = Tsdb.groupU32(by, "lk")
+        val space = 4294967296L // 2^32
+        val keep =
+          if (r >= 0) u < lit(math.floor(r * space).toLong)
+          else u >= lit(math.floor((1.0 + r) * space).toLong)
+        gaugeFamily(t, sel, by, "moments", "limit_ratio(sum by)", start,
+            end)
+          .where(keep)
+          .select(by.map(col) ++ Seq(col("bucket_start"),
+            col("n"), col("sum_v")): _*)
 
       // ranked counter form — `topk(k, sum by (l)(rate(x[1h])))`, the
       // canonical "top k by request rate" dashboard query (bottomk is
@@ -2743,14 +2783,7 @@ object PromQL {
 
       case RangeFn("delta", _, sel, by, _) =>
         val keys = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-        sel.stepSec match {
-          case Some(s) =>
-            t.slidingDeltaBy(sel.metric, sel.matchers, start, end, keys,
-              s, stepOf(sel, "delta"), sel.offsetSec)
-          case None =>
-            t.deltaBy(sel.metric, sel.matchers, start, end, keys,
-              stepOf(sel, "delta"), sel.offsetSec)
-        }
+        gaugeFamily(t, sel, keys, "delta", "delta", start, end, sel.stepSec)
 
       // instant-pair family: per-series last-two-samples delta/rate
       case RangeFn(fn, _, sel, by, _) if fn == "irate" || fn == "idelta" =>
@@ -2763,58 +2796,35 @@ object PromQL {
               stepOf(sel, fn), sel.offsetSec)
         }
 
-      // the *_over_time family on the sliding eval grid; the grid step
-      // defaults to the window (PromQL's default query_range alignment),
-      // or is pinned independently by the [range:step] subquery form —
-      // overTimeBy returns every moment, callers project
-      case RangeFn(fn, _, sel, by, _) if OverTime(fn) =>
-        t.overTimeBy(sel.metric, sel.matchers, start, end, by,
-          sel.stepSec.getOrElse(stepOf(sel, fn)), stepOf(sel, fn),
-          sel.offsetSec)
+      // the *_over_time family per series on the sliding eval grid;
+      // the grid step defaults to the window (PromQL's default
+      // query_range alignment), or is pinned independently by the
+      // [range:step] subquery form. Each function projects its columns
+      // of one gauge aggregation: the moments (the 3.x ts_of_* reads
+      // one timestamp, a value tie to the LATEST sample; [range:step]
+      // subquery steps and rules reject it, TsOfFns ∉ OverTime), the
+      // integer-cents spread, or present_over_time's 1.0 for every
+      // (series, eval point) holding a sample — every output row
+      case RangeFn(fn, _, sel, by, _) if OverTime(fn) ||
+          SpreadOverTime(fn) || TsOfFns(fn) || fn == "present_over_time" =>
+        val (op, values) =
+          if (SpreadOverTime(fn))
+            ("spread", Seq(col("n"), col("stdvar_v"), col("stddev_v")))
+          else if (TsOfFns(fn))
+            ("moments", Seq(col(fn.stripSuffix("_over_time") + "_v")))
+          else if (fn == "present_over_time")
+            ("moments", Seq(lit(1.0).as("present_v")))
+          else ("moments", OverTimeCols.map(col))
+        gaugeFamily(t, sel, by, op, fn, start, end,
+            Some(sel.stepSec.getOrElse(stepOf(sel, fn))), perSeries = true)
+          .select((by.map(col) :+ col("eval_ts")) ++ values: _*)
 
-      // stddev/stdvar over the window: the same single hash aggregation
-      // with the integer-cents spread moments switched on
-      case RangeFn(fn, _, sel, by, _) if SpreadOverTime(fn) =>
-        t.overTimeBy(sel.metric, sel.matchers, start, end, by,
-            sel.stepSec.getOrElse(stepOf(sel, fn)), stepOf(sel, fn),
-            sel.offsetSec, spread = true)
-          .select((by.map(col) ++ Seq(col("eval_ts"), col("n"),
-            col("stdvar_v"), col("stddev_v"))): _*)
-
-      // Prometheus 3.x experimental ts_of_* family: the epoch-seconds
-      // timestamp (as a double, matching Prometheus) of the max / min /
-      // last sample in each window. Value ties break to the LATEST
-      // sample (Prometheus scans chronologically keeping >= / <=) —
-      // max over a value-first orderable struct, negated value for the
-      // min variant. Same single hash aggregation as the moment family
-      // (overTimeBy's opt-in tsOf aggs); [range:step] subquery steps
-      // and rules integration reject loudly (TsOfFns ∉ OverTime).
-      case RangeFn(fn, _, sel, by, _) if TsOfFns(fn) =>
-        t.overTimeBy(sel.metric, sel.matchers, start, end, by,
-            sel.stepSec.getOrElse(stepOf(sel, fn)), stepOf(sel, fn),
-            sel.offsetSec, tsOf = true)
-          .select((by.map(col) ++ Seq(col("eval_ts"),
-            col(fn.stripSuffix("_over_time") + "_v"))): _*)
-
-      // present_over_time: 1.0 for every (series-group, eval point)
-      // holding at least one sample — every overTimeBy output row
-      // qualifies by construction, so it's a projection of the grid
-      case RangeFn("present_over_time", _, sel, by, _) =>
-        t.overTimeBy(sel.metric, sel.matchers, start, end, by,
-            sel.stepSec.getOrElse(stepOf(sel, "present_over_time")),
-            stepOf(sel, "present_over_time"), sel.offsetSec)
-          .select((by.map(col) ++ Seq(col("eval_ts"),
-            lit(1.0).as("present_v"))): _*)
-
-      case RangeFn("quantile_over_time", Some(q), sel, by, _) =>
-        t.quantileBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "quantile_over_time"), q, sel.offsetSec)
-
-      // Prometheus 3.x robust spread: exact median-absolute-deviation of
-      // the raw samples per (group, step bucket)
-      case RangeFn("mad_over_time", _, sel, by, _) =>
-        t.madBy(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "mad_over_time"), sel.offsetSec)
+      // quantile_over_time and the 3.x robust spread mad_over_time
+      // (exact median absolute deviation): per (group, step bucket)
+      case RangeFn(fn @ ("quantile_over_time" | "mad_over_time"), q, sel,
+          by, _) if (fn == "quantile_over_time") == q.isDefined =>
+        gaugeFamily(t, sel, by, if (q.isDefined) "quantile" else "mad", fn,
+          start, end, q = q)
 
       case RangeFn("predict_linear", _, sel, by, Some(atSec)) =>
         sel.stepSec match {

@@ -150,7 +150,7 @@ object AlertStream {
   private def moment(op: String, b: Bucket): Double = op match {
     case "sum" => b.sum.toDouble
     // divide AFTER the double conversion — the batch avg_v is an IEEE
-    // division of the double-cast decimal sum (Tsdb.aggregateBy), and a
+    // division of the double-cast decimal sum (Tsdb.gaugeAggregate), and a
     // BigDecimal division would round differently at the ulp
     case "avg" => b.sum.toDouble / b.n
     case "count" => b.n.toDouble

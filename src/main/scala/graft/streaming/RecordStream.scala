@@ -21,7 +21,7 @@ import graft.promql.{PromQL, Rules}
   * is Spark's own windowed agg (map-side partial aggregation, RocksDB/
   * HDFS state store, watermark-driven eviction), and the reshape is a
   * stateless projection. Sums accumulate in decimal(18,2) exactly like
-  * [[graft.Tsdb.aggregateBy]], so a recorded value is bit-equal to the
+  * [[graft.Tsdb.gaugeAggregate]], so a recorded value is bit-equal to the
   * batch rule's.
   */
 object RecordStream {

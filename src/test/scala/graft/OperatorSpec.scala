@@ -1341,17 +1341,19 @@ class OperatorSpec extends SparkSuite {
     assert(math.abs(shareSum - 1.0) < 1e-4, s"shares sum to $shareSum")
   }
 
-  test("topKBy returns the true per-bucket top groups") {
+  test("topk over sum by returns the true per-bucket top groups") {
     val t = Tsdb.attach(spark, Tables.events(spark, sf0001).select(
       col("event_type").as("metric"),
       map(lit("user_id"), col("user_id").cast("string"),
         lit("cohort"), pmod(col("user_id"), lit(10)).cast("string")).as("labels"),
       col("ts_s").as("ts"), col("value")))
     val (t0, t1) = (1704412800L, 1705017599L)
-    val full = t.aggregateBy("click", Seq.empty, t0, t1, Seq("cohort"), 3600L)
+    val full = graft.promql.PromQL.query(t, "sum by (cohort) (click[1h])",
+        t0, t1)
       .select("bucket_start", "cohort", "sum_v").collect()
       .groupBy(_.getLong(0))
-    val top = t.topKBy("click", Seq.empty, t0, t1, Seq("cohort"), 3600L, 3)
+    val top = graft.promql.PromQL.query(t,
+        "topk(3, sum by (cohort) (click[1h]))", t0, t1)
       .select("bucket_start", "cohort", "sum_v", "rk").collect()
       .groupBy(_.getLong(0))
     top.foreach { case (bucket, rows) =>

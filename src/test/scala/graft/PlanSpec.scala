@@ -201,6 +201,38 @@ class PlanSpec extends SparkSuite {
     assert(got == pinned, got.mkString("\n"))
   }
 
+  test("gauge family: each shape keeps its hash-exchange count") {
+    // one exchange for the cross-series (or per-series) aggregation; the
+    // rank forms add the bucket-partitioned row_number and the subquery
+    // its outer window (tsdb_delta is the EventOps bucket-lag form)
+    val pinned = Seq(
+      "tsdb_agg_by" -> 1,
+      "tsdb_offset" -> 1,
+      "tsdb_topk" -> 2,
+      "tsdb_bottomk" -> 2,
+      "tsdb_limitk" -> 2,
+      "tsdb_limit_ratio" -> 1,
+      "tsdb_quantile_over_time" -> 1,
+      "tsdb_promql_mad" -> 1,
+      "tsdb_stddev" -> 1,
+      "tsdb_over_time" -> 1,
+      "tsdb_ts_of" -> 1,
+      "tsdb_promql_stdvar_over_time" -> 1,
+      "tsdb_promql_present_over_time" -> 1,
+      "tsdb_delta" -> 2,
+      "tsdb_promql_delta" -> 1,
+      "tsdb_promql_subquery_delta" -> 1,
+      "tsdb_promql_group" -> 1,
+      "tsdb_promql_label_replace" -> 1,
+      "tsdb_promql_subquery_gauge" -> 2,
+      "tsdb_count_values" -> 1)
+    val got = pinned.map { case (name, _) =>
+      name -> "Exchange hashpartitioning".r
+        .findAllIn(planOf(SparkEntry.queries(name)(spark, sf0001))).length
+    }
+    assert(got == pinned, got.mkString("\n"))
+  }
+
   test("vector compares: group-sized equi-joins, bounded exchanges, " +
       "no cartesian") {
     // counter-family compare (generic path): two lag+agg sides joined
@@ -546,8 +578,8 @@ class PlanSpec extends SparkSuite {
         map(lit("user_id"), col("user_id").cast("string")).as("labels"),
         col("ts_s").as("ts"), col("value"))
     val t = Tsdb.attach(spark, ev)
-    val plan = t.aggregateBy("click", Seq.empty, 1704412800L, 1705017599L,
-      Seq("user_id"), 3600L).queryExecution.executedPlan.toString
+    val plan = graft.promql.PromQL.query(t, "sum by (user_id) (click[1h])",
+      1704412800L, 1705017599L).queryExecution.executedPlan.toString
     // Spark renders the spread exchange as 'RoundRobinPartitioning';
     // match case-insensitively so a renderer tweak can't silently
     // vacuate the gate

@@ -61,52 +61,197 @@ class PromQLSpec extends SparkSuite {
   private def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  test("sum by (cohort) (click[1h]) == aggregateBy") {
-    assertSame(
-      PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1),
-      t.aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
+  /** The engine's tie-free floor-r6 rounding. */
+  private def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
+  // ---- driver-side replays of the gauge family's documented rules ----
+
+  /** A raw sample: (first label, second label, ts, exact value). */
+  private type Sample = (String, String, Long, BigDecimal)
+
+  /** The `click` samples as (cohort, user_id, ts, value), one day of
+    * lookback before T0 included. */
+  private lazy val clicks: Seq[Sample] =
+    t.queryRange("click", Seq.empty, T0 - 86400L, T1)
+      .select(col("labels")("cohort"), col("labels")("user_id"), col("ts"),
+        col("value"))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        BigDecimal(r.getDouble(3))))
+
+  /** The eval grid: the multiples of `st` within [lo, hi]. */
+  private def evalPoints(lo: Long, hi: Long, st: Long): Seq[Long] =
+    (Math.floorDiv(lo + st - 1, st) * st).to(Math.floorDiv(hi, st) * st, st)
+
+  /** The tumbling rule: each sample of the scan [start − o, end − o] in
+    * its bucket ts − ts mod step, reported o forward; grouped by `key`
+    * then the bucket. */
+  private def bucketed(ss: Seq[Sample], start: Long, end: Long, step: Long,
+      o: Long = 0L)(key: Sample => Seq[Any]): Map[Seq[Any], Seq[Sample]] =
+    ss.filter(s => s._3 >= start - o && s._3 <= end - o)
+      .groupBy(s => key(s) :+ (s._3 - Math.floorMod(s._3, step) + o))
+
+  /** The sliding rule: at each eval point E of [start − o, end − o]
+    * every `step`, the samples with E − range < ts ≤ E, grouped by `key`
+    * then E + o. */
+  private def windowed(ss: Seq[Sample], start: Long, end: Long, step: Long,
+      range: Long, o: Long = 0L)(key: Sample => Seq[Any])
+      : Seq[(Seq[Any], Seq[Sample])] =
+    for {
+      e <- evalPoints(start - o, end - o, step)
+      (k, in) <- ss.filter(s => s._3 > e - range && s._3 <= e)
+        .groupBy(key).toSeq
+    } yield (k :+ (e + o), in)
+
+  /** The gauge moments `n, sum_v, avg_v, min_v, max_v`: an exact decimal
+    * sum, then Spark's double division. */
+  private def moments(ss: Seq[Sample]): Seq[Any] = {
+    val vs = ss.map(_._4)
+    Seq(vs.size.toLong, vs.sum.toDouble, vs.sum.toDouble / vs.size,
+      vs.min.toDouble, vs.max.toDouble)
+  }
+
+  /** `last_v`: the newest sample, a ts tie to the larger value. */
+  private def lastOf(ss: Seq[Sample]): Double =
+    ss.maxBy(s => (s._3, s._4))._4.toDouble
+
+  /** The gauge spread `n, avg_v, stdvar, stddev`: exact integer-cents
+    * sums in Spark's double op order, round(…, 6). */
+  private def spreadOf(ss: Seq[Sample]): Seq[Any] = {
+    val cs = ss.map(s => (s._4 * 100).toLongExact)
+    val n = cs.size.toDouble
+    val mean = cs.sum.toDouble / n
+    val sv = (cs.map(c => c * c).sum.toDouble / n - mean * mean) / 1e4
+    Seq(cs.size.toLong, round6(mean / 100.0), round6(sv),
+      round6(math.sqrt(sv)))
+  }
+
+  /** The gauge delta: the last minus the first sample in (ts, value)
+    * order. */
+  private def endpoints(ss: Seq[Sample]): Double = {
+    val sorted = ss.sortBy(s => (s._3, s._4))
+    (sorted.last._4 - sorted.head._4).toDouble
+  }
+
+  /** md5-u32 of the salted group label, the limitk / limit_ratio hash. */
+  private def groupU32(label: String): Long = java.lang.Long.parseLong(
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(("lk" + label).getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(8), 16)
+
+  /** The `sum by (cohort) (click[1h])` rows ranked per bucket by `key`
+    * of (cohort, sum_v): the first k as `cohort, bucket_start, rk, n,
+    * sum_v`, the topk / bottomk / limitk shape. */
+  private def firstKOf(start: Long, o: Long, k: Int)(
+      key: (String, Double) => (Double, String)): Set[Seq[Any]] =
+    bucketed(clicks, start, T1, 3600L, o)(s => Seq(s._1)).toSeq
+      .map { case (Seq(c: String, b: Long), ss) =>
+        (c, b, ss.size.toLong, ss.map(_._4).sum.toDouble) }
+      .groupBy(_._2).values
+      .flatMap(_.sortBy(r => key(r._1, r._4)).take(k).zipWithIndex.map {
+        case ((c, b, n, v), i) => Seq[Any](c, b, i + 1, n, v) })
+      .toSet
+
+  private def rowSet(df: DataFrame, cols: String*): Set[Seq[Any]] =
+    df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+
+  /** The rows as a multiset: per-series outputs repeat their labels. */
+  private def bag(rs: Iterable[Seq[Any]]): Map[Seq[Any], Int] =
+    rs.groupBy(identity).map { case (r, same) => r -> same.size }
+
+  private def bagOf(df: DataFrame, cols: String*): Map[Seq[Any], Int] =
+    bag(df.select(cols.map(col): _*).collect().map(_.toSeq))
+
+  /** The output columns of a label aggregation's moments. */
+  private val MomentCols =
+    Seq("bucket_start", "n", "sum_v", "avg_v", "min_v", "max_v")
+
+  test("sum by (cohort) (click[1h]) == the driver-side moments replay") {
+    val df = PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1)
+    assert(df.columns.toSeq == "cohort" +: MomentCols)
+    assert(rowSet(df, df.columns.toSeq: _*) ==
+      bucketed(clicks, T0, T1, 3600L)(s => Seq(s._1))
+        .map { case (k, ss) => k ++ moments(ss) }.toSet)
   }
 
   test("selector with matchers and offset compiles to queryRange") {
     assertSame(
       PromQL.query(t, """click{cohort="3"}""", T0, T1),
       t.queryRange("click", Seq(LabelMatcher.eq("cohort", "3")), T0, T1))
-    assertSame(
-      PromQL.query(t,
+    assert(rowSet(PromQL.query(t,
         """sum by (cohort) (click{cohort!="3"}[1h] offset 1d)""",
-        T0 + 86400L, T1),
-      t.aggregateBy("click", Seq(LabelMatcher.neq("cohort", "3")),
-        T0 + 86400L, T1, Seq("cohort"), 3600L, offsetSec = 86400L))
+        T0 + 86400L, T1), "cohort" +: MomentCols: _*) ==
+      bucketed(clicks.filter(_._1 != "3"), T0 + 86400L, T1, 3600L, 86400L)(
+        s => Seq(s._1)).map { case (k, ss) => k ++ moments(ss) }.toSet)
   }
 
   test("regex matchers parse to the regex fast-path matcher") {
-    assertSame(
-      PromQL.query(t, """sum by (cohort) (click{cohort=~"1|2"}[1h])""",
-        T0, T1),
-      t.aggregateBy("click",
-        Seq(LabelMatcher.re("cohort", "1|2")), T0, T1, Seq("cohort"), 3600L))
+    assert(rowSet(PromQL.query(t,
+        """sum by (cohort) (click{cohort=~"1|2"}[1h])""", T0, T1),
+        "cohort" +: MomentCols: _*) ==
+      bucketed(clicks.filter(s => s._1 == "1" || s._1 == "2"), T0, T1,
+        3600L)(s => Seq(s._1)).map { case (k, ss) => k ++ moments(ss) }
+        .toSet)
   }
 
   test("stddev / quantile / count_values by") {
-    assertSame(
-      PromQL.query(t, "stddev by (cohort) (click[1h])", T0, T1),
-      t.stddevBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
-    assertSame(
-      PromQL.query(t, "quantile(0.95, click[1h]) by (cohort)", T0, T1),
-      t.quantileBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, 0.95))
-    assertSame(
-      PromQL.query(t, """count_values("value", click[1d]) by (cohort)""",
-        T0, T1),
-      t.countValuesBy("click", Seq.empty, T0, T1, Seq("cohort"), 86400L))
+    val hourly = bucketed(clicks, T0, T1, 3600L)(s => Seq(s._1))
+    val sd = PromQL.query(t, "stddev by (cohort) (click[1h])", T0, T1)
+    assert(sd.columns.toSeq ==
+      Seq("cohort", "bucket_start", "n", "avg_v", "stdvar", "stddev"))
+    assert(rowSet(sd, sd.columns.toSeq: _*) ==
+      hourly.map { case (k, ss) => k ++ spreadOf(ss) }.toSet)
+    val q = PromQL.query(t, "quantile(0.95, click[1h]) by (cohort)", T0, T1)
+    assert(q.columns.toSeq == Seq("cohort", "bucket_start", "n", "q_v"))
+    assert(rowSet(q, q.columns.toSeq: _*) == hourly.map { case (k, ss) =>
+      k ++ Seq(ss.size.toLong,
+        round6(percentileOf(ss.map(_._4.toDouble), 0.95)))
+    }.toSet)
+    val cv = PromQL.query(t,
+      """count_values("value", click[1d]) by (cohort)""", T0, T1)
+    assert(cv.columns.toSeq == Seq("cohort", "bucket_start", "value", "n"))
+    assert(rowSet(cv, cv.columns.toSeq: _*) ==
+      bucketed(clicks, T0, T1, 86400L)(s => Seq(s._1)).flatMap {
+        case (k, ss) => ss.groupBy(_._4.toDouble).map { case (v, same) =>
+          k ++ Seq(v, same.size.toLong) }
+      }.toSet)
   }
 
   test("topk / bottomk over sum by") {
-    assertSame(
-      PromQL.query(t, "topk(3, sum by (cohort) (click[1h]))", T0, T1),
-      t.topKBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, 3))
-    assertSame(
-      PromQL.query(t, "bottomk(3, sum by (cohort) (click[1h]))", T0, T1),
-      t.bottomKBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, 3))
+    // rank by the sum (desc / asc), ties broken on the cohort label
+    val rk = Seq("cohort", "bucket_start", "rk", "n", "sum_v")
+    val top = PromQL.query(t, "topk(3, sum by (cohort) (click[1h]))", T0, T1)
+    assert(top.columns.toSeq == rk)
+    assert(rowSet(top, rk: _*) == firstKOf(T0, 0L, 3)((c, v) => (-v, c)))
+    assert(rowSet(PromQL.query(t, "bottomk(3, sum by (cohort) (click[1h]))",
+      T0, T1), rk: _*) == firstKOf(T0, 0L, 3)((c, v) => (v, c)))
+  }
+
+  test("a by label named like an output column is rejected, naming both") {
+    // the result would carry two such columns (Spark matches names
+    // case-insensitively) and every read of one would fail as ambiguous
+    import spark.implicits._
+    val store = Tsdb.attach(spark, Seq(
+        ("m", Map("n" -> "a", "sum_v" -> "b"), T0 + 10L, 1.0),
+        ("m", Map("n" -> "a", "sum_v" -> "b"), T0 + 400L, 3.0),
+        ("m", Map("n" -> "c", "sum_v" -> "d"), T0 + 20L, 2.0),
+        ("m", Map("n" -> "c", "sum_v" -> "d"), T0 + 500L, 4.0))
+      .toDF("metric", "labels", "ts", "value"))
+    val end = T0 + 1799L
+    for ((q, label, column) <- Seq(
+        ("sum by (n) (rate(m[600:300]))", "n", "n"),
+        ("sum by (sum_v) (m[600])", "sum_v", "sum_v"),
+        ("avg by (SUM_V) (m[600])", "SUM_V", "sum_v"))) {
+      val e = intercept[IllegalArgumentException](
+        PromQL.query(store, q, T0, end))
+      assert(e.getMessage.contains(s"by label '$label'") &&
+        e.getMessage.contains(s"output column '$column'"), e.getMessage)
+    }
+    // the same labels group as usual where the shape has no such column
+    assert(PromQL.query(store, "sum by (n) (rate(m[600]))", T0, end)
+      .columns.toSeq == Seq("n", "bucket_start", "increase", "rate_per_sec"))
+    assert(PromQL.query(store, "sum by (sum_v) (rate(m[600:300]))", T0, end)
+      .select("sum_v").distinct().count() == 2L)
   }
 
   test("counter family: rate / increase / resets under sum by") {
@@ -148,39 +293,58 @@ class PromQLSpec extends SparkSuite {
   }
 
   test("*_over_time family and quantile_over_time") {
-    assertSame(
-      PromQL.query(t, "avg_over_time(click[30m]) by (cohort)", T0, T1),
-      t.overTimeBy("click", Seq.empty, T0, T1, Seq("cohort"), 1800L, 1800L))
+    // per series on the sliding grid (step = range = 30m): several
+    // series share a cohort, so the rows form a multiset
+    val ot = PromQL.query(t, "avg_over_time(click[30m]) by (cohort)", T0, T1)
+    assert(ot.columns.toSeq == Seq("cohort", "eval_ts", "n", "sum_v",
+      "avg_v", "min_v", "max_v", "last_v"))
+    assert(bagOf(ot, ot.columns.toSeq: _*) ==
+      bag(windowed(clicks, T0, T1, 1800L, 1800L)(s => Seq(s._1, s._2)).map {
+        case (Seq(c, _, e), ss) => Seq(c, e) ++ moments(ss) :+ lastOf(ss) }))
+    // quantile_over_time is the tumbling `by`-grain quantile
     assertSame(
       PromQL.query(t, "quantile_over_time(0.5, click[1h]) by (cohort)",
         T0, T1),
-      t.quantileBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, 0.5))
+      PromQL.query(t, "quantile(0.5, click[1h]) by (cohort)", T0, T1))
   }
 
   test("limitk / limit_ratio: hash-pinned samples; negative r is the " +
       "exact complement") {
-    assertSame(
-      PromQL.query(t, "limitk(3, sum by (cohort) (click[1h]))", T0, T1),
-      t.limitKBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, 3))
-    assertSame(
-      PromQL.query(t, "limit_ratio(0.5, sum by (cohort) (click[1h]))",
-        T0, T1),
-      t.limitRatioBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L, 0.5))
+    // limitk: the k groups with the smallest md5-u32 of 'lk'||cohort;
+    // limit_ratio(r): the groups whose hash is below r·2^32
+    assert(rowSet(PromQL.query(t, "limitk(3, sum by (cohort) (click[1h]))",
+        T0, T1), "cohort", "bucket_start", "rk", "n", "sum_v") ==
+      firstKOf(T0, 0L, 3)((c, _) => (groupU32(c).toDouble, c)))
+    assert(rowSet(PromQL.query(t,
+        "limit_ratio(0.5, sum by (cohort) (click[1h]))", T0, T1),
+        "cohort", "bucket_start", "n", "sum_v") ==
+      bucketed(clicks, T0, T1, 3600L)(s => Seq(s._1)).collect {
+        case (k @ Seq(c: String, _), ss) if groupU32(c) < (1L << 31) =>
+          k ++ moments(ss).take(2)
+      }.toSet)
     // limit_ratio(r) ∪ limit_ratio(-(1-r)) partitions the groups:
     // disjoint, and together they are exactly the unsampled aggregation
     val a = PromQL.query(t,
       "limit_ratio(0.4, sum by (cohort) (click[1h]))", T0, T1)
     val b = PromQL.query(t,
       "limit_ratio(-0.6, sum by (cohort) (click[1h]))", T0, T1)
-    val all = t.aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    val all = PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1)
     assert(a.count() + b.count() == all.count())
     assert(a.join(b, Seq("cohort", "bucket_start")).count() == 0L)
   }
 
-  test("mad_over_time compiles to madBy; exact MAD on a hand fixture") {
-    assertSame(
-      PromQL.query(t, "mad_over_time(click[1h]) by (cohort)", T0, T1),
-      t.madBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
+  test("mad_over_time == a driver-side replay; exact MAD on a hand " +
+      "fixture") {
+    // median(|v − median(v)|) per (cohort, hour), Spark's interpolating
+    // percentile, floor-r6 rounded
+    assert(rowSet(PromQL.query(t, "mad_over_time(click[1h]) by (cohort)",
+        T0, T1), "cohort", "bucket_start", "n", "mad_v") ==
+      bucketed(clicks, T0, T1, 3600L)(s => Seq(s._1)).map { case (k, ss) =>
+        val vs = ss.map(_._4.toDouble)
+        val med = percentileOf(vs, 0.5)
+        k ++ Seq(vs.size.toLong,
+          r6(percentileOf(vs.map(v => math.abs(v - med)), 0.5)))
+      }.toSet)
     // one bucket, group a: (1, 2, 10) → median 2, |v−med| = (1, 0, 8),
     // MAD 1; group b: (1, 3) → interpolated median 2, devs (1, 1), MAD 1
     import spark.implicits._
@@ -201,19 +365,17 @@ class PromQLSpec extends SparkSuite {
   test("ts_of_* family: front-end matches the direct tsOf aggregation; " +
       "value ties break to the latest sample; subquery steps reject") {
     // the front-end's default grid step is the range itself (PromQL's
-    // query_range alignment) — mirror it in the direct call
-    val direct = t.overTimeBy("click", Seq.empty, T0, T1,
-      Seq("cohort", "user_id"), 7200L, 7200L, tsOf = true)
-    for ((fn, vcol) <- Seq(
-        "ts_of_max_over_time" -> "ts_of_max_v",
-        "ts_of_min_over_time" -> "ts_of_min_v",
-        "ts_of_last_over_time" -> "ts_of_last_v")) {
+    // query_range alignment); per series, a value tie to the newest ts
+    val slid = windowed(clicks, T0, T1, 7200L, 7200L)(s => Seq(s._1, s._2))
+    for ((fn, vcol, pick) <- Seq[(String, String, Seq[Sample] => Long)](
+        ("ts_of_max_over_time", "ts_of_max_v", _.maxBy(s => (s._4, s._3))._3),
+        ("ts_of_min_over_time", "ts_of_min_v", _.maxBy(s => (-s._4, s._3))._3),
+        ("ts_of_last_over_time", "ts_of_last_v", _.map(_._3).max))) {
       val q = PromQL.query(t,
         s"$fn(click[7200]) by (cohort, user_id)", T0, T1)
-      assert(q.columns.contains(vcol), q.columns.toSeq.toString)
-      assert(q.count() == direct.count())
-      assert(q.join(direct, Seq("cohort", "user_id", "eval_ts"))
-        .where(q(vcol) =!= direct(vcol)).isEmpty)
+      assert(q.columns.toSeq == Seq("cohort", "user_id", "eval_ts", vcol))
+      assert(rowSet(q, q.columns.toSeq: _*) ==
+        slid.map { case (k, ss) => k :+ pick(ss).toDouble }.toSet, fn)
       // round-trip
       val s = s"$fn(click[7200]) by (cohort, user_id)"
       assert(PromQL.parse(PromQL.render(PromQL.parse(s))) == PromQL.parse(s))
@@ -287,9 +449,9 @@ class PromQLSpec extends SparkSuite {
     // every hourly grid point is either absent or covered, never both
     val absent = t.absentOverTime("click",
       Seq(LabelMatcher.eq("user_id", "7")), T0, T1, 3600L, 3600L)
-    val present = t.overTimeBy("click",
-      Seq(LabelMatcher.eq("user_id", "7")), T0, T1, Seq.empty,
-      3600L, 3600L).select("eval_ts").distinct()
+    val present = PromQL.query(t,
+        """present_over_time(click{user_id="7"}[1h])""", T0, T1)
+      .select("eval_ts").distinct()
     val gridN = (T1 - T0) / 3600L + 1  // T0 is grid-aligned
     assert(absent.count() + present.count() == gridN)
     assert(absent.join(present, "eval_ts").count() == 0L)
@@ -326,7 +488,7 @@ class PromQLSpec extends SparkSuite {
     // labels are {user_id, cohort}: without (user_id) ≡ by (cohort)
     assertSame(
       PromQL.query(t, "sum without (user_id) (click[1h])", T0, T1),
-      t.aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
+      PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1))
     // without() on both sides of a vector match
     assertSame(
       PromQL.query(t,
@@ -522,23 +684,22 @@ class PromQLSpec extends SparkSuite {
         T0, T1))
     assertSame(
       PromQL.query(t, "delta(click[1h])", T0, T1),
-      t.deltaBy("click", Seq.empty, T0, T1, Seq("cohort", "user_id"),
-        3600L))
-    // a trailing by () projects instead
-    assertSame(
-      PromQL.query(t, "delta(click[1h]) by (cohort)", T0, T1),
-      t.deltaBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
+      PromQL.query(t, "delta(click[1h]) by (cohort, user_id)", T0, T1))
+    // a trailing by () groups at its own grain instead: the endpoints
+    // of all the cohort's samples in the bucket
+    assert(rowSet(PromQL.query(t, "delta(click[1h]) by (cohort)", T0, T1),
+        "cohort", "bucket_start", "n", "delta") ==
+      bucketed(clicks, T0, T1, 3600L)(s => Seq(s._1)).map { case (k, ss) =>
+        k ++ Seq(ss.size.toLong, endpoints(ss)) }.toSet)
   }
 
   test("delta endpoints: single-sample buckets are 0, n counts samples") {
-    val d = t.deltaBy("click", Seq.empty, T0, T1, Seq("cohort", "user_id"),
-      3600L)
+    val d = PromQL.query(t, "delta(click[1h])", T0, T1)
     assert(d.where(col("n") === 1 && col("delta") =!= 0.0).count() == 0L)
   }
 
   test("scalar arithmetic and threshold filters on aggregated vectors") {
-    val base = t.aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"),
-      3600L)
+    val base = PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1)
     assertSame(
       PromQL.query(t, "sum by (cohort) (click[1h]) * 100", T0, T1),
       base.withColumn("result", col("sum_v") * 100))
@@ -567,9 +728,8 @@ class PromQLSpec extends SparkSuite {
     }
     // 'unless' with a thresholded right side: purchases in hours where
     // clicks did NOT exceed the threshold
-    val a = t.aggregateBy("purchase", Seq.empty, T0, T1, Seq("cohort"),
-      3600L)
-    val b = t.aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    val a = PromQL.query(t, "sum by (cohort) (purchase[1h])", T0, T1)
+    val b = PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1)
       .where(col("sum_v") > 500)
     assertSame(
       PromQL.query(t,
@@ -665,14 +825,22 @@ class PromQLSpec extends SparkSuite {
       "requested grid") {
     val o = 86400L
     val S = T0 + o
+    // the offset answer IS the unshifted answer over the shifted
+    // window, re-gridded: bucket_start / eval_ts + o
+    def shifted(q: String, tCol: String) =
+      PromQL.query(t, q, T0, T1 - o).withColumn(tCol, col(tCol) + o)
     assertSame(
       PromQL.query(t, "quantile(0.5, click[1h] offset 1d) by (cohort)",
         S, T1),
-      t.quantileBy("click", Seq.empty, S, T1, Seq("cohort"), 3600L, 0.5, o))
+      shifted("quantile(0.5, click[1h]) by (cohort)", "bucket_start"))
     assertSame(
       PromQL.query(t, "topk(3, sum by (cohort) (click[1h] offset 1d))",
         S, T1),
-      t.topKBy("click", Seq.empty, S, T1, Seq("cohort"), 3600L, 3, o))
+      shifted("topk(3, sum by (cohort) (click[1h]))", "bucket_start"))
+    assert(rowSet(PromQL.query(t,
+        "topk(3, sum by (cohort) (click[1h] offset 1d))", S, T1),
+        "cohort", "bucket_start", "rk", "n", "sum_v") ==
+      firstKOf(S, o, 3)((c, v) => (-v, c)))
     assertSame(
       PromQL.query(t, "rate(click[1h] offset 1d)", S, T1),
       PromQL.query(t, "rate(click[1h])", T0, T1 - o)
@@ -680,15 +848,10 @@ class PromQLSpec extends SparkSuite {
     assertSame(
       PromQL.query(t, "avg_over_time(click[30m] offset 1d) by (cohort)",
         S, T1),
-      t.overTimeBy("click", Seq.empty, S, T1, Seq("cohort"), 1800L, 1800L,
-        o))
-    // the offset answer IS the unshifted answer, re-gridded: identical
-    // to querying the shifted window directly and adding o to the bucket
-    val direct = t.deltaBy("click", Seq.empty, T0, T1 - o,
-        Seq("cohort", "user_id"), 3600L)
-      .withColumn("bucket_start", col("bucket_start") + o)
+      shifted("avg_over_time(click[30m]) by (cohort)", "eval_ts"))
     assertSame(
-      PromQL.query(t, "delta(click[1h] offset 1d)", S, T1), direct)
+      PromQL.query(t, "delta(click[1h] offset 1d)", S, T1),
+      shifted("delta(click[1h])", "bucket_start"))
   }
 
   test("per-side offsets: the day-over-day ratio shape") {
@@ -810,8 +973,7 @@ class PromQLSpec extends SparkSuite {
   }
 
   test("math functions ride the value column pointwise, chainable") {
-    val base = t.aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"),
-      3600L)
+    val base = PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1)
     assertSame(
       PromQL.query(t, "clamp_min(sum by (cohort) (click[1h]), 100)",
         T0, T1),
@@ -845,8 +1007,7 @@ class PromQLSpec extends SparkSuite {
   }
 
   test("log/round/clamp math family compiles onto the value column") {
-    val base = t.aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"),
-      3600L)
+    val base = PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1)
     assertSame(
       PromQL.query(t, "ln(sum by (cohort) (click[1h]))", T0, T1),
       base.withColumn("result", log(col("sum_v"))))
@@ -882,12 +1043,17 @@ class PromQLSpec extends SparkSuite {
   }
 
   test("stddev/stdvar/present_over_time ride the over_time grid") {
-    val spread = t.overTimeBy("click", Seq.empty, T0, T1, Seq("cohort"),
-      stepSec = 3600L, rangeSec = 7200L, spread = true)
-    assertSame(
-      PromQL.query(t, "stdvar_over_time(click[2h:1h]) by (cohort)", T0, T1),
-      spread.select(col("cohort"), col("eval_ts"), col("n"),
-        col("stdvar_v"), col("stddev_v")))
+    val spread =
+      PromQL.query(t, "stdvar_over_time(click[2h:1h]) by (cohort)", T0, T1)
+    assert(spread.columns.toSeq ==
+      Seq("cohort", "eval_ts", "n", "stdvar_v", "stddev_v"))
+    // per series, the integer-cents spread of each 2h window every hour
+    assert(bagOf(spread, spread.columns.toSeq: _*) == bag(
+      windowed(clicks, T0, T1, 3600L, 7200L)(s => Seq(s._1, s._2)).map {
+        case (Seq(c, _, e), ss) =>
+          val Seq(n, _, sv, sd) = spreadOf(ss)
+          Seq(c, e, n, sv, sd)
+      }))
     // stddev_v is the square root of stdvar_v on every row (round-6 ULP)
     val bad = spread.where(
       abs(col("stddev_v") * col("stddev_v") - col("stdvar_v")) > 1e-4)
@@ -895,24 +1061,26 @@ class PromQLSpec extends SparkSuite {
     // present_over_time: one 1.0 per over_time output row
     val present = PromQL.query(t,
       "present_over_time(click[2h:1h]) by (cohort)", T0, T1)
-    assert(present.count() ==
-      t.overTimeBy("click", Seq.empty, T0, T1, Seq("cohort"),
-        stepSec = 3600L, rangeSec = 7200L).count())
+    val moments2h =
+      PromQL.query(t, "avg_over_time(click[2h:1h]) by (cohort)", T0, T1)
+    assert(present.count() == moments2h.count())
     assert(present.select("present_v").distinct().collect()
       .map(_.getDouble(0)).toSeq == Seq(1.0))
     // threshold filtering composes over the windowed moments
     assertSame(
       PromQL.query(t, "avg_over_time(click[2h:1h]) by (cohort) > 50",
         T0, T1),
-      t.overTimeBy("click", Seq.empty, T0, T1, Seq("cohort"),
-        stepSec = 3600L, rangeSec = 7200L).where(col("avg_v") > 50))
+      moments2h.where(col("avg_v") > 50))
   }
 
   test("[range:step] subquery pins the over_time eval grid") {
-    assertSame(
-      PromQL.query(t, "avg_over_time(click[2h:1h]) by (cohort)", T0, T1),
-      t.overTimeBy("click", Seq.empty, T0, T1, Seq("cohort"),
-        stepSec = 3600L, rangeSec = 7200L))
+    // per series: the moments of each 2h window, every hour
+    assert(bagOf(
+        PromQL.query(t, "avg_over_time(click[2h:1h]) by (cohort)", T0, T1),
+        "cohort", "eval_ts", "n", "sum_v", "avg_v", "min_v", "max_v",
+        "last_v") ==
+      bag(windowed(clicks, T0, T1, 3600L, 7200L)(s => Seq(s._1, s._2)).map {
+        case (Seq(c, _, e), ss) => Seq(c, e) ++ moments(ss) :+ lastOf(ss) }))
     assertSame(
       PromQL.query(t, """absent_over_time(click{user_id="7"}[30m:1h])""",
         T0, T1),
@@ -1050,21 +1218,20 @@ class PromQLSpec extends SparkSuite {
     assert(bare.columns.toSeq == direct.columns.toSeq)
     assert(bare.select(col("labels").getItem("band")).distinct().count() ==
       direct.select(col("labels").getItem("band")).distinct().count())
-    // under sum by: fuses into aggregateBy's single hash aggregation
-    assertSame(
-      PromQL.query(t,
+    // under sum by: the rewrite runs before the grouping, fused into
+    // the moments' single hash aggregation — band is user_id's first
+    // digit, key the "-"-joined cohort and user_id
+    assert(rowSet(PromQL.query(t,
         """sum by (band) (label_replace(click[1d], "band", "$1", """ +
           """"user_id", "(\\d)\\d*"))""", T0, T1),
-      t.aggregateBy("click", Seq.empty, T0, T1, Seq("band"), 86400L,
-        relabel = c => graft.functions.LabelFunctions.labelReplace(
-          c, "band", "$1", "user_id", "(\\d)\\d*")))
-    assertSame(
-      PromQL.query(t,
+        "band" +: MomentCols: _*) ==
+      bucketed(clicks, T0, T1, 86400L)(s => Seq(s._2.take(1)))
+        .map { case (k, ss) => k ++ moments(ss) }.toSet)
+    assert(rowSet(PromQL.query(t,
         """sum by (key) (label_join(click[1d], "key", "-", "cohort", """ +
-          """"user_id"))""", T0, T1),
-      t.aggregateBy("click", Seq.empty, T0, T1, Seq("key"), 86400L,
-        relabel = c => graft.functions.LabelFunctions.labelJoin(
-          c, "key", "-", Seq("cohort", "user_id"))))
+          """"user_id"))""", T0, T1), "key" +: MomentCols: _*) ==
+      bucketed(clicks, T0, T1, 86400L)(s => Seq(s._1 + "-" + s._2))
+        .map { case (k, ss) => k ++ moments(ss) }.toSet)
     // parse-render round-trip holds with escaped string args
     val s = """sum by (band) (label_replace(click[1d], "band", "$1", """ +
       """"user_id", "(\\d)\\d*"))"""
@@ -1290,8 +1457,8 @@ class PromQLSpec extends SparkSuite {
   test("group aggregator emits 1.0 per populated cell; sort orders by " +
       "the value column") {
     val g = PromQL.query(t, "group by (cohort) (click[1h])", T0, T1)
-    val cells = t.aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"),
-      3600L).select("cohort", "bucket_start")
+    val cells = PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1)
+      .select("cohort", "bucket_start")
     assert(g.count() == cells.count())
     assert(g.select("group_v").distinct().collect()
       .map(_.getDouble(0)).toSeq == Seq(1.0))
@@ -1687,8 +1854,8 @@ class PromQLSpec extends SparkSuite {
     assert(df.count() == 168)
     assert(df.columns.toSeq == Seq("bucket_start", "sum_v"))
     // occupied buckets carry the direct aggregation's values verbatim
-    val direct = t.aggregateBy("purchase", Seq.empty, T0, T1,
-      Seq.empty, 3600L).select(col("bucket_start"), col("sum_v"))
+    val direct = PromQL.query(t, "sum(purchase[3600])", T0, T1)
+      .select(col("bucket_start"), col("sum_v"))
     assertSame(
       df.join(direct.select("bucket_start"), Seq("bucket_start"),
         "left_semi"),
@@ -1905,8 +2072,7 @@ class PromQLSpec extends SparkSuite {
     // expected match cardinality: (group, bucket) keys present on BOTH
     // sides under null-safe identity, computed via sentinel strings
     def keys(metric: String) =
-      th.aggregateBy(metric, Seq.empty, T0, T1,
-          Seq("cohort", "shard"), 3600L)
+      PromQL.query(th, s"sum by (cohort, shard) ($metric[1h])", T0, T1)
         .select(concat_ws("\u0001",
           coalesce(col("cohort"), lit("\u0002")),
           coalesce(col("shard"), lit("\u0002")),
@@ -2138,10 +2304,12 @@ class PromQLSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
     assert(got.nonEmpty)
-    val inner = t.slidingOverTimeBy("click", Seq.empty, T0 - 21600, T1,
-        Seq("cohort"), 3600L, 3600L)
-      .select("cohort", "eval_ts", "avg_v")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    // the inner: each cohort's floor-r6 mean over the 1h window at
+    // every hourly point of the 6h-extended span
+    val inner = windowed(clicks, T0 - 21600, T1, 3600L, 3600L)(
+        s => Seq(s._1))
+      .map { case (Seq(c: String, e: Long), ss) =>
+        (c, e, r6(ss.map(_._4).sum.toDouble / ss.size)) }
     val gridStart = (T0 + 3599) / 3600 * 3600
     val gridEnd = T1 / 3600 * 3600
     val expect = (for {
@@ -2567,10 +2735,6 @@ class PromQLSpec extends SparkSuite {
         ("x", Map("id" -> id, "l" -> l), ts, v.toDouble) }
       .toDF("metric", "labels", "ts", "value"))
     val (start, end, step, range) = (B, B + 600L, 60L, 180L)
-    def evalPoints(lo: Long, hi: Long, st: Long): Seq[Long] =
-      (Math.floorDiv(lo + st - 1, st) * st)
-        .to(Math.floorDiv(hi, st) * st, st)
-    def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     // consecutive (older, newer) sample pairs per series over the scan
     // [lo, hi], ordered by (ts, value)
     def pairs(lo: Long, hi: Long) =
@@ -2591,27 +2755,25 @@ class PromQLSpec extends SparkSuite {
       } yield (k, e + o, in.map(p => (p._3._4, p._4._4)))
     }
     def delta(p: BigDecimal, c: BigDecimal) = if (c >= p) c - p else c
-    def rows(df: DataFrame, cols: String*) =
-      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
 
     Seq(0L, 120L).foreach { o =>
       val off = if (o == 0L) "" else s" offset $o"
       val perSeries = sliding(start, o, k => Seq(k._1, k._2))
       // resets(x[R:s]): per series, a drop between consecutive samples
-      assert(rows(PromQL.query(store, s"resets(x[$range:$step]$off)",
+      assert(rowSet(PromQL.query(store, s"resets(x[$range:$step]$off)",
           start, end), "id", "l", "eval_ts", "n_deltas", "resets") ==
         perSeries.map { case (k, e, ps) =>
           k ++ Seq[Any](e, ps.size.toLong, ps.count(p => p._2 < p._1).toLong)
         }.toSet, s"resets offset $o")
       // sum by (l) (changes(x[R:s])): any value change, summed over l
-      assert(rows(PromQL.query(store,
+      assert(rowSet(PromQL.query(store,
           s"sum by (l) (changes(x[$range:$step]$off))", start, end),
           "l", "eval_ts", "n_deltas", "changes") ==
         sliding(start, o, k => Seq(k._2)).map { case (k, e, ps) =>
           k ++ Seq[Any](e, ps.size.toLong, ps.count(p => p._2 != p._1).toLong)
         }.toSet, s"changes offset $o")
       // rate(x[R:s]): reset-robust decimal increase, floor-r6 over range
-      assert(rows(PromQL.query(store, s"rate(x[$range:$step]$off)",
+      assert(rowSet(PromQL.query(store, s"rate(x[$range:$step]$off)",
           start, end), "id", "l", "eval_ts", "n", "increase",
           "rate_per_sec") ==
         perSeries.map { case (k, e, ps) =>
@@ -2624,12 +2786,12 @@ class PromQLSpec extends SparkSuite {
       val tumbling = pairs(start - o, end - o)
         .groupBy(p => (p._1, p._2, p._4._3 - Math.floorMod(p._4._3, range) + o))
         .map { case (k, ps) => k -> ps.map(p => delta(p._3._4, p._4._4)).sum }
-      assert(rows(PromQL.query(store, s"rate(x[$range]$off)", start, end),
+      assert(rowSet(PromQL.query(store, s"rate(x[$range]$off)", start, end),
           "id", "l", "bucket_start", "increase", "rate_per_sec") ==
         tumbling.map { case ((id, l, b), inc) =>
           Seq[Any](id, l, b, inc.toDouble, round6(inc.toDouble / range))
         }.toSet, s"tumbling rate offset $o")
-      assert(rows(PromQL.query(store,
+      assert(rowSet(PromQL.query(store,
           s"avg by (l) (increase(x[$range]$off))", start, end), "l",
           "bucket_start", "n_series", "sum_increase", "avg_increase",
           "min_increase", "max_increase") ==
@@ -2642,12 +2804,77 @@ class PromQLSpec extends SparkSuite {
       // eval point is absent when (E − range, E] holds no sample
       val ar = 120L
       val ts1 = raw.filter(_._1 == "1").map(_._3)
-      assert(rows(PromQL.query(store,
+      assert(rowSet(PromQL.query(store,
           s"""absent_over_time(x{id="1"}[$ar]$off)""", start, end),
           "eval_ts", "value") ==
         evalPoints(start - o, end - o, ar)
           .filterNot(e => ts1.exists(t => t > e - ar && t <= e))
           .map(e => Seq[Any](e + o, 1.0)).toSet, s"absent offset $o")
+
+      // gauge shapes on the tumbling grid: a sample counts in bucket
+      // ts − ts mod R of the scan [start − o, end − o], reported at + o
+      val byL = bucketed(raw, start, end, range, o)(s => Seq(s._2))
+      for (op <- Seq("sum", "avg", "min", "max"))
+        assert(rowSet(PromQL.query(store, s"$op by (l) (x[$range]$off)",
+            start, end), "l", "bucket_start", "n", "sum_v", "avg_v",
+            "min_v", "max_v") ==
+          byL.map { case (k, ss) => k ++ moments(ss) }.toSet,
+          s"$op by offset $o")
+      assert(rowSet(PromQL.query(store, s"quantile(0.5, x[$range]$off) by (l)",
+          start, end), "l", "bucket_start", "n", "q_v") ==
+        byL.map { case (k, ss) => k ++ Seq(ss.size.toLong,
+          round6(percentileOf(ss.map(_._4.toDouble), 0.5)))
+        }.toSet, s"quantile by offset $o")
+      assert(rowSet(PromQL.query(store, s"stddev by (l) (x[$range]$off)",
+          start, end), "l", "bucket_start", "n", "avg_v", "stdvar",
+          "stddev") == byL.map { case (k, ss) => k ++ spreadOf(ss) }.toSet,
+        s"stddev by offset $o")
+      assert(rowSet(PromQL.query(store, s"delta(x[$range]$off)", start, end),
+          "id", "l", "bucket_start", "n", "delta") ==
+        bucketed(raw, start, end, range, o)(s => Seq(s._1, s._2)).map {
+          case (k, ss) => k ++ Seq(ss.size.toLong, endpoints(ss))
+        }.toSet, s"tumbling delta offset $o")
+      assert(rowSet(PromQL.query(store,
+          s"""count_values("cv", x[$range]$off) by (l)""", start, end),
+          "l", "bucket_start", "cv", "n") ==
+        byL.flatMap { case (k, ss) => ss.groupBy(_._4.toDouble).map {
+          case (v, same) => k ++ Seq(v, same.size.toLong) }
+        }.toSet, s"count_values offset $o")
+
+      // gauge shapes on the sliding grid: a sample counts at every eval
+      // point E of the shifted grid with E − R < ts ≤ E, reported at E + o
+      val slid = windowed(raw, start, end, step, range, o)(
+        s => Seq(s._1, s._2))
+      for (fn <- Seq("avg_over_time", "last_over_time"))
+        assert(rowSet(PromQL.query(store,
+            s"$fn(x[$range:$step]$off) by (id, l)", start, end),
+            "id", "l", "eval_ts", "n", "sum_v", "avg_v", "min_v", "max_v",
+            "last_v") ==
+          slid.map { case (k, ss) => k ++ moments(ss) :+ lastOf(ss) }.toSet,
+          s"$fn offset $o")
+      assert(rowSet(PromQL.query(store, s"delta(x[$range:$step]$off)",
+          start, end), "id", "l", "eval_ts", "n", "delta") ==
+        slid.map { case (k, ss) => k ++ Seq(ss.size.toLong, endpoints(ss))
+        }.toSet, s"sliding delta offset $o")
+
+      // grain: top-level avg_over_time(x[R:s]) by (l) stays per series
+      // (series 1 and 2 share l = a and keep a row each), while the same
+      // function as a subquery inner aggregates at the by grain, its mean
+      // floor-r6 quantized; a [s:s] outer reads the inner point at E
+      val perSeriesL = bag(slid.map { case (Seq(_, l, e), ss) =>
+        Seq(l, e, ss.map(_._4).sum.toDouble / ss.size) })
+      assert(perSeriesL.values.exists(_ > 1) ||
+        perSeriesL.keys.groupBy(_.take(2)).exists(_._2.size > 1))
+      assert(bagOf(PromQL.query(store,
+          s"avg_over_time(x[$range:$step]$off) by (l)", start, end),
+          "l", "eval_ts", "avg_v") == perSeriesL,
+        s"per-series grain offset $o")
+      assert(rowSet(PromQL.query(store,
+          s"last_over_time(avg_over_time(x[$range]$off) by (l) " +
+            s"[$step:$step])", start, end), "l", "eval_ts", "last_v") ==
+        windowed(raw, start, end, step, range, o)(s => Seq(s._2)).map {
+          case (k, ss) => k :+ r6(ss.map(_._4).sum.toDouble / ss.size)
+        }.toSet, s"by grain of the subquery inner offset $o")
     }
 
     // resets(rate(x[R])[R2:s]): the inner rate per series on the
@@ -2667,7 +2894,7 @@ class PromQLSpec extends SparkSuite {
           p._2 > tp - r2 && c._2 <= tp }.groupBy(_._1._1)
     } yield k ++ Seq[Any](tp, in.size.toLong,
       in.count { case (p, c) => c._3 < p._3 }.toLong)
-    assert(rows(PromQL.query(store,
+    assert(rowSet(PromQL.query(store,
         s"resets(rate(x[$range])[$r2:$step])", start, end),
         "id", "l", "eval_ts", "n_deltas", "resets") == exp.toSet)
     assert(exp.exists(_(4) != 0L), "the fixture must reset the inner rate")

@@ -487,18 +487,19 @@ class StreamingSpec extends SparkSuite {
     assert(got == expect && got.nonEmpty, s"${got.size} vs ${expect.size}")
   }
 
-  test("streaming windowed aggregation equals batch aggregateBy at sf0.01") {
+  test("streaming windowed aggregation equals the batch sum by at sf0.01") {
     implicit val sqlCtx = spark.sqlContext
     val sf001 = "/root/testdata/sf0.01"
     val T0 = 1704412800L; val T1 = 1705017599L
     // batch truth: the registered tsdb_agg_by plan
     val events = graft.sources.Tables.events(spark, sf001)
-    val batch = Tsdb.attach(spark, events.select(
-        col("event_type").as("metric"),
-        map(lit("cohort"), pmod(col("user_id"), lit(10)).cast("string"))
-          .as("labels"),
-        col("ts_s").as("ts"), col("value")))
-      .aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    val batch = graft.promql.PromQL.query(
+        Tsdb.attach(spark, events.select(
+          col("event_type").as("metric"),
+          map(lit("cohort"), pmod(col("user_id"), lit(10)).cast("string"))
+            .as("labels"),
+          col("ts_s").as("ts"), col("value"))),
+        "sum by (cohort) (click[1h])", T0, T1)
       .select(col("cohort"), col("bucket_start"), col("n"),
         col("sum_v"), col("min_v"), col("max_v"))
       .collect().map(_.toSeq).toSet
@@ -552,8 +553,9 @@ class StreamingSpec extends SparkSuite {
         .as("labels"),
       col("ts_s").as("ts"), col("value"))
     // batch truth over raw samples
-    val expect = Tsdb.attach(spark, asSamples(events))
-      .aggregateBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    val expect = graft.promql.PromQL.query(
+        Tsdb.attach(spark, asSamples(events)),
+        "sum by (cohort) (click[1h])", T0, T1)
       .orderBy("cohort", "bucket_start").collect().map(_.toSeq).toSeq
     // stream ALL events through per-micro-batch rollup partials
     val rows = events

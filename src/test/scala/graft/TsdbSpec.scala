@@ -579,8 +579,9 @@ class TsdbSpec extends SparkSuite {
     val alignedEnd = Start + Steps * 60L - 1
     assert(Start % 400 == 0 && (alignedEnd + 1) % 400 == 0)
     val m = Seq(graft.model.LabelMatcher.eq("dc", "2"))
-    val raw = t.aggregateBy("cpu.busy", m, Start, alignedEnd,
-        Seq("node"), 400L)
+    val raw = Tsdb.gaugeAggregate(t.windowedSamples("cpu.busy", m, Start,
+        alignedEnd, Seq("node"), 400L, None, 0L), perSeries = false,
+        "moments")
       .orderBy("node", "bucket_start").collect().map(_.toSeq).toSeq
     val served = t.aggregateByFromRollup(400L, "cpu.busy", m, Start,
         alignedEnd, Seq("node"))
