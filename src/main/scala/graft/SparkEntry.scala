@@ -377,21 +377,28 @@ object SparkEntry {
     * `sum by (cohort)(purchase[1h]) / sum by (cohort)(click[1h])` — the
     * errors/requests ratio family, label-matched on (cohort, bucket).
     */
-  private def qTsdbRatio(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .binaryOpBy("purchase", "click", Seq.empty, Seq.empty, T0, T1,
-        Seq("cohort"), 3600L)((a, b) => round(a / b, 6))
+  private def qTsdbRatio(s: SparkSession, dir: String): DataFrame = {
+    val t = Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
+    // stages (a) → (b) per side, then stage (c)
+    def side(metric: String, v: String) =
+      Tsdb.gaugeAggregate(t.windowedSamples(metric, Seq.empty, T0, T1,
+          Seq("cohort"), 3600L, None, 0L), perSeries = false, "moments")
+        .select(col("cohort"), col("bucket_start"), col("n").as(s"n_$v"),
+          col("sum_v").as(s"sum_$v"))
+    Tsdb.vectorMatch(side("purchase", "a"), side("click", "b"),
+        Seq("cohort"), "one", "arith", (a, b) => round(a / b, 6))
       .select("cohort", "bucket_start", "n_a", "n_b", "result")
       .orderBy("cohort", "bucket_start")
+  }
 
   /** The ratio family served FROM the prebuilt rollup tier (probe only):
     * must merge to exactly the raw-data tsdb_ratio answer (shared
     * oracle) — the downsampled dashboard path for `errors/requests`.
     */
   private def qTsdbRatioRollup(s: SparkSession, dir: String): DataFrame =
-    tieredTsdb(s, dir)
-      .binaryOpByFromRollup(3600L, "purchase", "click", Seq.empty, Seq.empty,
-        T0, T1, Seq("cohort"))((a, b) => round(a / b, 6))
+    graft.promql.PromQL.queryFromRollup(tieredTsdb(s, dir),
+        "sum by (cohort) (purchase[1h]) / sum by (cohort) (click[1h])",
+        T0, T1, 3600L)
       .select("cohort", "bucket_start", "n_a", "n_b", "result")
       .orderBy("cohort", "bucket_start")
 
@@ -408,7 +415,8 @@ object SparkEntry {
 
   /** The string front-end's vector-match ratio:
     * `sum by (cohort)(purchase[1h]) / sum by (cohort)(click[1h])` —
-    * compiled onto [[graft.Tsdb.binaryOpBy]], shares the tsdb_ratio oracle.
+    * compiled onto the vector match [[graft.Tsdb.vectorMatch]], shares
+    * the tsdb_ratio oracle.
     */
   private def qTsdbPromqlRatio(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(
@@ -1085,10 +1093,10 @@ object SparkEntry {
     * `max by (cohort, user_id)(click[1h]) > on (cohort) group_left
     * avg by (cohort)(click[1h])`: each per-user hourly max kept only
     * where it beats its cohort's hourly average. One-to-many matching
-    * through the generic vector-match path: two one-shuffle
-    * aggregations equi-joined on (cohort, bucket) — group-sized keys,
-    * the right side aggregates exactly at the match grain so
-    * uniqueness holds by construction (no runtime guard needed).
+    * through the vector match [[graft.Tsdb.vectorMatch]]: two
+    * one-shuffle aggregations equi-joined on (cohort, bucket) —
+    * group-sized keys, the right side aggregates exactly at the match
+    * grain so uniqueness holds by construction (no runtime guard).
     */
   private def qTsdbPromqlCmpOn(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(

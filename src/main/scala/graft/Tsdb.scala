@@ -1192,268 +1192,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         max(col("max_v")).as("max_v"))
   }
 
-  /** PromQL binary operation between two aggregated vectors with label
-    * matching: `op(sum by (labels)(metricA[step]), sum by (labels)
-    * (metricB[step]))` joined `on (labels, bucket)` — the
-    * `errors / requests` family. Both sides are one-shuffle label
-    * aggregations; the vector match is an equi-join on the (small)
-    * aggregated tables. `op` receives the two decimal-accumulated sums
-    * (cast to double) so ratio/difference arithmetic is reproducible.
-    * Inner-join semantics: buckets present on only one side are dropped,
-    * like PromQL's default vector matching.
-    *
-    * Each side carries ITS OWN matcher list (`errors{code="500"} /
-    * requests` filters only the numerator — applying the union of both
-    * sides' matchers to both metrics would silently produce wrong
-    * ratios). `momentA`/`momentB` pick which aggregated moment each side
-    * contributes (`sum_v` by default; any of `sum_v avg_v min_v max_v
-    * n`), enabling non-sum vector matches like `max / avg`; the matched
-    * values still surface as `sum_a`/`sum_b` for schema stability.
-    */
-  def binaryOpBy(
-      metricA: String,
-      metricB: String,
-      matchersA: Seq[LabelMatcher],
-      matchersB: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      momentA: String = "sum_v",
-      momentB: String = "sum_v",
-      offsetA: Long = 0L,
-      offsetB: Long = 0L)(
-      op: (Column, Column) => Column): DataFrame = {
-    val a = gaugeAggregate(windowedSamples(metricA, matchersA, start, end,
-        byLabels, stepSec, None, offsetA), perSeries = false, "moments")
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"),
-        col("n").as("n_a"), col(momentA).as("sum_a")): _*)
-    val b = gaugeAggregate(windowedSamples(metricB, matchersB, start, end,
-        byLabels, stepSec, None, offsetB), perSeries = false, "moments")
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"),
-        col("n").as("n_b"), col(momentB).as("sum_b")): _*)
-    Tsdb.nullSafeEquiJoin(a, b, byLabels :+ "bucket_start")
-      .withColumn("result", op(col("sum_a"), col("sum_b")))
-  }
-
-  /** [[binaryOpBy]] served from a materialized rollup tier instead of
-    * raw samples — the dashboard ratio family (`errors / requests`) at
-    * downsampled cost. Both sides are [[aggregateByFromRollup]] merges
-    * (DECIMAL-exact by associativity), so for bucket-aligned windows the
-    * result is value-identical to the raw-data [[binaryOpBy]] — it
-    * shares the same oracle. The vector match joins two already-merged
-    * bucket tables, input sized groups × buckets, never the raw store.
-    */
-  def binaryOpByFromRollup(
-      stepSec: Long,
-      metricA: String,
-      metricB: String,
-      matchersA: Seq[LabelMatcher],
-      matchersB: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      offsetA: Long = 0L,
-      offsetB: Long = 0L)(
-      op: (Column, Column) => Column): DataFrame = {
-    val a = aggregateByFromRollup(stepSec, metricA, matchersA, start, end,
-        byLabels, offsetA)
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"),
-        col("n").as("n_a"), col("sum_v").as("sum_a")): _*)
-    val b = aggregateByFromRollup(stepSec, metricB, matchersB, start, end,
-        byLabels, offsetB)
-      .select(byLabels.map(col) ++ Seq(col("bucket_start"),
-        col("n").as("n_b"), col("sum_v").as("sum_b")): _*)
-    Tsdb.nullSafeEquiJoin(a, b, byLabels :+ "bucket_start")
-      .withColumn("result", op(col("sum_a"), col("sum_b")))
-  }
-
-  /** PromQL one-to-many vector matching —
-    * `A / on (matchLabels) group_left B`: the left side aggregates at a
-    * FINER label grain than the right (`byB` ⊆ `byA`), each left group
-    * joins the one right group sharing its match labels, and the result
-    * keeps the left side's full label set. The share-of-total /
-    * per-user-vs-cohort family every capacity dashboard needs.
-    *
-    * Plan: two one-shuffle aggregations joined on (matchLabels, bucket) —
-    * the join inputs are group-sized, never corpus-sized, and the coarser
-    * side broadcasts under AQE when small. Same vector-match shape as
-    * [[binaryOpBy]], different grain.
-    */
-  def binaryOpByGroupLeft(
-      metricA: String,
-      metricB: String,
-      matchersA: Seq[LabelMatcher],
-      matchersB: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byA: Seq[String],
-      byB: Seq[String],
-      stepSec: Long,
-      offsetA: Long = 0L,
-      offsetB: Long = 0L,
-      momentA: String = "sum_v",
-      momentB: String = "sum_v",
-      onLabels: Seq[String] = Seq.empty)(
-      op: (Column, Column) => Column): DataFrame = {
-    // default (no explicit on-labels): the right side's full grouping is
-    // the match key — the pre-carry behavior. With `onLabels`, the right
-    // side's EXTRA grouping labels (byB minus on) are CARRIED onto the
-    // result — PromQL's `group_left(extra)` — and a per-(on, bucket)
-    // uniqueness guard raises at execution if the "one" side is not one
-    // (Prometheus's many-to-many matching error, surfaced instead of a
-    // silent row multiplication).
-    val on = if (onLabels.isEmpty) byB else onLabels
-    val carry = byB.filterNot(on.contains)
-    require(on.forall(byA.contains),
-      s"group_left needs the match labels ($on) to be a subset " +
-      s"of the left side's ($byA)")
-    require(on.forall(byB.contains),
-      s"group_left match labels ($on) must be part of the right side's " +
-      s"grouping ($byB)")
-    require(carry.forall(c => !byA.contains(c)),
-      s"group_left carried labels (${carry.filter(byA.contains)}) " +
-      "already appear in the left side's grouping — drop them from one " +
-      "side (the join would produce ambiguous columns)")
-    val a = gaugeAggregate(windowedSamples(metricA, matchersA, start, end,
-        byA, stepSec, None, offsetA), perSeries = false, "moments")
-      .select(byA.map(col) ++ Seq(col("bucket_start"),
-        col("n").as("n_a"), col(momentA).as("sum_a")): _*)
-    val b0 = gaugeAggregate(windowedSamples(metricB, matchersB, start, end,
-        byB, stepSec, None, offsetB), perSeries = false, "moments")
-      .select(byB.map(col) ++ Seq(col("bucket_start"),
-        col("n").as("n_b"), col(momentB).as("sum_b")): _*)
-    val b =
-      if (carry.isEmpty) b0
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy((on :+ "bucket_start").map(col): _*)
-        b0.withColumn("sum_b",
-          when(count(lit(1)).over(w) > 1,
-            raise_error(concat(
-              lit("group_left: more than one right-side row for match " +
-                "group ("),
-              concat_ws(",", on.map(col): _*), lit(")"))))
-            .otherwise(col("sum_b")))
-      }
-    Tsdb.nullSafeEquiJoin(a, b, on :+ "bucket_start")
-      .withColumn("result", op(col("sum_a"), col("sum_b")))
-      .select(byA.map(col) ++ carry.map(col) ++
-        Seq(col("bucket_start"), col("n_a"),
-          col("n_b"), col("sum_a"), col("sum_b"), col("result")): _*)
-  }
-
-  /** PromQL many-to-one vector matching — `A / on (matchLabels)
-    * group_right B`: the mirror of [[binaryOpByGroupLeft]]. Here the
-    * RIGHT side carries the finer label grain (`byA` ⊆ `byB`); each
-    * right group joins the one left group sharing its match labels, and
-    * the result keeps the right side's full label set. Same group-sized
-    * join-input shape; `op` still receives (left value, right value) in
-    * query order, so `coarse / fine` means what the query string says.
-    */
-  def binaryOpByGroupRight(
-      metricA: String,
-      metricB: String,
-      matchersA: Seq[LabelMatcher],
-      matchersB: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byA: Seq[String],
-      byB: Seq[String],
-      stepSec: Long,
-      offsetA: Long = 0L,
-      offsetB: Long = 0L,
-      momentA: String = "sum_v",
-      momentB: String = "sum_v",
-      onLabels: Seq[String] = Seq.empty)(
-      op: (Column, Column) => Column): DataFrame = {
-    // mirror of [[binaryOpByGroupLeft]]'s carry: with `onLabels`, the
-    // LEFT side's extra grouping labels ride onto the result
-    // (`group_right(extra)`), with the same one-row-per-match guard
-    val on = if (onLabels.isEmpty) byA else onLabels
-    val carry = byA.filterNot(on.contains)
-    require(on.forall(byB.contains),
-      s"group_right needs the match labels ($on) to be a subset " +
-      s"of the right side's ($byB)")
-    require(on.forall(byA.contains),
-      s"group_right match labels ($on) must be part of the left side's " +
-      s"grouping ($byA)")
-    require(carry.forall(c => !byB.contains(c)),
-      s"group_right carried labels (${carry.filter(byB.contains)}) " +
-      "already appear in the right side's grouping — drop them from one " +
-      "side (the join would produce ambiguous columns)")
-    val a0 = gaugeAggregate(windowedSamples(metricA, matchersA, start, end,
-        byA, stepSec, None, offsetA), perSeries = false, "moments")
-      .select(byA.map(col) ++ Seq(col("bucket_start"),
-        col("n").as("n_a"), col(momentA).as("sum_a")): _*)
-    val a =
-      if (carry.isEmpty) a0
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy((on :+ "bucket_start").map(col): _*)
-        a0.withColumn("sum_a",
-          when(count(lit(1)).over(w) > 1,
-            raise_error(concat(
-              lit("group_right: more than one left-side row for match " +
-                "group ("),
-              concat_ws(",", on.map(col): _*), lit(")"))))
-            .otherwise(col("sum_a")))
-      }
-    val b = gaugeAggregate(windowedSamples(metricB, matchersB, start, end,
-        byB, stepSec, None, offsetB), perSeries = false, "moments")
-      .select(byB.map(col) ++ Seq(col("bucket_start"),
-        col("n").as("n_b"), col(momentB).as("sum_b")): _*)
-    Tsdb.nullSafeEquiJoin(b, a, on :+ "bucket_start")
-      .withColumn("result", op(col("sum_a"), col("sum_b")))
-      .select(byB.map(col) ++ carry.map(col) ++
-        Seq(col("bucket_start"), col("n_a"),
-          col("n_b"), col("sum_a"), col("sum_b"), col("result")): _*)
-  }
-
-  /** PromQL vector set operations — `A and B` / `A or B` / `A unless B`
-    * between two aggregated vectors on the same label grain. The match
-    * key is (byLabels, bucket_start), PromQL's label-set identity on the
-    * engine's bucket grid:
-    *
-    *  - `and`:    rows of A whose key exists in B       (left-semi join)
-    *  - `unless`: rows of A whose key does NOT exist     (left-anti join)
-    *  - `or`:     all of A, plus rows of B whose key is absent from A
-    *
-    * Everything stays group-sized: two one-shuffle aggregations and one
-    * equi-join on the aggregated tables (the `or` union adds B's anti
-    * rows by name, no extra shuffle). A-side values win on overlap,
-    * exactly Prometheus's `or` preference for the left operand.
-    */
-  def vectorSetOpBy(
-      setOp: String,
-      metricA: String,
-      metricB: String,
-      matchersA: Seq[LabelMatcher],
-      matchersB: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetA: Long = 0L,
-      offsetB: Long = 0L): DataFrame = {
-    val keys = byLabels :+ "bucket_start"
-    val a = gaugeAggregate(windowedSamples(metricA, matchersA, start, end,
-      byLabels, stepSec, None, offsetA), perSeries = false, "moments")
-    val b = gaugeAggregate(windowedSamples(metricB, matchersB, start, end,
-      byLabels, stepSec, None, offsetB), perSeries = false, "moments")
-    setOp match {
-      case "and" => Tsdb.nullSafeEquiJoin(
-        a, b.select(keys.map(col): _*), keys, "left_semi")
-      case "unless" => Tsdb.nullSafeEquiJoin(
-        a, b.select(keys.map(col): _*), keys, "left_anti")
-      case "or" =>
-        a.unionByName(Tsdb.nullSafeEquiJoin(
-          b, a.select(keys.map(col): _*), keys, "left_anti"))
-      case other => throw new IllegalArgumentException(
-        s"unknown vector set op: $other (expected and | or | unless)")
-    }
-  }
-
   /** PromQL `sum by (labels) (resets(metric[step]))`: per-series counter
     * resets (a value drop between consecutive samples), summed across
     * series per (label subset, step bucket). The [[counterSeries]]
@@ -2505,9 +2243,9 @@ object Tsdb {
         // increase), so its integer micros sum losslessly: the spread
         // runs on them in the DuckDB mirror's IEEE op order
         val valued = perSeries
-          .withColumn("v_s", if (rate) perSec(inc) else inc)
-          .withColumn("__m", round(col("v_s") * 1e6).cast("long"))
-        val vSum = sum(col("v_s").cast("decimal(28,10)")).cast("double")
+          .withColumn("__v", if (rate) perSec(inc) else inc)
+          .withColumn("__m", round(col("__v") * 1e6).cast("long"))
+        val vSum = sum(col("__v").cast("decimal(28,10)")).cast("double")
         val n = col("n_series").cast("double")
         val meanM = col("__sum_m").cast("double") / n
         val stdvar =
@@ -2518,12 +2256,12 @@ object Tsdb {
             // floor-r6 quantized, so the mean re-enters the micro family
             // (spread/counter outers over an avg inner stay lossless)
             r6(vSum / count(lit(1))).as("avg_v"),
-            min(col("v_s")).as("min_v"),
-            max(col("v_s")).as("max_v"),
+            min(col("__v")).as("min_v"),
+            max(col("__v")).as("max_v"),
             sum(col("__m")).as("__sum_m"),
             sum(col("__m").cast("decimal(19,0)") *
               col("__m").cast("decimal(19,0)")).as("__sum2_m")) ++
-            q.map(p => round(percentile(col("v_s"), lit(p)), 6).as("q_v")))
+            q.map(p => round(percentile(col("__v"), lit(p)), 6).as("q_v")))
           .select(col("*"), r6(stdvar).as("stdvar_v"),
             r6(sqrt(stdvar)).as("stddev_v"))
           .drop("__sum_m", "__sum2_m")
@@ -2635,6 +2373,83 @@ object Tsdb {
         "the grouping")
     }
     df
+  }
+
+  /** Stage (c): PromQL vector matching between two compiled sides, one
+    * row per (labels, t) each, t being the `bucket_start` or `eval_ts`
+    * both carry. `on` are the match labels; `group` the cardinality:
+    * `one` (one-to-one), `left` (`group_left`, `b` the one side) or
+    * `right` (`group_right`, `a` the one side). `op` picks the join:
+    *  - `arith`: result = f(sum_a, sum_b) on every matched row;
+    *  - `filter`: the matched rows where f(sum_a, sum_b) holds, result =
+    *    sum_a (the left operand, whichever side's labels are kept);
+    *  - `bool`: result = 1.0 where f(sum_a, sum_b) holds, else 0.0;
+    *  - `and` / `unless`: the rows of `a` whose key is (not) in `b`
+    *    (left-semi / left-anti join), `a`'s columns;
+    *  - `or`: all of `a`, plus the rows of `b` whose key is absent from
+    *    `a` (the left operand wins on overlap).
+    * For arith/filter/bool each side's value arrives as `sum_a` /
+    * `sum_b` and, when it carries one, its count as `n_a` / `n_b`; the
+    * other columns are its labels. The one side's labels beyond `on`
+    * ride onto the result (`group_left(extra)`), guarded one row per
+    * match group at execution (Prometheus's many-to-many error instead
+    * of a silent row multiplication). Output: the kept labels, the
+    * carried ones, t, n_a, n_b, sum_a, sum_b, result. One null-safe
+    * equi-join ([[nullSafeEquiJoin]]) on the group-sized (on, t) keys. */
+  private[graft] def vectorMatch(
+      a: DataFrame,
+      b: DataFrame,
+      on: Seq[String],
+      group: String,
+      op: String,
+      f: (Column, Column) => Column = (x, _) => x): DataFrame = {
+    val t = if (a.columns.contains("eval_ts")) "eval_ts" else "bucket_start"
+    require(b.columns.contains(t),
+      s"vector-match sides must share the time key $t: " +
+      s"${a.columns.toSeq} vs ${b.columns.toSeq}")
+    val keys = on :+ t
+    def keysOf(df: DataFrame) = df.select(keys.map(col): _*)
+    def labels(df: DataFrame, s: String) =
+      df.columns.toSeq.filterNot(Set(t, s"n_$s", s"sum_$s"))
+    op match {
+      case "and" => nullSafeEquiJoin(a, keysOf(b), keys, "left_semi")
+      case "unless" => nullSafeEquiJoin(a, keysOf(b), keys, "left_anti")
+      case "or" =>
+        require(a.columns.toSeq == b.columns.toSeq,
+          s"'or' sides must produce the same columns: " +
+          s"${a.columns.toSeq} vs ${b.columns.toSeq}")
+        a.unionByName(nullSafeEquiJoin(b, keysOf(a), keys, "left_anti"))
+      case "arith" | "filter" | "bool" =>
+        val (many, one, m, s) =
+          if (group == "right") (b, a, "b", "a") else (a, b, "a", "b")
+        val carry =
+          if (group == "one") Nil else labels(one, s).filterNot(on.contains)
+        val guarded =
+          if (carry.isEmpty) one
+          else one.withColumn(s"sum_$s",
+            when(count(lit(1)).over(org.apache.spark.sql.expressions.Window
+                .partitionBy(keys.map(col): _*)) > 1,
+              raise_error(concat(
+                lit(s"group_$group: more than one " +
+                  s"${if (s == "b") "right" else "left"}-side row for " +
+                  "match group ("),
+                concat_ws(",", on.map(col): _*), lit(")"))))
+              .otherwise(col(s"sum_$s")))
+        val joined = nullSafeEquiJoin(many, guarded, keys)
+        val out = joined.select((labels(many, m) ++ carry ++ Seq(t) ++
+          Seq("n_a", "n_b").filter(joined.columns.contains) ++
+          Seq("sum_a", "sum_b")).map(col): _*)
+        val (x, y) = (col("sum_a"), col("sum_b"))
+        op match {
+          case "arith" => out.select(col("*"), f(x, y).as("result"))
+          case "filter" => out.select(col("*"), x.as("result")).where(f(x, y))
+          case _ =>
+            out.select(col("*"), when(f(x, y), 1.0).otherwise(0.0).as("result"))
+        }
+      case other => throw new IllegalArgumentException(
+        s"unknown vector-match op: $other " +
+        "(expected arith | filter | bool | and | or | unless)")
+    }
   }
 
   /** The deterministic group hash both 3.x sampling aggregators key on:

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions.{abs => cAbs, ceil => cCeil, coalesce, col
   *
   * parses to a small AST and compiles, by family, onto the engine's
   * composable stages ([[graft.Tsdb.windowedSamples]], then
-  * [[graft.Tsdb.gaugeAggregate]] or [[graft.Tsdb.counterAggregate]], …)
-  * and the remaining direct Scala operators — so every compiled query
+  * [[graft.Tsdb.gaugeAggregate]] or [[graft.Tsdb.counterAggregate]], then
+  * the vector match [[graft.Tsdb.vectorMatch]], …) and the remaining
+  * direct Scala operators — so every compiled query
   * inherits their oracle-exact semantics and plan-gated scale shapes
   * (one-shuffle aggregations, pruned scans), and the string front-end
   * adds ZERO new execution paths to audit.
@@ -32,8 +33,8 @@ import org.apache.spark.sql.functions.{abs => cAbs, ceil => cCeil, coalesce, col
   *    `count_values` accept a trailing `by (labels)` projection clause
   *    (the operators' `byLabels` parameter).
   *  - `/` between two aggregations compiles to the engine's vector match
-  *    ([[graft.Tsdb.binaryOpBy]]) with the ratio rounded to 6 decimals,
-  *    the engine's cross-engine-reproducible form.
+  *    ([[graft.Tsdb.vectorMatch]], stage (c)) with the ratio rounded to 6
+  *    decimals, the engine's cross-engine-reproducible form.
   *
   * Grammar (recursive descent, no dependencies; five left-associative
   * precedence levels matching Prometheus's ladder, loosest first —
@@ -1452,37 +1453,40 @@ object PromQL {
       case "<=" => (a, b) => a <= b
     }
 
-  /** Generic vector match between two independently-compiled aggregated
-    * sides — the widening beyond the moment-aggregation fast paths: any
-    * side pair with a derivable grouping ([[groupingOf]]) and value
-    * column ([[valueColOf]]) joins here, so the canonical alert compare
-    * `sum by (c)(rate(a[1h])) > sum by (c)(rate(b[1h]))` and the
-    * projected one-to-many `sum by (c,extra)(a[1h]) > on (c) group_left
-    * sum by (c)(b[1h])` compile instead of falling to the
-    * unsupported-shape error. `ignoring (l)` arrives here already
-    * resolved to explicit on-labels (resolveWithout).
+  /** A moment aggregation straight over a selector — the sides whose
+    * matches carry the sample counts `n_a` / `n_b` and may carry labels
+    * (`group_left(extra)`). */
+  private def isMomentAgg(e: Expr): Boolean = e match {
+    case Agg(op, _, _, _, _: Selector, _) => MomentAggs(op)
+    case _ => false
+  }
+
+  /** Every vector-vector `BinOp` and `BoolCmp`: both sides compile
+    * independently ([[compile]], so under [[queryFromRollup]] a moment
+    * side is served from the tier) and meet in stage (c),
+    * [[graft.Tsdb.vectorMatch]]. Any side pair with a derivable grouping
+    * ([[groupingOf]]) and value column ([[valueColOf]]) matches: moment
+    * aggregations, counter-family aggregations, nested arithmetic
+    * (`a/b > c/d`). `ignoring (l)` arrives here already resolved to
+    * explicit on-labels (resolveWithout).
     *
     * Matching rules (Prometheus semantics, proven at compile time so a
-    * wrong answer is unrepresentable): plain match — both groupings must
-    * equal the match labels (1:1 by construction: each side aggregates
-    * AT that grain, so no many-to-many guard is needed); `group_left` —
-    * the right side's grouping must equal the match labels exactly
-    * (many-to-one; carried labels stay on the dedicated
-    * moment-aggregation path above, which has the one-row guard);
-    * `group_right` — the mirror.
+    * wrong answer is unrepresentable): the sides share the step grid
+    * and congruent offsets; a plain match needs both groupings equal to
+    * the match labels (1:1 by construction: each side aggregates AT
+    * that grain); `group_left` needs the match labels inside both
+    * groupings, the right side's extra labels are carried (moment sides
+    * only, never on `bool`, never already on the left); `group_right`
+    * is the mirror.
     *
-    * Output: the kept (finer) side's labels + bucket_start +
-    * sum_a/sum_b + `result`. `arith` sets result = op(sum_a, sum_b); a
+    * `mode` is stage (c)'s op: `arith` sets result = op(sum_a, sum_b), a
     * `filter` compare passes the LEFT operand's value through and drops
     * failing rows (Prometheus keeps the left value whichever side's
-    * labels survive); `bool` emits the 0/1 indicator and keeps all
-    * matched rows.
-    *
-    * Plan shape: two one-shuffle aggregations joined on group-sized
-    * keys (match labels + bucket) — binaryOpBy's exchange profile, no
-    * new scale surface.
+    * labels survive), `bool` emits the 0/1 indicator on every matched
+    * row. The plan is two group-sized sides and one equi-join on (match
+    * labels, t).
     */
-  private def vectorMatchGeneric(
+  private def vectorMatch(
       t: Tsdb,
       op: String,
       lhs: Expr,
@@ -1516,66 +1520,54 @@ object PromQL {
       s"vector-match sides' offsets ($offA s vs $offB s) are not " +
       s"congruent mod the ${stepA}s step — their bucket grids would " +
       "never intersect")
+    val moments = isMomentAgg(lhs) && isMomentAgg(rhs)
     val mk: Seq[String] =
-      if (on.nonEmpty) on
-      else if (gl) byB
-      else if (gr) byA
-      else {
+      if (!gl && !gr) {
         require(byA.toSet == byB.toSet,
           s"vector-match sides must aggregate by the same labels: " +
           s"$byA vs $byB (use 'on (l) group_left/group_right' for " +
           "one-to-many)")
+        require(on.isEmpty || on.toSet == byA.toSet,
+          s"on-labels ($on) must equal the grouping ($byA)")
         byA
+      } else {
+        val g = if (gl) "group_left" else "group_right"
+        val (many, one, manySide, oneSide) =
+          if (gl) (byA, byB, "left", "right") else (byB, byA, "right", "left")
+        require(on.forall(one.contains),
+          s"$g: the on-labels ($on) must be part of the $oneSide side's " +
+          s"grouping ($one)")
+        val mk = if (on.isEmpty) one else on
+        require(mk.forall(many.contains),
+          s"$g: match labels ($mk) must be part of the $manySide side's " +
+          s"grouping ($many)")
+        val carry = one.filterNot(mk.contains)
+        if (carry.nonEmpty) {
+          require(mode != "bool",
+            s"bool $g does not carry labels — the $oneSide side must " +
+            s"aggregate exactly at the on-labels ($mk), got $one")
+          require(moments,
+            s"$g on this shape needs the $oneSide side aggregated exactly " +
+            s"at the match labels ($mk), got $one — carried labels " +
+            s"($g(extra)) are supported between moment aggregations " +
+            "only, not for counter (rate/increase) sides")
+          require(carry.forall(c => !many.contains(c)),
+            s"$g carried labels (${carry.filter(many.contains)}) already " +
+            s"appear in the $manySide side's grouping — drop them from one " +
+            "side (the join would produce ambiguous columns)")
+        }
+        mk
       }
-    if (gl) {
-      require(mk.forall(byA.contains),
-        s"group_left: match labels ($mk) must be part of the left " +
-        s"side's grouping ($byA)")
-      require(byB.toSet == mk.toSet,
-        s"group_left on this shape needs the right side aggregated " +
-        s"exactly at the match labels ($mk), got $byB — carried labels " +
-        "(group_left(extra)) are supported between moment aggregations " +
-        "only, not for counter (rate/increase) sides")
-    } else if (gr) {
-      require(mk.forall(byB.contains),
-        s"group_right: match labels ($mk) must be part of the right " +
-        s"side's grouping ($byB)")
-      require(byA.toSet == mk.toSet,
-        s"group_right on this shape needs the left side aggregated " +
-        s"exactly at the match labels ($mk), got $byA — carried labels " +
-        "(group_right(extra)) are supported between moment aggregations " +
-        "only, not for counter (rate/increase) sides")
-    } else {
-      require(byA.toSet == mk.toSet && byB.toSet == mk.toSet,
-        s"plain vector match needs both sides grouped by exactly the " +
-        s"match labels ($mk): $byA vs $byB (use 'on (l) " +
-        "group_left/group_right' for one-to-many)")
+    def side(e: Expr, by: Seq[String], s: String): DataFrame = {
+      val df = compile(t, e, start, end, buckets, rollupStep)
+      val tk = if (df.columns.contains("eval_ts")) "eval_ts" else "bucket_start"
+      df.select((by.map(col) :+ col(tk)) ++
+        (if (moments) Seq(col("n").as(s"n_$s")) else Nil) :+
+        col(valueColOf(e)).cast("double").as(s"sum_$s"): _*)
     }
-    val keptBy = if (gr) byB else byA
-    val dfA = compile(t, lhs, start, end, buckets, rollupStep)
-      .select(byA.map(col) ++ Seq(col("bucket_start"),
-        col(valueColOf(lhs)).cast("double").as("sum_a")): _*)
-    val dfB = compile(t, rhs, start, end, buckets, rollupStep)
-      .select(byB.map(col) ++ Seq(col("bucket_start"),
-        col(valueColOf(rhs)).cast("double").as("sum_b")): _*)
-    // null-safe keys: a without-resolved (or sparse `by`) grouping can
-    // hold NULL for series lacking a label; Prometheus matches those
-    // labelsets (absent matches absent) — see Tsdb.nullSafeEquiJoin
-    val out = Tsdb.nullSafeEquiJoin(dfA, dfB, mk :+ "bucket_start")
-      .select(keptBy.map(col) ++ Seq(col("bucket_start"),
-        col("sum_a"), col("sum_b")): _*)
-    mode match {
-      case "arith" =>
-        out.withColumn("result", arith(op)(col("sum_a"), col("sum_b")))
-      case "filter" =>
-        out.withColumn("result", col("sum_a"))
-          .where(cmp(op)(col("sum_a"), col("sum_b")))
-      case "bool" =>
-        out.withColumn("result",
-          org.apache.spark.sql.functions
-            .when(cmp(op)(col("sum_a"), col("sum_b")), 1.0)
-            .otherwise(0.0))
-    }
+    Tsdb.vectorMatch(side(lhs, byA, "a"), side(rhs, byB, "b"), mk,
+      if (gl) "left" else if (gr) "right" else "one", mode,
+      if (mode == "arith") arith(op) else cmp(op))
   }
 
   /** The aggregated-moment column each shape exposes to scalar
@@ -1664,7 +1656,7 @@ object PromQL {
     case BinOp(op, _, _, _, _, _) if ArithOps(op) => "result"
     case BinOp(op, l, r, _, _, _) if CmpOps(op) =>
       (l, r) match {
-        // vector-vector compare goes through binaryOpBy → `result`
+        // vector-vector compare goes through stage (c) → `result`
         // (the lhs value passed through); scalar-side compares filter
         // the vector side in place, keeping its own value column
         case (_: Agg, _: Agg) => "result"
@@ -1682,14 +1674,6 @@ object PromQL {
     case _: MathFn => "result"
     case other => throw new IllegalArgumentException(
       s"scalar operand needs a single-valued vector side, got: $other")
-  }
-
-  /** The moment column a vector-match side contributes (the gauge
-    * `moments` output names) — enables non-sum matches like
-    * `max by (c)(a[1h]) / avg by (c)(b[1h])`. */
-  private def momentCol(aggOp: String): String = aggOp match {
-    case "sum" => "sum_v"; case "avg" => "avg_v"; case "min" => "min_v"
-    case "max" => "max_v"; case "count" => "n"
   }
 
   /** `histogram_quantile` bucket bounds from the metric's `le` label
@@ -1942,16 +1926,6 @@ object PromQL {
           if rollupStep.isDefined && MomentAggs(op) =>
         t.aggregateByFromRollup(checkRollupStep(sel, rollupStep.get),
           sel.metric, sel.matchers, start, end, by, sel.offsetSec)
-      case BinOp(op, Agg("sum", _, _, byA, a: Selector, _),
-          Agg("sum", _, _, byB, b: Selector, _), _, false, false)
-          if rollupStep.isDefined && ArithOps(op) =>
-        require(byA.toSet == byB.toSet,
-          s"vector-match sides must aggregate by the same labels: " +
-          s"$byA vs $byB")
-        checkRollupStep(b, rollupStep.get)
-        t.binaryOpByFromRollup(checkRollupStep(a, rollupStep.get),
-          a.metric, b.metric, a.matchers, b.matchers, start, end,
-          byA, a.offsetSec, b.offsetSec)(arith(op))
 
       // nested subquery: `fn_over_time( rate(x[5m])[1h:1m] )` — the
       // "peak rate over the window" idiom. The inner counter function
@@ -2096,10 +2070,10 @@ object PromQL {
             require(byA.toSet == byB.toSet,
               s"subquery vector-match sides must aggregate by the same " +
               s"labels: $byA vs $byB")
-            def leg(sel: Selector, n2: String, out: String) =
+            def leg(sel: Selector, n2: String, s: String) =
               counterInner(n2, sel, byA, "sum")
                 .select((byA.map(col) :+ col("eval_ts") :+
-                  col(counterCol(n2)).as(out)): _*)
+                  col(counterCol(n2)).as(s"sum_$s")): _*)
             // the subquery-frame quantization contract (r14/r15): "/"
             // results are round(…,6) by the engine's ratio contract
             // (`ratio6`); + - * results are single IEEE ops over the
@@ -2115,16 +2089,14 @@ object PromQL {
               case "+" | "-" | "*" => "result6"
               case _ => "result"
             }
-            val vExpr = op match {
-              case "+" | "-" | "*" =>
-                Tsdb.r6(arith(op)(col("__va"), col("__vb")))
-              case _ => arith(op)(col("__va"), col("__vb"))
+            val f: (Column, Column) => Column = op match {
+              case "+" | "-" | "*" => (x, y) => Tsdb.r6(arith(op)(x, y))
+              case _ => arith(op)
             }
-            val joined = Tsdb.nullSafeEquiJoin(
-                leg(selA, nA, "__va"), leg(selB, nB, "__vb"),
-                byA :+ "eval_ts")
-              .withColumn(rc, vExpr)
-              .drop("__va", "__vb")
+            val joined = Tsdb.vectorMatch(leg(selA, nA, "a"),
+                leg(selB, nB, "b"), byA, "one", "arith", f)
+              .select((byA.map(col) :+ col("eval_ts")) :+
+                col("result").as(rc): _*)
             (joined, byA, rc)
           // depth-3+ nesting: the body is ITSELF a subquery construct —
           // `avg_over_time(max_over_time(rate(x[1h])[6h:1h])[1d:6h])`,
@@ -2332,80 +2304,27 @@ object PromQL {
               .when(cmp(op)(lit(v), col(valueColOf(rhs))), 1.0)
               .otherwise(0.0))
       // vector-vector `bool` comparison (`a > bool b`) — the alert-rule
-      // form: every matched (labels, bucket) row survives and `result`
-      // is Prometheus's 0/1. Same inner (labels, bucket) vector match
-      // as the arithmetic case; only the output convention differs
-      // from the filter form (which sits with the vector-match family
-      // below).
-      case BoolCmp(op, Agg(opA, _, _, byA, a: Selector, _),
-          Agg(opB, _, _, byB, b: Selector, _), on, false, false)
-          if MomentAggs(opA) && MomentAggs(opB) =>
-        require(byA.toSet == byB.toSet,
-          s"vector-compare sides must aggregate by the same labels: " +
-          s"$byA vs $byB")
-        require(on.isEmpty || on.toSet == byA.toSet,
-          s"on-labels ($on) must equal the grouping ($byA)")
-        val step = stepOf(a, "bool vector compare")
-        require(step == stepOf(b, "bool vector compare"),
-          "vector-compare sides must share the step grid")
-        t.binaryOpBy(a.metric, b.metric, a.matchers, b.matchers, start,
-            end, byA, step, momentCol(opA), momentCol(opB),
-            a.offsetSec, b.offsetSec)((x, y) =>
-          org.apache.spark.sql.functions
-            .when(cmp(op)(x, y), 1.0).otherwise(0.0))
-
-      // generic bool vector compare — sides beyond the moment-agg fast
-      // path above (counter-family: `rate(a) > bool rate(b)` shapes),
-      // plain 1:1 matching on the shared grouping
-      // bool with group_left/group_right between moment aggregations:
-      // the guarded one-to-many join, result = the 0/1 indicator, all
-      // matched rows kept (Prometheus bool semantics)
-      case BoolCmp(op, Agg(opA, _, _, byA, a: Selector, _),
-          Agg(opB, _, _, byB, b: Selector, _), on, true, false)
-          if MomentAggs(opA) && MomentAggs(opB) =>
-        require(on.forall(byB.contains),
-          s"group_left: the on-labels ($on) must be part of the right " +
-          s"side's grouping ($byB)")
-        // the parser rejects group_left(extra) on bool ("bool
-        // comparisons do not carry labels") — hold compile to the same
-        // contract: the one side must aggregate exactly at the match
-        // labels, or extras would ride implicitly
-        require(on.isEmpty || byB.toSet == on.toSet,
-          s"bool group_left does not carry labels — the right side " +
-          s"must aggregate exactly at the on-labels ($on), got $byB")
-        val step = stepOf(a, "bool group_left vector compare")
-        require(step == stepOf(b, "bool group_left vector compare"),
-          "vector-compare sides must share the step grid")
-        t.binaryOpByGroupLeft(a.metric, b.metric,
-          a.matchers, b.matchers, start, end, byA, byB, step,
-          a.offsetSec, b.offsetSec,
-          momentCol(opA), momentCol(opB), onLabels = on)((x, y) =>
-          org.apache.spark.sql.functions
-            .when(cmp(op)(x, y), 1.0).otherwise(0.0))
-
-      case BoolCmp(op, Agg(opA, _, _, byA, a: Selector, _),
-          Agg(opB, _, _, byB, b: Selector, _), on, false, true)
-          if MomentAggs(opA) && MomentAggs(opB) =>
-        require(on.forall(byA.contains),
-          s"group_right: the on-labels ($on) must be part of the left " +
-          s"side's grouping ($byA)")
-        require(on.isEmpty || byA.toSet == on.toSet,
-          s"bool group_right does not carry labels — the left side " +
-          s"must aggregate exactly at the on-labels ($on), got $byA")
-        val step = stepOf(b, "bool group_right vector compare")
-        require(step == stepOf(a, "bool group_right vector compare"),
-          "vector-compare sides must share the step grid")
-        t.binaryOpByGroupRight(a.metric, b.metric,
-          a.matchers, b.matchers, start, end, byA, byB, step,
-          a.offsetSec, b.offsetSec,
-          momentCol(opA), momentCol(opB), onLabels = on)((x, y) =>
-          org.apache.spark.sql.functions
-            .when(cmp(op)(x, y), 1.0).otherwise(0.0))
-
+      // form: every matched (labels, t) row survives and `result` is
+      // Prometheus's 0/1, with on()/group_left/group_right like the
+      // filter form
       case BoolCmp(op, lhs, rhs, on, gl, gr)
           if groupingOf(lhs).isDefined && groupingOf(rhs).isDefined =>
-        vectorMatchGeneric(t, op, lhs, rhs, on, gl, gr,
+        vectorMatch(t, op, lhs, rhs, on, gl, gr,
           start, end, buckets, rollupStep, "bool")
+
+      // vector matches and compares — any side pair with a derivable
+      // grouping: moment aggregations (`errors / requests`, any moment
+      // pair), counter-family sides (`sum by (c)(rate(a[1h])) > sum by
+      // (c)(rate(b[1h]))`, the canonical alert compare), on()/ignoring
+      // projections at distinct grains with group_left/group_right (incl.
+      // carried labels), and nested arithmetic sides (`a/b > c/d`).
+      // Arithmetic sets result = op(a, b); a compare passes the left
+      // value through and drops the failing rows.
+      case BinOp(op, lhs, rhs, on, gl, gr)
+          if (ArithOps(op) || CmpOps(op)) &&
+            groupingOf(lhs).isDefined && groupingOf(rhs).isDefined =>
+        vectorMatch(t, op, lhs, rhs, on, gl, gr, start, end,
+          buckets, rollupStep, if (ArithOps(op)) "arith" else "filter")
 
       // other bool shapes parse fine, so without this case they would
       // fall through to the generic unsupported-shape error that never
@@ -2461,7 +2380,8 @@ object PromQL {
           "gap-filling idiom `sum(x[step]) or vector(0)`")
 
       // vector set ops: both sides compile independently (so filtered /
-      // scalar-wrapped sides compose); the match key is (labels, bucket)
+      // scalar-wrapped sides compose) and meet in stage (c); the match
+      // key is (labels, t)
       //  - and:    lhs rows whose key exists on the right (left-semi)
       //  - unless: lhs rows whose key does not         (left-anti)
       //  - or:     all of lhs plus right rows with absent keys
@@ -2474,24 +2394,8 @@ object PromQL {
         val byR = side(r, "right")
         require(byL == byR,
           s"'$sop' sides must aggregate by the same labels: $byL vs $byR")
-        val keys = byL :+ "bucket_start"
-        val dfL = compile(t, l, start, end, buckets, rollupStep)
-        val dfR = compile(t, r, start, end, buckets, rollupStep)
-        sop match {
-          case "and" =>
-            Tsdb.nullSafeEquiJoin(
-              dfL, dfR.select(keys.map(col): _*), keys, "left_semi")
-          case "unless" =>
-            Tsdb.nullSafeEquiJoin(
-              dfL, dfR.select(keys.map(col): _*), keys, "left_anti")
-          case _ =>
-            require(dfL.columns.toSeq == dfR.columns.toSeq,
-              s"'or' sides must produce the same columns: " +
-              s"${dfL.columns.toSeq} vs ${dfR.columns.toSeq}")
-            dfL.unionByName(
-              Tsdb.nullSafeEquiJoin(
-                dfR, dfL.select(keys.map(col): _*), keys, "left_anti"))
-        }
+        Tsdb.vectorMatch(compile(t, l, start, end, buckets, rollupStep),
+          compile(t, r, start, end, buckets, rollupStep), byL, "one", sop)
 
       // time functions read the grid timestamp, not the value column:
       // hour/minute/day_of_week are pure epoch arithmetic (no calendar,
@@ -2623,7 +2527,7 @@ object PromQL {
 
       case other if rollupStep.isDefined =>
         throw new IllegalArgumentException(
-          s"only moment aggregations, sum-by ratios and scalar ops over " +
+          s"only moment aggregations, vector matches and scalar ops over " +
           s"them can be served from the rollup tier, got: $other")
       // bare selector: the raw range scan (instant selectors span the
       // whole query range, like a Prometheus matrix at full resolution)
@@ -2895,106 +2799,6 @@ object PromQL {
       case hq: HistQuantileAgg => throw new IllegalArgumentException(
         "histogram_quantile over an aggregation supports `sum by " +
         "(le, l…)(rate|increase(bucket[d]))`, got: " + render(hq))
-
-      // one-to-many matching: A op on (l) group_left B — the right side
-      // aggregates at the on-label grain, the result keeps A's labels.
-      // Each side applies ITS OWN matcher list. Arithmetic sets result =
-      // op(a, b); a filter COMPARE passes the left value through and
-      // drops failing rows — both ride the same guarded join (incl.
-      // group_left(extra) carried labels).
-      case BinOp(op, Agg(opA, _, _, byA, a: Selector, _),
-          Agg(opB, _, _, byB, b: Selector, _), on, true, false)
-          if (ArithOps(op) || CmpOps(op)) &&
-            MomentAggs(opA) && MomentAggs(opB) =>
-        // byB beyond the on-labels = carried labels (group_left(extra)):
-        // the right side aggregates at on+extra grain and the extras
-        // ride onto the result, guarded one-row-per-match at execution
-        require(on.forall(byB.contains),
-          s"group_left: the on-labels ($on) must be part of the right " +
-          s"side's grouping ($byB)")
-        val step = stepOf(a, "group_left vector match")
-        require(step == stepOf(b, "group_left vector match"),
-          "vector-match sides must share the step grid")
-        val joined = t.binaryOpByGroupLeft(a.metric, b.metric,
-          a.matchers, b.matchers, start, end, byA, byB, step,
-          a.offsetSec, b.offsetSec,
-          momentCol(opA), momentCol(opB), onLabels = on)(
-          if (ArithOps(op)) arith(op) else (x, _) => x)
-        if (ArithOps(op)) joined
-        else joined.where(cmp(op)(col("sum_a"), col("sum_b")))
-
-      // many-to-one: A op on (l) group_right B — the mirror, keeping B's
-      // finer label set; compares filter like the group_left case
-      case BinOp(op, Agg(opA, _, _, byA, a: Selector, _),
-          Agg(opB, _, _, byB, b: Selector, _), on, false, true)
-          if (ArithOps(op) || CmpOps(op)) &&
-            MomentAggs(opA) && MomentAggs(opB) =>
-        // mirror: byA beyond the on-labels = group_right(extra) carry
-        require(on.forall(byA.contains),
-          s"group_right: the on-labels ($on) must be part of the left " +
-          s"side's grouping ($byA)")
-        val step = stepOf(b, "group_right vector match")
-        require(step == stepOf(a, "group_right vector match"),
-          "vector-match sides must share the step grid")
-        val joined = t.binaryOpByGroupRight(a.metric, b.metric,
-          a.matchers, b.matchers, start, end, byA, byB, step,
-          a.offsetSec, b.offsetSec,
-          momentCol(opA), momentCol(opB), onLabels = on)(
-          if (ArithOps(op)) arith(op) else (x, _) => x)
-        if (ArithOps(op)) joined
-        else joined.where(cmp(op)(col("sum_a"), col("sum_b")))
-
-      // arithmetic vector match between two matching aggregations —
-      // any moment pair (sum/avg/min/max/count), each side filtered by
-      // its own matchers only
-      case BinOp(op, Agg(opA, _, _, byA, a: Selector, _),
-          Agg(opB, _, _, byB, b: Selector, _), on, false, false)
-          if ArithOps(op) && MomentAggs(opA) && MomentAggs(opB) =>
-        require(byA.toSet == byB.toSet,
-          s"vector-match sides must aggregate by the same labels: " +
-          s"$byA vs $byB (use 'on (l) group_left' for one-to-many)")
-        require(on.isEmpty || on.toSet == byA.toSet,
-          s"on-labels ($on) must equal the grouping ($byA)")
-        val step = stepOf(a, "vector match")
-        require(step == stepOf(b, "vector match"),
-          "vector-match sides must share the step grid")
-        t.binaryOpBy(a.metric, b.metric, a.matchers, b.matchers, start,
-          end, byA, step, momentCol(opA), momentCol(opB),
-          a.offsetSec, b.offsetSec)(arith(op))
-
-      // vector-vector comparison — PromQL filter semantics: the same
-      // inner (labels, bucket) match as the arithmetic case, keeping
-      // rows where the predicate holds with the LEFT side's value
-      // passing through as `result` (`errors > requests` drops the
-      // healthy buckets, surviving values are the error counts)
-      case BinOp(op, Agg(opA, _, _, byA, a: Selector, _),
-          Agg(opB, _, _, byB, b: Selector, _), on, false, false)
-          if CmpOps(op) && MomentAggs(opA) && MomentAggs(opB) =>
-        require(byA.toSet == byB.toSet,
-          s"vector-compare sides must aggregate by the same labels: " +
-          s"$byA vs $byB")
-        require(on.isEmpty || on.toSet == byA.toSet,
-          s"on-labels ($on) must equal the grouping ($byA)")
-        val step = stepOf(a, "vector compare")
-        require(step == stepOf(b, "vector compare"),
-          "vector-compare sides must share the step grid")
-        t.binaryOpBy(a.metric, b.metric, a.matchers, b.matchers, start,
-            end, byA, step, momentCol(opA), momentCol(opB),
-            a.offsetSec, b.offsetSec)((x, _) => x)
-          .where(cmp(op)(col("sum_a"), col("sum_b")))
-
-      // generic vector matches/compares — any side pair with a
-      // derivable grouping that the dedicated cases above didn't take:
-      // counter-family sides (`sum by (c)(rate(a[1h])) > sum by (c)
-      // (rate(b[1h]))`, the canonical alert compare), on()/ignoring
-      // projections at distinct grains with group_left/group_right, and
-      // nested arithmetic sides (`a/b > c/d`). Each side compiles
-      // independently; the match is a group-sized equi-join.
-      case BinOp(op, lhs, rhs, on, gl, gr)
-          if (ArithOps(op) || CmpOps(op)) &&
-            groupingOf(lhs).isDefined && groupingOf(rhs).isDefined =>
-        vectorMatchGeneric(t, op, lhs, rhs, on, gl, gr, start, end,
-          buckets, rollupStep, if (ArithOps(op)) "arith" else "filter")
 
       case other =>
         throw new IllegalArgumentException(

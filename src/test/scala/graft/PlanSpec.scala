@@ -233,6 +233,39 @@ class PlanSpec extends SparkSuite {
     assert(got == pinned, got.mkString("\n"))
   }
 
+  test("vector matching: each shape keeps its hash-exchange count") {
+    // the match joins two group-sized sides on (match labels, t) and
+    // reuses their partitioning, so each shape counts its sides' own
+    // exchanges (one per raw gauge side, two per counter or
+    // rollup-served side) plus the carried-label guard window and the
+    // subquery outer window
+    val pinned = Seq(
+      "tsdb_ratio" -> 2,
+      "tsdb_ratio_rollup" -> 4,
+      "tsdb_promql_ratio" -> 2,
+      "tsdb_promql_ratio_wo" -> 2,
+      "tsdb_promql_ratio_matched" -> 2,
+      "tsdb_group_left" -> 2,
+      "tsdb_group_left_carry" -> 3,
+      "tsdb_group_right" -> 2,
+      "tsdb_promql_ignoring" -> 2,
+      "tsdb_promql_bool" -> 2,
+      "tsdb_promql_bool_vv" -> 2,
+      "tsdb_promql_cmp_vv" -> 2,
+      "tsdb_promql_cmp_on" -> 2,
+      "tsdb_promql_cmp_rate" -> 4,
+      "tsdb_promql_and" -> 2,
+      "tsdb_promql_unless" -> 2,
+      "tsdb_promql_maxavg" -> 2,
+      "tsdb_promql_dod" -> 2,
+      "tsdb_promql_subquery_ratio" -> 5)
+    val got = pinned.map { case (name, _) =>
+      name -> "Exchange hashpartitioning".r
+        .findAllIn(planOf(SparkEntry.queries(name)(spark, sf0001))).length
+    }
+    assert(got == pinned, got.mkString("\n"))
+  }
+
   test("vector compares: group-sized equi-joins, bounded exchanges, " +
       "no cartesian") {
     // counter-family compare (generic path): two lag+agg sides joined

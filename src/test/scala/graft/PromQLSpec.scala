@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model.LabelMatcher
@@ -69,15 +69,18 @@ class PromQLSpec extends SparkSuite {
   /** A raw sample: (first label, second label, ts, exact value). */
   private type Sample = (String, String, Long, BigDecimal)
 
-  /** The `click` samples as (cohort, user_id, ts, value), one day of
+  /** A metric's samples as (cohort, user_id, ts, value), one day of
     * lookback before T0 included. */
-  private lazy val clicks: Seq[Sample] =
-    t.queryRange("click", Seq.empty, T0 - 86400L, T1)
+  private def samplesOf(metric: String): Seq[Sample] =
+    t.queryRange(metric, Seq.empty, T0 - 86400L, T1)
       .select(col("labels")("cohort"), col("labels")("user_id"), col("ts"),
         col("value"))
       .collect().toSeq
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         BigDecimal(r.getDouble(3))))
+
+  private lazy val clicks: Seq[Sample] = samplesOf("click")
+  private lazy val purchases: Seq[Sample] = samplesOf("purchase")
 
   /** The eval grid: the multiples of `st` within [lo, hi]. */
   private def evalPoints(lo: Long, hi: Long, st: Long): Seq[Long] =
@@ -110,6 +113,58 @@ class PromQLSpec extends SparkSuite {
     Seq(vs.size.toLong, vs.sum.toDouble, vs.sum.toDouble / vs.size,
       vs.min.toDouble, vs.max.toDouble)
   }
+
+  /** The moments of `ss` per `key` and tumbling bucket over [start, T1]. */
+  private def momentsBy(ss: Seq[Sample], step: Long, start: Long = T0,
+      o: Long = 0L)(key: Sample => Seq[Any]): Map[Seq[Any], Seq[Any]] =
+    bucketed(ss, start, T1, step, o)(key).map { case (k, g) => k -> moments(g) }
+
+  /** Moment `m` (n, sum_v, avg_v, min_v or max_v) of a moments row, as
+    * the double a vector match reads. */
+  private def momentOf(ms: Seq[Any], m: String): Double =
+    ms(Seq("n", "sum_v", "avg_v", "min_v", "max_v").indexOf(m)) match {
+      case n: Long => n.toDouble
+      case d: Double => d
+    }
+
+  /** The engine's ratio: round(a / b, 6), and a · +Inf on a zero
+    * denominator. */
+  private def ratio6(a: Double, b: Double): Double =
+    if (b == 0.0) a * Double.PositiveInfinity else round6(a / b)
+
+  /** A vector match replayed over two moments maps: each row of the
+    * many side (`a`, or `b` when `right`) meets the one-side row at
+    * `oneKey` of its key, giving its key, n_a, n_b, sum_a, sum_b and
+    * f(sum_a, sum_b) — the match's columns in order — as a multiset. */
+  private def matchReplay(a: Map[Seq[Any], Seq[Any]],
+      b: Map[Seq[Any], Seq[Any]], ma: String = "sum_v", mb: String = "sum_v",
+      right: Boolean = false)(oneKey: Seq[Any] => Seq[Any])(
+      f: (Double, Double) => Double): Map[Seq[Any], Int] = {
+    val (many, one) = if (right) (b, a) else (a, b)
+    bag(many.toSeq.flatMap { case (k, vm) => one.get(oneKey(k)).map { vo =>
+      val (va, vb) = if (right) (vo, vm) else (vm, vo)
+      val (x, y) = (momentOf(va, ma), momentOf(vb, mb))
+      k ++ Seq(va(0), vb(0), x, y, f(x, y))
+    } })
+  }
+
+  /** The one-to-one `f(sum by (cohort) (a[1h]), sum by (cohort) (b[1h]))`
+    * called through the stages directly: (a) and (b) per side, then the
+    * match, stage (c). */
+  private def stageMatch(a: String, b: String)(
+      f: (Column, Column) => Column): DataFrame = {
+    def side(metric: String, s: String) =
+      Tsdb.gaugeAggregate(t.windowedSamples(metric, Seq.empty, T0, T1,
+          Seq("cohort"), 3600L, None, 0L), perSeries = false, "moments")
+        .select(col("cohort"), col("bucket_start"), col("n").as(s"n_$s"),
+          col("sum_v").as(s"sum_$s"))
+    Tsdb.vectorMatch(side(a, "a"), side(b, "b"), Seq("cohort"), "one",
+      "arith", f)
+  }
+
+  /** The columns of a moment-aggregation match. */
+  private val MatchCols =
+    Seq("bucket_start", "n_a", "n_b", "sum_a", "sum_b", "result")
 
   /** `last_v`: the newest sample, a ts tie to the larger value. */
   private def lastOf(ss: Seq[Sample]): Double =
@@ -232,10 +287,10 @@ class PromQLSpec extends SparkSuite {
     // case-insensitively) and every read of one would fail as ambiguous
     import spark.implicits._
     val store = Tsdb.attach(spark, Seq(
-        ("m", Map("n" -> "a", "sum_v" -> "b"), T0 + 10L, 1.0),
-        ("m", Map("n" -> "a", "sum_v" -> "b"), T0 + 400L, 3.0),
-        ("m", Map("n" -> "c", "sum_v" -> "d"), T0 + 20L, 2.0),
-        ("m", Map("n" -> "c", "sum_v" -> "d"), T0 + 500L, 4.0))
+        ("m", Map("n" -> "a", "sum_v" -> "b", "v_s" -> "a"), T0 + 10L, 1.0),
+        ("m", Map("n" -> "a", "sum_v" -> "b", "v_s" -> "a"), T0 + 400L, 3.0),
+        ("m", Map("n" -> "c", "sum_v" -> "d", "v_s" -> "b"), T0 + 20L, 2.0),
+        ("m", Map("n" -> "c", "sum_v" -> "d", "v_s" -> "b"), T0 + 500L, 4.0))
       .toDF("metric", "labels", "ts", "value"))
     val end = T0 + 1799L
     for ((q, label, column) <- Seq(
@@ -252,6 +307,11 @@ class PromQLSpec extends SparkSuite {
       .columns.toSeq == Seq("n", "bucket_start", "increase", "rate_per_sec"))
     assert(PromQL.query(store, "sum by (sum_v) (rate(m[600:300]))", T0, end)
       .select("sum_v").distinct().count() == 2L)
+    // and a label named like an internal intermediate keeps its values
+    // (the sliding counter moments name their per-series value `__v`)
+    assert(PromQL.query(store,
+        "max_over_time(avg by (v_s) (rate(m[600]))[600:300])", T0, end)
+      .select("v_s").collect().map(_.getString(0)).toSet == Set("a", "b"))
   }
 
   test("counter family: rate / increase / resets under sum by") {
@@ -457,31 +517,18 @@ class PromQLSpec extends SparkSuite {
     assert(absent.join(present, "eval_ts").count() == 0L)
   }
 
-  test("arithmetic vector matches (/ * + -) == binaryOpBy") {
-    assertSame(
-      PromQL.query(t,
-        "sum by (cohort) (purchase[1h]) / sum by (cohort) (click[1h])",
-        T0, T1),
-      t.binaryOpBy("purchase", "click", Seq.empty, Seq.empty, T0, T1, Seq("cohort"),
-        3600L)((a, b) => round(a / b, 6)))
-    assertSame(
-      PromQL.query(t,
-        "sum by (cohort) (purchase[1h]) + sum by (cohort) (click[1h])",
-        T0, T1),
-      t.binaryOpBy("purchase", "click", Seq.empty, Seq.empty, T0, T1, Seq("cohort"),
-        3600L)((a, b) => a + b))
-    assertSame(
-      PromQL.query(t,
-        "sum by (cohort) (purchase[1h]) - sum by (cohort) (click[1h])",
-        T0, T1),
-      t.binaryOpBy("purchase", "click", Seq.empty, Seq.empty, T0, T1, Seq("cohort"),
-        3600L)((a, b) => a - b))
-    assertSame(
-      PromQL.query(t,
-        "sum by (cohort) (purchase[1h]) * sum by (cohort) (click[1h])",
-        T0, T1),
-      t.binaryOpBy("purchase", "click", Seq.empty, Seq.empty, T0, T1, Seq("cohort"),
-        3600L)((a, b) => a * b))
+  test("arithmetic vector matches (/ * + -) == the driver-side match " +
+      "replay") {
+    val hourly = (m: Seq[Sample]) => momentsBy(m, 3600L)(s => Seq(s._1))
+    for ((op, f) <- Seq[(String, (Double, Double) => Double)](
+        "/" -> ratio6, "+" -> (_ + _), "-" -> (_ - _), "*" -> (_ * _))) {
+      val df = PromQL.query(t,
+        s"sum by (cohort) (purchase[1h]) $op sum by (cohort) (click[1h])",
+        T0, T1)
+      assert(df.columns.toSeq == "cohort" +: MatchCols)
+      assert(bagOf(df, df.columns.toSeq: _*) ==
+        matchReplay(hourly(purchases), hourly(clicks))(identity)(f), op)
+    }
   }
 
   test("without clause resolves against the series label universe") {
@@ -490,12 +537,12 @@ class PromQLSpec extends SparkSuite {
       PromQL.query(t, "sum without (user_id) (click[1h])", T0, T1),
       PromQL.query(t, "sum by (cohort) (click[1h])", T0, T1))
     // without() on both sides of a vector match
-    assertSame(
-      PromQL.query(t,
+    assert(bagOf(PromQL.query(t,
         "sum without (user_id) (purchase[1h]) / " +
         "sum without (user_id) (click[1h])", T0, T1),
-      t.binaryOpBy("purchase", "click", Seq.empty, Seq.empty, T0, T1, Seq("cohort"),
-        3600L)((a, b) => round(a / b, 6)))
+      "cohort" +: MatchCols: _*) ==
+      matchReplay(momentsBy(purchases, 3600L)(s => Seq(s._1)),
+        momentsBy(clicks, 3600L)(s => Seq(s._1)))(identity)(ratio6))
     // by and without together is a parse error
     val e = intercept[IllegalArgumentException](
       PromQL.parse("sum by (cohort) without (user_id) (click[1h])"))
@@ -530,11 +577,18 @@ class PromQLSpec extends SparkSuite {
     assertSame(
       PromQL.queryFromRollup(disk, q, T0, T1, 3600L),
       PromQL.query(disk, q, T0, T1))
-    val ratio =
-      "sum by (cohort) (purchase[1h]) / sum by (cohort) (click[1h])"
-    assertSame(
-      PromQL.queryFromRollup(disk, ratio, T0, T1, 3600L),
-      PromQL.query(disk, ratio, T0, T1))
+    // vector matches: each moment side is served from the tier
+    for (m <- Seq(
+        "sum by (cohort) (purchase[1h]) / sum by (cohort) (click[1h])",
+        "max by (cohort) (click[1h]) > avg by (cohort) (click[1h])",
+        "max by (cohort, user_id) (click[1h]) / on (cohort) group_left " +
+          "sum by (cohort) (purchase[1h])")) {
+      val tier = PromQL.queryFromRollup(disk, m, T0, T1, 3600L)
+      assert(tier.queryExecution.executedPlan.toString
+        .contains("rollup_3600"), m)
+      assert(tier.count() > 0, m)
+      assertSame(tier, PromQL.query(disk, m, T0, T1))
+    }
     // grid mismatch must throw, not approximate
     val e = intercept[IllegalArgumentException](
       PromQL.queryFromRollup(disk, "sum by (cohort) (click[30m])",
@@ -561,14 +615,16 @@ class PromQLSpec extends SparkSuite {
         .orderBy("cohort", "bucket_start"))
   }
 
-  test("group_left one-to-many vector match == binaryOpByGroupLeft") {
-    assertSame(
-      PromQL.query(t,
-        "sum by (cohort, user_id) (purchase[1d]) / on (cohort) " +
-        "group_left sum by (cohort) (click[1d])", T0, T1),
-      t.binaryOpByGroupLeft("purchase", "click", Seq.empty, Seq.empty, T0, T1,
-        Seq("cohort", "user_id"), Seq("cohort"), 86400L)(
-        (a, b) => round(a / b, 6)))
+  test("group_left one-to-many vector match == the driver-side match " +
+      "replay") {
+    val gl = PromQL.query(t,
+      "sum by (cohort, user_id) (purchase[1d]) / on (cohort) " +
+      "group_left sum by (cohort) (click[1d])", T0, T1)
+    assert(gl.columns.toSeq == Seq("cohort", "user_id") ++ MatchCols)
+    assert(bagOf(gl, gl.columns.toSeq: _*) ==
+      matchReplay(momentsBy(purchases, 86400L)(s => Seq(s._1, s._2)),
+        momentsBy(clicks, 86400L)(s => Seq(s._1)))(
+        k => Seq(k(0), k(2)))(ratio6))
     // on-labels must be part of the right side's grouping
     val e = intercept[IllegalArgumentException](
       PromQL.query(t,
@@ -654,23 +710,18 @@ class PromQLSpec extends SparkSuite {
     // the numerator filter is on a label OUTSIDE the grouping, so the
     // old union-of-matchers behavior would (wrongly) filter the
     // denominator too — this asserts the per-side semantics
-    val m = Seq(LabelMatcher.re("user_id", "1.*"))
-    assertSame(
-      PromQL.query(t,
+    val ones = purchases.filter(_._2.startsWith("1"))
+    val daily = (m: Seq[Sample]) => momentsBy(m, 86400L)(s => Seq(s._1))
+    val perSide = matchReplay(daily(ones), daily(clicks))(identity)(ratio6)
+    assert(bagOf(PromQL.query(t,
         """sum by (cohort) (purchase{user_id=~"1.*"}[1d]) / """ +
         "sum by (cohort) (click[1d])", T0, T1),
-      t.binaryOpBy("purchase", "click", m, Seq.empty, T0, T1,
-        Seq("cohort"), 86400L)((a, b) => round(a / b, 6)))
+      "cohort" +: MatchCols: _*) == perSide)
     // and the union version is genuinely different (the test bites)
-    val perSide = t.binaryOpBy("purchase", "click", m, Seq.empty, T0, T1,
-      Seq("cohort"), 86400L)((a, b) => round(a / b, 6))
-    val union = t.binaryOpBy("purchase", "click", m, m, T0, T1,
-      Seq("cohort"), 86400L)((a, b) => round(a / b, 6))
-    val joined = perSide.select(col("cohort"), col("bucket_start"),
-        col("result").as("r1"))
-      .join(union.select(col("cohort"), col("bucket_start"),
-        col("result").as("r2")), Seq("cohort", "bucket_start"))
-    assert(joined.where(col("r1") =!= col("r2")).count() > 0,
+    val union = matchReplay(daily(ones),
+      daily(clicks.filter(_._2.startsWith("1"))))(identity)(ratio6)
+    val r2 = union.keys.map(r => r.take(2) -> r.last).toMap
+    assert(perSide.keys.exists(r => r2.get(r.take(2)).exists(_ != r.last)),
       "fixture too weak: per-side and union matchers agree everywhere")
   }
 
@@ -707,8 +758,7 @@ class PromQLSpec extends SparkSuite {
       PromQL.query(t, "sum by (cohort) (click[1h]) > 500", T0, T1),
       base.where(col("sum_v") > 500))
     // chained: ratio, scaled, thresholded — the alert-rule shape
-    val ratio = t.binaryOpBy("purchase", "click", Seq.empty, Seq.empty,
-      T0, T1, Seq("cohort"), 3600L)((a, b) => round(a / b, 6))
+    val ratio = stageMatch("purchase", "click")((a, b) => round(a / b, 6))
     assertSame(
       PromQL.query(t,
         "sum by (cohort) (purchase[1h]) / sum by (cohort) (click[1h])" +
@@ -717,14 +767,20 @@ class PromQLSpec extends SparkSuite {
         .where(col("result") > 55))
   }
 
-  test("and / or / unless vector set ops == vectorSetOpBy") {
-    for (sop <- Seq("and", "or", "unless")) {
-      assertSame(
-        PromQL.query(t,
-          s"sum by (cohort) (purchase[1h]) $sop " +
-          "sum by (cohort) (click[1h])", T0, T1),
-        t.vectorSetOpBy(sop, "purchase", "click", Seq.empty, Seq.empty,
-          T0, T1, Seq("cohort"), 3600L))
+  test("and / or / unless vector set ops == the driver-side key replay") {
+    val pm = momentsBy(purchases, 3600L)(s => Seq(s._1))
+    val cm = momentsBy(clicks, 3600L)(s => Seq(s._1))
+    for ((sop, rows) <- Seq(
+        "and" -> pm.filter(r => cm.contains(r._1)),
+        "or" -> (pm ++ cm.filter(r => !pm.contains(r._1))),
+        "unless" -> pm.filter(r => !cm.contains(r._1)))) {
+      val df = PromQL.query(t,
+        s"sum by (cohort) (purchase[1h]) $sop " +
+        "sum by (cohort) (click[1h])", T0, T1)
+      assert(df.columns.toSeq == "cohort" +: MomentCols)
+      assert(df.count() == rows.size &&
+        rowSet(df, df.columns.toSeq: _*) ==
+          rows.map { case (k, ms) => k ++ ms }.toSet, sop)
     }
     // 'unless' with a thresholded right side: purchases in hours where
     // clicks did NOT exceed the threshold
@@ -748,14 +804,16 @@ class PromQLSpec extends SparkSuite {
     assert(nAnd + nUnless == n)
   }
 
-  test("group_right many-to-one vector match == binaryOpByGroupRight") {
-    assertSame(
-      PromQL.query(t,
-        "sum by (cohort) (click[1d]) / on (cohort) group_right " +
-        "sum by (cohort, user_id) (purchase[1d])", T0, T1),
-      t.binaryOpByGroupRight("click", "purchase", Seq.empty, Seq.empty,
-        T0, T1, Seq("cohort"), Seq("cohort", "user_id"), 86400L)(
-        (a, b) => round(a / b, 6)))
+  test("group_right many-to-one vector match == the driver-side match " +
+      "replay") {
+    val grAll = PromQL.query(t,
+      "sum by (cohort) (click[1d]) / on (cohort) group_right " +
+      "sum by (cohort, user_id) (purchase[1d])", T0, T1)
+    assert(grAll.columns.toSeq == Seq("cohort", "user_id") ++ MatchCols)
+    assert(bagOf(grAll, grAll.columns.toSeq: _*) ==
+      matchReplay(momentsBy(clicks, 86400L)(s => Seq(s._1)),
+        momentsBy(purchases, 86400L)(s => Seq(s._1, s._2)), right = true)(
+        k => Seq(k(0), k(2)))(ratio6))
     // group_right keeps the RIGHT side's finer labels; its result is the
     // value-mirror of the equivalent group_left with sides swapped
     val gr = PromQL.query(t,
@@ -784,29 +842,28 @@ class PromQLSpec extends SparkSuite {
   }
 
   test("non-sum vector matching picks each side's moment column") {
-    assertSame(
-      PromQL.query(t,
-        "max by (cohort) (click[1h]) / avg by (cohort) (click[1h])",
-        T0, T1),
-      t.binaryOpBy("click", "click", Seq.empty, Seq.empty, T0, T1,
-        Seq("cohort"), 3600L, momentA = "max_v", momentB = "avg_v")(
-        (a, b) => round(a / b, 6)))
+    def rows(q: String) = {
+      val df = PromQL.query(t, q, T0, T1)
+      bagOf(df, df.columns.toSeq: _*)
+    }
+    assert(rows("max by (cohort) (click[1h]) / avg by (cohort) (click[1h])")
+      == matchReplay(momentsBy(clicks, 3600L)(s => Seq(s._1)),
+        momentsBy(clicks, 3600L)(s => Seq(s._1)), "max_v", "avg_v")(
+        identity)(ratio6))
     // group_left/group_right accept non-sum moment pairs too:
     // each user's daily max click against their cohort's daily avg
-    assertSame(
-      PromQL.query(t,
+    val perUser = momentsBy(clicks, 86400L)(s => Seq(s._1, s._2))
+    val perCohort = momentsBy(clicks, 86400L)(s => Seq(s._1))
+    assert(rows(
         "max by (cohort, user_id) (click[1d]) / on (cohort) group_left " +
-        "avg by (cohort) (click[1d])", T0, T1),
-      t.binaryOpByGroupLeft("click", "click", Seq.empty, Seq.empty,
-        T0, T1, Seq("cohort", "user_id"), Seq("cohort"), 86400L,
-        momentA = "max_v", momentB = "avg_v")((a, b) => round(a / b, 6)))
-    assertSame(
-      PromQL.query(t,
+        "avg by (cohort) (click[1d])") ==
+      matchReplay(perUser, perCohort, "max_v", "avg_v")(
+        k => Seq(k(0), k(2)))(ratio6))
+    assert(rows(
         "avg by (cohort) (click[1d]) / on (cohort) group_right " +
-        "max by (cohort, user_id) (click[1d])", T0, T1),
-      t.binaryOpByGroupRight("click", "click", Seq.empty, Seq.empty,
-        T0, T1, Seq("cohort"), Seq("cohort", "user_id"), 86400L,
-        momentA = "avg_v", momentB = "max_v")((a, b) => round(a / b, 6)))
+        "max by (cohort, user_id) (click[1d])") ==
+      matchReplay(perCohort, perUser, "avg_v", "max_v", right = true)(
+        k => Seq(k(0), k(2)))(ratio6))
   }
 
   test("scalar ops compose over rollup-served aggregations") {
@@ -857,13 +914,14 @@ class PromQLSpec extends SparkSuite {
   test("per-side offsets: the day-over-day ratio shape") {
     // purchase yesterday vs purchase today per cohort-day — each side
     // evaluates its own offset window, matched on the requested grid
-    assertSame(
-      PromQL.query(t,
-        "sum by (cohort) (purchase[1d] offset 1d) / " +
-        "sum by (cohort) (purchase[1d])", T0 + 86400L, T1),
-      t.binaryOpBy("purchase", "purchase", Seq.empty, Seq.empty,
-        T0 + 86400L, T1, Seq("cohort"), 86400L,
-        offsetA = 86400L, offsetB = 0L)((a, b) => round(a / b, 6)))
+    val df = PromQL.query(t,
+      "sum by (cohort) (purchase[1d] offset 1d) / " +
+      "sum by (cohort) (purchase[1d])", T0 + 86400L, T1)
+    assert(df.count() > 0 && bagOf(df, df.columns.toSeq: _*) ==
+      matchReplay(
+        momentsBy(purchases, 86400L, T0 + 86400L, 86400L)(s => Seq(s._1)),
+        momentsBy(purchases, 86400L, T0 + 86400L)(s => Seq(s._1)))(
+        identity)(ratio6))
   }
 
   test("offset threads through the formerly fail-fast shapes: " +
@@ -982,8 +1040,7 @@ class PromQLSpec extends SparkSuite {
       PromQL.query(t, "floor(sum by (cohort) (click[1h]))", T0, T1),
       base.withColumn("result", floor(col("sum_v")).cast("double")))
     // chained over a vector difference, then thresholded
-    val diff = t.binaryOpBy("click", "purchase", Seq.empty, Seq.empty,
-      T0, T1, Seq("cohort"), 3600L)((a, b) => a - b)
+    val diff = stageMatch("click", "purchase")(_ - _)
     assertSame(
       PromQL.query(t,
         "abs(sum by (cohort) (click[1h]) - " +
@@ -997,8 +1054,7 @@ class PromQLSpec extends SparkSuite {
       PromQL.query(t,
         "sgn(sum by (cohort) (click[1h]) - " +
         "sum by (cohort) (purchase[1h]))", T0, T1),
-      t.binaryOpBy("click", "purchase", Seq.empty, Seq.empty, T0, T1,
-          Seq("cohort"), 3600L)((a, b) => a - b)
+      stageMatch("click", "purchase")(_ - _)
         .withColumn("result", signum(col("result"))))
     // clamp without its scalar bound is a parse error
     val e = intercept[IllegalArgumentException](
@@ -1707,6 +1763,15 @@ class PromQLSpec extends SparkSuite {
       "sum by (cohort) (rate(click[3600] offset 1800s)) > " +
         "sum by (cohort) (rate(purchase[3600]))", T0, T1))
     assert(e3.getMessage.contains("congruent"), e3.getMessage)
+    // the moment-aggregation forms take the same check (an hourly side
+    // offset 30m used to join to no rows)
+    for (op <- Seq("/", ">", "> bool", "/ on (cohort) group_left")) {
+      val q = s"sum by (cohort, user_id) (click[1h] offset 30m) $op " +
+        (if (op.contains("group_left")) "sum by (cohort) (purchase[1h])"
+          else "sum by (cohort, user_id) (purchase[1h])")
+      val e = intercept[IllegalArgumentException](PromQL.query(t, q, T0, T1))
+      assert(e.getMessage.contains("congruent"), q)
+    }
     assert(PromQL.query(t,
       "sum by (cohort) (rate(click[3600] offset 3600s)) > " +
         "sum by (cohort) (rate(purchase[3600]))", T0, T1).columns
