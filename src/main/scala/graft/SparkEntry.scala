@@ -115,14 +115,13 @@ object SparkEntry {
         phi = 0.9, buckets = HistBuckets)
       .orderBy("cohort", "bucket_start")
 
-  /** PromQL `predict_linear(click[range], 1h)` per series: least-squares
+  /** PromQL `predict_linear(click[7d], 1h)` per series: least-squares
     * slope + 1h-ahead extrapolation, exact-decimal moments (bit-reproducible
     * vs the HUGEINT oracle).
     */
   private def qTsdbPredictLinear(s: SparkSession, dir: String): DataFrame =
-    tsdbOn(s, dir)
-      .predictLinear("click", Seq.empty, T0, T1, Seq("user_id"),
-        atSec = T1 + 3600L)
+    graft.promql.PromQL.query(tsdbOn(s, dir),
+        "predict_linear(click[7d], 3600) by (user_id)", T0, T1)
       .select(col("user_id").cast("long").as("user_id"), col("n"),
         col("slope_per_sec"), col("predicted"))
       .orderBy("user_id")
@@ -179,9 +178,9 @@ object SparkEntry {
       .orderBy("key", "bucket_start")
 
   /** PromQL `deriv(click[7d])`: per-series least-squares slope — the
-    * slope-only projection of [[graft.Tsdb.predictLinear]]'s exact-decimal
-    * regression moments, grouped by the metric's full label-key universe
-    * like bare `rate()`.
+    * slope-only projection of the `trend` fit's exact-decimal regression
+    * moments ([[graft.Tsdb.gaugeAggregate]]), grouped by the metric's
+    * full label-key universe like bare `rate()`.
     */
   private def qTsdbPromqlDeriv(s: SparkSession, dir: String): DataFrame =
     graft.promql.PromQL.query(tsdbOn(s, dir), "deriv(click[7d])", T0, T1)
@@ -667,7 +666,7 @@ object SparkEntry {
 
   /** Sliding trend — `deriv(click[6h:1h])`: an exact least-squares slope
     * over each trailing 6h window of raw samples, every hour
-    * (Tsdb.slidingPredictLinear, integer-cents regression sums).
+    * (the gaugeAggregate `trend` fit, integer-cents regression sums).
     */
   private def qTsdbPromqlSubqueryDeriv(
       s: SparkSession, dir: String): DataFrame =
@@ -689,7 +688,7 @@ object SparkEntry {
 
   /** Sliding resets — `sum by (cohort)(resets(click[6h:1h]))`: counter
     * drops per trailing 6h window, every hour, summed across series
-    * (Tsdb.slidingResetsChangesBy; the sliding counter delta-
+    * (the gaugeAggregate `resets_changes` count; the sliding counter delta-
     * attribution rule, so the counter family shares one convention).
     */
   private def qTsdbPromqlSubqueryResets(
@@ -1470,8 +1469,9 @@ object SparkEntry {
     * composing with the label-dimension aggregation.
     */
   private def qTsdbResets(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .resetsBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    graft.promql.PromQL.query(
+        Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+        "sum by (cohort) (resets(click[1h]))", T0, T1)
       .orderBy("cohort", "bucket_start")
 
   /** PromQL `absent_over_time(click{user_id="7"}[30m])` on the hourly
@@ -1479,10 +1479,8 @@ object SparkEntry {
     * against the same bounded explode the over_time family uses.
     */
   private def qTsdbAbsentOverTime(s: SparkSession, dir: String): DataFrame =
-    tsdbOn(s, dir)
-      .absentOverTime("click",
-        Seq(graft.model.LabelMatcher.eq("user_id", "7")),
-        T0, T1, 3600L, 1800L)
+    graft.promql.PromQL.query(tsdbOn(s, dir),
+        """absent_over_time(click{user_id="7"}[30m:1h])""", T0, T1)
       .orderBy("eval_ts")
 
   /** PromQL `sum by (cohort) (changes(click[1h]))`: consecutive-sample
@@ -1490,8 +1488,9 @@ object SparkEntry {
     * config-churn signal; resets' sibling, same two-stage plan.
     */
   private def qTsdbChanges(s: SparkSession, dir: String): DataFrame =
-    Tsdb.attach(s, eventsAsSamplesCohort(s, dir))
-      .changesBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    graft.promql.PromQL.query(
+        Tsdb.attach(s, eventsAsSamplesCohort(s, dir)),
+        "sum by (cohort) (changes(click[1h]))", T0, T1)
       .orderBy("cohort", "bucket_start")
 
   /** PromQL `irate(click[1h])` / `idelta(click[1h])` per series: the
@@ -1499,8 +1498,8 @@ object SparkEntry {
     * bounded rank window, the spiky-counter dashboard primitive.
     */
   private def qTsdbIrate(s: SparkSession, dir: String): DataFrame =
-    tsdbOn(s, dir)
-      .instantDeltaBy("click", Seq.empty, T0, T1, Seq("user_id"), 86400L)
+    graft.promql.PromQL.query(tsdbOn(s, dir),
+        "irate(click[1d]) by (user_id)", T0, T1)
       .select(col("user_id").cast("long").as("user_id"),
         col("bucket_start"), col("dt"), col("idelta"), col("irate"))
       .orderBy("user_id", "bucket_start")

@@ -800,24 +800,29 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         sort_array(collect_list(struct(col("ts"), col("value")))).as("points"))
   }
 
-  /** Stage (a) of the gauge and counter families: one selector's
-    * samples keyed on the eval grid. The one selector scan and the one
-    * offset check; `relabel` rewrites the label map before any grouping
-    * (label_replace / label_join feeding an aggregation — matchers still
-    * see the original labels, like Prometheus), then `prep` runs on the
-    * scanned samples (the counter family's [[Tsdb.counterLag]]).
-    * `gridStep` picks t:
+  /** Stage (a) of the range functions: one selector's samples keyed on
+    * the eval grid. The one raw-sample scan and the one offset check;
+    * `relabel` rewrites the label map before any grouping (label_replace
+    * / label_join feeding an aggregation — matchers still see the
+    * original labels, like Prometheus), then `prep` runs on the scanned
+    * samples (the [[Tsdb.counterLag]] of the counter family and of
+    * resets/changes). `gridStep` picks t:
     *  - None: tumbling buckets `rangeSec` wide, t = `bucket_start`
-    *    ([[Tsdb.bucketKey]]), over the scan [start − o, end − o];
+    *    ([[Tsdb.bucketKey]]), over the scan [start − o, end − o]; with
+    *    `whole`, that scan is ONE window and there is no t (the no-step
+    *    trend fit, absent; `rangeSec` is unused);
     *  - Some(s): the sliding eval grid every s over `rangeSec`
     *    lookbacks, t = `eval_ts` ([[Tsdb.explodeEvalGrid]]); the scan
     *    reaches one lookback before the grid, so the first eval points
     *    see their whole window and the lag's pairs are not cut.
     * An offset o scans o back and reports t o forward, at the REQUESTED
-    * grid. Returns (keyed samples, group keys = `byLabels` then t);
-    * stage (b) groups on the keys: [[Tsdb.gaugeAggregate]] for the
-    * gauge family, [[counterSeries]] then [[Tsdb.counterAggregate]] for
-    * the counter family. */
+    * grid. The one-window and sliding frames carry `__end`, each
+    * window's last second before the shift (the trend fit's x origin;
+    * unread, it is pruned). Returns (keyed samples, group keys =
+    * `byLabels` then t); stage (b) groups on the keys:
+    * [[Tsdb.gaugeAggregate]] for the gauge family and the other
+    * raw-sample functions, [[counterSeries]] then
+    * [[Tsdb.counterAggregate]] for the counter family. */
   private[graft] def windowedSamples(
       metric: String,
       matchers: Seq[LabelMatcher],
@@ -828,17 +833,21 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       gridStep: Option[Long],
       offsetSec: Long,
       prep: DataFrame => DataFrame = identity,
-      relabel: Column => Column = identity): (DataFrame, Seq[Column]) = {
+      relabel: Column => Column = identity,
+      whole: Boolean = false): (DataFrame, Seq[Column]) = {
     require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     val (start0, end0) = (start - offsetSec, end - offsetSec)
     def scan(from: Long) = prep(queryRange(metric, matchers, from, end0)
       .withColumn("labels", relabel(col("labels"))))
     gridStep match {
+      case None if whole =>
+        (scan(start0).withColumn("__end", lit(end0)), labelCols(byLabels))
       case None =>
         (scan(start0), labelCols(byLabels) :+ bucketKey(rangeSec, offsetSec))
       case Some(step) =>
         (explodeEvalGrid(scan(start0 - rangeSec + 1), "ts", start0, end0,
             step, rangeSec, "eval_ts")
+          .withColumn("__end", col("eval_ts"))
           .withColumn("eval_ts", col("eval_ts") + offsetSec),
           labelCols(byLabels) :+ col("eval_ts"))
     }
@@ -867,105 +876,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     perDelta
       .groupBy((col("sid") +: keys): _*)
       .agg(sum(col("delta")).as("__inc"), count(lit(1)).as("__n"))
-  }
-
-  /** Sliding least-squares trend on the subquery eval grid —
-    * `deriv(metric[rangeSec:stepSec])` and
-    * `predict_linear(metric[rangeSec:stepSec], horizonSec)`: at each
-    * eval point E (every `stepSec`) the raw samples in the lookback
-    * window `(E−rangeSec, E]` get one exact simple linear regression.
-    * The [[predictLinear]] integer-cents fit ([[Tsdb.trendFit]]) made
-    * sliding: x is
-    * re-origined to the WINDOW start (`ts − (E − rangeSec)` ∈ [1,
-    * rangeSec], so the decimal sums stay small), y is integer cents,
-    * and every Σ accumulates in decimal(20,0)/decimal(38,0) — the
-    * final slope/predicted values are ONE double division of two
-    * exactly-computed integers, the same IEEE op on both engines.
-    * `predicted` extrapolates `horizonSec` past each eval point
-    * (xp = rangeSec + horizonSec, constant). One sample explode + ONE
-    * hash aggregation, the sliding [[counterSeries]] window; windows
-    * with < 2 distinct timestamps (den = 0) emit nothing, the
-    * [[predictLinear]] guard.
-    */
-  def slidingPredictLinear(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      rangeSec: Long,
-      horizonSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val dec = "decimal(20,0)"
-    val (windowed, keys) = windowedSamples(metric, matchers, start, end,
-      byLabels, rangeSec, Some(stepSec), offsetSec)
-    val xy = windowed
-      // eval_ts already carries +offset; the window's pre-offset start
-      // is (eval_ts − offset) − rangeSec, so x ∈ [1, rangeSec]
-      .withColumn("x",
-        (col("ts") - (col("eval_ts") - lit(offsetSec) - lit(rangeSec)))
-          .cast(dec))
-      .withColumn("yc",
-        (col("value").cast("decimal(18,2)") * 100).cast(dec))
-    trendFit(xy, keys, "yc", 100.0, rangeSec + horizonSec)
-      .select(byLabels.map(col) ++ Seq(col("eval_ts"),
-        col("n").cast("long").as("n"),
-        col("slope_per_sec"), col("predicted")): _*)
-  }
-
-  /** Sliding `resets` / `changes` on the subquery eval grid —
-    * `resets(metric[rangeSec:stepSec])` counts per-series counter drops
-    * (and `changes` any consecutive-sample value change), summed across
-    * series per (label group, eval point), a value every `stepSec` over
-    * the trailing `rangeSec`. Per-sample lag pairs are computed ONCE per
-    * series ([[Tsdb.counterLag]]), then each pair explodes to the eval
-    * points whose lookback window covers its newer sample
-    * ([[Tsdb.explodeEvalGrid]]) — the sliding [[counterSeries]]
-    * delta-attribution rule, so the whole sliding counter family shares
-    * one windowing convention and one oracle scheme. Returns both
-    * counts ([[Tsdb.countResetsChanges]]); callers project.
-    */
-  def slidingResetsChangesBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      rangeSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val (windowed, keys) = windowedSamples(metric, matchers, start, end,
-      byLabels, rangeSec, Some(stepSec), offsetSec,
-      s => counterLag(s).where(col("prev").isNotNull))
-    countResetsChanges(windowed, keys)
-  }
-
-  /** Sliding `idelta` / `irate` on the subquery eval grid — the
-    * [[instantDeltaBy]] last-two-samples pair evaluated over the
-    * trailing `rangeSec` window every `stepSec`: per series per eval
-    * point, the difference between the two newest samples in the window
-    * (idelta), and the reset-aware rate over their timestamp gap
-    * (irate). [[Tsdb.lastTwoPair]] at (sid, eval point) grain over the
-    * [[windowedSamples]] explode — state bounded by one window's
-    * sample count; windows holding < 2 samples emit nothing.
-    */
-  def slidingInstantDeltaBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      rangeSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val (windowed, _) = windowedSamples(metric, matchers, start, end,
-      byLabels, rangeSec, Some(stepSec), offsetSec)
-    lastTwoPair(windowed.withColumn("v", col("value").cast("decimal(18,2)")),
-        Seq(col("sid"), col("eval_ts")))
-      .select((labelCols(byLabels) ++
-        Seq(col("sid"), col("eval_ts"), col("dt"), col("idelta"),
-          col("irate"))): _*)
   }
 
   /** Materialize a per-(sid, step-bucket) rollup store — the continuous
@@ -1192,89 +1102,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         max(col("max_v")).as("max_v"))
   }
 
-  /** PromQL `sum by (labels) (resets(metric[step]))`: per-series counter
-    * resets (a value drop between consecutive samples), summed across
-    * series per (label subset, step bucket). The [[counterSeries]]
-    * lag window (shuffle on sid) feeds one cross-series hash
-    * aggregation; the deterministic (ts, value) lag order makes the
-    * reset count well-defined under ties.
-    */
-  def resetsBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame =
-    resetsChangesBy(metric, matchers, start, end, byLabels, stepSec,
-      offsetSec).drop("changes")
-
-  /** PromQL `sum by (labels) (changes(metric[step]))`: per-series count of
-    * consecutive-sample VALUE CHANGES (any direction — [[resetsBy]] counts
-    * only drops), summed across series per (label subset, step bucket).
-    * Identical two-stage shape: per-series lag window on sid feeding one
-    * cross-series hash aggregation; DECIMAL compare + the deterministic
-    * (ts, value) lag order make the change count exact and tie-stable.
-    */
-  def changesBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame =
-    resetsChangesBy(metric, matchers, start, end, byLabels, stepSec,
-      offsetSec).drop("resets")
-
-  /** Both [[resetsBy]] and [[changesBy]] counts in one aggregation; each
-    * projects its own column (the unused sum is pruned from the plan). */
-  private def resetsChangesBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long): DataFrame =
-    countResetsChanges(
-      counterLag(queryRange(metric, matchers, start - offsetSec,
-        end - offsetSec)).where(col("prev").isNotNull),
-      labelCols(byLabels) :+ bucketKey(stepSec, offsetSec))
-
-  /** PromQL `idelta(metric[step])` / `irate(metric[step])` per series per
-    * step bucket: the difference between the LAST TWO samples inside each
-    * bucket (idelta), and irate — reset-aware like Prometheus (a drop
-    * yields the new value) — divided by their timestamp gap. Buckets
-    * holding fewer than two samples emit nothing; a zero timestamp gap
-    * (duplicate scrape) yields a null irate rather than a division blowup.
-    *
-    * Scale shape: [[Tsdb.lastTwoPair]], one rank window partitioned by
-    * (series, bucket) — state per task bounded by a single bucket's
-    * sample count — then a two-row-per-group self-pairing via lead().
-    * The (ts, value) DESC order is deterministic: rows tying on both are
-    * interchangeable duplicates, so the selected pair is well-defined,
-    * and the identical ORDER BY mirrors 1:1 in the DuckDB oracle.
-    */
-  def instantDeltaBy(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      stepSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    val samples = queryRange(metric, matchers, start - offsetSec,
-        end - offsetSec)
-      .select((labelCols(byLabels) ++ Seq(col("sid"), col("ts"),
-        bucketKey(stepSec, offsetSec),
-        col("value").cast("decimal(18,2)").as("v"))): _*)
-    lastTwoPair(samples, Seq(col("sid"), col("bucket_start")))
-      .select((byLabels.map(col) ++ Seq(col("sid"), col("bucket_start"),
-        col("dt"), col("idelta"), col("irate"))): _*)
-  }
-
   /** PromQL `holt_winters(v[range], sf, tf)` (double exponential
     * smoothing) on the sliding eval grid: per (series-group, eval point)
     * the windowed samples fold IN TIMESTAMP ORDER through Prometheus's
@@ -1342,10 +1169,11 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     *
     * Scale shape: the eval grid is `spark.range` (length bounded by the
     * query window, never the data), present eval points come from the
-    * SAME bounded map-side explode ([[Tsdb.explodeEvalGrid]]) on the
-    * same [[Tsdb.evalGrid]], followed by one
-    * distinct aggregation, and absence is a single anti-join on an
-    * 8-byte key. No per-eval-point scan, no driver loop.
+    * sliding [[windowedSamples]] on the same [[Tsdb.evalGrid]] — its
+    * full-lookback scan keeps absence the exact complement of the
+    * present grid — followed by one distinct aggregation, and absence
+    * is a single anti-join on an 8-byte key. No per-eval-point scan, no
+    * driver loop.
     */
   def absentOverTime(
       metric: String,
@@ -1355,36 +1183,31 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       stepSec: Long,
       rangeSec: Long,
       offsetSec: Long = 0L): DataFrame = {
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val start0 = start - offsetSec
-    val end0 = end - offsetSec
-    // full-lookback scan, mirroring windowedSamples — absence stays the exact
-    // complement of the present eval grid
-    val present = explodeEvalGrid(
-        queryRange(metric, matchers, start0 - rangeSec + 1, end0), "ts",
-        start0, end0, stepSec, rangeSec, "eval_ts")
+    val present = windowedSamples(metric, matchers, start, end, Nil,
+        rangeSec, Some(stepSec), offsetSec)._1
       .select("eval_ts").distinct()
-    val (gridStart, gridEnd) = evalGrid(start0, end0, stepSec)
-    val grid = spark.range(gridStart, gridEnd + 1, stepSec)
-      .select(col("id").as("eval_ts"))
-    grid.join(present, Seq("eval_ts"), "left_anti")
-      .select((col("eval_ts") + offsetSec).as("eval_ts"),
-        lit(1.0).as("value"))
+    val (gridStart, gridEnd) =
+      evalGrid(start - offsetSec, end - offsetSec, stepSec)
+    spark.range(gridStart, gridEnd + 1, stepSec)
+      .select((col("id") + offsetSec).as("eval_ts"))
+      .join(present, Seq("eval_ts"), "left_anti")
+      .select(col("eval_ts"), lit(1.0).as("value"))
   }
 
   /** PromQL `absent(metric{matchers}[start..end])`: a single row with
     * `value = 1.0` when NO sample matches the selector in the range,
     * empty otherwise — the alerting primitive for "this metric stopped
-    * reporting". One pruned scan feeding a global count; the count
-    * compares on the driver side of the plan (a 1-row aggregate), never
-    * collects data.
+    * reporting". The one-window [[windowedSamples]] scan feeding a
+    * global count; the count compares on the driver side of the plan (a
+    * 1-row aggregate), never collects data.
     */
   def absentRange(
       metric: String,
       matchers: Seq[LabelMatcher],
       start: Long,
       end: Long): DataFrame =
-    queryRange(metric, matchers, start, end)
+    windowedSamples(metric, matchers, start, end, Nil, 0L, None, 0L,
+        whole = true)._1
       .agg(count(lit(1)).as("n_present"))
       .where(col("n_present") === 0L)
       .select(lit(1.0).as("value"))
@@ -1415,17 +1238,16 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       buckets: Seq[Double],
       offsetSec: Long = 0L): DataFrame = {
     require(phi > 0 && phi < 1, s"phi must be in (0,1): $phi")
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
     require(buckets.nonEmpty && buckets == buckets.sorted,
       "bucket bounds must be ascending")
     val le = buckets.foldRight(lit(Double.PositiveInfinity): Column) {
       (b, rest) => when(col("value") <= b, lit(b)).otherwise(rest)
     }
-    // offset shifts the scanned window back and reports buckets at the
-    // REQUESTED grid, same convention as [[windowedSamples]]
-    val keys = labelCols(byLabels) :+ bucketKey(stepSec, offsetSec)
-    val grouped = queryRange(metric, matchers, start - offsetSec,
-        end - offsetSec)
+    // the tumbling [[windowedSamples]]: offset shifts the scanned
+    // window back and reports buckets at the REQUESTED grid
+    val (keyed, keys) = windowedSamples(metric, matchers, start, end,
+      byLabels, stepSec, None, offsetSec)
+    val grouped = keyed
       .withColumn("le", le)
       .groupBy(keys :+ col("le"): _*)
       .agg(count(lit(1)).as("cnt"))
@@ -1449,47 +1271,6 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
           .otherwise(lo +
             (col("le") - lo) * (col("target") - col("prev_cum")) / col("cnt")))
       .select(part ++ Seq(col("total").as("n"), col("q")): _*)
-  }
-
-  /** PromQL `deriv()` / `predict_linear()`: per-group least-squares fit of
-    * value over time, returning the per-second slope and the extrapolated
-    * value at `atSec`. One hash aggregation computes the five regression
-    * moments; with `ts` re-origined to `start` and values scaled to integer
-    * cents, every moment, the closed-form numerators and denominators stay
-    * EXACT in decimal(38,0) (mirrored by HUGEINT on the oracle side), and
-    * the only floating-point steps are the two final divisions — identical
-    * IEEE operations in both engines, hence bit-reproducible.
-    *
-    *   slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)
-    *   ŷ(xp) = (Σy·den + num·(n·xp − Σx)) / (n·den)
-    *
-    * Magnitude audit (sf0.1 × 10, per group): x ≤ 6.1e5, y_cents ≤ 4.9e4,
-    * n ≤ 2e4 → |Σy·den| ≤ ~3e29 and |num·(n·xp − Σx)| ≤ ~6e29, both well
-    * inside decimal(38,0) / HUGEINT range.
-    */
-  def predictLinear(
-      metric: String,
-      matchers: Seq[LabelMatcher],
-      start: Long,
-      end: Long,
-      byLabels: Seq[String],
-      atSec: Long,
-      offsetSec: Long = 0L): DataFrame = {
-    require(offsetSec >= 0, s"offset must be >= 0: $offsetSec")
-    val dec = "decimal(20,0)"
-    // offset shifts the fitted window back by `offsetSec` and
-    // extrapolates the same horizon from the shifted origin — `x` is
-    // re-origined to the SHIFTED start, so `xp = atSec - start` holds
-    // unchanged (the day-over-day "what would yesterday have predicted")
-    val start0 = start - offsetSec
-    val end0 = end - offsetSec
-    val xy = queryRange(metric, matchers, start0, end0)
-      .select(labelCols(byLabels) ++ Seq(
-        (col("ts") - lit(start0)).cast(dec).as("x"),
-        (col("value").cast("decimal(18,2)") * 100).cast(dec).as("yc")): _*)
-    trendFit(xy, byLabels.map(col), "yc", 100.0, atSec - start)
-      .select(byLabels.map(col) ++ Seq(col("n").cast("long").as("n"),
-        col("slope_per_sec"), col("predicted")): _*)
   }
 
   /** QuerySeries (reference tsdb.go:323-350): distinct matching label sets
@@ -2124,9 +1905,9 @@ object Tsdb {
     * arithmetic throughout. Overlapping windows cost this fixed explode
     * factor, never a shuffle or a self-join per window — the trade
     * Structured Streaming's sliding `window()` makes. Users: the class's
-    * windowedSamples (the sliding counter, `*_over_time`, delta,
-    * idelta/irate and trend functions), absentOverTime, and the subquery
-    * outers overTimeOnFrame and counterOverFrame. */
+    * windowedSamples (every sliding raw-sample function and, through
+    * it, absentOverTime) and the subquery outers overTimeOnFrame and
+    * counterOverFrame. */
   private[graft] def explodeEvalGrid(
       frame: DataFrame,
       tsCol: String,
@@ -2155,8 +1936,8 @@ object Tsdb {
     * same pairs), and `delta` is `v − prev`, or `v` after a drop (a
     * restarted counter counts its new value); both null on a series'
     * first sample. Callers filter: the increase family on `delta`,
-    * resets/changes on `prev`. Users: counterSeries (both grids),
-    * resetsChangesBy, slidingResetsChangesBy and
+    * resets/changes on `prev`. Users: the `prep` of windowedSamples in
+    * counterSeries and in PromQL's resets/changes (both grids), and
     * EventOps.counterIncrease. */
   private[graft] def counterLag(
       samples: DataFrame,
@@ -2176,7 +1957,7 @@ object Tsdb {
 
   /** Per `keys` over [[counterLag]] pairs: the pair count `n_deltas`,
     * `resets` (drops) and `changes` (any value change, the DECIMAL
-    * compare). Users: resetsBy/changesBy and slidingResetsChangesBy. */
+    * compare). Users: gaugeAggregate's `resets_changes` (both grids). */
   private def countResetsChanges(pairs: DataFrame, keys: Seq[Column])
       : DataFrame =
     pairs.groupBy(keys: _*).agg(
@@ -2268,12 +2049,13 @@ object Tsdb {
     })
   }
 
-  /** Stage (b) of the gauge family: [[Tsdb.windowedSamples]]' keyed raw
-    * samples aggregated per group key — per series when `perSeries`
-    * (sid, then the keys; sid leaves the output), the grain of the
-    * top-level `*_over_time` functions, else at the keys' own grain
-    * (`byLabels`, t), the grain of the aggregations and of the subquery
-    * inners. `op` picks the shape and its columns:
+  /** Stage (b) of the gauge family and the other raw-sample range
+    * functions: [[Tsdb.windowedSamples]]' keyed raw samples aggregated
+    * per group key — per series when `perSeries` (sid, then the keys;
+    * sid leaves the output), the grain of the top-level `*_over_time`
+    * functions, else at the keys' own grain (`byLabels`, t), the grain
+    * of the aggregations and of the subquery inners. `op` picks the
+    * shape and its columns:
     *  - `moments`: `n`, `sum_v`, `avg_v`, `min_v`, `max_v`, and on the
     *    sliding grid `last_v` plus the `ts_of_{max,min,last}_v`
     *    timestamps (callers project; an unread aggregate is pruned);
@@ -2282,7 +2064,16 @@ object Tsdb {
     *  - `quantile`: `n`, `q_v`, the exact percentile `q`;
     *  - `mad`: `n`, `mad_v`, the exact median absolute deviation;
     *  - `delta`: `n`, `delta`, the last minus the first sample;
-    *  - `count_values`: the sample `value` joins the keys, `n` counts.
+    *  - `count_values`: the sample `value` joins the keys, `n` counts;
+    *  - `resets_changes`: `n_deltas`, `resets`, `changes` over the
+    *    [[counterLag]] pairs stage (a) prepped ([[countResetsChanges]]);
+    *  - `last_two`: per series and t ([[lastTwoPair]]), the keys' labels,
+    *    `sid`, t, `dt`, `idelta`, `irate`;
+    *  - `trend`: `n`, `slope_per_sec`, `predicted` ([[trendFit]] on
+    *    integer cents), x counting seconds from each window's end
+    *    (`__end`), so the prediction `horizonSec` past it is at
+    *    x = horizonSec. The fit's sums are exact integers, so the same
+    *    bits come out for any origin inside the window.
     * Sums stay decimal until the final cast; the spread's moment sums
     * are exact integer cents in a fixed double op order mirrored 1:1 in
     * the oracles; round(…, 6), the MAD [[r6]]. topk/bottomk/limitk are
@@ -2291,7 +2082,8 @@ object Tsdb {
       framed: (DataFrame, Seq[Column]),
       perSeries: Boolean,
       op: String,
-      q: Option[Double] = None): DataFrame = {
+      q: Option[Double] = None,
+      horizonSec: Long = 0L): DataFrame = {
     q.foreach(v => require(v >= 0 && v <= 1, s"quantile must be in [0,1]: $v"))
     val (frame, byKeys) = framed
     val sliding = frame.columns.contains("eval_ts")
@@ -2354,6 +2146,23 @@ object Tsdb {
             .as("delta"))
       case "count_values" =>
         frame.groupBy((keys :+ col("value")): _*).agg(n)
+      case "resets_changes" => countResetsChanges(frame, keys)
+      case "last_two" =>
+        val t = if (sliding) "eval_ts" else "bucket_start"
+        lastTwoPair(frame.select((keys.init ++ Seq(col("sid"), col("ts"),
+            keys.last, col("value").cast("decimal(18,2)").as("v"))): _*),
+            Seq(col("sid"), col(t)))
+          .drop("ts", "v", "rk", "prev_ts", "prev_v")
+      case "trend" =>
+        val dec = "decimal(20,0)"
+        val fit = trendFit(frame
+            .withColumn("x", (col("ts") - col("__end")).cast(dec))
+            .withColumn("yc",
+              (col("value").cast("decimal(18,2)") * 100).cast(dec)),
+          keys, "yc", 100.0, horizonSec)
+        fit.select(fit.columns.take(keys.size).map(col) ++ Seq(
+          col("n").cast("long").as("n"), col("slope_per_sec"),
+          col("predicted")): _*)
       case other => throw new IllegalArgumentException(
         s"unknown gauge aggregation: $other")
     }
@@ -2472,8 +2281,11 @@ object Tsdb {
     * }}}
     * stay exact decimals up to those two final double divisions — the
     * same IEEE ops in every engine. A fit needs ≥ 2 distinct x: groups
-    * with n < 2 or den = 0 emit nothing. Users: predictLinear and
-    * slidingPredictLinear (cents), counterOverFrame (micros). */
+    * with n < 2 or den = 0 emit nothing. Magnitude audit (sf0.1 × 10,
+    * per group): |x| ≤ 6.1e5, y_cents ≤ 4.9e4, n ≤ 2e4 → |Σy·den| ≤
+    * ~3e29 and |numc·(n·xp − Σx)| ≤ ~6e29, inside decimal(38,0) /
+    * HUGEINT. Users: gaugeAggregate's `trend` (cents, both the one-window
+    * and the sliding grid) and counterOverFrame (micros). */
   private def trendFit(
       frame: DataFrame,
       groupCols: Seq[Column],
@@ -2525,7 +2337,7 @@ object Tsdb {
     * gap, `idelta` their difference, and `irate` the reset-aware
     * difference (a drop counts the new value) over `dt`, null for a zero
     * gap. Partitions holding fewer than two samples emit nothing.
-    * Users: instantDeltaBy and slidingInstantDeltaBy. */
+    * Users: gaugeAggregate's `last_two` (both grids). */
   private def lastTwoPair(frame: DataFrame, partition: Seq[Column])
       : DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

@@ -1281,11 +1281,14 @@ object PromQL {
       by, range, op, rate = fn == "rate", q)
   }
 
-  /** The gauge family — raw-sample `op` of `sel` (a
-    * [[Tsdb.gaugeAggregate]] shape; `shape` names it in errors) —
-    * through its two stages: [[Tsdb.windowedSamples]] on the tumbling
-    * grid (`grid` None) or the sliding one every `grid`, then
-    * [[Tsdb.gaugeAggregate]] per series or at the `by` grain. */
+  /** The gauge family and the other raw-sample range functions —
+    * raw-sample `op` of `sel` (a [[Tsdb.gaugeAggregate]] shape; `shape`
+    * names it in errors) — through their two stages:
+    * [[Tsdb.windowedSamples]] on the tumbling grid (`grid` None) or the
+    * sliding one every `grid`, then [[Tsdb.gaugeAggregate]] per series
+    * or at the `by` grain. `resets_changes` pairs each sample with its
+    * predecessor before the windowing ([[Tsdb.counterLag]]); `trend`
+    * with no grid fits the whole window, so it needs no range. */
   private def gaugeFamily(
       t: Tsdb,
       sel: Selector,
@@ -1297,11 +1300,18 @@ object PromQL {
       grid: Option[Long] = None,
       perSeries: Boolean = false,
       q: Option[Double] = None,
-      relabel: Column => Column = identity): DataFrame =
+      relabel: Column => Column = identity,
+      horizonSec: Long = 0L): DataFrame = {
+    val prep: DataFrame => DataFrame =
+      if (op != "resets_changes") identity
+      else s => Tsdb.counterLag(s).where(col("prev").isNotNull)
+    val whole = op == "trend" && grid.isEmpty
     Tsdb.gaugeAggregate(
       t.windowedSamples(sel.metric, sel.matchers, start, end, by,
-        stepOf(sel, shape), grid, sel.offsetSec, relabel = relabel),
-      perSeries, op, q)
+        if (whole) 0L else stepOf(sel, shape), grid, sel.offsetSec, prep,
+        relabel, whole),
+      perSeries, op, q, horizonSec)
+  }
 
   /** The value column of the counter family's `sum` for `fn`. */
   private def counterCol(fn: String): String =
@@ -1654,15 +1664,18 @@ object PromQL {
     case Agg("limitk" | "limit_ratio", _, _, _, _, _) => "sum_v"
     case _: HistQuantileAgg => "q"
     case BinOp(op, _, _, _, _, _) if ArithOps(op) => "result"
+    // a compare against a scalar side (a literal, scalar(), a time()
+    // composition) filters the vector side in place, keeping its own
+    // value column; a vector-vector compare goes through stage (c) →
+    // `result` (the lhs value passed through)
     case BinOp(op, l, r, _, _, _) if CmpOps(op) =>
-      (l, r) match {
-        // vector-vector compare goes through stage (c) → `result`
-        // (the lhs value passed through); scalar-side compares filter
-        // the vector side in place, keeping its own value column
-        case (_: Agg, _: Agg) => "result"
-        case (_: NumLit, _) => valueColOf(r)
-        case _ => valueColOf(l)
+      def scalar(e: Expr) = e match {
+        case MathFn("scalar", _, _, _) => true
+        case _ => scalarSide(e, lit(0L)).isDefined
       }
+      if (scalar(r)) valueColOf(l)
+      else if (scalar(l)) valueColOf(r)
+      else "result"
     case BinOp(op, l, _, _, _, _) if SetOps(op) =>
       valueColOf(l)
     case _: BoolCmp => "result"
@@ -1774,7 +1787,7 @@ object PromQL {
     // by-grain, so its label schema IS the by-list — static, rule-safe
     // (`rate(x[6h:1h]) by (cohort) > thr` as a live/batch alert).
     // ONLY the aggregating functions qualify: irate/idelta frames
-    // (instantDeltaBy / slidingInstantDeltaBy) stay at per-sid grain
+    // (the gaugeAggregate `last_two` op) stay at per-sid grain
     // with multiple rows per (by-labels, grid point), which would break
     // the rules path's one-row-per-bucket islands window — they return
     // None and the rule engine rejects them loudly.
@@ -2643,37 +2656,20 @@ object PromQL {
         if (op != "sum") tumblingOnly(sel, s"$op($fn)")
         counterFamily(t, fn, sel, by, op, start, end, sel.stepSec, q)
 
-      case Agg("sum", _, _, by, RangeFn("resets", _, sel, _, _), _) =>
-        sel.stepSec match {
-          case Some(s) =>
-            t.slidingResetsChangesBy(sel.metric, sel.matchers, start, end,
-                by, s, stepOf(sel, "sum by (resets)"), sel.offsetSec)
-              .drop("changes")
-          case None =>
-            t.resetsBy(sel.metric, sel.matchers, start, end, by,
-              stepOf(sel, "sum by (resets)"), sel.offsetSec)
-        }
-      case Agg("sum", _, _, by, RangeFn("changes", _, sel, _, _), _) =>
-        sel.stepSec match {
-          case Some(s) =>
-            t.slidingResetsChangesBy(sel.metric, sel.matchers, start, end,
-                by, s, stepOf(sel, "sum by (changes)"), sel.offsetSec)
-              .drop("resets")
-          case None =>
-            t.changesBy(sel.metric, sel.matchers, start, end, by,
-              stepOf(sel, "sum by (changes)"), sel.offsetSec)
-        }
-
-      // BARE sliding resets/changes — `resets(x[1h:1m])`: per-series
-      // (the metric's full label-key universe), a count every stepSec
-      // over the trailing range window
+      // resets / changes: each sample paired with its predecessor,
+      // then the pairs counted per (by, t) on either grid; the bare
+      // sliding form is per series (the metric's full label-key universe)
+      case Agg("sum", _, _, by, RangeFn(fn @ ("resets" | "changes"), _, sel,
+          _, _), _) =>
+        gaugeFamily(t, sel, by, "resets_changes", s"sum by ($fn)", start,
+            end, sel.stepSec)
+          .drop(if (fn == "resets") "changes" else "resets")
       case RangeFn(fn @ ("resets" | "changes"), _, sel, by, _)
           if sel.stepSec.nonEmpty =>
         val keys = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-        val df = t.slidingResetsChangesBy(sel.metric, sel.matchers,
-          start, end, keys, sel.stepSec.get, stepOf(sel, fn),
-          sel.offsetSec)
-        if (fn == "resets") df.drop("changes") else df.drop("resets")
+        gaugeFamily(t, sel, keys, "resets_changes", fn, start, end,
+            sel.stepSec)
+          .drop(if (fn == "resets") "changes" else "resets")
 
       // BARE rate/increase/delta — the most common PromQL shape. With no
       // trailing `by`, the grouping is the metric's full label-key
@@ -2690,15 +2686,8 @@ object PromQL {
         gaugeFamily(t, sel, keys, "delta", "delta", start, end, sel.stepSec)
 
       // instant-pair family: per-series last-two-samples delta/rate
-      case RangeFn(fn, _, sel, by, _) if fn == "irate" || fn == "idelta" =>
-        sel.stepSec match {
-          case Some(s) =>
-            t.slidingInstantDeltaBy(sel.metric, sel.matchers, start, end,
-              by, s, stepOf(sel, fn), sel.offsetSec)
-          case None =>
-            t.instantDeltaBy(sel.metric, sel.matchers, start, end, by,
-              stepOf(sel, fn), sel.offsetSec)
-        }
+      case RangeFn(fn @ ("irate" | "idelta"), _, sel, by, _) =>
+        gaugeFamily(t, sel, by, "last_two", fn, start, end, sel.stepSec)
 
       // the *_over_time family per series on the sliding eval grid;
       // the grid step defaults to the window (PromQL's default
@@ -2730,36 +2719,20 @@ object PromQL {
         gaugeFamily(t, sel, by, if (q.isDefined) "quantile" else "mad", fn,
           start, end, q = q)
 
-      case RangeFn("predict_linear", _, sel, by, Some(atSec)) =>
-        sel.stepSec match {
-          // `predict_linear(x[6h:1h], 1h)` — a fresh linear fit over
-          // each trailing 6h window, every hour, each extrapolating 1h
-          // past its own eval point
-          case Some(s) =>
-            t.slidingPredictLinear(sel.metric, sel.matchers, start, end,
-              by, s, stepOf(sel, "predict_linear"), atSec, sel.offsetSec)
-          case None =>
-            t.predictLinear(sel.metric, sel.matchers, start, end, by,
-              end + atSec, sel.offsetSec)
-        }
-
-      // deriv() is the slope-only projection of the same exact-decimal
-      // regression moments — one hash aggregation, per-series when no
-      // trailing `by` (the metric's label-key universe, like bare rate)
-      case RangeFn("deriv", _, sel, by, _) =>
-        val keys = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-        sel.stepSec match {
-          case Some(s) =>
-            t.slidingPredictLinear(sel.metric, sel.matchers, start, end,
-                keys, s, stepOf(sel, "deriv"), 0L, sel.offsetSec)
-              .select(keys.map(col) ++ Seq(col("eval_ts"), col("n"),
-                col("slope_per_sec")): _*)
-          case None =>
-            t.predictLinear(sel.metric, sel.matchers, start, end, keys,
-                end, sel.offsetSec)
-              .select(keys.map(col) ++
-                Seq(col("n"), col("slope_per_sec")): _*)
-        }
+      // the exact least-squares trend: `predict_linear(x[6h:1h], 1h)`
+      // fits each trailing 6h window every hour, each extrapolating 1h
+      // past its own eval point; with no step the fit spans the whole
+      // query window. deriv() is its slope-only projection, per series
+      // when no trailing `by` (the metric's label-key universe, like
+      // bare rate)
+      case RangeFn(fn @ ("predict_linear" | "deriv"), _, sel, by, at)
+          if (fn == "predict_linear") == at.isDefined =>
+        val keys =
+          if (fn == "predict_linear" || by.nonEmpty) by
+          else labelKeys(t, sel.metric)
+        val fit = gaugeFamily(t, sel, keys, "trend", fn, start, end,
+          sel.stepSec, horizonSec = at.getOrElse(0L))
+        if (fn == "deriv") fit.drop("predicted") else fit
 
       case RangeFn("absent", _, sel, _, _) =>
         t.absentRange(sel.metric, sel.matchers,

@@ -266,6 +266,34 @@ class PlanSpec extends SparkSuite {
     assert(got == pinned, got.mkString("\n"))
   }
 
+  test("raw-sample range functions: each shape keeps its hash-exchange " +
+      "count") {
+    // resets/changes: the lag window (sid) then one aggregation;
+    // irate: one (sid, t) rank window; the trend fits and the
+    // histogram bucket counts: one aggregation (plus the tiny
+    // interpolation window); absent: one global count
+    val pinned = Seq(
+      "tsdb_resets" -> 2,
+      "tsdb_changes" -> 2,
+      "tsdb_irate" -> 1,
+      "tsdb_predict_linear" -> 1,
+      "tsdb_promql_deriv" -> 1,
+      "tsdb_promql_predict_offset" -> 1,
+      "tsdb_absent" -> 0,
+      "tsdb_absent_over_time" -> 1,
+      "tsdb_histogram_quantile" -> 2,
+      "tsdb_promql_histq" -> 2,
+      "tsdb_promql_subquery_deriv" -> 1,
+      "tsdb_promql_subquery_predict" -> 1,
+      "tsdb_promql_subquery_resets" -> 2,
+      "tsdb_promql_subquery_changes" -> 2)
+    val got = pinned.map { case (name, _) =>
+      name -> "Exchange hashpartitioning".r
+        .findAllIn(planOf(SparkEntry.queries(name)(spark, sf0001))).length
+    }
+    assert(got == pinned, got.mkString("\n"))
+  }
+
   test("vector compares: group-sized equi-joins, bounded exchanges, " +
       "no cartesian") {
     // counter-family compare (generic path): two lag+agg sides joined
@@ -479,12 +507,12 @@ class PlanSpec extends SparkSuite {
   }
 
   test("changes is window + one aggregation; irate one bounded rank window") {
-    // changesBy: the resets shape — per-series lag window then ONE
+    // changes: the resets shape — per-series lag window then ONE
     // cross-series hash aggregation
     val ch = planOf(SparkEntry.queries("tsdb_changes")(spark, sf0001))
     val chEx = "Exchange hashpartitioning".r.findAllIn(ch).length
     assert(chEx == 2, s"$chEx hash exchanges\n${ch.take(3000)}")
-    // instantDeltaBy: exactly one shuffle — the (sid, bucket) rank
+    // irate: exactly one shuffle — the (sid, bucket) rank
     // window; no join, no second aggregation pass
     val ir = planOf(SparkEntry.queries("tsdb_irate")(spark, sf0001))
     val irEx = "Exchange hashpartitioning".r.findAllIn(ir).length

@@ -188,6 +188,52 @@ class PromQLSpec extends SparkSuite {
     (sorted.last._4 - sorted.head._4).toDouble
   }
 
+  /** The click series' samples of [T0, T1] in (ts, value) order, per
+    * series (user_id). */
+  private lazy val clickSeries: Seq[Seq[Sample]] =
+    clicks.filter(s => s._3 >= T0 && s._3 <= T1).groupBy(_._2).values.toSeq
+      .map(_.sortBy(s => (s._3, s._4)))
+
+  /** The counter lag's consecutive (older, newer) click pairs counted per
+    * (cohort, the newer sample's 1h bucket): `cohort, bucket_start,
+    * n_deltas` and the pairs where `hit(older, newer)`. */
+  private def pairCounts(hit: (BigDecimal, BigDecimal) => Boolean)
+      : Set[Seq[Any]] =
+    clickSeries.flatMap(_.sliding(2).collect { case Seq(p, c) => (p, c) })
+      .groupBy { case (_, c) => (c._1, c._3 - Math.floorMod(c._3, 3600L)) }
+      .map { case ((coh, b), ps) => Seq[Any](coh, b, ps.size.toLong,
+        ps.count { case (p, c) => hit(p._4, c._4) }.toLong) }.toSet
+
+  /** The exact least-squares fit of `ss` with x = ts − `origin` and y in
+    * cents, ending in the engine's two double divisions: `n`,
+    * `slope_per_sec` and the value at x = `xp`; None under 2 distinct
+    * timestamps. */
+  private def fitOf(ss: Seq[Sample], origin: Long, xp: Long)
+      : Option[Seq[Any]] = {
+    val n = BigInt(ss.size)
+    val xs = ss.map(s => BigInt(s._3 - origin))
+    val ys = ss.map(s => (s._4 * 100).toBigInt)
+    val (sx, sy) = (xs.sum, ys.sum)
+    val numc = n * xs.zip(ys).map { case (x, y) => x * y }.sum - sx * sy
+    val den = n * xs.map(x => x * x).sum - sx * sx
+    if (n < 2 || den == 0) None
+    else Some(Seq[Any](ss.size.toLong, numc.toDouble / den.toDouble / 100.0,
+      (sy * den + numc * (n * xp - sx)).toDouble / (n * den).toDouble / 100.0))
+  }
+
+  /** idelta / irate of `ss`: the newest two samples in (ts, value)
+    * order give `dt`, `idelta` and the reset-aware `irate` (null on a
+    * zero gap); None under two samples. */
+  private def lastTwoOf(ss: Seq[Sample]): Option[Seq[Any]] =
+    ss.sortBy(s => (s._3, s._4)).takeRight(2) match {
+      case Seq(p, c) =>
+        val dt = c._3 - p._3
+        val inc = if (c._4 >= p._4) c._4 - p._4 else c._4
+        Some(Seq[Any](dt, (c._4 - p._4).toDouble,
+          if (dt > 0) round6(inc.toDouble / dt) else null))
+      case _ => None
+    }
+
   /** md5-u32 of the salted group label, the limitk / limit_ratio hash. */
   private def groupU32(label: String): Long = java.lang.Long.parseLong(
     java.security.MessageDigest.getInstance("MD5")
@@ -328,24 +374,38 @@ class PromQLSpec extends SparkSuite {
     assertSame(
       PromQL.query(t, "sum by (cohort) (rate(click[1h]))", T0, T1),
       sumBy)
-    assertSame(
-      PromQL.query(t, "sum by (cohort) (resets(click[1h]))", T0, T1),
-      t.resetsBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
+    // resets: the drops between each series' consecutive samples,
+    // counted per (cohort, bucket of the newer sample)
+    val resets =
+      PromQL.query(t, "sum by (cohort) (resets(click[1h]))", T0, T1)
+    assert(resets.columns.toSeq ==
+      Seq("cohort", "bucket_start", "n_deltas", "resets"))
+    assert(rowSet(resets, resets.columns.toSeq: _*) == pairCounts(_ > _))
   }
 
   test("changes under sum by; irate/idelta per series") {
-    assertSame(
-      PromQL.query(t, "sum by (cohort) (changes(click[1h]))", T0, T1),
-      t.changesBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L))
-    assertSame(
-      PromQL.query(t, "irate(click[1h]) by (user_id)", T0, T1),
-      t.instantDeltaBy("click", Seq.empty, T0, T1, Seq("user_id"), 3600L))
+    val changes =
+      PromQL.query(t, "sum by (cohort) (changes(click[1h]))", T0, T1)
+    assert(changes.columns.toSeq ==
+      Seq("cohort", "bucket_start", "n_deltas", "changes"))
+    assert(rowSet(changes, changes.columns.toSeq: _*) == pairCounts(_ != _))
+    // per (series, bucket) the newest two samples in (ts, value) order:
+    // their gap, difference and reset-aware rate (null on a zero gap)
+    val irate = PromQL.query(t, "irate(click[1h]) by (user_id)", T0, T1)
+    assert(irate.columns.toSeq ==
+      Seq("user_id", "sid", "bucket_start", "dt", "idelta", "irate"))
+    assert(rowSet(irate, "user_id", "bucket_start", "dt", "idelta",
+      "irate") == clickSeries.flatMap(_.groupBy(s =>
+        (s._2, s._3 - Math.floorMod(s._3, 3600L))).flatMap {
+          case ((u, b), ss) => lastTwoOf(ss).map(Seq[Any](u, b) ++ _) }).toSet)
+    assertSame(PromQL.query(t, "idelta(click[1h]) by (user_id)", T0, T1),
+      irate)
   }
 
   test("changes >= resets on every group (a reset is a change)") {
-    val ch = t.changesBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    val ch = PromQL.query(t, "sum by (cohort) (changes(click[1h]))", T0, T1)
       .select(col("cohort"), col("bucket_start"), col("changes"))
-    val rs = t.resetsBy("click", Seq.empty, T0, T1, Seq("cohort"), 3600L)
+    val rs = PromQL.query(t, "sum by (cohort) (resets(click[1h]))", T0, T1)
       .select(col("cohort"), col("bucket_start"), col("resets"))
     val bad = ch.join(rs, Seq("cohort", "bucket_start"))
       .where(col("changes") < col("resets")).count()
@@ -490,10 +550,14 @@ class PromQLSpec extends SparkSuite {
   }
 
   test("predict_linear and absent") {
-    assertSame(
-      PromQL.query(t, "predict_linear(click[1h], 1h) by (user_id)", T0, T1),
-      t.predictLinear("click", Seq.empty, T0, T1, Seq("user_id"),
-        T1 + 3600L))
+    // one exact fit per series over the whole query window, x from its
+    // start, extrapolated 1h past its end
+    val pl = PromQL.query(t, "predict_linear(click[1h], 1h) by (user_id)",
+      T0, T1)
+    assert(pl.columns.toSeq ==
+      Seq("user_id", "n", "slope_per_sec", "predicted"))
+    assert(rowSet(pl, pl.columns.toSeq: _*) == clickSeries.flatMap(ss =>
+      fitOf(ss, T0, T1 + 3600L - T0).map(ss.head._2 +: _)).toSet)
     // present metric → empty; absent metric → the single 1.0 row
     assert(PromQL.query(t, "absent(click)", T0, T1).count() == 0L)
     val gone = PromQL.query(t, "absent(no_such_metric)", T0, T1).collect()
@@ -928,13 +992,14 @@ class PromQLSpec extends SparkSuite {
       "predict_linear / absent / histogram_quantile") {
     val o = 86400L
     val S = T0 + o
-    // predict_linear offset 1d == the direct fit over the shifted window
+    // predict_linear offset 1d == the exact fit over the shifted window
     // with the SAME horizon from the shifted origin (xp is offset-free)
-    assertSame(
-      PromQL.query(t,
+    assert(rowSet(PromQL.query(t,
         "predict_linear(click[1h] offset 1d, 3600) by (user_id)", S, T1),
-      t.predictLinear("click", Seq.empty, S, T1, Seq("user_id"),
-        T1 + 3600L, o))
+        "user_id", "n", "slope_per_sec", "predicted") ==
+      clicks.filter(c => c._3 >= S - o && c._3 <= T1 - o).groupBy(_._2)
+        .flatMap { case (u, ss) =>
+          fitOf(ss, S - o, T1 + 3600L - S).map(u +: _) }.toSet)
     // absent offset: the shifted window decides presence
     assert(PromQL.query(t, "absent(no_such_metric offset 1d)", S, T1)
       .count() == 1L)
@@ -1161,11 +1226,12 @@ class PromQLSpec extends SparkSuite {
     assert(PromQL.query(t, "sum by (cohort) (rate(click[2h:1h]))", T0, T1)
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         (2 to 4).map(r.get)).toMap == perSeries)
-    assertSame(
-      PromQL.query(t, "deriv(click[2h:1h]) by (cohort)", T0, T1),
-      t.slidingPredictLinear("click", Seq.empty, T0, T1, Seq("cohort"),
-          stepSec = 3600L, rangeSec = 7200L, horizonSec = 0L)
-        .select("cohort", "eval_ts", "n", "slope_per_sec"))
+    // sliding deriv: one exact fit per (cohort, eval point) window
+    assert(rowSet(PromQL.query(t, "deriv(click[2h:1h]) by (cohort)", T0, T1),
+        "cohort", "eval_ts", "n", "slope_per_sec") ==
+      windowed(clicks, T0, T1, 3600L, 7200L)(s => Seq(s._1)).flatMap {
+        case (k, ss) => fitOf(ss, k.last.asInstanceOf[Long] - 7200L, 7200L)
+          .map(f => k ++ f.take(2)) }.toSet)
     // a subquery step anywhere else is rejected up front, never ignored
     val bad = Seq(
       "sum by (cohort) (click[1h:5m])",
@@ -1244,10 +1310,10 @@ class PromQLSpec extends SparkSuite {
     }
   }
 
-  test("deriv == predictLinear's slope projection; threads offset") {
+  test("deriv == predict_linear's slope projection; threads offset") {
     assertSame(
       PromQL.query(t, "deriv(click[7d]) by (user_id)", T0, T1),
-      t.predictLinear("click", Seq.empty, T0, T1, Seq("user_id"), T1)
+      PromQL.query(t, "predict_linear(click[7d], 0) by (user_id)", T0, T1)
         .select(col("user_id"), col("n"), col("slope_per_sec")))
     // bare deriv groups by the full label-key universe, like bare rate
     assert(PromQL.query(t, "deriv(click[7d])", T0, T1).columns.toSeq ==
@@ -1257,8 +1323,8 @@ class PromQLSpec extends SparkSuite {
     assertSame(
       PromQL.query(t, "deriv(click[5d] offset 1d) by (user_id)",
         T0 + 2 * 86400L, T1),
-      t.predictLinear("click", Seq.empty, T0 + 86400L, T1 - 86400L,
-          Seq("user_id"), T1 - 86400L)
+      PromQL.query(t, "predict_linear(click[5d], 0) by (user_id)",
+          T0 + 86400L, T1 - 86400L)
         .select(col("user_id"), col("n"), col("slope_per_sec")))
   }
 
@@ -2865,6 +2931,35 @@ class PromQLSpec extends SparkSuite {
           Seq[Any](l, b, vs.size.toLong, vs.sum.toDouble,
             vs.sum.toDouble / vs.size, vs.min.toDouble, vs.max.toDouble)
         }.toSet, s"tumbling moments offset $o")
+      // sum by (l) (resets|changes(x[R])) on the tumbling grid: each
+      // pair in its newer sample's bucket of the scan [start − o, end − o]
+      val pairsByL = pairs(start - o, end - o)
+        .groupBy(p => (p._2, p._4._3 - Math.floorMod(p._4._3, range) + o))
+      for ((fn, hit) <- Seq[(String, (BigDecimal, BigDecimal) => Boolean)](
+          "resets" -> (_ > _), "changes" -> (_ != _)))
+        assert(rowSet(PromQL.query(store, s"sum by (l) ($fn(x[$range]$off))",
+            start, end), "l", "bucket_start", "n_deltas", fn) ==
+          pairsByL.map { case ((l, b), ps) => Seq[Any](l, b, ps.size.toLong,
+            ps.count(p => hit(p._3._4, p._4._4)).toLong) }.toSet,
+          s"tumbling $fn offset $o")
+      // idelta / irate per series: the newest two samples of each
+      // tumbling bucket of the scan, or of each sliding window
+      val perBucket = raw.filter(s => s._3 >= start - o && s._3 <= end - o)
+        .groupBy(s => Seq[Any](s._1, s._2,
+          s._3 - Math.floorMod(s._3, range) + o)).toSeq
+      val perWindow = windowed(raw, start, end, step, range, o)(
+        s => Seq(s._1, s._2))
+      for ((sel, t, groups) <- Seq((s"[$range]", "bucket_start", perBucket),
+          (s"[$range:$step]", "eval_ts", perWindow))) {
+        val irate = PromQL.query(store, s"irate(x$sel$off) by (id, l)",
+          start, end)
+        assert(rowSet(irate, "id", "l", t, "dt", "idelta", "irate") ==
+          groups.flatMap { case (k, ss) => lastTwoOf(ss).map(k ++ _) }.toSet,
+          s"irate x$sel offset $o")
+        assertSame(PromQL.query(store, s"idelta(x$sel$off) by (id, l)",
+          start, end), irate)
+      }
+
       // absent_over_time(x{id="1"}[R] offset o): grid step = range; an
       // eval point is absent when (E − range, E] holds no sample
       val ar = 120L
@@ -2963,6 +3058,41 @@ class PromQLSpec extends SparkSuite {
         s"resets(rate(x[$range])[$r2:$step])", start, end),
         "id", "l", "eval_ts", "n_deltas", "resets") == exp.toSet)
     assert(exp.exists(_(4) != 0L), "the fixture must reset the inner rate")
+  }
+
+  /** A vector-vector compare: the per-series click rate against the
+    * cohort purchase rate. */
+  private val VectorCmp = "rate(click[1h]) by (cohort) > " +
+    "sum by (cohort) (rate(purchase[1h]))"
+
+  test("scalar arithmetic over a vector-vector compare reads its " +
+      "`result`; against a scalar side the vector keeps its column") {
+    // stage (c) passes the lhs value through as `result`
+    val matched = PromQL.query(t, VectorCmp, T0, T1)
+    assert(rowSet(PromQL.query(t, s"($VectorCmp) * 2", T0, T1),
+        "cohort", "bucket_start", "result") ==
+      rowSet(matched.select(col("cohort"), col("bucket_start"),
+        (col("result") * 2).as("result")), "cohort", "bucket_start",
+        "result"))
+    // a compare against time() filters the vector side in place
+    val rate = PromQL.query(t, "sum by (cohort) (rate(click[1h]))", T0, T1)
+    assert(rowSet(PromQL.query(t,
+        "(sum by (cohort) (rate(click[1h])) < time()) * 2", T0, T1),
+        "cohort", "bucket_start", "result") ==
+      rowSet(rate.select(col("cohort"), col("bucket_start"),
+        (col("rate_per_sec") * 2).as("result")), "cohort", "bucket_start",
+        "result"))
+  }
+
+  test("an alert rule over a vector-vector compare reads its `result`") {
+    import graft.promql.Rules
+    val al = Rules.alerts(t,
+      Rules.AlertRule("click_over_purchase", VectorCmp, forSec = 0L), T0, T1)
+    assert(al.columns.toSeq ==
+      Seq("alertname", "cohort", "bucket_start", "value", "state"))
+    assert(rowSet(al, "cohort", "bucket_start", "value") ==
+      rowSet(PromQL.query(t, VectorCmp, T0, T1), "cohort", "bucket_start",
+        "result"))
   }
 
   test("a selector takes at most one offset; offset 0s parses") {

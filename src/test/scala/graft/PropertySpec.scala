@@ -151,7 +151,7 @@ class PropertySpec extends SparkSuite {
     assert(est > 0.0 && est <= 2.0, s"$est")
   }
 
-  test("predictLinear recovers random exact linear trends bit-for-bit") {
+  test("predict_linear recovers random exact linear trends bit-for-bit") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)
     // slopes/intercepts chosen so values are exact cents; predictions at
@@ -167,8 +167,10 @@ class PropertySpec extends SparkSuite {
         ("m", Map("g" -> s"g$g"), 1000L + x, (ic + sc.toLong * x) / 100.0))
     }
     val t2 = Tsdb.attach(spark, rows.toDF("metric", "labels", "ts", "value"))
-    val at = 1000L + 500L
-    val got = t2.predictLinear("m", Seq.empty, 1000L, 2000L, Seq("g"), at)
+    // the fit spans the query window [1000, 1500]; horizon 0 predicts
+    // at its end, x = 500
+    val got = graft.promql.PromQL.query(t2, "predict_linear(m[1h], 0) by (g)",
+        1000L, 1500L)
       .collect().map(r => r.getString(0) ->
         (r.getDouble(2), r.getDouble(3))).toMap
     for ((g, sc, ic, n) <- cases if n >= 2) {

@@ -650,7 +650,7 @@ class TsdbSpec extends SparkSuite {
     assert(q(0.9)("c") == 20.0)
   }
 
-  test("predictLinear recovers an exact trend, excludes degenerate series") {
+  test("predict_linear recovers an exact trend, excludes degenerate series") {
     import spark.implicits._
     // g=a: value = 2*x + 7 over x=0..9 -> slope 2.0, exact everywhere
     // g=b: one point -> no fit; g=c: two points at the SAME ts -> den 0
@@ -659,8 +659,8 @@ class TsdbSpec extends SparkSuite {
         Seq(("m", Map("g" -> "b"), 100L, 1.0),
           ("m", Map("g" -> "c"), 100L, 1.0), ("m", Map("g" -> "c"), 100L, 5.0))
     val t = Tsdb.attach(spark, rows.toDF("metric", "labels", "ts", "value"))
-    val got = t.predictLinear("m", Seq.empty, 100L, 200L, Seq("g"),
-        atSec = 150L)
+    val got = graft.promql.PromQL.query(t, "predict_linear(m[1h], 0) by (g)",
+        100L, 150L)
       .collect().map(r => (r.getString(0), r.getDouble(2), r.getDouble(3)))
     assert(got.toSeq == Seq(("a", 2.0, 2.0 * 50 + 7)))
   }
