@@ -9,13 +9,19 @@ import graft.SparkEntry
   * (`plans/r15/<query>_<suffix>.txt`).
   *
   * Usage: runMain graft.tools.DumpPlans <sfDir> <outDir> <suffix> name1 name2 ...
+  * A name ending in `*` stands for every registered query with that
+  * prefix, in name order (`tsdb_*` dumps all the TSDB queries).
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: DumpPlans <sfDir> <outDir> <suffix> name1 [name2 ...]")
     val Array(dir, outDir, suffix) = args.take(3)
-    val names = args.drop(3).toSeq
+    val names = args.drop(3).toSeq.flatMap { a =>
+      if (a.endsWith("*"))
+        SparkEntry.queries.keys.filter(_.startsWith(a.dropRight(1))).toSeq.sorted
+      else Seq(a)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
