@@ -1528,7 +1528,7 @@ object SparkEntry {
       selected.forall(names => prefixes.exists(p => names.exists(_.startsWith(p))))
     if (wanted("tsdb_rollup", "tsdb_ratio_rollup", "tsdb_range_chunks"))
       tieredTsdb(s, dir) // rollup + gorilla-chunk tiers, built once per dir
-    if (wanted("tsdb_promql_histq_rate"))
+    if (wanted("tsdb_promql_histq_rate", "tsdb_alert_rule_histq"))
       histCumFixture(s, dir).count() // cumulative bucket counters, once
     if (wanted("ann_topk", "dedup_embedding")) {
       val emb = Tables.embeddings(s, dir)

@@ -68,11 +68,15 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
 
   /** Label→value-set dimension tier (the reference's `labelValueSet`,
     * label.go:40-77, maintained on every insert,
-    * memory_segment.go:93-96): distinct `(seg, name, value)` label pairs,
-    * seg-partitioned. [[queryLabelValues]] reads O(distinct pairs in the
-    * queried segments) from it instead of aggregating the O(series)
-    * dimension — at 10M series a low-cardinality label's domain is tens
-    * of rows instead of a 15M-row map aggregation.
+    * memory_segment.go:93-96): `(seg, name, value)` label pairs,
+    * seg-partitioned, each pair once per segment — a batch appends only
+    * the pairs its segments do not already hold ([[appendLabelValues]]);
+    * only a store written before that rule repeats pairs, until
+    * [[compactLabelValues]] removes the copies. [[queryLabelValues]]
+    * reads O(distinct pairs in the queried segments) from it instead of
+    * aggregating the O(series) dimension — at 10M series a
+    * low-cardinality label's domain is tens of rows instead of a 15M-row
+    * map aggregation.
     */
   private val labelValuesPath = s"${conf.dataPath}/label_values"
 
@@ -171,9 +175,11 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   /** Batch insert (reference InsertRows, tsdb.go:205-216). Expects columns
     * `metric: string, labels: map<string,string>, ts: long (s), value:
     * double`. Appends time-partitioned parquet + upserts series metadata
-    * + appends the label-value pairs; the three tiers are written
-    * concurrently ([[writeNormalized]]), and the call returns only once
-    * all three have ended, so `Tsdb` stays single-writer for its callers.
+    * + appends the label-value pairs its segments do not already hold
+    * (it reads the distinct pairs of the segments it touches); the three
+    * tiers are written concurrently ([[writeNormalized]]), and the call
+    * returns only once all three have ended, so `Tsdb` stays single-writer
+    * for its callers.
     * Out-of-order and late points are a non-issue in batch storage — Parquet
     * partitions are unordered collections and reads sort as needed (the
     * reference's outdated-list machinery, memory_segment.go:104-111, exists
@@ -225,14 +231,19 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   private def writeNormalized(rows: DataFrame): Unit = {
     // materialized before the writes share it: each write then reads
     // the stored blocks, where a lazily filled cache would make every
-    // write plan its own cache stage and hold cores waiting on another's
-    val norm = rows.localCheckpoint()
+    // write plan its own cache stage and hold cores waiting on another's.
+    // The same action observes the batch's segment set for the
+    // label-values write, so that set costs no job of its own.
+    val segsSeen = org.apache.spark.sql.Observation()
+    val norm = rows
+      .observe(segsSeen, collect_set(col("seg")).as("segs"))
+      .localCheckpoint()
     try concurrently(3)(Seq(
       // the series-meta write first: its chain (the append, then the
       // fold when due) is the longest, and FIFO scheduling serves the
       // first-submitted job's tasks first
       () => appendSeriesMeta(norm),
-      () => appendLabelValues(norm),
+      () => appendLabelValues(norm, observedSegs(segsSeen, norm)),
       () => appendFact(norm)))
     finally org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint(norm)
     // advance the outdated-rejection boundary here — this serves BOTH
@@ -356,20 +367,40 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   private val labelValuesSchema = StructType(Seq(
     StructField("name", StringType), StructField("value", StringType)))
 
-  /** Append one batch's distinct `(seg, name, value)` label pairs to the
-    * label→value-set tier. Duplicate pairs across batches are harmless
-    * ([[queryLabelValues]] ends in a distinct); [[compactLabelValues]]
-    * consolidates. Within each file rows are (name, value)-sorted so
-    * single-label reads skip foreign row groups via column stats; the
-    * `filesPerSegment` sub-bucketing parallelizes the single-live-bucket
-    * streaming write exactly like the fact path.
+  /** Append the batch's distinct `(seg, name, value)` label pairs that the
+    * label→value-set tier does not already hold: a null-safe left-anti
+    * join (a null metric folds to a null-valued `__name__` pair) against
+    * the tier's pairs in `segs`, the segments the batch touches, so the
+    * read is pruned to those partitions. Cost: a batch reads the distinct
+    * pairs of the segments it touches and writes only the new ones, so
+    * the tier holds each pair once per segment; a batch that brings no
+    * new pair writes no file. A store written before this rule may
+    * repeat a pair (reads end in a distinct) and stops growing once every
+    * pair is held; [[compactLabelValues]] removes the copies. Within each
+    * file rows are (name, value)-sorted so single-label reads skip
+    * foreign row groups via column stats; the `filesPerSegment`
+    * sub-bucketing parallelizes the single-live-bucket streaming write
+    * exactly like the fact path.
     */
-  private def appendLabelValues(norm: DataFrame): Unit = {
+  private def appendLabelValues(norm: DataFrame, segs: => Seq[Long]): Unit = {
+    // read inside the label-values branch, so waiting for the set holds
+    // up no other write
+    val touched = segs
+    if (touched.isEmpty) return
     val pairs = norm
       .select(col("seg"), explode(col("labels")).as(Seq("name", "value")))
       .distinct()
+    val fresh =
+      if (!pathExists(labelValuesPath)) pairs
+      else nullSafeEquiJoin(pairs,
+        // `seg` declared, so the partition filter resolves even where no
+        // partition is there to discover (an empty tier directory)
+        spark.read.schema(labelValuesSchema.add("seg", IntegerType))
+          .parquet(labelValuesPath)
+          .where(col("seg").isin(touched: _*)),
+        Seq("seg", "name", "value"), "left_anti")
     val sub = math.max(1, conf.filesPerSegment).toLong
-    pairs
+    fresh
       .repartition(col("seg"),
         pmod(xxhash64(col("name"), col("value")), lit(sub)))
       .sortWithinPartitions("name", "value")
@@ -379,6 +410,22 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       .partitionBy("seg")
       .parquet(labelValuesPath)
   }
+
+  /** The segments a normalized batch touches: one small job. */
+  private def batchSegs(norm: DataFrame): Seq[Long] =
+    norm.select("seg").where(col("seg").isNotNull).distinct()
+      .collect().toSeq.map(_.getLong(0))
+
+  /** The segment set `seen` collected on the action that materialized
+    * `norm`. Its listener event arrives asynchronously; should it not
+    * arrive within a minute, the set is read off `norm` instead. */
+  private def observedSegs(
+      seen: org.apache.spark.sql.Observation, norm: DataFrame): Seq[Long] =
+    try scala.concurrent.Await.result(seen.future,
+      scala.concurrent.duration.Duration(60, "s")).getSeq[Long](0)
+    catch {
+      case _: java.util.concurrent.TimeoutException => batchSegs(norm)
+    }
 
   /** Bookkeeping after every durable `series_meta` DELTA append: one more
     * partial generation on disk, size cache stale; fold inline once the
@@ -988,7 +1035,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       }
       writeModeMarker(path, "incremental")
       appendSeriesMeta(norm)
-      appendLabelValues(norm)
+      appendLabelValues(norm, batchSegs(norm))
       // the commit marker is written LAST — after the series-meta append —
       // so a crash in between replays the whole batch: re-promotion clears
       // the batch-prefixed files first and meta duplicates are idempotent
@@ -1293,8 +1340,10 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * is returned iff some sample carries it in a segment overlapping the
     * window), served from the label→value-set tier the write path
     * maintains per batch (the reference's `labelValueSet`, label.go:40-77,
-    * updated on every insert, memory_segment.go:93-96). Cost is O(distinct
-    * (seg, value) pairs of THIS label in the pruned segments): the scan is
+    * updated on every insert, memory_segment.go:93-96), which holds each
+    * pair once per segment. Cost is O(distinct (seg, value) pairs of THIS
+    * label in the pruned segments), plus the copies a store written
+    * before that rule holds until [[compactLabelValues]]: the scan is
     * seg-partition-pruned and `name`-pushed-down, never touches the fact
     * table or the O(series) dimension — flat in series count for
     * low-cardinality labels. Stores written before the tier existed fall
@@ -1493,10 +1542,12 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   }
 
   /** Consolidate the label→value-set tier: distinct pairs, few files per
-    * segment. For stores written before the tier existed (no
-    * `label_values` directory but durable samples), BACKFILLS it from the
-    * fact table — one O(fact) scan, after which [[queryLabelValues]]
-    * serves from the tier.
+    * segment. Ingest already appends each pair once per segment, so this
+    * removes only the copies of a store written before that rule, and
+    * merges the per-batch files. For stores written before the tier
+    * existed (no `label_values` directory but durable samples), BACKFILLS
+    * it from the fact table — one O(fact) scan, after which
+    * [[queryLabelValues]] serves from the tier.
     */
   def compactLabelValues(): Unit = {
     if (conf.onlyMemoryMode) return

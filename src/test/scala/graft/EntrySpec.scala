@@ -41,4 +41,22 @@ class EntrySpec extends SparkSuite {
     }
     assert(failures.isEmpty, failures.mkString("; "))
   }
+
+  test("prewarm builds the cumulative-histogram fixture for the alert " +
+      "that reads it") {
+    // the events under a fresh directory name get a fixture of their own
+    val dir = tempDir("histq_prewarm")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sf0001, "events.parquet"),
+      java.nio.file.Paths.get(dir, "events.parquet"))
+    val name = new java.io.File(dir).getName
+    def fixtures = Option(new java.io.File("spark-warehouse/graft_index")
+      .listFiles()).toSeq.flatten.filter(_.getName.startsWith(s"histcum_${name}_"))
+    try {
+      SparkEntry.prewarm(spark, dir, Some(Set("tsdb_alert_rule_histq")))
+      assert(fixtures.size == 1 &&
+        new java.io.File(fixtures.head, "_ready").exists, fixtures)
+    } finally fixtures.foreach(f =>
+      org.apache.commons.io.FileUtils.deleteDirectory(f))
+  }
 }

@@ -1207,4 +1207,205 @@ class TsdbSpec extends SparkSuite {
       check(split = false)
     }
   }
+
+  // ------------------------------------- label_values: one copy per pair
+
+  /** First second of a 2 h segment, so that a batch at `Seg0 + 60 i`
+    * (i < 120) stays in one segment. */
+  private val Seg0 = Start - Start % 7200L
+
+  /** The `label_values` tier's rows on disk, (seg, name, value). */
+  private def tierRows(path: String): Seq[(Long, String, String)] =
+    spark.read.parquet(s"$path/label_values").collect().toSeq.map(r =>
+      (r.getAs[Number]("seg").longValue, r.getAs[String]("name"),
+        r.getAs[String]("value")))
+
+  /** Data files of the `label_values` tier. */
+  private def tierFiles(path: String): Int = {
+    def walk(f: java.io.File): Int =
+      if (f.isDirectory) f.listFiles().map(walk).sum
+      else if (f.getName.endsWith(".parquet")) 1 else 0
+    walk(new java.io.File(s"$path/label_values"))
+  }
+
+  /** One scrape of series `ids` (labels id, n = id % 5) at `ts`. */
+  private def scrapeOf(ids: Seq[Int], ts: Long): DataFrame = {
+    import spark.implicits._
+    ids.map(i => ("m", Map("id" -> i.toString, "n" -> (i % 5).toString),
+      ts, i.toDouble)).toDF("metric", "labels", "ts", "value")
+  }
+
+  /** The pairs one scrape of `ids` carries, in segment `seg`. */
+  private def pairsOf(ids: Seq[Int], seg: Long): Set[(Long, String, String)] =
+    ids.flatMap(i => Seq((seg, "id", i.toString), (seg, "n", (i % 5).toString),
+      (seg, Tsdb.MetricLabel, "m"))).toSet
+
+  test("label_values: scrapes of one segment hold each pair once; a " +
+      "batch that brings no new pair writes no file") {
+    val path = tempDir("lv_once")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+    val ids = 0 until 40
+    t.insertRows(scrapeOf(ids, Seg0))
+    val files = tierFiles(path)
+    (1 until 8).foreach(i => t.insertRows(scrapeOf(ids, Seg0 + 60L * i)))
+    val rows = tierRows(path)
+    assert(rows.size == rows.distinct.size, rows.diff(rows.distinct))
+    assert(rows.toSet == pairsOf(ids, Seg0 / 7200L))
+    assert(tierFiles(path) == files)
+    assert(t.queryLabelValues("n", Seg0, Seg0 + 600L)
+      .collect().map(_.getString(0)).toSeq == (0 until 5).map(_.toString))
+  }
+
+  test("label_values: a batch appends exactly the pairs its segments " +
+      "lack — new series, a new segment, a late batch into an older one") {
+    val path = tempDir("lv_delta")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+    val (s0, s1) = (Seg0 / 7200L, Seg0 / 7200L + 1)
+    t.insertRows(scrapeOf(0 until 30, Seg0))
+    def added(body: => Unit): Set[(Long, String, String)] = {
+      val before = tierRows(path)
+      body
+      val after = tierRows(path)
+      assert(after.size == after.distinct.size, after.diff(after.distinct))
+      after.toSet -- before
+    }
+    // three new series: only their ids are new to the segment
+    assert(added(t.insertRows(scrapeOf(0 until 33, Seg0 + 60L))) ==
+      (30 until 33).map(i => (s0, "id", i.toString)).toSet)
+    // a batch over both segments: the new one gets its full pair set
+    assert(added(t.insertRows(scrapeOf(0 until 33, Seg0 + 120L)
+      .unionByName(scrapeOf(0 until 33, Seg0 + 7200L)))) ==
+      pairsOf(0 until 33, s1))
+    // a late batch into the older segment adds its pairs there only
+    assert(added(t.insertRows(scrapeOf(Seq(0, 40, 41), Seg0 + 180L))) ==
+      Set((s0, "id", "40"), (s0, "id", "41")))
+  }
+
+  test("label_values: a null metric's null-valued __name__ pair is " +
+      "written once") {
+    import spark.implicits._
+    val path = tempDir("lv_null")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+    def batch(ts: Long) = Seq[(String, Map[String, String], Long, Double)](
+      (null, Map("id" -> "0"), ts, 1.0), ("m", Map("id" -> "1"), ts, 2.0))
+      .toDF("metric", "labels", "ts", "value")
+    (0 until 3).foreach(i => t.insertRows(batch(Seg0 + 60L * i)))
+    val rows = tierRows(path)
+    assert(rows.count(_ == ((Seg0 / 7200L, Tsdb.MetricLabel, null))) == 1,
+      rows)
+    assert(rows.size == rows.distinct.size, rows)
+  }
+
+  test("label_values: a tier that already holds copies reads right, " +
+      "stops growing, and compaction removes the copies") {
+    val path = tempDir("lv_copies")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+    t.insertRows(scrapeOf(0 until 20, Seg0))
+    // the shape an older store has: every batch appended its pairs again
+    val tier = s"$path/label_values"
+    val copies = spark.read.parquet(tier).localCheckpoint()
+    (0 until 2).foreach(_ => copies.write.mode("append")
+      .partitionBy("seg").parquet(tier))
+    val held = tierRows(path)
+    assert(held.size == 3 * held.distinct.size)
+    (1 until 4).foreach(i => t.insertRows(scrapeOf(0 until 20, Seg0 + 60L * i)))
+    assert(tierRows(path).size == held.size)
+    t.insertRows(scrapeOf(0 until 21, Seg0 + 240L))
+    assert(tierRows(path).size == held.size + 1)
+    assert(t.queryLabelValues("id", Seg0, Seg0 + 300L).collect()
+      .map(_.getString(0)).toSeq == (0 until 21).map(_.toString).sorted)
+    t.compactLabelValues()
+    val compacted = tierRows(path)
+    assert(compacted.size == compacted.distinct.size)
+    assert(compacted.toSet == pairsOf(0 until 21, Seg0 / 7200L))
+  }
+
+  test("label_values: the label reads equal the fact-table answer on the " +
+      "same batches (the tier as every batch's full pair set served it)") {
+    val path = tempDir("lv_reads")
+    val conf = TsdbConf(dataPath = path, segmentDuration = 7200L)
+    val t = new Tsdb(spark, conf)
+    t.insertRows(scrapes(40, 12, Seg0))                // two segments
+    t.insertRows(scrapes(50, 12, Seg0 + 3600L))        // + new series
+    t.insertRows(scrapeOf(Seq(3, 60, 61), Seg0 + 60L)) // late
+    t.insertRows(scrapes(50, 4, Seg0 + 3 * 7200L))     // a gap segment
+    val windows = Seq((Seg0, Seg0 + 60L), (Seg0 + 7300L, Seg0 + 8000L),
+      (Seg0, Seg0 + 4 * 7200L), (Seg0 + 2 * 7200L, Seg0 + 2 * 7200L + 10))
+    def answers(x: Tsdb) = windows.flatMap { case (s, e) =>
+      Seq("id", "n", Tsdb.MetricLabel, "absent").map(l =>
+        x.queryLabelValues(l, s, e).collect().map(_.getString(0)).toSeq) :+
+        x.queryLabelNames(s, e).collect().map(_.getString(0)).toSeq
+    }
+    val tierServed = answers(t)
+    // drop the tier: the same reads fall back to the fact table
+    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(s"$path/label_values"), true)
+    assert(tierServed == answers(new Tsdb(spark, conf)))
+    assert(tierServed.exists(_.size > 40))
+  }
+
+  test("label_values append: the existing-pairs read is pruned to the " +
+      "batch's segments and no broadcast is forced on it") {
+    val path = tempDir("lv_plan")
+    val t = new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+    t.insertRows(scrapes(200, 48, Seg0)) // four segments
+    val lastSeg = (Seg0 + 47 * 600L) / 7200L
+    // no broadcast unless a hint forces one; one-line scan nodes
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.ui.explainMode" -> "simple") {
+      val (_, out, _, spans) = tracingJobs(s"$path/label_values")(
+        t.insertRows(scrapes(210, 1, Seg0 + 47 * 600L)))
+      assert(out.isRight, out)
+      val scans = spans.map(_.plan).distinct.flatMap(_.linesIterator
+        .filter(l => l.contains("FileScan parquet") &&
+          l.contains(s"$path/label_values")))
+      assert(scans.nonEmpty, spans.map(_.plan.take(2000)))
+      assert(scans.forall(_.matches(
+        s".*PartitionFilters: \\[[^\\]]*seg#\\d+ = $lastSeg\\b.*")),
+        scans.mkString("\n"))
+      assert(spans.forall(!_.plan.contains("Broadcast")),
+        spans.map(_.plan).mkString("\n\n"))
+    }
+    assert(tierRows(path).count(_._1 == lastSeg) == 210 + 5 + 1)
+  }
+
+  test("label_values append: insertRows runs at most one job more than " +
+      "the full-pair-set append did") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t = new Tsdb(spark, TsdbConf(dataPath = tempDir("lv_jobs"),
+      segmentDuration = 7200L))
+    t.insertRows(scrapes(2000, 4, Start))
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Int]
+    val sentinel = s"sentinel-${System.nanoTime}"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+          if (g == sentinel) drained.countDown() else counts.merge(g, 1, _ + _)
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val groups = (1 to 4).map(i => s"lv-jobs-$i-${System.nanoTime}")
+    try {
+      groups.zipWithIndex.foreach { case (g, i) =>
+        sc.setJobGroup(g, "insert")
+        t.insertRows(scrapes(2000, 4, Start + 2400L * (i + 1)))
+      }
+      sc.setJobGroup(sentinel, "sentinel")
+      spark.range(1).collect()
+      sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // the full-pair-set append ran 8 jobs per batch, 10 with the
+    // series-meta fold (every second batch): the checkpoint, the three
+    // writes' query stages and the fold
+    val got = groups.map(g => counts.getOrDefault(g, 0))
+    assert(got.zip(Seq(8, 10, 8, 10)).forall { case (n, was) =>
+      n <= was + 1 }, got)
+  }
 }
