@@ -1039,6 +1039,29 @@ object PromQL {
 
   // ----------------------------------------------------------- compiler
 
+  /** A compiled vector: the frame and what it holds. The compile case
+    * that builds a frame sets these fields there; every consumer (scalar
+    * ops, vector matches, set ops, sorts, [[Rules]]) reads them, never
+    * the AST.
+    *  - `keys`: the label columns, when the AST fixes them AND the frame
+    *    holds at most one row per (keys, time). None when the labels
+    *    come from the data: a map-typed `labels` column, a label-key
+    *    universe read at compile time, per-series frames.
+    *  - `time`: the grid time column, `bucket_start` or `eval_ts`; None
+    *    for raw samples and the one-window frames.
+    *  - `value`: the single value column, or None.
+    *  - `grid`: the (step, offset) the time column lies on.
+    *  - `counts`: the frame carries the moment sample count `n` (a
+    *    moment aggregation over a selector); a match keeps it as
+    *    `n_a` / `n_b`. */
+  private[graft] final case class Vec(
+      frame: DataFrame,
+      keys: Option[Seq[String]],
+      time: Option[String],
+      value: Option[String],
+      grid: Option[(Long, Long)],
+      counts: Boolean = false)
+
   /** Compile and run `input` against `t` over `[start, end]` (epoch
     * seconds), like a Prometheus `query_range` call. The step grid comes
     * from the selector's `[d]` range; for PURE per-step scalar queries
@@ -1057,8 +1080,7 @@ object PromQL {
       start: Long,
       end: Long,
       buckets: Seq[Double] = Seq.empty,
-      stepSec: Option[Long] = None): DataFrame = {
-    val ast = parse(input)
+      stepSec: Option[Long] = None): DataFrame =
     stepSec match {
       // `stepSec` pins the eval grid for PURE per-step scalar queries —
       // standalone `time()`, number literals, and their arithmetic —
@@ -1068,7 +1090,8 @@ object PromQL {
       // with one is rejected loudly rather than silently ignored.
       case Some(st) =>
         require(st > 0, s"stepSec must be positive, got $st")
-        val sc = scalarSide(ast, col("bucket_start").cast("double"))
+        val sc = scalarSide(parse(input),
+            col("bucket_start").cast("double"))
           .getOrElse(throw new IllegalArgumentException(
             s"stepSec pins the eval grid for pure per-step scalar " +
             s"queries (time(), number literals, their arithmetic); " +
@@ -1076,12 +1099,25 @@ object PromQL {
             s"range — remove stepSec. Got: $input"))
         evalGrid(t, start, end, st)
           .withColumn("result", sc.cast("double"))
-      case None =>
-        validateSubquerySteps(ast)
-        val (ast2, s2, e2) = resolveAt(ast, start, end)
-        compile(t, resolveWithout(t, ast2), s2, e2, buckets,
-          rollupStep = None)
+      case None => compileQuery(t, input, start, end, buckets, None).frame
     }
+
+  /** The one compile entry of [[query]], [[queryFromRollup]] and
+    * [[Rules]]: parse `input`, check its subquery steps, resolve `@`
+    * and `without`, then compile — each once, so a rule reads its
+    * grouping, grid and value column from the same [[Vec]] its frame
+    * comes from. */
+  private[graft] def compileQuery(
+      t: Tsdb,
+      input: String,
+      start: Long,
+      end: Long,
+      buckets: Seq[Double],
+      rollupStep: Option[Long]): Vec = {
+    val ast = parse(input)
+    validateSubquerySteps(ast)
+    val (ast2, s2, e2) = resolveAt(ast, start, end)
+    compile(t, resolveWithout(t, ast2), s2, e2, buckets, rollupStep)
   }
 
   /** Resolve `@` evaluation-time modifiers against the query window.
@@ -1192,18 +1228,9 @@ object PromQL {
       input: String,
       start: Long,
       end: Long,
-      rollupStepSec: Long): DataFrame = {
-    val ast = parse(input)
-    validateSubquerySteps(ast)
-    val (ast2, s2, e2) = resolveAt(ast, start, end)
-    compile(t, resolveWithout(t, ast2), s2, e2, Seq.empty,
-      rollupStep = Some(rollupStepSec))
-  }
+      rollupStepSec: Long): DataFrame =
+    compileQuery(t, input, start, end, Seq.empty, Some(rollupStepSec)).frame
 
-  /** A `[range:step]` subquery step is consumed ONLY by the
-    * `*_over_time` family (the eval grid); anywhere else it would be
-    * silently ignored — reject it up front, one traversal, no
-    * per-shape guard to forget. */
   /** Range functions that accept a [range:step] selector directly —
     * `rate(x[1h:1m])` is a sliding 1h-window rate every minute (the
     * counter family's sliding grid); likewise the whole counter/trend
@@ -1215,15 +1242,10 @@ object PromQL {
     Set("rate", "increase", "delta", "idelta", "irate", "resets",
       "changes", "deriv", "predict_linear")
 
-  /** Range functions whose trailing-by form AGGREGATES to the by-grain
-    * (one row per (by-labels, grid point)) — the only ones whose label
-    * schema is static enough for [[groupingOf]] to report. irate/idelta
-    * are excluded: their frames keep per-sid grain. */
-  private val ByGrainRangeFns =
-    (SlidingRangeFns -- Set("irate", "idelta")) ++ OverTime ++
-      SpreadOverTime ++
-      Set("quantile_over_time", "mad_over_time", "present_over_time")
-
+  /** A `[range:step]` subquery step is consumed ONLY by the
+    * `*_over_time` family (the eval grid); anywhere else it would be
+    * silently ignored — reject it up front, one traversal, no
+    * per-shape guard to forget. */
   private def validateSubquerySteps(e: Expr): Unit = e match {
     case RangeFn(fn, _, sel, _, _) =>
       if (sel.stepSec.nonEmpty && !OverTime(fn) && !SpreadOverTime(fn) &&
@@ -1273,12 +1295,12 @@ object PromQL {
       start: Long,
       end: Long,
       grid: Option[Long],
-      q: Option[Double] = None): DataFrame = {
+      q: Option[Double] = None): Vec = {
     val range = stepOf(sel, s"$op($fn)")
-    Tsdb.counterAggregate(
+    gridded(Tsdb.counterAggregate(
       t.counterSeries(sel.metric, sel.matchers, start, end, by, range, grid,
         sel.offsetSec),
-      by, range, op, rate = fn == "rate", q)
+      by, range, op, rate = fn == "rate", q), sel, range, grid)
   }
 
   /** The gauge family and the other raw-sample range functions —
@@ -1301,17 +1323,28 @@ object PromQL {
       perSeries: Boolean = false,
       q: Option[Double] = None,
       relabel: Column => Column = identity,
-      horizonSec: Long = 0L): DataFrame = {
+      horizonSec: Long = 0L): Vec = {
     val prep: DataFrame => DataFrame =
       if (op != "resets_changes") identity
       else s => Tsdb.counterLag(s).where(col("prev").isNotNull)
     val whole = op == "trend" && grid.isEmpty
-    Tsdb.gaugeAggregate(
+    val range = if (whole) 0L else stepOf(sel, shape)
+    val frame = Tsdb.gaugeAggregate(
       t.windowedSamples(sel.metric, sel.matchers, start, end, by,
-        if (whole) 0L else stepOf(sel, shape), grid, sel.offsetSec, prep,
-        relabel, whole),
+        range, grid, sel.offsetSec, prep, relabel, whole),
       perSeries, op, q, horizonSec)
+    if (whole) Vec(frame, None, None, None, None)
+    else gridded(frame, sel, range, grid)
   }
+
+  /** A stage-(b) frame on `sel`'s grid: `bucket_start` every `range` on
+    * the tumbling grid (`grid` None), `eval_ts` every `grid` on the
+    * sliding one, both shifted by the selector's offset. The caller sets
+    * the keys and the value column. */
+  private def gridded(
+      frame: DataFrame, sel: Selector, range: Long, grid: Option[Long]): Vec =
+    Vec(frame, None, Some(if (grid.isEmpty) "bucket_start" else "eval_ts"),
+      None, Some((grid.getOrElse(range), sel.offsetSec)))
 
   /** The value column of the counter family's `sum` for `fn`. */
   private def counterCol(fn: String): String =
@@ -1323,6 +1356,34 @@ object PromQL {
     "avg" -> "avg_v", "min" -> "min_v", "max" -> "max_v",
     "count" -> "n_series", "stddev" -> "stddev_v", "stdvar" -> "stdvar_v",
     "quantile" -> "q_v")
+
+  /** The value column of the counter family's tumbling `op` of `fn`
+    * ([[Tsdb.counterAggregate]]'s names). */
+  private def counterValue(op: String, fn: String): String = (op, fn) match {
+    case ("sum", _) => counterCol(fn)
+    case ("count", _) => "n_series"
+    case ("quantile", _) => if (fn == "rate") "q_rate" else "q_increase"
+    case (m, "increase") => s"${m}_increase"
+    case (m, _) => s"${m}_rate"
+  }
+
+  /** The value column of each label aggregation's gauge frame. */
+  private val AggCol = Map("sum" -> "sum_v", "avg" -> "avg_v",
+    "min" -> "min_v", "max" -> "max_v", "count" -> "n", "stddev" -> "stddev",
+    "stdvar" -> "stdvar", "quantile" -> "q_v")
+
+  /** The value column of each range function, top-level or as a
+    * subquery outer. */
+  private val RangeCol = Map(
+    "sum_over_time" -> "sum_v", "avg_over_time" -> "avg_v",
+    "min_over_time" -> "min_v", "max_over_time" -> "max_v",
+    "count_over_time" -> "n", "last_over_time" -> "last_v",
+    "quantile_over_time" -> "q_v", "stddev_over_time" -> "stddev_v",
+    "stdvar_over_time" -> "stdvar_v", "present_over_time" -> "present_v",
+    "mad_over_time" -> "mad_v", "rate" -> "rate_per_sec",
+    "increase" -> "increase", "delta" -> "delta", "idelta" -> "idelta",
+    "irate" -> "irate", "resets" -> "resets", "changes" -> "changes",
+    "deriv" -> "slope_per_sec", "predict_linear" -> "predicted")
 
   /** Counter shapes with only a tumbling form reject a selector
     * [range:step] rather than ignore it. */
@@ -1357,11 +1418,9 @@ object PromQL {
 
   /** Resolve `without (labels)` clauses into explicit `by` lists against
     * the metric's actual label keys — after this pass the compiler only
-    * ever sees `by`. Package-visible so [[Rules]] derives its grouping
-    * from the SAME resolution the compiled frame uses (a raw AST's `by`
-    * is empty for a without-rule — grouping on it would island across
-    * labelsets and collapse recorded series). */
-  private[promql] def resolveWithout(t: Tsdb, e: Expr): Expr = e match {
+    * ever sees `by`, and the compiled [[Vec]]'s keys are the resolved
+    * list ([[Rules]] reads them from there). */
+  private def resolveWithout(t: Tsdb, e: Expr): Expr = e match {
     case a @ Agg(_, _, _, by, body, wo) =>
       val rBody = resolveWithout(t, body)
       if (wo.isEmpty) a.copy(body = rBody)
@@ -1463,22 +1522,15 @@ object PromQL {
       case "<=" => (a, b) => a <= b
     }
 
-  /** A moment aggregation straight over a selector — the sides whose
-    * matches carry the sample counts `n_a` / `n_b` and may carry labels
-    * (`group_left(extra)`). */
-  private def isMomentAgg(e: Expr): Boolean = e match {
-    case Agg(op, _, _, _, _: Selector, _) => MomentAggs(op)
-    case _ => false
-  }
-
   /** Every vector-vector `BinOp` and `BoolCmp`: both sides compile
     * independently ([[compile]], so under [[queryFromRollup]] a moment
     * side is served from the tier) and meet in stage (c),
-    * [[graft.Tsdb.vectorMatch]]. Any side pair with a derivable grouping
-    * ([[groupingOf]]) and value column ([[valueColOf]]) matches: moment
-    * aggregations, counter-family aggregations, nested arithmetic
-    * (`a/b > c/d`). `ignoring (l)` arrives here already resolved to
-    * explicit on-labels (resolveWithout).
+    * [[graft.Tsdb.vectorMatch]]. Any side pair whose [[Vec]]s carry
+    * keys, a grid and a value column matches: moment aggregations,
+    * counter-family aggregations, nested arithmetic (`a/b > c/d`).
+    * `ignoring (l)` arrives here already resolved to explicit on-labels
+    * (resolveWithout). A side is compiled before its shape is checked,
+    * so a rejected side may have run its label-key or `le` job.
     *
     * Matching rules (Prometheus semantics, proven at compile time so a
     * wrong answer is unrepresentable): the sides share the step grid
@@ -1508,18 +1560,25 @@ object PromQL {
       end: Long,
       buckets: Seq[Double],
       rollupStep: Option[Long],
-      mode: String): DataFrame = {
-    def grouping(e: Expr, side: String): Seq[String] =
-      groupingOf(e).getOrElse(throw new IllegalArgumentException(
-        s"vector-match $side side has no derivable label grouping: $e"))
-    def grid(e: Expr, side: String): (Long, Long) =
-      gridSpecOf(e).getOrElse(throw new IllegalArgumentException(
+      mode: String): Vec = {
+    val a = compile(t, lhs, start, end, buckets, rollupStep)
+    val b = compile(t, rhs, start, end, buckets, rollupStep)
+    def grouping(v: Vec, e: Expr, side: String): Seq[String] =
+      v.keys.getOrElse(throw new IllegalArgumentException(
+        if (mode == "bool")
+          s"bool comparisons support a scalar side (`x > bool 0.5`) or " +
+          s"two matching aggregations (`sum by (l)(a[1h]) $op " +
+          s"bool sum by (l)(b[1h])`, incl. over rate/increase); other " +
+          s"vector shapes are not supported"
+        else s"vector-match $side side has no derivable label grouping: $e"))
+    def grid(v: Vec, e: Expr, side: String): ((Long, Long), String) =
+      v.grid.zip(v.time).getOrElse(throw new IllegalArgumentException(
         s"vector-match $side side has no derivable step grid " +
         s"(needs a ranged selector `x[d]` inside): $e"))
-    val byA = grouping(lhs, "left")
-    val byB = grouping(rhs, "right")
-    val (stepA, offA) = grid(lhs, "left")
-    val (stepB, offB) = grid(rhs, "right")
+    val byA = grouping(a, lhs, "left")
+    val byB = grouping(b, rhs, "right")
+    val ((stepA, offA), tA) = grid(a, lhs, "left")
+    val ((stepB, offB), tB) = grid(b, rhs, "right")
     require(stepA == stepB,
       "vector-match sides must share the step grid")
     // misaligned offsets would shift one side's bucket_start values off
@@ -1530,7 +1589,7 @@ object PromQL {
       s"vector-match sides' offsets ($offA s vs $offB s) are not " +
       s"congruent mod the ${stepA}s step — their bucket grids would " +
       "never intersect")
-    val moments = isMomentAgg(lhs) && isMomentAgg(rhs)
+    val moments = a.counts && b.counts
     val mk: Seq[String] =
       if (!gl && !gr) {
         require(byA.toSet == byB.toSet,
@@ -1568,126 +1627,22 @@ object PromQL {
         }
         mk
       }
-    def side(e: Expr, by: Seq[String], s: String): DataFrame = {
-      val df = compile(t, e, start, end, buckets, rollupStep)
-      val tk = if (df.columns.contains("eval_ts")) "eval_ts" else "bucket_start"
-      df.select((by.map(col) :+ col(tk)) ++
+    def side(v: Vec, e: Expr, by: Seq[String], tk: String, s: String) =
+      v.frame.select((by.map(col) :+ col(tk)) ++
         (if (moments) Seq(col("n").as(s"n_$s")) else Nil) :+
-        col(valueColOf(e)).cast("double").as(s"sum_$s"): _*)
-    }
-    Tsdb.vectorMatch(side(lhs, byA, "a"), side(rhs, byB, "b"), mk,
-      if (gl) "left" else if (gr) "right" else "one", mode,
-      if (mode == "arith") arith(op) else cmp(op))
+        col(valueOf(v, e)).cast("double").as(s"sum_$s"): _*)
+    Vec(Tsdb.vectorMatch(side(a, lhs, byA, tA, "a"),
+        side(b, rhs, byB, tB, "b"), mk,
+        if (gl) "left" else if (gr) "right" else "one", mode,
+        if (mode == "arith") arith(op) else cmp(op)),
+      Some(if (gr) byB else byA), Some(tA), Some("result"), a.grid)
   }
 
-  /** The aggregated-moment column each shape exposes to scalar
-    * arithmetic / threshold filtering — the column a hand-built query
-    * would operate on. Fails fast for shapes with no single value
-    * column. */
-  private[promql] def valueColOf(e: Expr): String = e match {
-    // agg-of-rangefn shapes first (the canonical alert rule is
-    // `sum by (c)(rate(x[1h])) > 0.5`): the compiled output carries the
-    // counter family's column names, not the moment aggregation's —
-    // Tsdb.counterAggregate's sum is increase / rate_per_sec, the other
-    // moments *_increase, plus *_rate columns when fn == rate
-    case Agg(op, _, _, _, RangeFn(fn, _, _, _, _), _)
-        if MomentAggs(op) && (fn == "rate" || fn == "increase") =>
-      (op, fn) match {
-        case ("sum", "increase") => "increase"
-        case ("sum", "rate") => "rate_per_sec"
-        case ("count", _) => "n_series"
-        case (m, "increase") => s"${m}_increase"
-        case (m, _) => s"${m}_rate"
-      }
-    // quantile-of-counter (the SLO family) compiles to the counter
-    // family's quantile, whose columns are q_increase / q_rate — NOT
-    // the generic quantile aggregation's q_v
-    case Agg("quantile", _, _, _, RangeFn(fn, _, _, _, _), _)
-        if fn == "rate" || fn == "increase" =>
-      if (fn == "rate") "q_rate" else "q_increase"
-    case Agg("sum", _, _, _, RangeFn("resets", _, _, _, _), _) => "resets"
-    case Agg("sum", _, _, _, RangeFn("changes", _, _, _, _), _) => "changes"
-    case Agg("sum", _, _, _, _, _) => "sum_v"
-    case Agg("avg", _, _, _, _, _) => "avg_v"
-    case Agg("min", _, _, _, _, _) => "min_v"
-    case Agg("max", _, _, _, _, _) => "max_v"
-    case Agg("count", _, _, _, _, _) => "n"
-    case Agg("quantile", _, _, _, _, _) => "q_v"
-    case Agg("stddev", _, _, _, _, _) => "stddev"
-    case Agg("stdvar", _, _, _, _, _) => "stdvar"
-    case SubqueryFn(fn, _, _, _, _, _) => fn match {
-      case "sum_over_time" => "sum_v"
-      case "avg_over_time" => "avg_v"
-      case "min_over_time" => "min_v"
-      case "max_over_time" => "max_v"
-      case "count_over_time" => "n"
-      case "last_over_time" => "last_v"
-      case "quantile_over_time" => "q_v"
-      case "stddev_over_time" => "stddev_v"
-      case "stdvar_over_time" => "stdvar_v"
-      case "present_over_time" => "present_v"
-      case "mad_over_time" => "mad_v"
-      case "rate" => "rate_per_sec"
-      case "increase" => "increase"
-      case "delta" => "delta"
-      case "idelta" => "idelta"
-      case "irate" => "irate"
-      case "resets" => "resets"
-      case "changes" => "changes"
-      case "deriv" => "slope_per_sec"
-      case "predict_linear" => "predicted"
-      case other => throw new IllegalArgumentException(
-        s"unsupported nested-subquery outer function: $other")
-    }
-    case RangeFn("rate", _, _, _, _) => "rate_per_sec"
-    case RangeFn("increase", _, _, _, _) => "increase"
-    case RangeFn("delta", _, _, _, _) => "delta"
-    case RangeFn("deriv", _, _, _, _) => "slope_per_sec"
-    case RangeFn("predict_linear", _, _, _, _) => "predicted"
-    case RangeFn("resets", _, _, _, _) => "resets"
-    case RangeFn("changes", _, _, _, _) => "changes"
-    case RangeFn("irate", _, _, _, _) => "irate"
-    case RangeFn("idelta", _, _, _, _) => "idelta"
-    // the *_over_time family exposes its own moment on the eval grid
-    case RangeFn("sum_over_time", _, _, _, _) => "sum_v"
-    case RangeFn("avg_over_time", _, _, _, _) => "avg_v"
-    case RangeFn("min_over_time", _, _, _, _) => "min_v"
-    case RangeFn("max_over_time", _, _, _, _) => "max_v"
-    case RangeFn("count_over_time", _, _, _, _) => "n"
-    case RangeFn("last_over_time", _, _, _, _) => "last_v"
-    case RangeFn("stddev_over_time", _, _, _, _) => "stddev_v"
-    case RangeFn("stdvar_over_time", _, _, _, _) => "stdvar_v"
-    case RangeFn("present_over_time", _, _, _, _) => "present_v"
-    case RangeFn("quantile_over_time", _, _, _, _) => "q_v"
-    case RangeFn("mad_over_time", _, _, _, _) => "mad_v"
-    case Agg("group", _, _, _, _, _) => "group_v"
-    case Agg("limitk" | "limit_ratio", _, _, _, _, _) => "sum_v"
-    case _: HistQuantileAgg => "q"
-    case BinOp(op, _, _, _, _, _) if ArithOps(op) => "result"
-    // a compare against a scalar side (a literal, scalar(), a time()
-    // composition) filters the vector side in place, keeping its own
-    // value column; a vector-vector compare goes through stage (c) →
-    // `result` (the lhs value passed through)
-    case BinOp(op, l, r, _, _, _) if CmpOps(op) =>
-      def scalar(e: Expr) = e match {
-        case MathFn("scalar", _, _, _) => true
-        case _ => scalarSide(e, lit(0L)).isDefined
-      }
-      if (scalar(r)) valueColOf(l)
-      else if (scalar(l)) valueColOf(r)
-      else "result"
-    case BinOp(op, l, _, _, _, _) if SetOps(op) =>
-      valueColOf(l)
-    case _: BoolCmp => "result"
-    // sort is presentation-only: the value column is the body's
-    case MathFn("sort" | "sort_desc", arg, _, _) => valueColOf(arg)
-    case LabelFn("sort_by_label" | "sort_by_label_desc", arg, _) =>
-      valueColOf(arg)
-    case MathFn("holt_winters", _, _, _) => "hw_v"
-    case _: MathFn => "result"
-    case other => throw new IllegalArgumentException(
-      s"scalar operand needs a single-valued vector side, got: $other")
-  }
+  /** The value column of `v`, compiled from `e`, that a scalar op, a
+    * compare or a match reads. */
+  private def valueOf(v: Vec, e: Expr): String =
+    v.value.getOrElse(throw new IllegalArgumentException(
+      s"scalar operand needs a single-valued vector side, got: $e"))
 
   /** `histogram_quantile` bucket bounds from the metric's `le` label
     * domain on the series DIMENSION — the Prometheus convention (one
@@ -1726,98 +1681,6 @@ object PromQL {
         s"$other does not rewrite labels — it cannot feed an " +
         "aggregation's relabel step (sort it AROUND the aggregation)")
     }
-
-  /** The label grouping a compiled vector side carries — the set-op /
-    * match key. Follows through scalar arithmetic, threshold filters and
-    * vector matches (a group_right match keeps the right side's grain). */
-  private[promql] def groupingOf(e: Expr): Option[Seq[String]] = e match {
-    case Agg(op, _, _, by, _: Selector, _) if MomentAggs(op) => Some(by)
-    // agg-of-rangefn sides carry their `by` labels too, so set ops and
-    // threshold filters compose over e.g. `sum by (c)(rate(x[1h]))`
-    case Agg(op, _, _, by, RangeFn(fn, _, _, _, _), _)
-        if MomentAggs(op) && (fn == "rate" || fn == "increase") => Some(by)
-    // quantile has a parameter so it sits outside MomentAggs, but its
-    // grouping is just as static — both the plain form and the
-    // counter/SLO form (`quantile by (l) (q, rate(m[step]))`)
-    case Agg("quantile", _, Some(_), by, _: Selector, _) => Some(by)
-    case Agg("quantile", _, Some(_), by, RangeFn(fn, _, _, _, _), _)
-        if fn == "rate" || fn == "increase" => Some(by)
-    case Agg("sum", _, _, by, RangeFn("resets" | "changes", _, _, _, _), _) =>
-      Some(by)
-    case Agg(op, _, _, by, LabelFn(_, _: Selector, _), _)
-        if MomentAggs(op) => Some(by)
-    case BinOp(op, l, r, _, gl, gr) if ArithOps(op) || CmpOps(op) =>
-      (l, r) match {
-        case (_, _: NumLit) => groupingOf(l)
-        case (_: NumLit, _) => groupingOf(r)
-        case _ if gr => groupingOf(r)
-        case _ => groupingOf(l)
-      }
-    case BoolCmp(_, l, r, _, _, gr) => (l, r) match {
-      case (_, _: NumLit) => groupingOf(l)
-      case (_: NumLit, _) => groupingOf(r)
-      // vector-vector bool keeps the matched grouping; under
-      // group_right the kept (finer) side is the right one
-      case _ => if (gr) groupingOf(r) else groupingOf(l)
-    }
-    case Agg("group", _, _, by, _: Selector, _) => Some(by)
-    // nested subqueries carry the inner vector's grouping: explicit on
-    // the trailing-by extension or an aggregated inner (a bare
-    // per-series inner derives the full label-key universe at compile
-    // time, which isn't static — callers needing a static schema, like
-    // the rule engine, get None and fail loudly)
-    case SubqueryFn(_, body, _, _, _, _) => body match {
-      case RangeFn(_, _, _, by, _) if by.nonEmpty => Some(by)
-      // topk/bottomk inners keep the INNER aggregation's grain (the
-      // selection filters rows, it doesn't regroup them)
-      case Agg("topk" | "bottomk" | "limitk" | "limit_ratio", _, _, _,
-          Agg(_, _, _, by, _, Nil), Nil) => Some(by)
-      case Agg(_, _, _, by, _, Nil) => Some(by)
-      case BinOp(_, Agg(_, _, _, by, _, Nil), _, _, _, _) => Some(by)
-      case _ => None
-    }
-    case LabelFn("sort_by_label" | "sort_by_label_desc", arg, _) =>
-      groupingOf(arg)
-    case MathFn(_, arg, _, _) => groupingOf(arg)
-    // the quantile collapses the le axis: the output grain is the
-    // body's by-list minus `le` — static, rule-safe
-    case HistQuantileAgg(_, Agg(_, _, _, by, _, _)) =>
-      Some(by.filterNot(_ == "le"))
-    // the trailing-by extension aggregates a range function to the
-    // by-grain, so its label schema IS the by-list — static, rule-safe
-    // (`rate(x[6h:1h]) by (cohort) > thr` as a live/batch alert).
-    // ONLY the aggregating functions qualify: irate/idelta frames
-    // (the gaugeAggregate `last_two` op) stay at per-sid grain
-    // with multiple rows per (by-labels, grid point), which would break
-    // the rules path's one-row-per-bucket islands window — they return
-    // None and the rule engine rejects them loudly.
-    case RangeFn(fn, _, _, by, _)
-        if by.nonEmpty && ByGrainRangeFns(fn) => Some(by)
-    case _ => None
-  }
-
-  /** The (stepSec, offsetSec) bucket grid an aggregation evaluates on —
-    * every Agg compile case derives it from its selector as
-    * `(stepOf(sel), sel.offsetSec)`, so the `or vector(…)` gap filler
-    * reads the same pair to generate the missing buckets. First selector
-    * wins (the `or` guard already proved a single global aggregation). */
-  private[promql] def gridSpecOf(e: Expr): Option[(Long, Long)] = e match {
-    // a [range:step] selector evaluates SLIDING: the output grid is the
-    // pinned step (the range is the lookback window, not the grid)
-    case s: Selector =>
-      s.stepSec.orElse(s.rangeSec).map(st => (st, s.offsetSec))
-    // a nested subquery's output grid is the [range:step] resolution,
-    // shifted by the construct's own offset (eval_ts = grid + offset)
-    case SubqueryFn(_, _, _, stepSec, _, sqOff) => Some((stepSec, sqOff))
-    case HistQuantileAgg(_, body) => gridSpecOf(body)
-    case Agg(_, _, _, _, body, _) => gridSpecOf(body)
-    case RangeFn(_, _, sel, _, _) => gridSpecOf(sel)
-    case LabelFn(_, inner, _) => gridSpecOf(inner)
-    case ValueLabel(_, inner) => gridSpecOf(inner)
-    case MathFn(_, arg, _, _) => gridSpecOf(arg)
-    case BinOp(_, l, r, _, _, _) => gridSpecOf(l).orElse(gridSpecOf(r))
-    case _ => None
-  }
 
   /** The vector-match column op. Sums arrive as exact-DECIMAL-derived
     * doubles; `+ - *` on them are single IEEE ops reproducible across
@@ -1893,30 +1756,68 @@ object PromQL {
     case _ => false
   }
 
-  /** Shared body of the two `scalar()` binary-op cases: broadcast-join
-    * the one-row-per-bucket scalar frame and apply `op` with the scalar
-    * on the requested side. An arithmetic op REPLACES any pre-existing
-    * `result` column (never duplicates it — `(x * 2) / scalar(…)` has
-    * one); a comparison filters and keeps the vector side's columns. */
-  private def applyScalarJoin(
-      dfVec: DataFrame,
-      dfScalar: DataFrame,
+  /** `v` (compiled from `e`) under a scalar side `sc`: an arithmetic op
+    * sets `result` (replacing any earlier one), a comparison filters
+    * and keeps `v`'s value. */
+  private def scalarOp(
+      v: Vec, e: Expr, op: String, sc: Column, scalarLeft: Boolean): Vec = {
+    val c = col(valueOf(v, e))
+    val (a, b) = if (scalarLeft) (sc, c) else (c, sc)
+    if (ArithOps(op))
+      Vec(v.frame.withColumn("result", arith(op)(a, b)), v.keys, v.time,
+        Some("result"), v.grid)
+    else Vec(v.frame.where(cmp(op)(a, b)), v.keys, v.time, v.value, v.grid)
+  }
+
+  /** `v` (compiled from `e`) under a `bool` comparison: every row kept,
+    * `result` the 0/1 of `pred` over its value. */
+  private def boolOp(v: Vec, e: Expr, pred: Column => Column): Vec =
+    Vec(v.frame.withColumn("result",
+        org.apache.spark.sql.functions
+          .when(pred(col(valueOf(v, e))), 1.0).otherwise(0.0)),
+      v.keys, v.time, Some("result"), v.grid)
+
+  private def requireGlobal(v: Vec, e: Expr): Unit =
+    require(v.keys.contains(Seq.empty),
+      s"scalar() needs a global (no `by`) aggregation argument, got: $e")
+
+  /** The `scalar()` binary-op cases: broadcast-join the one-row-per-bucket
+    * scalar `sc` (compiled from `scExpr`, a global aggregation) onto
+    * `vec` and apply `op` with the scalar on the requested side. An
+    * arithmetic op REPLACES any pre-existing `result` column (never
+    * duplicates it — `(x * 2) / scalar(…)` has one); a comparison
+    * filters and keeps the vector side's columns. */
+  private def scalarJoin(
+      vec: Vec,
+      vecExpr: Expr,
+      sc: Vec,
+      scExpr: Expr,
       op: String,
-      vecCol: String,
-      scalarLeft: Boolean): DataFrame = {
-    val joined = dfVec.join(
+      scalarLeft: Boolean): Vec = {
+    requireGlobal(sc, scExpr)
+    val dfScalar = sc.frame.select(col("bucket_start"),
+      col(valueOf(sc, scExpr)).as("__scalar"))
+    val vecCol = valueOf(vec, vecExpr)
+    val cols = vec.frame.columns.toSeq
+    val joined = vec.frame.join(
       org.apache.spark.sql.functions.broadcast(dfScalar), "bucket_start")
     val (a, b) =
       if (scalarLeft) (col("__scalar"), col(vecCol))
       else (col(vecCol), col("__scalar"))
     if (ArithOps(op))
-      joined.withColumn("result", arith(op)(a, b))
-        .select(dfVec.columns.filterNot(_ == "result").map(col).toSeq
-          :+ col("result"): _*)
+      Vec(joined.withColumn("result", arith(op)(a, b))
+          .select(cols.filterNot(_ == "result").map(col) :+ col("result"): _*),
+        vec.keys, vec.time, Some("result"), vec.grid)
     else
-      joined.where(cmp(op)(a, b))
-        .select(dfVec.columns.map(col).toSeq: _*)
+      Vec(joined.where(cmp(op)(a, b)).select(cols.map(col): _*),
+        vec.keys, vec.time, vec.value, vec.grid)
   }
+
+  /** The keys of a range function's frame: its trailing `by`, when given.
+    * Without one the frame is per series, keyed by the metric's label-key
+    * universe read from the data. */
+  private def trailingBy(by: Seq[String]): Option[Seq[String]] =
+    if (by.nonEmpty) Some(by) else None
 
   private def checkRollupStep(sel: Selector, rollupStep: Long): Long = {
     val s = stepOf(sel, "rollup-served aggregation")
@@ -1932,13 +1833,16 @@ object PromQL {
       start: Long,
       end: Long,
       buckets: Seq[Double],
-      rollupStep: Option[Long]): DataFrame =
+      rollupStep: Option[Long]): Vec =
     e match {
       // rollup-served forms first: the same strings, the downsampled tier
       case Agg(op, _, _, by, sel: Selector, _)
           if rollupStep.isDefined && MomentAggs(op) =>
-        t.aggregateByFromRollup(checkRollupStep(sel, rollupStep.get),
-          sel.metric, sel.matchers, start, end, by, sel.offsetSec)
+        val step = checkRollupStep(sel, rollupStep.get)
+        Vec(t.aggregateByFromRollup(step, sel.metric, sel.matchers, start,
+            end, by, sel.offsetSec),
+          Some(by), Some("bucket_start"), AggCol.get(op),
+          Some((step, sel.offsetSec)), counts = true)
 
       // nested subquery: `fn_over_time( rate(x[5m])[1h:1m] )` — the
       // "peak rate over the window" idiom. The inner counter function
@@ -1960,9 +1864,11 @@ object PromQL {
         // from the recursion itself (the depth-2 selector-step
         // optimization below keeps its own `ist | ost` check because it
         // ELIDES the inner grid instead of materializing it).
+        // Returns the frame, its label columns, whether the AST fixes
+        // them (not a label-key universe read from the data) and its
+        // value column.
         def subq(node: SubqueryFn, start1: Long, end1: Long,
-            outGrid: Long):
-            (org.apache.spark.sql.DataFrame, Seq[String], String) = {
+            outGrid: Long): (DataFrame, Seq[String], Boolean, String) = {
         val SubqueryFn(fn, body, rangeSec, stepSec, q, sqOff) = node
         // `offset d` on the subquery: the whole construct evaluates d
         // back (inner grid AND outer windows), timestamps shift forward
@@ -1999,20 +1905,16 @@ object PromQL {
           case _ => ()
         }
         checkSelStep(body)
-        val gaugeVal = Map(
-          "sum_over_time" -> "sum_v", "avg_over_time" -> "avg_v",
-          "min_over_time" -> "min_v", "max_over_time" -> "max_v",
-          "count_over_time" -> "n", "last_over_time" -> "last_v")
         def counterInner(n: String, sel: Selector, by: Seq[String],
             op: String, q: Option[Double] = None) =
           counterFamily(t, n, sel, by, op, s0 - rangeSec, e0,
-            Some(stepSec), q)
-        val (inner, keys, valCol) = body match {
+            Some(stepSec), q).frame
+        val (inner, keys, known, valCol) = body match {
           case RangeFn(n, _, sel, by, _) if n == "rate" || n == "increase" =>
             // bare rate/increase is per-series: an empty trailing-by
             // means the metric's full label-key universe
             val ks = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-            (counterInner(n, sel, ks, "sum"), ks, counterCol(n))
+            (counterInner(n, sel, ks, "sum"), ks, by.nonEmpty, counterCol(n))
           // aggregated inner: the canonical `sum by (l) (rate(x[5m]))`,
           // the moments `avg/min/max/count/stddev/stdvar by (l) (...)`
           // and the SLO family's `quantile by (l) (0.9, rate(x[d]))`
@@ -2024,7 +1926,7 @@ object PromQL {
               if (op == "sum" || SlidingCounterCol.contains(op)) &&
                 (op == "quantile") == q.isDefined &&
                 (n == "rate" || n == "increase") =>
-            (counterInner(n, sel, by, op, q), by,
+            (counterInner(n, sel, by, op, q), by, true,
               SlidingCounterCol.getOrElse(op, counterCol(n)))
           // gauge smoothing inner: `max_over_time(avg_over_time(x[5m])
           // [1h:5m])` — the gauge moments evaluate sliding on the
@@ -2032,15 +1934,15 @@ object PromQL {
           // points. The mean is floor-r6 quantized, so spread/counter
           // outers over it stay in the integer-micro exactness family
           // (the other moments are 2-decimal values or their sums)
-          case RangeFn(n, _, sel, by, _) if gaugeVal.contains(n) =>
+          case RangeFn(n, _, sel, by, _) if OverTime(n) =>
             val ks = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-            val v = gaugeVal(n)
+            val v = RangeCol(n)
             (gaugeFamily(t, sel, ks, "moments", n, s0 - rangeSec, e0,
-                Some(stepSec))
+                Some(stepSec)).frame
               .select((ks.map(col) :+ col("eval_ts")) :+ (
                 if (v == "avg_v") Tsdb.r6(col("sum_v") / col("n"))
                 else col(v)).as(v): _*),
-              ks, v)
+              ks, by.nonEmpty, v)
           // selection-aggregated inner: `topk(k, sum by (l)(rate(x[d])))
           // [R:s]` — "time spent in the top k": at each subquery eval
           // point the k highest(/lowest)-valued groups survive, so
@@ -2064,7 +1966,7 @@ object PromQL {
               if (op2 == "topk") col(vc).desc else col(vc).asc
             (Tsdb.firstK(frame, (byTop :+ "eval_ts").map(col),
                 ord +: by.map(l => col(l).asc_nulls_first), lit(k), "__rk")
-              .drop("__rk"), by, vc)
+              .drop("__rk"), by, true, vc)
           // binary-op inner: `(sum by (l)(rate(a[d])) <op> sum by (l)
           // (rate(b[d])))[R:s]` — the peak-error-ratio idiom
           // `max_over_time((sum(rate(err[5m]))/sum(rate(req[5m])))
@@ -2110,7 +2012,7 @@ object PromQL {
                 leg(selB, nB, "b"), byA, "one", "arith", f)
               .select((byA.map(col) :+ col("eval_ts")) :+
                 col("result").as(rc): _*)
-            (joined, byA, rc)
+            (joined, byA, true, rc)
           // depth-3+ nesting: the body is ITSELF a subquery construct —
           // `avg_over_time(max_over_time(rate(x[1h])[6h:1h])[1d:6h])`,
           // the daily average of six-hourly peak rates. The nested
@@ -2123,15 +2025,15 @@ object PromQL {
           // schemes the spread/mad/counter outers rely on do not
           // apply — those stay fail-fast here.
           case sq2: SubqueryFn =>
-            require(gaugeVal.contains(fn) ||
+            require(OverTime(fn) ||
                 (fn == "quantile_over_time" && q.isDefined),
               s"a nested-subquery INNER supports only the sum/avg/min/" +
               s"max/count/last/quantile _over_time outer family " +
               s"(spread, mad, and counter/trend outers need a " +
               s"quantized inner value column); got outer $fn")
-            val (f2, k2, v2) = subq(sq2, s0 - rangeSec, e0, stepSec)
+            val (f2, k2, known2, v2) = subq(sq2, s0 - rangeSec, e0, stepSec)
             (f2.select((k2.map(col) :+ col("eval_ts") :+ col(v2)): _*),
-              k2, v2)
+              k2, known2, v2)
           case other => throw new IllegalArgumentException(
             "nested subqueries support rate/increase or *_over_time " +
             "inner vectors (optionally aggregated: `sum by (l) " +
@@ -2189,58 +2091,43 @@ object PromQL {
         val shifted =
           if (sqOff == 0L) frame
           else frame.withColumn("eval_ts", col("eval_ts") + sqOff)
-        (shifted, keys, valueColOf(node))
+        (shifted, keys, known, RangeCol(fn))
         }
-        subq(sqTop, start, end, sqTop.stepSec)._1
+        val (frame, keys, known, value) =
+          subq(sqTop, start, end, sqTop.stepSec)
+        Vec(frame, if (known) Some(keys) else None, Some("eval_ts"),
+          Some(value), Some((sqTop.stepSec, sqTop.offsetSec)))
 
       // scalar arithmetic / threshold filters recurse on their vector
       // side, so they sit ABOVE the rollup catch-all and compose with
       // rollup-served operands too
-      case BinOp(op, lhs, NumLit(v), _, false, false) if ArithOps(op) =>
-        compile(t, lhs, start, end, buckets, rollupStep)
-          .withColumn("result", arith(op)(col(valueColOf(lhs)), lit(v)))
-      case BinOp(op, NumLit(v), rhs, _, false, false) if ArithOps(op) =>
-        compile(t, rhs, start, end, buckets, rollupStep)
-          .withColumn("result", arith(op)(lit(v), col(valueColOf(rhs))))
-      case BinOp(op, lhs, NumLit(v), _, false, false) if CmpOps(op) =>
-        compile(t, lhs, start, end, buckets, rollupStep)
-          .where(cmp(op)(col(valueColOf(lhs)), lit(v)))
-      case BinOp(op, NumLit(v), rhs, _, false, false) if CmpOps(op) =>
-        compile(t, rhs, start, end, buckets, rollupStep)
-          .where(cmp(op)(lit(v), col(valueColOf(rhs))))
+      case BinOp(op, lhs, NumLit(v), _, false, false)
+          if ArithOps(op) || CmpOps(op) =>
+        scalarOp(compile(t, lhs, start, end, buckets, rollupStep), lhs, op,
+          lit(v), scalarLeft = false)
+      case BinOp(op, NumLit(v), rhs, _, false, false)
+          if ArithOps(op) || CmpOps(op) =>
+        scalarOp(compile(t, rhs, start, end, buckets, rollupStep), rhs, op,
+          lit(v), scalarLeft = true)
 
       // scalar(v) as a binary-op side: v must be a GLOBAL (by-empty)
       // aggregation — one row per grid bucket, so the "scalar" is a
       // per-step value joined on bucket_start (broadcast: one row per
       // bucket, bounded by the query window). The share-of-total idiom
-      // `sum by (l)(x) / scalar(sum(x))`. Prometheus returns NaN for a
-      // multi-series argument; this engine rejects the shape at compile
-      // time instead (the grouping clause proves cardinality), so a
-      // wrong answer is unrepresentable.
+      // `sum by (l)(x) / scalar(sum(x))`, or mirrored (`scalar(sum(x)) -
+      // y`). Prometheus returns NaN for a multi-series argument; this
+      // engine rejects the shape at compile time instead (the grouping
+      // clause proves cardinality), so a wrong answer is unrepresentable.
       case BinOp(op, lhs, MathFn("scalar", inner, _, _), _, false, false)
           if ArithOps(op) || CmpOps(op) =>
-        require(groupingOf(inner).contains(Seq.empty),
-          s"scalar() needs a global (no `by`) aggregation argument, " +
-          s"got: $inner")
-        applyScalarJoin(
-          compile(t, lhs, start, end, buckets, rollupStep),
-          compile(t, inner, start, end, buckets, rollupStep)
-            .select(col("bucket_start"),
-              col(valueColOf(inner)).as("__scalar")),
-          op, valueColOf(lhs), scalarLeft = false)
-
-      // mirrored scalar-on-the-left form (`scalar(sum(x)) - y`)
+        scalarJoin(compile(t, lhs, start, end, buckets, rollupStep), lhs,
+          compile(t, inner, start, end, buckets, rollupStep), inner, op,
+          scalarLeft = false)
       case BinOp(op, MathFn("scalar", inner, _, _), rhs, _, false, false)
           if ArithOps(op) || CmpOps(op) =>
-        require(groupingOf(inner).contains(Seq.empty),
-          s"scalar() needs a global (no `by`) aggregation argument, " +
-          s"got: $inner")
-        applyScalarJoin(
-          compile(t, rhs, start, end, buckets, rollupStep),
-          compile(t, inner, start, end, buckets, rollupStep)
-            .select(col("bucket_start"),
-              col(valueColOf(inner)).as("__scalar")),
-          op, valueColOf(rhs), scalarLeft = true)
+        scalarJoin(compile(t, rhs, start, end, buckets, rollupStep), rhs,
+          compile(t, inner, start, end, buckets, rollupStep), inner, op,
+          scalarLeft = true)
 
       // standalone scalar(agg) — a per-step scalar series on the
       // argument's own eval grid (the sequence generator, never a
@@ -2249,21 +2136,20 @@ object PromQL {
       // global (by-empty) aggregation — cardinality 1 per bucket is
       // proven at compile time, so a wrong answer is unrepresentable.
       case MathFn("scalar", inner, _, _) =>
-        require(groupingOf(inner).contains(Seq.empty),
-          s"scalar() needs a global (no `by`) aggregation argument, " +
-          s"got: $inner")
-        val (step, off) = gridSpecOf(inner).getOrElse(
+        val in = compile(t, inner, start, end, buckets, rollupStep)
+        requireGlobal(in, inner)
+        val (step, off) = in.grid.getOrElse(
           throw new IllegalArgumentException(
             s"standalone scalar() could not derive the eval grid " +
             s"(needs a ranged selector `x[d]` inside): $inner"))
-        val vCol = valueColOf(inner)
-        val dfI = compile(t, inner, start, end, buckets, rollupStep)
-          .select(col("bucket_start"), col(vCol).cast("double").as("__v"))
-        evalGrid(t, start, end, step, off)
-          .join(org.apache.spark.sql.functions.broadcast(dfI),
-            Seq("bucket_start"), "left_outer")
-          .select(col("bucket_start"),
-            coalesce(col("__v"), lit(Double.NaN)).as("result"))
+        val dfI = in.frame.select(col("bucket_start"),
+          col(valueOf(in, inner)).cast("double").as("__v"))
+        Vec(evalGrid(t, start, end, step, off)
+            .join(org.apache.spark.sql.functions.broadcast(dfI),
+              Seq("bucket_start"), "left_outer")
+            .select(col("bucket_start"),
+              coalesce(col("__v"), lit(Double.NaN)).as("result")),
+          Some(Nil), Some("bucket_start"), Some("result"), in.grid)
 
       // composite per-step scalar sides: any literal/time() arithmetic
       // composition (`x - time()`, `x > time() % 86400`, `x * (2 + 3)`)
@@ -2273,82 +2159,47 @@ object PromQL {
       // NOT be scalar, so pure-scalar queries still fail loudly below.
       case BinOp(op, lhs, rhs, _, false, false)
           if (ArithOps(op) || CmpOps(op)) &&
-            scalarSide(rhs, lit(0L)).isDefined &&
-            scalarSide(lhs, lit(0L)).isEmpty =>
-        val df = compile(t, lhs, start, end, buckets, rollupStep)
+            (scalarSide(rhs, lit(0L)).isDefined !=
+              scalarSide(lhs, lit(0L)).isDefined) =>
+        val scalarLeft = scalarSide(lhs, lit(0L)).isDefined
+        val (vx, sx) = if (scalarLeft) (rhs, lhs) else (lhs, rhs)
+        val v = compile(t, vx, start, end, buckets, rollupStep)
         val sc =
-          if (containsTime(rhs)) {
-            require(df.columns.contains("bucket_start"),
+          if (containsTime(sx)) {
+            require(v.time.contains("bucket_start"),
               s"time() needs a grid-shaped vector side (a bucket_start " +
-              s"column), got columns ${df.columns.toSeq}")
-            scalarSide(rhs, col("bucket_start")).get
-          } else scalarSide(rhs, lit(0L)).get
-        if (ArithOps(op))
-          df.withColumn("result", arith(op)(col(valueColOf(lhs)), sc))
-        else df.where(cmp(op)(col(valueColOf(lhs)), sc))
-      case BinOp(op, lhs, rhs, _, false, false)
-          if (ArithOps(op) || CmpOps(op)) &&
-            scalarSide(lhs, lit(0L)).isDefined &&
-            scalarSide(rhs, lit(0L)).isEmpty =>
-        val df = compile(t, rhs, start, end, buckets, rollupStep)
-        val sc =
-          if (containsTime(lhs)) {
-            require(df.columns.contains("bucket_start"),
-              s"time() needs a grid-shaped vector side (a bucket_start " +
-              s"column), got columns ${df.columns.toSeq}")
-            scalarSide(lhs, col("bucket_start")).get
-          } else scalarSide(lhs, lit(0L)).get
-        if (ArithOps(op))
-          df.withColumn("result", arith(op)(sc, col(valueColOf(rhs))))
-        else df.where(cmp(op)(sc, col(valueColOf(rhs))))
+              s"column), got columns ${v.frame.columns.toSeq}")
+            scalarSide(sx, col("bucket_start")).get
+          } else scalarSide(sx, lit(0L)).get
+        scalarOp(v, vx, op, sc, scalarLeft)
 
       // `bool` comparisons keep every row and emit Prometheus's 0/1
       // vector in `result` instead of filtering
       case BoolCmp(op, lhs, NumLit(v), Seq(), false, false) =>
-        compile(t, lhs, start, end, buckets, rollupStep)
-          .withColumn("result",
-            org.apache.spark.sql.functions
-              .when(cmp(op)(col(valueColOf(lhs)), lit(v)), 1.0)
-              .otherwise(0.0))
+        boolOp(compile(t, lhs, start, end, buckets, rollupStep), lhs,
+          c => cmp(op)(c, lit(v)))
       case BoolCmp(op, NumLit(v), rhs, Seq(), false, false) =>
-        compile(t, rhs, start, end, buckets, rollupStep)
-          .withColumn("result",
-            org.apache.spark.sql.functions
-              .when(cmp(op)(lit(v), col(valueColOf(rhs))), 1.0)
-              .otherwise(0.0))
+        boolOp(compile(t, rhs, start, end, buckets, rollupStep), rhs,
+          c => cmp(op)(lit(v), c))
       // vector-vector `bool` comparison (`a > bool b`) — the alert-rule
       // form: every matched (labels, t) row survives and `result` is
       // Prometheus's 0/1, with on()/group_left/group_right like the
-      // filter form
-      case BoolCmp(op, lhs, rhs, on, gl, gr)
-          if groupingOf(lhs).isDefined && groupingOf(rhs).isDefined =>
+      // filter form; other bool shapes are named in vectorMatch's error
+      case BoolCmp(op, lhs, rhs, on, gl, gr) =>
         vectorMatch(t, op, lhs, rhs, on, gl, gr,
           start, end, buckets, rollupStep, "bool")
 
-      // vector matches and compares — any side pair with a derivable
-      // grouping: moment aggregations (`errors / requests`, any moment
+      // vector matches and compares — any side pair whose Vecs carry
+      // keys: moment aggregations (`errors / requests`, any moment
       // pair), counter-family sides (`sum by (c)(rate(a[1h])) > sum by
       // (c)(rate(b[1h]))`, the canonical alert compare), on()/ignoring
       // projections at distinct grains with group_left/group_right (incl.
       // carried labels), and nested arithmetic sides (`a/b > c/d`).
       // Arithmetic sets result = op(a, b); a compare passes the left
       // value through and drops the failing rows.
-      case BinOp(op, lhs, rhs, on, gl, gr)
-          if (ArithOps(op) || CmpOps(op)) &&
-            groupingOf(lhs).isDefined && groupingOf(rhs).isDefined =>
+      case BinOp(op, lhs, rhs, on, gl, gr) if ArithOps(op) || CmpOps(op) =>
         vectorMatch(t, op, lhs, rhs, on, gl, gr, start, end,
           buckets, rollupStep, if (ArithOps(op)) "arith" else "filter")
-
-      // other bool shapes parse fine, so without this case they would
-      // fall through to the generic unsupported-shape error that never
-      // mentions bool — name the restriction explicitly. (Scalar sides
-      // and aggregated vector matches are handled above.)
-      case BoolCmp(op, _, _, _, _, _) =>
-        throw new IllegalArgumentException(
-          s"bool comparisons support a scalar side (`x > bool 0.5`) or " +
-          s"two matching aggregations (`sum by (l)(a[1h]) $op " +
-          s"bool sum by (l)(b[1h])`, incl. over rate/increase); other " +
-          s"vector shapes are not supported")
 
       // `expr or vector(s)` — Prometheus's gap-filling idiom
       // (`sum(x[step]) or vector(0)`). The rhs vector carries NO labels,
@@ -2365,10 +2216,11 @@ object PromQL {
       // contract: (bucket_start, <lhs value column>), the scalar
       // evaluated on the grid (so `or vector(time())` works).
       case BinOp("or", l, MathFn("vector", s, _, _), _, false, false) =>
-        require(groupingOf(l).contains(Seq.empty),
+        val a = compile(t, l, start, end, buckets, rollupStep)
+        require(a.keys.contains(Seq.empty),
           s"`or vector(…)` needs a global (no `by`) aggregation on the " +
           s"left — the vector side carries no labels to match, got: $l")
-        val (step, off) = gridSpecOf(l).getOrElse(
+        val (step, off) = a.grid.getOrElse(
           throw new IllegalArgumentException(
             s"`or vector(…)` could not derive the lhs bucket grid " +
             s"(needs a ranged selector `x[d]` inside): $l"))
@@ -2376,14 +2228,15 @@ object PromQL {
           .getOrElse(throw new IllegalArgumentException(
             s"vector() takes a scalar argument (a literal / time() " +
             s"composition), got: $s"))
-        val vCol = valueColOf(l)
-        val dfL = compile(t, l, start, end, buckets, rollupStep)
+        val vCol = valueOf(a, l)
+        val dfL = a.frame
           .select(col("bucket_start"), col(vCol).cast("double").as(vCol))
-        evalGrid(t, start, end, step, off)
-          .join(org.apache.spark.sql.functions.broadcast(dfL),
-            Seq("bucket_start"), "left_outer")
-          .select(col("bucket_start"),
-            coalesce(col(vCol), sc.cast("double")).as(vCol))
+        Vec(evalGrid(t, start, end, step, off)
+            .join(org.apache.spark.sql.functions.broadcast(dfL),
+              Seq("bucket_start"), "left_outer")
+            .select(col("bucket_start"),
+              coalesce(col(vCol), sc.cast("double")).as(vCol)),
+          Some(Nil), Some("bucket_start"), Some(vCol), a.grid)
 
       // a vector() anywhere else has no grid to ride — name the
       // restriction instead of hitting the pointwise MathFn catch-all
@@ -2399,16 +2252,18 @@ object PromQL {
       //  - unless: lhs rows whose key does not         (left-anti)
       //  - or:     all of lhs plus right rows with absent keys
       case BinOp(sop, l, r, _, false, false) if SetOps(sop) =>
-        def side(x: Expr, which: String): Seq[String] =
-          groupingOf(x).getOrElse(throw new IllegalArgumentException(
+        val a = compile(t, l, start, end, buckets, rollupStep)
+        val b = compile(t, r, start, end, buckets, rollupStep)
+        def side(v: Vec, x: Expr, which: String): Seq[String] =
+          v.keys.getOrElse(throw new IllegalArgumentException(
             s"'$sop' needs an aggregated vector on the $which side, " +
             s"got: $x"))
-        val byL = side(l, "left")
-        val byR = side(r, "right")
+        val byL = side(a, l, "left")
+        val byR = side(b, r, "right")
         require(byL == byR,
           s"'$sop' sides must aggregate by the same labels: $byL vs $byR")
-        Tsdb.vectorMatch(compile(t, l, start, end, buckets, rollupStep),
-          compile(t, r, start, end, buckets, rollupStep), byL, "one", sop)
+        Vec(Tsdb.vectorMatch(a.frame, b.frame, byL, "one", sop),
+          Some(byL), a.time, a.value, a.grid.orElse(b.grid))
 
       // time functions read the grid timestamp, not the value column:
       // hour/minute/day_of_week are pure epoch arithmetic (no calendar,
@@ -2418,10 +2273,11 @@ object PromQL {
       // path — per-series grouping from the label-key universe, like
       // the bare rate/over_time forms
       case MathFn("holt_winters", sel: Selector, Some(sfArg), Some(tfArg)) =>
-        t.holtWintersBy(sel.metric, sel.matchers, start, end,
-          labelKeys(t, sel.metric),
-          sel.stepSec.getOrElse(stepOf(sel, "holt_winters")),
-          stepOf(sel, "holt_winters"), sfArg, tfArg, sel.offsetSec)
+        val step = sel.stepSec.getOrElse(stepOf(sel, "holt_winters"))
+        Vec(t.holtWintersBy(sel.metric, sel.matchers, start, end,
+            labelKeys(t, sel.metric), step, stepOf(sel, "holt_winters"),
+            sfArg, tfArg, sel.offsetSec),
+          None, Some("eval_ts"), Some("hw_v"), Some((step, sel.offsetSec)))
 
       // a non-bare-selector holt_winters argument parses fine — name the
       // restriction instead of dying in the pointwise MathFn catch-all
@@ -2431,10 +2287,10 @@ object PromQL {
           s"(holt_winters(x[1h], sf, tf)), got: $other")
 
       case MathFn(name, arg, _, _) if TimeFns(name) =>
-        val df = compile(t, arg, start, end, buckets, rollupStep)
-        require(df.columns.contains("bucket_start"),
+        val a = compile(t, arg, start, end, buckets, rollupStep)
+        require(a.time.contains("bucket_start"),
           s"$name() needs a grid-shaped body (a bucket_start column), " +
-          s"got columns ${df.columns.toSeq}")
+          s"got columns ${a.frame.columns.toSeq}")
         val b = col("bucket_start")
         val f = org.apache.spark.sql.functions
         val e = name match {
@@ -2456,7 +2312,8 @@ object PromQL {
             f.dayofmonth(f.last_day(f.to_date(f.from_unixtime(b))))
               .cast("double")
         }
-        df.withColumn("result", e)
+        Vec(a.frame.withColumn("result", e), a.keys, a.time, Some("result"),
+          a.grid)
 
       // presentation ordering by label values — Prometheus's
       // sort_by_label/_desc (experimental there, stable here): the
@@ -2468,7 +2325,8 @@ object PromQL {
       // inner can be sorted too.
       case LabelFn(n @ ("sort_by_label" | "sort_by_label_desc"),
           inner, lbls) =>
-        val by = groupingOf(inner).getOrElse(
+        val a = compile(t, inner, start, end, buckets, rollupStep)
+        val by = a.keys.getOrElse(
           throw new IllegalArgumentException(
             s"$n needs an aggregated vector with label columns, got: " +
             s"$inner"))
@@ -2476,28 +2334,30 @@ object PromQL {
         require(missing.isEmpty,
           s"$n: label(s) ${missing.mkString(", ")} not in the result's " +
           s"grouping labels (${by.mkString(", ")})")
-        val df = compile(t, inner, start, end, buckets, rollupStep)
         val keys = lbls.map(l =>
           if (n.endsWith("_desc")) col(l).desc else col(l).asc)
-        val rest = df.columns.filterNot(lbls.contains).map(col(_).asc)
-        df.orderBy(keys ++ rest.toSeq: _*)
+        val rest = a.frame.columns.filterNot(lbls.contains).map(col(_).asc)
+        Vec(a.frame.orderBy(keys ++ rest.toSeq: _*), a.keys, a.time, a.value,
+          a.grid)
 
       // sort/sort_desc are presentation-only: order the compiled vector
       // by its value column (ties broken by the remaining columns for a
       // deterministic row order), values untouched
       case MathFn(name @ ("sort" | "sort_desc"), arg, _, _) =>
-        val df = compile(t, arg, start, end, buckets, rollupStep)
-        val vName = valueColOf(arg)
+        val a = compile(t, arg, start, end, buckets, rollupStep)
+        val vName = valueOf(a, arg)
         val v = if (name == "sort") col(vName).asc else col(vName).desc
-        val rest = df.columns.filterNot(_ == vName).map(col(_).asc)
-        df.orderBy(v +: rest.toSeq: _*)
+        val rest = a.frame.columns.filterNot(_ == vName).map(col(_).asc)
+        Vec(a.frame.orderBy(v +: rest.toSeq: _*), a.keys, a.time, a.value,
+          a.grid)
 
       // pointwise math functions ride the compiled vector's value column
       case MathFn(name, arg, num, num2) =>
-        val df = compile(t, arg, start, end, buckets, rollupStep)
-        val v = col(valueColOf(arg))
+        val a = compile(t, arg, start, end, buckets, rollupStep)
+        val v = col(valueOf(a, arg))
         // Prometheus: clamp with min > max returns the empty vector
-        if (name == "clamp" && num.get > num2.get) df.where(lit(false))
+        if (name == "clamp" && num.get > num2.get)
+          a.copy(frame = a.frame.where(lit(false)), counts = false)
         else {
           val e = name match {
             case "abs" => cAbs(v)
@@ -2519,8 +2379,8 @@ object PromQL {
             case "clamp_min" => greatest(v, lit(num.get))
             case "clamp_max" => least(v, lit(num.get))
             case "clamp" => least(greatest(v, lit(num.get)), lit(num2.get))
-            // trig family: rounded to 6 decimals (see [[TrigFns]]) so the
-            // exact-hash oracle tolerates libm ulp differences
+            // trig family: rounded to 6 decimals (see [[TrigFns]]) so
+            // the exact-hash oracle tolerates libm ulp differences
             case tf if TrigFns(tf) =>
               val f = org.apache.spark.sql.functions
               val d = v.cast("double")
@@ -2535,7 +2395,8 @@ object PromQL {
               }
               round(raw, 6)
           }
-          df.withColumn("result", e)
+          Vec(a.frame.withColumn("result", e), a.keys, a.time,
+            Some("result"), a.grid)
         }
 
       case other if rollupStep.isDefined =>
@@ -2545,22 +2406,27 @@ object PromQL {
       // bare selector: the raw range scan (instant selectors span the
       // whole query range, like a Prometheus matrix at full resolution)
       case Selector(m, ms, _, off, _, _) =>
-        t.queryRange(m, ms, start - off, end - off)
+        Vec(t.queryRange(m, ms, start - off, end - off), None, None, None,
+          None)
 
       // `group by (l)` — Prometheus's presence aggregator: 1 for every
       // populated (group, bucket) cell, a projection of the moments
       case Agg("group", _, _, by, sel: Selector, _) =>
-        gaugeFamily(t, sel, by, "moments", "group by", start, end)
-          .select(by.map(col) ++
-            Seq(col("bucket_start"), lit(1.0).as("group_v")): _*)
+        val g = gaugeFamily(t, sel, by, "moments", "group by", start, end)
+        g.copy(frame = g.frame.select(by.map(col) ++
+            Seq(col("bucket_start"), lit(1.0).as("group_v")): _*),
+          keys = Some(by), value = Some("group_v"))
 
       // label aggregations over a plain selector → ONE hash aggregation
       // per (group, bucket): the moments, stddev/stdvar, quantile and
-      // count_values shapes of the gauge family
+      // count_values shapes of the gauge family; count_values adds the
+      // sample value to the grain
       case Agg(op, _, q, by, sel: Selector, _)
           if GaugeAggOps.contains(op) && (op == "quantile") == q.isDefined =>
         gaugeFamily(t, sel, by, GaugeAggOps(op), s"$op by", start, end,
-          q = q)
+            q = q)
+          .copy(keys = if (op == "count_values") None else Some(by),
+            value = AggCol.get(op), counts = MomentAggs(op))
 
       // moment aggregations over a RELABELED selector — the recording-rule
       // shape `sum by (dst)(label_replace(x[step], …))`. The rewrite runs
@@ -2570,14 +2436,16 @@ object PromQL {
       case Agg(op, _, _, by, LabelFn(name, sel: Selector, args), _)
           if MomentAggs(op) =>
         gaugeFamily(t, sel, by, "moments", s"$op by ($name)", start, end,
-          relabel = relabelOf(name, args))
+            relabel = relabelOf(name, args))
+          .copy(keys = Some(by), value = AggCol.get(op))
 
       // bare label_replace/label_join over a selector: the raw range scan
       // with the label map rewritten in flight
       case LabelFn(name, sel: Selector, args) =>
-        t.queryRange(sel.metric, sel.matchers,
+        Vec(t.queryRange(sel.metric, sel.matchers,
             start - sel.offsetSec, end - sel.offsetSec)
-          .withColumn("labels", relabelOf(name, args)(col("labels")))
+          .withColumn("labels", relabelOf(name, args)(col("labels"))),
+          None, None, None, None)
 
       // custom output label: the same aggregation with the value column
       // surfaced under the requested name (a zero-cost projection). The
@@ -2585,11 +2453,11 @@ object PromQL {
       // without(...) clause resolves to by-labels after parsing, so the
       // parse-time check alone could miss a resolved-grouping collision
       case ValueLabel(lbl, inner) =>
-        val df = compile(t, inner, start, end, buckets, rollupStep)
-        require(!df.columns.contains(lbl),
+        val a = compile(t, inner, start, end, buckets, rollupStep)
+        require(!a.frame.columns.contains(lbl),
           s"count_values output label '$lbl' collides with an output " +
-          s"column (${df.columns.mkString(", ")})")
-        df.withColumnRenamed("value", lbl)
+          s"column (${a.frame.columns.mkString(", ")})")
+        a.copy(frame = a.frame.withColumnRenamed("value", lbl))
 
       // rank and sample compositions over an inner sum-by, riding the
       // moments' group-sized output: topk/bottomk rank the sums per
@@ -2598,7 +2466,8 @@ object PromQL {
       // group labels (Tsdb.groupU32) so membership is stable across
       // runs, partitionings and engines, and limit_ratio keeps a ~r
       // fraction by the same hash — a negative r exactly the complement
-      // of limit_ratio(1 + r), Prometheus's split-traffic idiom
+      // of limit_ratio(1 + r), Prometheus's split-traffic idiom. Each
+      // keeps at most the one sum row of a (group, bucket).
       case Agg(rank @ ("topk" | "bottomk" | "limitk"), Some(k), _, _,
           Agg("sum", _, _, by, sel: Selector, _), _) =>
         require(rank != "limitk" || k > 0, s"limitk k must be > 0: $k")
@@ -2607,11 +2476,13 @@ object PromQL {
           case "bottomk" => col("sum_v").asc
           case _ => Tsdb.groupU32(by, "lk").asc
         }
-        Tsdb.firstK(
-            gaugeFamily(t, sel, by, "moments", s"$rank(sum by)", start, end),
-            Seq(col("bucket_start")), ord +: by.map(col), lit(k.toInt))
-          .select(by.map(col) ++ Seq(col("bucket_start"), col("rk"),
-            col("n"), col("sum_v")): _*)
+        val s = gaugeFamily(t, sel, by, "moments", s"$rank(sum by)", start,
+          end)
+        s.copy(frame = Tsdb.firstK(s.frame, Seq(col("bucket_start")),
+              ord +: by.map(col), lit(k.toInt))
+            .select(by.map(col) ++ Seq(col("bucket_start"), col("rk"),
+              col("n"), col("sum_v")): _*),
+          keys = Some(by), value = Some("sum_v"))
       case Agg("limit_ratio", _, Some(r), _,
           Agg("sum", _, _, by, sel: Selector, _), _) =>
         require(r >= -1.0 && r <= 1.0,
@@ -2621,11 +2492,12 @@ object PromQL {
         val keep =
           if (r >= 0) u < lit(math.floor(r * space).toLong)
           else u >= lit(math.floor((1.0 + r) * space).toLong)
-        gaugeFamily(t, sel, by, "moments", "limit_ratio(sum by)", start,
-            end)
-          .where(keep)
-          .select(by.map(col) ++ Seq(col("bucket_start"),
-            col("n"), col("sum_v")): _*)
+        val s = gaugeFamily(t, sel, by, "moments", "limit_ratio(sum by)",
+          start, end)
+        s.copy(frame = s.frame.where(keep)
+            .select(by.map(col) ++ Seq(col("bucket_start"),
+              col("n"), col("sum_v")): _*),
+          keys = Some(by), value = Some("sum_v"))
 
       // ranked counter form — `topk(k, sum by (l)(rate(x[1h])))`, the
       // canonical "top k by request rate" dashboard query (bottomk is
@@ -2636,13 +2508,13 @@ object PromQL {
           if fn == "rate" || fn == "increase" =>
         tumblingOnly(sel, s"$rank(sum by ($fn))")
         val inc = col("increase")
-        Tsdb.firstK(
-            counterFamily(t, fn, sel, by, "sum", start, end, None),
-            Seq(col("bucket_start")),
-            (if (rank == "topk") inc.desc else inc.asc) +: by.map(col),
-            lit(k.toInt))
-          .select(by.map(col) ++ Seq(col("bucket_start"), col("rk"),
-            col("increase"), col("rate_per_sec")): _*)
+        val s = counterFamily(t, fn, sel, by, "sum", start, end, None)
+        s.copy(frame = Tsdb.firstK(s.frame, Seq(col("bucket_start")),
+              (if (rank == "topk") inc.desc else inc.asc) +: by.map(col),
+              lit(k.toInt))
+            .select(by.map(col) ++ Seq(col("bucket_start"), col("rk"),
+              col("increase"), col("rate_per_sec")): _*),
+          keys = Some(by), value = Some(counterCol(fn)))
 
       // the counter family under a label aggregation: `sum`, the
       // cross-series moments (avg(rate(...)) and friends) and the SLO
@@ -2655,21 +2527,26 @@ object PromQL {
             (fn == "rate" || fn == "increase") =>
         if (op != "sum") tumblingOnly(sel, s"$op($fn)")
         counterFamily(t, fn, sel, by, op, start, end, sel.stepSec, q)
+          .copy(keys = Some(by), value = Some(counterValue(op, fn)))
 
       // resets / changes: each sample paired with its predecessor,
       // then the pairs counted per (by, t) on either grid; the bare
       // sliding form is per series (the metric's full label-key universe)
       case Agg("sum", _, _, by, RangeFn(fn @ ("resets" | "changes"), _, sel,
           _, _), _) =>
-        gaugeFamily(t, sel, by, "resets_changes", s"sum by ($fn)", start,
-            end, sel.stepSec)
-          .drop(if (fn == "resets") "changes" else "resets")
+        val v = gaugeFamily(t, sel, by, "resets_changes", s"sum by ($fn)",
+          start, end, sel.stepSec)
+        v.copy(
+          frame = v.frame.drop(if (fn == "resets") "changes" else "resets"),
+          keys = Some(by), value = Some(fn))
       case RangeFn(fn @ ("resets" | "changes"), _, sel, by, _)
           if sel.stepSec.nonEmpty =>
         val keys = if (by.nonEmpty) by else labelKeys(t, sel.metric)
-        gaugeFamily(t, sel, keys, "resets_changes", fn, start, end,
-            sel.stepSec)
-          .drop(if (fn == "resets") "changes" else "resets")
+        val v = gaugeFamily(t, sel, keys, "resets_changes", fn, start, end,
+          sel.stepSec)
+        v.copy(
+          frame = v.frame.drop(if (fn == "resets") "changes" else "resets"),
+          keys = trailingBy(by), value = Some(fn))
 
       // BARE rate/increase/delta — the most common PromQL shape. With no
       // trailing `by`, the grouping is the metric's full label-key
@@ -2680,14 +2557,18 @@ object PromQL {
       case RangeFn(fn, _, sel, by, _) if fn == "rate" || fn == "increase" =>
         val keys = if (by.nonEmpty) by else labelKeys(t, sel.metric)
         counterFamily(t, fn, sel, keys, "sum", start, end, sel.stepSec)
+          .copy(keys = trailingBy(by), value = Some(counterCol(fn)))
 
       case RangeFn("delta", _, sel, by, _) =>
         val keys = if (by.nonEmpty) by else labelKeys(t, sel.metric)
         gaugeFamily(t, sel, keys, "delta", "delta", start, end, sel.stepSec)
+          .copy(keys = trailingBy(by), value = Some("delta"))
 
-      // instant-pair family: per-series last-two-samples delta/rate
+      // instant-pair family: per-series last-two-samples delta/rate; the
+      // frame keeps sid, so it has no static keys
       case RangeFn(fn @ ("irate" | "idelta"), _, sel, by, _) =>
         gaugeFamily(t, sel, by, "last_two", fn, start, end, sel.stepSec)
+          .copy(value = Some(fn))
 
       // the *_over_time family per series on the sliding eval grid;
       // the grid step defaults to the window (PromQL's default
@@ -2697,7 +2578,9 @@ object PromQL {
       // one timestamp, a value tie to the LATEST sample; [range:step]
       // subquery steps and rules reject it, TsOfFns ∉ OverTime), the
       // integer-cents spread, or present_over_time's 1.0 for every
-      // (series, eval point) holding a sample — every output row
+      // (series, eval point) holding a sample — every output row. The
+      // trailing `by` projects labels onto per-series rows, so the frame
+      // has no static keys.
       case RangeFn(fn, _, sel, by, _) if OverTime(fn) ||
           SpreadOverTime(fn) || TsOfFns(fn) || fn == "present_over_time" =>
         val (op, values) =
@@ -2708,16 +2591,18 @@ object PromQL {
           else if (fn == "present_over_time")
             ("moments", Seq(lit(1.0).as("present_v")))
           else ("moments", OverTimeCols.map(col))
-        gaugeFamily(t, sel, by, op, fn, start, end,
-            Some(sel.stepSec.getOrElse(stepOf(sel, fn))), perSeries = true)
-          .select((by.map(col) :+ col("eval_ts")) ++ values: _*)
+        val v = gaugeFamily(t, sel, by, op, fn, start, end,
+          Some(sel.stepSec.getOrElse(stepOf(sel, fn))), perSeries = true)
+        v.copy(frame = v.frame.select((by.map(col) :+ col("eval_ts")) ++
+          values: _*), value = RangeCol.get(fn))
 
       // quantile_over_time and the 3.x robust spread mad_over_time
       // (exact median absolute deviation): per (group, step bucket)
       case RangeFn(fn @ ("quantile_over_time" | "mad_over_time"), q, sel,
           by, _) if (fn == "quantile_over_time") == q.isDefined =>
         gaugeFamily(t, sel, by, if (q.isDefined) "quantile" else "mad", fn,
-          start, end, q = q)
+            start, end, q = q)
+          .copy(keys = trailingBy(by), value = Some(RangeCol(fn)))
 
       // the exact least-squares trend: `predict_linear(x[6h:1h], 1h)`
       // fits each trailing 6h window every hour, each extrapolating 1h
@@ -2732,24 +2617,30 @@ object PromQL {
           else labelKeys(t, sel.metric)
         val fit = gaugeFamily(t, sel, keys, "trend", fn, start, end,
           sel.stepSec, horizonSec = at.getOrElse(0L))
-        if (fn == "deriv") fit.drop("predicted") else fit
+        fit.copy(
+          frame = if (fn == "deriv") fit.frame.drop("predicted") else fit.frame,
+          keys = trailingBy(by), value = Some(RangeCol(fn)))
 
       case RangeFn("absent", _, sel, _, _) =>
-        t.absentRange(sel.metric, sel.matchers,
-          start - sel.offsetSec, end - sel.offsetSec)
+        Vec(t.absentRange(sel.metric, sel.matchers,
+          start - sel.offsetSec, end - sel.offsetSec), None, None, None, None)
 
       case RangeFn("absent_over_time", _, sel, _, _) =>
-        t.absentOverTime(sel.metric, sel.matchers, start, end,
-          sel.stepSec.getOrElse(stepOf(sel, "absent_over_time")),
-          stepOf(sel, "absent_over_time"), sel.offsetSec)
+        val step = sel.stepSec.getOrElse(stepOf(sel, "absent_over_time"))
+        Vec(t.absentOverTime(sel.metric, sel.matchers, start, end, step,
+            stepOf(sel, "absent_over_time"), sel.offsetSec),
+          None, Some("eval_ts"), None, Some((step, sel.offsetSec)))
 
       case RangeFn("histogram_quantile", Some(phi), sel, by, _) =>
         // bounds come from the caller, or — the Prometheus dialect — from
         // the metric's `le` label domain on the series DIMENSION (a
         // driver-bounded distinct over label values, the labelKeys idiom)
         val bounds = if (buckets.nonEmpty) buckets else leBounds(t, sel.metric)
-        t.histogramQuantile(sel.metric, sel.matchers, start, end, by,
-          stepOf(sel, "histogram_quantile"), phi, bounds, sel.offsetSec)
+        val step = stepOf(sel, "histogram_quantile")
+        Vec(t.histogramQuantile(sel.metric, sel.matchers, start, end, by,
+            step, phi, bounds, sel.offsetSec),
+          trailingBy(by), Some("bucket_start"), Some("q"),
+          Some((step, sel.offsetSec)))
 
       // Prometheus's CANONICAL classic-histogram quantile —
       // `histogram_quantile(0.9, sum by (le, cohort)(rate(bucket[5m])))`:
@@ -2766,9 +2657,11 @@ object PromQL {
           s"by-list (the bucket-bound label), got: by " +
           s"(${by.mkString(", ")})")
         tumblingOnly(sel, "histogram_quantile")
-        Tsdb.histQuantileOnFrame(
-          counterFamily(t, fn, sel, by, "sum", start, end, None),
-          by.filterNot(_ == "le"), "le", "bucket_start", counterCol(fn), phi)
+        val body = counterFamily(t, fn, sel, by, "sum", start, end, None)
+        val keys = by.filterNot(_ == "le")
+        body.copy(frame = Tsdb.histQuantileOnFrame(body.frame, keys, "le",
+            "bucket_start", counterCol(fn), phi),
+          keys = Some(keys), value = Some("q"))
       case hq: HistQuantileAgg => throw new IllegalArgumentException(
         "histogram_quantile over an aggregation supports `sum by " +
         "(le, l…)(rate|increase(bucket[d]))`, got: " + render(hq))

@@ -12,9 +12,11 @@ import graft.Tsdb
   * alerting rules are the standard companion defined by Prometheus's rule
   * engine, re-expressed here over the batch step grid).
   *
-  * Both rule kinds compile the expression with [[PromQL.query]] — the
-  * rule layer adds NO execution paths of its own, so the operators'
-  * oracle checks transfer to every rule:
+  * Both rule kinds compile the expression once through
+  * [[PromQL.compileQuery]], the entry of [[PromQL.query]], and read the
+  * grouping labels, grid step, value and time column from the compiled
+  * vector — the rule layer adds NO execution paths of its own, so the
+  * operators' oracle checks transfer to every rule:
   *
   *  - '''Recording rules''' reshape the compiled frame back into the
   *    engine's sample schema (`metric, labels, ts, value`) under the
@@ -49,10 +51,18 @@ object Rules {
       forSec: Long,
       staticLabels: Map[String, String] = Map.empty)
 
-  private def grouping(ast: PromQL.Expr, what: String): Seq[String] =
-    PromQL.groupingOf(ast).getOrElse(throw new IllegalArgumentException(
+  /** The label columns of a rule's compiled vector: the keys the
+    * compile set where it built the frame (a `without` rule's resolved
+    * by-list, read from the same label-key job). */
+  private def grouping(v: PromQL.Vec, what: String, expr: String)
+      : Seq[String] =
+    v.keys.getOrElse(throw new IllegalArgumentException(
       s"$what needs an aggregated vector expression " +
-      s"(so its label schema is static), got: $ast"))
+      s"(so its label schema is static), got: $expr"))
+
+  private def valueCol(v: PromQL.Vec, what: String, expr: String): String =
+    v.value.getOrElse(throw new IllegalArgumentException(
+      s"$what needs a single-valued vector expression, got: $expr"))
 
   /** The label map an emitted sample carries: grouping labels (values via
     * `colFor`) plus the rule's static labels. On a key collision the
@@ -86,27 +96,18 @@ object Rules {
       end: Long): DataFrame = {
     require(rule.name.matches("[a-zA-Z_:][a-zA-Z0-9_:]*"),
       s"invalid metric name for a recording rule: ${rule.name}")
-    // resolve without(...) BEFORE reading the grouping: the raw AST's
-    // `by` is empty for a without-rule, and labelMap over an empty list
-    // would collapse every result series onto one unlabeled metric
-    val ast = PromQL.resolveWithout(t, PromQL.parse(rule.expr))
-    val by = grouping(ast, "a recording rule")
-    val vCol = PromQL.valueColOf(ast)
-    val df = onGrid(PromQL.query(t, rule.expr, start, end))
-    df.select(
+    val v = PromQL.compileQuery(t, rule.expr, start, end, Seq.empty, None)
+    val by = grouping(v, "a recording rule", rule.expr)
+    val vCol = valueCol(v, "a recording rule", rule.expr)
+    val time = v.time.getOrElse(throw new IllegalArgumentException(
+      s"a recording rule needs a grid-shaped vector expression, got: " +
+      rule.expr))
+    v.frame.select(
       lit(rule.name).as("metric"),
       labelMap(by, col, rule.staticLabels).as("labels"),
-      col("bucket_start").cast("long").as("ts"),
+      col(time).cast("long").as("ts"),
       col(vCol).cast("double").as("value"))
   }
-
-  /** Normalize a compiled frame onto the rule grid column name: plain
-    * aggregations emit `bucket_start`, nested subqueries emit `eval_ts`
-    * (their own [range:step] resolution IS the rule's evaluation grid) —
-    * the islands/emit logic downstream reads one name. */
-  private def onGrid(df: DataFrame): DataFrame =
-    if (df.columns.contains("bucket_start")) df
-    else df.withColumnRenamed("eval_ts", "bucket_start")
 
   /** Evaluate an alerting rule over `[start, end]`. Output: one row per
     * ACTIVE (labelset, step) —
@@ -120,7 +121,8 @@ object Rules {
       rule: AlertRule,
       start: Long,
       end: Long): DataFrame =
-    alertsImpl(t, rule, PromQL.query(t, rule.expr, start, end))
+    alertsImpl(rule,
+      PromQL.compileQuery(t, rule.expr, start, end, Seq.empty, None))
 
   /** [[alerts]] served from the DOWNSAMPLED rollup tier instead of raw
     * samples — the alerting analog of [[PromQL.queryFromRollup]]: the
@@ -134,23 +136,26 @@ object Rules {
       start: Long,
       end: Long,
       rollupStepSec: Long): DataFrame =
-    alertsImpl(t, rule,
-      PromQL.queryFromRollup(t, rule.expr, start, end, rollupStepSec))
+    alertsImpl(rule, PromQL.compileQuery(t, rule.expr, start, end,
+      Seq.empty, Some(rollupStepSec)))
 
-  private def alertsImpl(
-      t: Tsdb, rule: AlertRule, df0: DataFrame): DataFrame = {
-    val df = onGrid(df0)
+  private def alertsImpl(rule: AlertRule, v: PromQL.Vec): DataFrame = {
     require(rule.forSec >= 0, s"for duration must be >= 0: ${rule.forSec}")
-    // resolved like `record`: the islands window must partition by the
-    // SAME labels the compiled frame carries, or a without-rule would
-    // run one global gaps-and-islands pass across all labelsets
-    val ast = PromQL.resolveWithout(t, PromQL.parse(rule.expr))
-    val (step, _) = PromQL.gridSpecOf(ast).getOrElse(
+    // the islands window partitions by the SAME labels the compiled
+    // frame carries, or a without-rule would run one global
+    // gaps-and-islands pass across all labelsets
+    val by = grouping(v, "an alerting rule", rule.expr)
+    val (step, _) = v.grid.getOrElse(
       throw new IllegalArgumentException(
         s"an alert expression needs a ranged selector `x[d]` inside " +
         s"(its step IS the evaluation interval): ${rule.expr}"))
-    val by = grouping(ast, "an alerting rule")
-    val vCol = PromQL.valueColOf(ast)
+    val vCol = valueCol(v, "an alerting rule", rule.expr)
+    // the islands and the output read one grid column name: a subquery's
+    // own [range:step] resolution IS the rule's evaluation grid
+    val df =
+      if (v.time.contains("eval_ts"))
+        v.frame.withColumnRenamed("eval_ts", "bucket_start")
+      else v.frame
     // gaps-and-islands: within a labelset, consecutive steps share
     // (bucket_start - rn*step); the run's first step is the island min
     val w = Window.partitionBy(by.map(col): _*).orderBy("bucket_start")

@@ -180,8 +180,9 @@ object CounterState {
   }
 
   /** The value column the batch compiler exposes for
-    * `<op> by (l) (<fn>(m[step]))` — [[graft.promql.PromQL]]'s
-    * valueColOf contract: sum→increase/rate_per_sec, count→n_series,
+    * `<op> by (l) (<fn>(m[step]))` — the value column
+    * [[graft.promql.PromQL]]'s compile sets on that shape's vector
+    * (`counterValue`): sum→increase/rate_per_sec, count→n_series,
     * avg/min/max→*_increase or round6(*_increase/step),
     * quantile→q_increase/q_rate (both rounded, the tumbling
     * [[graft.Tsdb.counterAggregate]] quantile's convention). Double conversions happen at exactly the batch

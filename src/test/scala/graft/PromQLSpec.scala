@@ -1259,8 +1259,8 @@ class PromQLSpec extends SparkSuite {
     // parse-render round trip
     assert(PromQL.parse(PromQL.render(ast)) == ast)
     // the quantile collapses the le axis: rule-safe grouping = by ∖ le
-    // (proved end-to-end — the rules path derives its label schema
-    // from groupingOf and would throw on None or mis-shape)
+    // (proved end-to-end — the rules path reads its label schema from
+    // the compiled vector's keys and would throw on None or mis-shape)
     locally {
       import graft.promql.Rules
       val al = Rules.alerts(t,
@@ -3102,5 +3102,220 @@ class PromQLSpec extends SparkSuite {
       e.getMessage)
     assert(PromQL.parse("sum by (cohort) (click[1h] offset 0s)") ==
       PromQL.parse("sum by (cohort) (click[1h])"))
+  }
+
+  // ---- the compiled vector: what compile sets where it builds a frame ----
+
+  /** The fixture events on disk with the hourly rollup tier, for the
+    * rollup-served compile case and the live-shaped build. */
+  private lazy val rolled: Tsdb = {
+    val disk = new Tsdb(spark, graft.model.TsdbConf(
+      dataPath = tempDir("promql_vec"), segmentDuration = 86400L))
+    disk.insertRows(events)
+    disk.materializeRollup(3600L)
+    disk
+  }
+
+  /** The Spark jobs `body` starts, counted in a job group; a sentinel job
+    * after it proves every earlier job has reached the listener. */
+  private def jobsDuring[A](body: => A): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${System.nanoTime}"
+    val sentinel = s"sentinel-${System.nanoTime}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(sentinel, "sentinel")
+      spark.range(1).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("every compile case's Vec names frame columns, one row per " +
+      "(keys, time), times on its grid") {
+    val hist = Seq(5.0, 10.0, 50.0, 100.0)
+    val cases: Seq[(String, Tsdb, Option[Long])] = Seq(
+      "sum by (cohort) (click[1h])" -> Some(3600L),
+      "max_over_time(rate(click[1h]) by (cohort) [6h:1h] offset 1h)" -> None,
+      "sum by (cohort) (click[1h]) * 2" -> None,
+      "5 < sum by (cohort) (click[1h])" -> None,
+      "sum by (cohort) (click[1h]) / scalar(sum(click[1h]))" -> None,
+      "scalar(sum(click[1h] offset 30m))" -> None,
+      "sum by (cohort) (click[1h]) - time() % 86400" -> None,
+      "sum by (cohort) (click[1h]) > bool 5" -> None,
+      "sum by (cohort) (purchase[1h]) > bool sum by (cohort) (click[1h])" ->
+        None,
+      "max by (cohort, user_id) (click[1h]) / on (cohort) group_left " +
+        "sum by (cohort) (purchase[1h])" -> None,
+      "sum(click[1h]) or vector(0)" -> None,
+      "sum by (cohort) (purchase[1h]) or sum by (cohort) (click[1h])" -> None,
+      "holt_winters(click[6h:1h], 0.5, 0.5)" -> None,
+      "hour(sum by (cohort) (click[1h]))" -> None,
+      "sort_by_label(sum by (cohort) (click[1h]), \"cohort\")" -> None,
+      "sort(sum by (cohort) (click[1h]))" -> None,
+      "abs(sum by (cohort) (click[1h]))" -> None,
+      "click{cohort=\"3\"}" -> None,
+      "group by (cohort) (click[1h])" -> None,
+      "stddev by (cohort) (click[1h])" -> None,
+      "count_values(\"value\", click[1d]) by (cohort)" -> None,
+      "sum by (c) (label_replace(click[1h], \"c\", \"$1\", \"cohort\", " +
+        "\"(.*)\"))" -> None,
+      "label_replace(click, \"c\", \"$1\", \"cohort\", \"(.*)\")" -> None,
+      "count_values(\"v\", click[1d]) by (cohort)" -> None,
+      "topk(3, sum by (cohort) (click[1h]))" -> None,
+      "limit_ratio(0.5, sum by (cohort) (click[1h]))" -> None,
+      "topk(3, sum by (cohort) (rate(click[1h])))" -> None,
+      "avg by (cohort) (increase(click[1h]))" -> None,
+      "sum by (cohort) (resets(click[1h]))" -> None,
+      "changes(click[2h:1h]) by (cohort)" -> None,
+      "rate(click[1h]) by (cohort)" -> None,
+      "delta(click[1h] offset 1h) by (cohort)" -> None,
+      "irate(click[1h]) by (cohort)" -> None,
+      "avg_over_time(click[1h]) by (cohort)" -> None,
+      "quantile_over_time(0.5, click[1h]) by (cohort)" -> None,
+      "deriv(click[2h:1h]) by (cohort)" -> None,
+      "predict_linear(click[1d], 3600) by (cohort)" -> None,
+      "absent(nope[1h])" -> None,
+      "absent_over_time(click[1h])" -> None,
+      "histogram_quantile(0.9, click[1h]) by (cohort)" -> None,
+      "histogram_quantile(0.9, sum by (cohort, le) (rate(click[1h])))" ->
+        None).map { case (q, r) => (q, if (r.isEmpty) t else rolled, r) }
+    for ((q, store, rollup) <- cases) {
+      val v = PromQL.compileQuery(store, q, T0, T1, hist, rollup)
+      val cols = v.frame.columns.toSet
+      val named = v.keys.getOrElse(Nil) ++ v.value ++ v.time ++
+        (if (v.counts) Seq("n") else Nil)
+      assert(named.forall(cols), s"$q: $named vs $cols")
+      v.keys.foreach { ks =>
+        val dupes = v.frame.groupBy((ks ++ v.time).map(col): _*).count()
+          .where(col("count") > 1)
+        assert(dupes.isEmpty, s"$q: ${dupes.take(3).toSeq}")
+      }
+      for ((step, off) <- v.grid; tc <- v.time)
+        assert(v.frame.where(pmod(col(tc) - off, lit(step)) =!= 0).isEmpty,
+          s"$q: a $tc off the ($step, $off) grid")
+      assert(v.grid.isEmpty || v.time.nonEmpty, q)
+    }
+  }
+
+  /** `x - y` replayed on the driver from the two compiled sides: each
+    * side's (keys, time) rows are unique, and the match pairs equal
+    * keys and times. Pins a side shape the match newly accepts. */
+  private def matchesOnDriver(x: String, y: String,
+      buckets: Seq[Double] = Nil): Unit = {
+    def side(q: String) = {
+      val v = PromQL.compileQuery(t, q, T0, T1, buckets, None)
+      val kt = v.keys.get ++ v.time
+      val rows = v.frame.select(kt.map(col) :+
+          col(v.value.get).cast("double"): _*).collect()
+        .map(r => r.toSeq.init -> r.getDouble(kt.size))
+      assert(rows.map(_._1).distinct.length == rows.length, q)
+      (kt, rows.toMap)
+    }
+    val ((kt, a), (_, b)) = (side(x), side(y))
+    val want = a.toSeq.flatMap { case (k, va) =>
+      b.get(k).map(vb => k :+ (va - vb)) }.toSet
+    assert(want.nonEmpty, s"$x - $y")
+    assert(rowSet(PromQL.query(t, s"($x) - ($y)", T0, T1, buckets),
+      kt :+ "result": _*) == want, s"$x - $y")
+  }
+
+  test("shapes the typed vector newly keys take part in vector matches") {
+    val byCohort = "sum by (cohort) (click[1h])"
+    // stddev / stdvar by over a selector
+    matchesOnDriver("stddev by (cohort) (click[1h])", byCohort)
+    matchesOnDriver("stdvar by (cohort) (click[1h])", byCohort)
+    // topk / bottomk / limitk / limit_ratio of a sum by
+    for (r <- Seq("topk(3, ", "bottomk(3, ", "limitk(4, ", "limit_ratio(0.5, "))
+      matchesOnDriver(s"$r$byCohort)", byCohort)
+    // topk / bottomk of a sum by over rate / increase
+    matchesOnDriver("topk(3, sum by (cohort) (rate(click[1h])))",
+      "sum by (cohort) (rate(purchase[1h]))")
+    matchesOnDriver("bottomk(3, sum by (cohort) (increase(click[1h])))",
+      "sum by (cohort) (increase(purchase[1h]))")
+    // a nested subquery over a keyed inner keeps the inner's keys
+    matchesOnDriver(
+      "avg_over_time(max_over_time(rate(click[1h]) by (cohort)[6h:1h])" +
+        "[1d:6h])",
+      "max_over_time(rate(purchase[1h]) by (cohort) [1d:6h])")
+    // a vector under a scalar on its left keeps the vector's keys
+    matchesOnDriver(s"time() - $byCohort", byCohort)
+    matchesOnDriver(s"scalar(sum(purchase[1h])) - $byCohort", byCohort)
+    // bool compares keep their grid
+    matchesOnDriver(s"$byCohort > bool 40", byCohort)
+    matchesOnDriver(s"sum by (cohort) (purchase[1h]) > bool $byCohort",
+      byCohort)
+    // the `or vector` gap fill is a global vector; set ops keep the keys
+    matchesOnDriver("sum(click[1h]) or vector(0)", "sum(purchase[1h])")
+    matchesOnDriver(s"sum by (cohort) (purchase[1h]) and $byCohort",
+      byCohort)
+    // the raw-observation histogram_quantile by
+    matchesOnDriver("histogram_quantile(0.9, click[1h]) by (cohort)",
+      byCohort, Seq(5.0, 10.0, 50.0, 100.0))
+    // and a bool compare is an alert rule, its step the selector's
+    import graft.promql.Rules
+    val al = Rules.alerts(t,
+      Rules.AlertRule("r", s"$byCohort > bool 40", forSec = 0L), T0, T1)
+    assert(rowSet(al, "cohort", "bucket_start", "value") ==
+      rowSet(PromQL.query(t, byCohort, T0, T1).select(col("cohort"),
+        col("bucket_start"), when(col("sum_v") > 40, 1.0).otherwise(0.0)
+          .as("value")), "cohort", "bucket_start", "value"))
+  }
+
+  test("per-series *_over_time frames have no keys: matches and rules " +
+      "over them fail instead of pairing every series") {
+    import graft.promql.Rules
+    val q = "avg_over_time(click[1h]) by (cohort)"
+    // the trailing by projects labels onto per-series rows
+    assert(!PromQL.query(t, q, T0, T1).groupBy("cohort", "eval_ts").count()
+      .where(col("count") > 1).isEmpty)
+    val e1 = intercept[IllegalArgumentException](PromQL.query(t,
+      s"$q - avg_over_time(purchase[1h]) by (cohort)", T0, T1))
+    assert(e1.getMessage.contains("no derivable label grouping"),
+      e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](Rules.alerts(t,
+      Rules.AlertRule("r", s"$q > 50", 0L), T0, T1))
+    assert(e2.getMessage.contains("aggregated vector"), e2.getMessage)
+  }
+
+  test("a without rule compiles once: building it runs the label-key " +
+      "jobs of one compile") {
+    import graft.promql.Rules
+    val q = "sum without (user_id) (click[1h]) > 5"
+    val compile = jobsDuring(PromQL.query(t, q, T0, T1))
+    assert(compile > 0)
+    assert(jobsDuring(Rules.alerts(t, Rules.AlertRule("r", q, 0L), T0,
+      T1)) == compile)
+    assert(jobsDuring(Rules.record(t, Rules.RecordingRule("r",
+      "sum without (user_id) (click[1h])"), T0, T1)) == compile)
+  }
+
+  test("the live dashboard strings start no job while they compile") {
+    val (s, e) = (T0, T0 + 86400L - 1)
+    val qs = Seq("sum by (cohort) (rate(click[300]))",
+      "topk(3, sum by (cohort) (rate(click[300])))",
+      "quantile by (cohort) (0.9, rate(click[300]))",
+      "sum by (cohort) (rate(click[300])) / " +
+        "sum by (cohort) (rate(purchase[300]))",
+      "max_over_time(rate(click[300]) by (cohort) [3600:300])")
+    val store = rolled
+    assert(jobsDuring(qs.foreach(PromQL.query(store, _, s, e))) == 0)
   }
 }
