@@ -210,13 +210,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * is read with its declared schema, so building a query launches no
     * schema-inference job.
     */
-  private val factSchema = StructType(
-    StructField("sid", LongType) +:
-      (if (conf.storeLabelsInFact)
-         Seq(StructField("metric", StringType),
-           StructField("labels", LabelsType))
-       else Nil) :+
-      StructField("ts", LongType) :+ StructField("value", DoubleType))
+  private val factSchema = StructType(Seq(StructField("sid", LongType),
+    StructField("ts", LongType), StructField("value", DoubleType)))
 
   /** Durable write of already-normalized rows: the partitioned fact
     * append, the series-meta upsert (with its inline fold when due) and
@@ -269,9 +264,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     // 1e3 and 1e6 files per ingest batch. Sub-bucketing by sid (knob > 1)
     // parallelizes the write of a single live bucket without breaking
     // series locality: a sid lands whole inside one file either way.
-    val fact =
-      if (conf.storeLabelsInFact) norm
-      else norm.select("sid", "seg", "ts", "value")
+    val fact = norm.select("sid", "seg", "ts", "value")
     // sort by (sid, ts) inside each bucket: per-series point locality —
     // parquet delta-encodes the ts run per series (the role of the
     // reference's per-series Gorilla blocks) and sid row-group stats
@@ -508,10 +501,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     if (conf.onlyMemoryMode)
       memHead.getOrElse(spark.read.schema(factSchema).parquet(samplesPath))
     else {
-      val factCols =
-        if (conf.storeLabelsInFact)
-          Seq("sid", "metric", "labels", "seg", "ts", "value")
-        else Seq("sid", "seg", "ts", "value")
+      val factCols = Seq("sid", "seg", "ts", "value")
       val disk =
         if (pathExists(samplesPath))
           Some(spark.read.schema(factSchema).parquet(samplesPath)
@@ -580,7 +570,8 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     if (seriesDimSmall) broadcast(dim) else dim
 
   /** Fact rows with metric + labels attached — identity for the
-    * denormalized layout, broadcast dimension join for the normalized one.
+    * in-memory head (it carries the label maps), broadcast dimension join
+    * for the normalized disk layout.
     */
   def samplesWithLabels: DataFrame =
     if (samples.columns.contains("labels")) samples
@@ -706,7 +697,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       start: Long,
       end: Long): DataFrame =
     // path choice by storage layout: when the fact rows already carry the
-    // label maps (denormalized store, or the in-memory attached head), the
+    // label maps (the in-memory attached head), the
     // direct predicate path is one scan with zero joins — evaluating
     // matchers via the series dimension would scan the same relation TWICE
     // (fact + dimension aggregation). The index path pays off exactly when
@@ -1564,13 +1555,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       swapInPlace(new org.apache.hadoop.fs.Path(tmp),
         new org.apache.hadoop.fs.Path(labelValuesPath))
     } else if (pathExists(samplesPath)) {
-      val disk = spark.read.schema(factSchema).parquet(samplesPath)
-      val labeled =
-        if (disk.columns.contains("labels")) disk.select("seg", "labels")
-        else disk.select("seg", "sid").distinct()
-          .join(seriesMeta.select("sid", "labels"), "sid")
-          .select("seg", "labels")
-      labeled
+      spark.read.schema(factSchema).parquet(samplesPath)
+        .select("seg", "sid").distinct()
+        .join(seriesMeta.select("sid", "labels"), "sid")
         .select(col("seg"), explode(col("labels")).as(Seq("name", "value")))
         .distinct()
         .repartition(col("seg"))

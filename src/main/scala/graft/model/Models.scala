@@ -61,14 +61,6 @@ final case class TsdbConf(
     retention: Long = 7L * 86400, // 7d, tsdb.go:41
     compression: String = "zstd", // compressor.go codecs: none|zstd|snappy
     onlyMemoryMode: Boolean = false,
-    /** When false (default), the fact table stores only
-      * `(sid, seg, ts, value)` and label sets live once per series in
-      * series_meta — the same normalization the reference's disk format
-      * uses (label ordinals per series, metadata.go:85-96). Queries
-      * reconstruct labels via a broadcast join. `true` denormalizes the
-      * label map onto every sample row (larger, but self-contained files).
-      */
-    storeLabelsInFact: Boolean = false,
     /** Reference tsdb.go:44. Honored on the head-buffered ingest path
       * ([[graft.Tsdb.insertHeadRows]]): when false, rows whose segment is
       * already frozen to disk are rejected (the reference's "no out-of-order

@@ -1781,6 +1781,14 @@ object PromQL {
     require(v.keys.contains(Seq.empty),
       s"scalar() needs a global (no `by`) aggregation argument, got: $e")
 
+  /** The scalar() and `or vector(…)` joins meet on the tumbling
+    * `bucket_start` grid: an operand timed otherwise (a subquery's
+    * `eval_ts`) is rejected by name instead of failing unresolved. */
+  private def requireBucketTimed(v: Vec, e: Expr, what: String): Unit =
+    require(v.time.contains("bucket_start"),
+      s"$what needs bucket_start-timed operands, got " +
+      s"${v.time.getOrElse("no time column")} for: $e")
+
   /** The `scalar()` binary-op cases: broadcast-join the one-row-per-bucket
     * scalar `sc` (compiled from `scExpr`, a global aggregation) onto
     * `vec` and apply `op` with the scalar on the requested side. An
@@ -1795,6 +1803,8 @@ object PromQL {
       op: String,
       scalarLeft: Boolean): Vec = {
     requireGlobal(sc, scExpr)
+    requireBucketTimed(sc, scExpr, "scalar()")
+    requireBucketTimed(vec, vecExpr, "scalar()")
     val dfScalar = sc.frame.select(col("bucket_start"),
       col(valueOf(sc, scExpr)).as("__scalar"))
     val vecCol = valueOf(vec, vecExpr)
@@ -2138,6 +2148,7 @@ object PromQL {
       case MathFn("scalar", inner, _, _) =>
         val in = compile(t, inner, start, end, buckets, rollupStep)
         requireGlobal(in, inner)
+        requireBucketTimed(in, inner, "scalar()")
         val (step, off) = in.grid.getOrElse(
           throw new IllegalArgumentException(
             s"standalone scalar() could not derive the eval grid " +
@@ -2224,6 +2235,7 @@ object PromQL {
           throw new IllegalArgumentException(
             s"`or vector(…)` could not derive the lhs bucket grid " +
             s"(needs a ranged selector `x[d]` inside): $l"))
+        requireBucketTimed(a, l, "`or vector(…)`")
         val sc = scalarSide(s, col("bucket_start").cast("double"))
           .getOrElse(throw new IllegalArgumentException(
             s"vector() takes a scalar argument (a literal / time() " +

@@ -2,12 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-
-import graft.Tsdb
-import graft.functions.LabelFunctions
-
 /** Shared counter-semantics bucket accumulation for the streaming rules
   * engine — the per-series reset-aware state behind
   * `sum by (l) (rate(errors[5m])) > thr` in [[AlertStream]] and the
@@ -58,13 +52,15 @@ object CounterState {
       q: Option[Double] = None)
 
   /** Event row: `series` is the batch engine's own sid (xxhash64 of the
-    * canonical folded label set, [[LabelFunctions.sidOf]]) so the lag
-    * partitioning — including any theoretical hash collision — matches
-    * the batch plan bit for bit. `tsec` is the truncated epoch second
+    * canonical folded label set,
+    * [[graft.functions.LabelFunctions.sidOf]]) so the lag partitioning
+    * — including any theoretical hash collision — matches the batch
+    * plan bit for bit. `tsec` is the truncated epoch second
     * the batch grid sorts and buckets on. */
   final case class Ev(
       key: String, labels: Map[String, String], series: String,
       ts: Timestamp, tsec: Long, bucket: Long, side: Int, value: Double)
+      extends LiveCore.Keyed
 
   /** One buffered raw sample of an open bucket. */
   final case class Buf(
@@ -80,74 +76,22 @@ object CounterState {
       nSeries: Long, sumInc: BigDecimal, minInc: BigDecimal,
       maxInc: BigDecimal, incs: List[BigDecimal])
 
-  /** Project a streaming samples frame into keyed counter events.
-    * `sides` may overlap (the `errors{code="500"} / errors` idiom): a
-    * row contributes to every side whose selector it matches, via an
-    * exploded side array like [[AlertStream]]'s ratio path.
-    *
-    * Watermark placement: the EventTimeWatermark node sits ABOVE the
-    * side filter, so ONLY rows matching some side advance the global
-    * watermark — a stream carrying unrelated metrics never closes this
-    * rule's buckets by itself. Test replays (and heartbeat events) must
-    * therefore match a side; the histogram path's per-`le` sides make
-    * this bite (a flush event without an `le` label is filtered before
-    * the watermark node and closes nothing). */
-  def events(
-      samples: DataFrame,
-      sides: Seq[Side],
-      grouping: Grouping,
-      step: Long,
-      watermark: String,
-      shiftedBuckets: Boolean = false): Dataset[Ev] = {
-    val spark = samples.sparkSession
-    import spark.implicits._
-    val sidePreds: Seq[Column] = sides.map(s =>
-      col("metric") === s.metric &&
-        Tsdb.matcherPredicate(col("labels"), s.matchers))
-    val anySide = sidePreds.reduce(_ || _)
-    // the tumbling convention buckets [B, B+step) (the batch bucket
-    // grid); the SHIFTED convention buckets (B, B+step] — the sliding
-    // subquery family's windows `(E−range, E]` are exact unions of
-    // shifted buckets, which is what makes the streaming twin of
-    // `fn_over_time(rate(x[ir]) by (l)[or:st])` additive per close
-    val tsec = col("ts").cast("long")
-    val bucketCol =
-      if (shiftedBuckets) (tsec - 1) - pmod(tsec - 1, lit(step))
-      else tsec - pmod(tsec, lit(step))
-    samples
-      .where(anySide)
-      .withWatermark("ts", watermark)
-      .select(
-        grouping.keyCol(col("labels")).as("key"),
-        grouping.labelsCol(col("labels")).as("labels"),
-        // the batch lag partitions by the engine's sid — reuse the same
-        // normalize+fold+hash so series identity cannot diverge
-        LabelFunctions.sidOf(LabelFunctions.foldMetric(col("metric"),
-          LabelFunctions.normalizeLabels(col("labels"))))
-          .cast("string").as("series"),
-        col("ts"),
-        tsec.as("tsec"),
-        bucketCol.as("bucket"),
-        explode(array(sidePreds.zipWithIndex.map { case (p, i) =>
-          when(p, i) }: _*)).as("side"),
-        col("value").cast("double").as("value"))
-      .where(col("side").isNotNull)
-      .as[Ev]
-  }
-
-  /** `cast(v as decimal(18,2))` with overflow-to-NULL: HALF_UP to
-    * scale 2, None when the result exceeds precision 18 — the caller
-    * treats None exactly like a non-finite sample. The ANSI batch plan
-    * (this engine's default) HARD-FAILS the whole query on such a
-    * value; a long-running alert stream must survive one poisoned
-    * sample, so the streaming side degrades to the non-ANSI NULL
-    * semantics instead — the only intentional divergence from the
-    * batch lag, pinned in StreamingSpec's CounterState unit test. */
-  private def dec2(v: Double): Option[BigDecimal] = {
-    val d = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-    if (d.precision > 18) None else Some(BigDecimal(d))
-  }
+  /** The streaming rules' one `cast(v as decimal(18,2))`: HALF_UP to
+    * scale 2; None (the cast's NULL) for a non-finite sample, and for
+    * one whose result exceeds precision 18. The ANSI batch plan (this
+    * engine's default) HARD-FAILS the whole query on such an overflow;
+    * a long-running rule stream must survive one poisoned sample, so
+    * the streaming side degrades to the non-ANSI NULL semantics
+    * instead — the only intentional divergence from the batch twins,
+    * pinned in StreamingSpec (the CounterState unit test and the gauge
+    * alert overflow case). */
+  private[streaming] def dec2(v: Double): Option[BigDecimal] =
+    if (v.isNaN || v.isInfinite) None
+    else {
+      val d = java.math.BigDecimal.valueOf(v)
+        .setScale(2, java.math.RoundingMode.HALF_UP)
+      if (d.precision > 18) None else Some(BigDecimal(d))
+    }
 
   /** Spark's `round(col, 6)` on a double: HALF_UP on the decimal
     * rendering, specials pass through (Catalyst Round checks them
@@ -213,20 +157,16 @@ object CounterState {
     case "-" => a - b
   }
 
-  /** One closed bucket's rule value: the side moments vector-matched
-    * with the batch INNER-join semantics — a side with no contributing
-    * series drops the bucket's row entirely (no row in the batch
-    * frame). `aop` present means the two-metric arithmetic form. */
-  def value(
-      sides: Seq[Side],
-      aop: Option[String],
-      step: Long,
-      aggs: Vector[Option[SideAgg]]): Option[Double] = aop match {
-    case None => aggs(0).map(a => moment(sides(0), step, a))
-    case Some(op) =>
-      for { a <- aggs(0); b <- aggs(1) }
-        yield arith(op, moment(sides(0), step, a),
-          moment(sides(1), step, b))
+  /** One closed bucket's rule value from its side moments, vector-
+    * matched with the batch INNER-join semantics — an absent side (no
+    * contributing series or sample) drops the bucket's row entirely (no
+    * row in the batch frame). `aop` present means the two-metric
+    * arithmetic form. */
+  def matched(aop: Option[String], ms: Seq[Option[Double]])
+      : Option[Double] = {
+    val vs = ms.flatten
+    if (vs.size < ms.size) None
+    else Some(aop.fold(vs.head)(arith(_, vs(0), vs(1))))
   }
 
   private def carryKey(side: Int, series: String): String =
@@ -283,10 +223,7 @@ object CounterState {
               var prev: Option[BigDecimal] = carry.get(ck).map(_.v)
               var inc: BigDecimal = null
               sorted.foreach { s =>
-                val cast =
-                  if (s.value.isNaN || s.value.isInfinite) None
-                  else dec2(s.value)
-                cast match {
+                dec2(s.value) match {
                   case None =>
                     // cast NULL (non-finite, or decimal(18,2) overflow
                     // — Spark's non-ANSI overflow-to-NULL): own delta
@@ -333,23 +270,27 @@ object CounterState {
   /** The per-key state both consumers persist: open-bucket samples +
     * the carry map + the alert path's run clock (the record path keeps
     * the clock at MinValue). Public for Catalyst's generated
-    * (de)serializers, like [[AlertStream.St]]. */
+    * (de)serializers, like [[LiveCore.GaugeSt]]. */
   final case class St(
       labels: Map[String, String],
       buf: List[Buf],
       carry: Map[String, Carry],
       lastActive: Long,
-      runStart: Long)
+      runStart: Long) extends LiveCore.Clocked[St] {
+    def clocked(la: Long, rs: Long): St = copy(lastActive = la, runStart = rs)
+  }
 
   val EmptySt: St = St(Map.empty, Nil, Map.empty, Long.MinValue,
     Long.MinValue)
 
-  /** One state-machine step, shared by the alert and recording
-    * consumers: drop events behind the watermark (a closed bucket
-    * never reopens — same lateness rule as the gauge paths), buffer
-    * the rest, close every bucket the watermark has passed. Returns
-    * the advanced state (open buffer + purged carry; the run clock is
-    * the CALLER's to advance) and the closed buckets in time order. */
+  /** The counter step of every counter-state rule kind: drop events
+    * behind the watermark (a closed bucket never reopens — same
+    * lateness rule as the gauge step), buffer the rest, close every
+    * bucket the watermark has passed. Returns the advanced state (open
+    * buffer + purged carry; the run clock is the CALLER's to advance),
+    * the closed buckets in time order and the state's deadlines: the
+    * earliest open bucket's close and the carry map's next horizon
+    * expiry. */
   def advance(
       st0: St,
       events: Iterator[Ev],
@@ -357,7 +298,7 @@ object CounterState {
       nSides: Int,
       step: Long,
       carryHorizonSec: Long = DefaultCarryHorizonSec)
-      : (St, List[(Long, Vector[Option[SideAgg]])]) = {
+      : (St, List[(Long, Vector[Option[SideAgg]])], List[Long]) = {
     var st = st0
     val evs = events.toSeq.filter(e => e.bucket + step > wmSec)
     if (evs.nonEmpty && st.labels.isEmpty)
@@ -366,7 +307,9 @@ object CounterState {
       Buf(e.bucket, e.side, e.series, e.tsec, e.value))
     val (closed, open, carry) =
       close(buf, st.carry, nSides, step, wmSec, carryHorizonSec)
-    (st.copy(buf = open, carry = carry), closed)
+    (st.copy(buf = open, carry = carry), closed,
+      (open.map(_.bucket + step).minOption ++
+        nextCarryDeadline(carry, carryHorizonSec)).toList)
   }
 
   /** Earliest wakeup the carry map still needs: the soonest horizon

@@ -2057,6 +2057,20 @@ class PromQLSpec extends SparkSuite {
     assert(e3.getMessage.contains("at least 1 label"), e3.getMessage)
   }
 
+  test("scalar() and `or vector` reject an eval_ts-timed operand by name") {
+    // their joins meet on bucket_start; a subquery is timed on eval_ts
+    for (q <- Seq(
+        "scalar(max_over_time(sum(rate(click[1h]))[6h:1h]))",
+        "max_over_time(sum(rate(click[1h]))[6h:1h]) or vector(0)",
+        "max_over_time(sum by (cohort) (rate(click[1h]))[6h:1h]) / " +
+          "scalar(sum(click[6h]))")) {
+      val e = intercept[IllegalArgumentException](
+        PromQL.query(t, q, T0, T1))
+      assert(e.getMessage.contains("bucket_start-timed") &&
+        e.getMessage.contains("eval_ts"), s"$q: ${e.getMessage}")
+    }
+  }
+
   test("scalar(): share-of-total joins the global per-bucket aggregate") {
     val df = PromQL.query(t,
       "sum by (cohort) (click[1h]) / scalar(sum(click[1h]))", T0, T1)

@@ -1737,4 +1737,82 @@ class StreamingSpec extends SparkSuite {
         s"stream-only ${(wStream -- wBatch).take(3)}; " +
         s"batch-only ${(wBatch -- wStream).take(3)}")
   }
+
+  test("streaming gauge alerts: a sample past the decimal(18,2) ceiling " +
+      "counts but adds nothing to the sum, like a non-finite one") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.promql.Rules
+    import graft.streaming.AlertStream
+    val base = 1704412800L
+    def at(s: Long) = new java.sql.Timestamp((base + s) * 1000)
+    def alertsOver(name: String, second: Double) = {
+      val mem = MemoryStream[(String, Map[String, String],
+        java.sql.Timestamp, Double)]
+      val q = AlertStream.alerts(mem.toDF().toDF("metric", "labels", "ts",
+          "value"), Rules.AlertRule("ovf", "sum by (l) (m[60]) > 0", 0L),
+          watermark = "10 minutes")
+        .toDF().writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      mem.addData(("m", Map("l" -> "a"), at(0), 1.0),
+        ("m", Map("l" -> "a"), at(30), second))
+      q.processAllAvailable()
+      Seq(1L, 2L).foreach { d =>
+        mem.addData(("m", Map("l" -> "zz"), at(d * 86400), 0.0))
+        q.processAllAvailable()
+      }
+      q.stop()
+      spark.table(name).where(col("labels").getItem("l") === "a")
+        .select("bucket_start", "value", "state").collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
+    }
+    val overflow = alertsOver("gauge_ovf", 1e17)
+    assert(overflow == alertsOver("gauge_nan", Double.NaN), overflow)
+    assert(overflow == Set((base, 1.0, "firing")), overflow)
+  }
+
+  test("one shape recognizer: a recording rule streams X iff an alert " +
+      "streams X > 1") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.promql.Rules
+    import graft.streaming.{AlertStream, RecordStream}
+    val src = MemoryStream[(String, Map[String, String],
+      java.sql.Timestamp, Double)].toDF().toDF("metric", "labels", "ts",
+      "value")
+    val hb = Seq("5", "+Inf")
+    val accepted = Seq(
+      "sum by (l) (m[60])",
+      "avg without (l) (m[60])",
+      "sum by (l) (a[60]) / sum by (l) (b[60])",
+      "max by (l) (a[60]) - on (l) min by (l) (b[60])",
+      "sum by (l) (rate(c[60]))",
+      "quantile by (l) (0.9, rate(c[60]))",
+      "sum by (l) (rate(a[60])) / sum by (l) (increase(b[60]))",
+      "sum without (l) (rate(c[60]))",
+      "histogram_quantile(0.9, sum by (le, l) (rate(h[60])))",
+      "max_over_time(rate(c[3600]) by (l) [21600:3600])",
+      "quantile_over_time(0.5, rate(c[5000]) by (l) [21600:3600])",
+      "rate(c[21600:3600]) by (l)",
+      "sum by (l) (rate(c[21600:3600]))")
+    val rejected = Seq(
+      "sum by (l) (m[60] offset 60)",
+      "sum by (l) (m[120:60])",
+      "sum by (l) (a[60]) / sum by (k) (b[60])",
+      "sum by (l) (a[60]) / sum by (l) (b[120])",
+      "sum by (l) (a[60]) / sum by (l) (rate(b[60]))",
+      "sum by (l) (rate(c[60] offset 60))",
+      "rate(c[60])",
+      "topk(2, sum by (l) (m[60]))",
+      "max_over_time(rate(c[7201]) by (l) [21600:3600])")
+    def streams(build: => Any): Boolean =
+      try { build; true }
+      catch { case _: IllegalArgumentException => false }
+    (accepted ++ rejected).foreach { x =>
+      val rec = streams(RecordStream.compiled(src,
+        Rules.RecordingRule("r:x", x), "10 minutes", hb))
+      val alert = streams(AlertStream.alerts(src,
+        Rules.AlertRule("a", s"$x > 1", 0L), "10 minutes", hb))
+      assert(rec == alert, s"$x: record $rec, alert $alert")
+      assert(rec == accepted.contains(x), s"$x: streams $rec")
+    }
+  }
 }
