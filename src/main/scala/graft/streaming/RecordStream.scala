@@ -73,7 +73,10 @@ object RecordStream {
     * is then a stateless projection over the closed bucket: inner-join
     * semantics (every side present) and the batch compiler's exact
     * arithmetic ([[PromQL.arith]]: `/` rounds to 6, zero denominators
-    * yield Prometheus's ±Inf/NaN).
+    * yield Prometheus's ±Inf/NaN). A sample the sum cannot hold as
+    * decimal(18,2) (non-finite, or past the ceiling) counts in `n`, adds
+    * nothing to the sum and still takes part in min/max, as in the alert
+    * twin ([[CounterState.dec2]]).
     *
     * Grouping key columns: the by-form groups on the label-value columns
     * directly; the without-form groups on the SORTED entries array of the
@@ -90,7 +93,7 @@ object RecordStream {
         Tsdb.matcherPredicate(col("labels"), s.matchers))
     val aggs = preds.zipWithIndex.flatMap { case (p, i) => Seq(
       count(when(p, 1)).as(s"n_$i"),
-      sum(when(p, col("value")).cast("decimal(18,2)"))
+      sum(when(p, col("value")).try_cast("decimal(18,2)"))
         .cast("double").as(s"sum_$i"),
       min(when(p, col("value")).cast("double")).as(s"min_$i"),
       max(when(p, col("value")).cast("double")).as(s"max_$i")) }

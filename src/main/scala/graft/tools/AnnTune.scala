@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -12,13 +11,7 @@ import graft.sources.Tables
   */
 object AnnTune {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session("32", "32")
     val dir = "/root/testdata/sf0.01"
     val emb = Tables.embeddings(spark, dir).cache()
     val q = emb.where(col("vec_id") % 50 === 0)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tsdb
@@ -45,16 +45,7 @@ object CardinalityStress {
   def main(args: Array[String]): Unit = {
     val nSeries = sys.env.get("SPARK_GRAFT_SERIES").flatMap(_.toLongOption)
       .getOrElse(5000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Local.session(Local.cpus, "64")
 
     val root = "spark-warehouse/graft_scale/cardinality"
     val fs = org.apache.hadoop.fs.FileSystem.get(

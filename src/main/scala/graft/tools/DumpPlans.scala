@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dev-only: dump `.explain("formatted")` for a set of registered queries
@@ -17,22 +15,8 @@ object DumpPlans {
     require(args.length >= 4,
       "usage: DumpPlans <sfDir> <outDir> <suffix> name1 [name2 ...]")
     val Array(dir, outDir, suffix) = args.take(3)
-    val names = args.drop(3).toSeq.flatMap { a =>
-      if (a.endsWith("*"))
-        SparkEntry.queries.keys.filter(_.startsWith(a.dropRight(1))).toSeq.sorted
-      else Seq(a)
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = Local.queryNames(args.drop(3).toSeq)
+    val spark = Local.session(Local.cpus, Local.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Receipt harness for the r14 expression-recompute fixes: the
@@ -15,11 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object LongDocProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("long-doc-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Local.session("32", "32")
     import spark.implicits._
 
     def corpus(nDocs: Int, tokens: Int) = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize an FK-consistent N× replication of a shared testdata dir so
@@ -51,16 +51,7 @@ object ScaleCorpus {
     val tag = new java.io.File(src).getName
     val out = s"spark-warehouse/graft_scale/${tag}_x$factor"
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Local.session("32", "64")
 
     def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def write(name: String, df: DataFrame, parts: Int): Unit = {

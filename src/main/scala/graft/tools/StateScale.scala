@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.promql.Rules
@@ -27,16 +27,8 @@ object StateScale {
   def main(args: Array[String]): Unit = {
     val nKeys = sys.env.get("SPARK_GRAFT_KEYS").flatMap(_.toLongOption)
       .getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Local.cpus
+    val spark = Local.session(cpus, cpus)
 
     // ---- fixture: nKeys label sets × 6 points across two hour buckets,
     // values sized so roughly half the keys cross the threshold in

@@ -35,4 +35,17 @@ object GraftBridge {
         r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
       case _ =>
     }
+
+  /** Block until the listener bus has delivered every event posted so
+    * far to every listener: how a profile reads its counters complete
+    * without running a marker job of its own. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The query a SQL execution ran, if it succeeded: attached to its end
+    * event by `SQLExecution.withNewExecutionId` (absent on replayed
+    * events). */
+  def queryExecution(e: execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[execution.QueryExecution] =
+    Option(e.qe).filter(_ => e.executionFailure.isEmpty)
 }

@@ -9,8 +9,8 @@ import graft.sources.Tables
 /** Plan-shape regression gates: the scale-critical physical-plan
   * properties (partition pruning, predicate pushdown, broadcast vs
   * shuffle choices, map-side native expressions, bounded shuffle counts)
-  * are asserted here so a refactor that silently loses one fails CI —
-  * the executable form of what `graft.tools.ExplainAudit` prints.
+  * are asserted here so a refactor that silently loses one fails CI.
+  * `graft.tools.DumpPlans` writes the full formatted plans for a diff.
   */
 class PlanSpec extends SparkSuite {
 

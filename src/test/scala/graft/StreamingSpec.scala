@@ -1770,6 +1770,43 @@ class StreamingSpec extends SparkSuite {
     assert(overflow == Set((base, 1.0, "firing")), overflow)
   }
 
+  test("streaming gauge records: a sample past the decimal(18,2) ceiling " +
+      "counts but adds nothing to the sum, as in the alert twin") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.promql.Rules
+    import graft.streaming.{AlertStream, RecordStream}
+    val base = 1704412800L
+    def at(s: Long) = new java.sql.Timestamp((base + s) * 1000)
+    def valuesOf(name: String, timeCol: String)(
+        build: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame) = {
+      val mem = MemoryStream[(String, Map[String, String],
+        java.sql.Timestamp, Double)]
+      val q = build(mem.toDF().toDF("metric", "labels", "ts", "value"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      mem.addData(("m", Map("l" -> "a"), at(0), 1.0),
+        ("m", Map("l" -> "a"), at(30), 1e17))
+      q.processAllAvailable()
+      Seq(1L, 2L).foreach { d =>
+        mem.addData(("m", Map("l" -> "zz"), at(d * 86400), 0.0))
+        q.processAllAvailable()
+      }
+      q.stop()
+      spark.table(name).where(col("labels").getItem("l") === "a")
+        .select(timeCol, "value").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSet
+    }
+    val recorded = valuesOf("gauge_rec_ovf", "ts")(RecordStream.compiled(_,
+      Rules.RecordingRule("ovf_sum", "sum by (l) (m[60])"),
+      watermark = "10 minutes"))
+    val alerted = valuesOf("gauge_alert_ovf", "bucket_start")(
+      AlertStream.alerts(_, Rules.AlertRule("ovf", "sum by (l) (m[60]) > 0",
+        0L), watermark = "10 minutes").toDF())
+    assert(recorded == alerted, recorded)
+    assert(recorded == Set((base, 1.0)), recorded)
+  }
+
   test("one shape recognizer: a recording rule streams X iff an alert " +
       "streams X > 1") {
     implicit val sqlCtx = spark.sqlContext
